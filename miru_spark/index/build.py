@@ -47,6 +47,7 @@ from miru_spark.analyzer import tokenize_arrow_flat
 from miru_spark import roaring
 from miru_spark.codec import encode_postings
 from miru_spark.corpus import verify_sha256
+from miru_spark.jsonio import save_json_atomic
 
 KEY_COLS = ["repo", "path", "commit"]
 
@@ -470,6 +471,5 @@ def build_index(
     summary["skipped_partitions"] = sum(1 for m in manifests if m["status"] == "skipped")
     summary["n_docs"] = sum(m["n_docs"] for m in manifests)
     summary["n_tokens"] = sum(m["n_tokens"] for m in manifests)
-    with open(os.path.join(index_dir, "build_summary.json"), "w") as f:
-        json.dump(summary, f)
+    save_json_atomic(os.path.join(index_dir, "build_summary.json"), summary)
     return summary

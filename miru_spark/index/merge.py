@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from miru_spark.codec import encode_varint
+from miru_spark.jsonio import save_json_atomic
 
 TARGET_POSTINGS_PER_SHARD = 250_000
 
@@ -226,10 +227,13 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
         meta_local.join(F.broadcast(off_df), "pid")
         .select((F.col("local_doc_id") + F.col("_off")).alias("doc_id"), *meta_cols)
         .write.mode("overwrite")
-        # bounded row groups so id-pruned serving reads (_sparse_col /
-        # _docmeta_for: rare-term doc_len fetch, top-k gather) touch
-        # ~8 MiB per hit instead of a whole ~2M-row file group — the same
-        # query-prunability bound the merged postings carry
+        # bounded row groups: the serving path (scorer._meta_lookup, behind
+        # the rare-term doc_len fetch and the top-k gather) decodes and
+        # caches whole row groups, so this bounds the unit it reads. It
+        # prunes by footer doc_id min/max, which only helps where ranges
+        # are narrow: this write does not sort by doc_id, and a task packs
+        # several pids' rows, so its groups' ranges overlap and a lookup
+        # visits every group whose range covers a wanted id
         .option("parquet.block.size", 8 * 1024 * 1024)
         .parquet(os.path.join(index_dir, "doc_meta"))
     )
@@ -246,6 +250,7 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
         "n_terms": int(n_terms),
         "n_pids": int(n_pids),
     }
-    with open(os.path.join(index_dir, "corpus_stats.json"), "w") as f:
-        json.dump(corpus_stats, f)
+    # the serving caches' generation stamp: written last, and atomically so a
+    # query racing a refresh never parses a torn file
+    save_json_atomic(os.path.join(index_dir, "corpus_stats.json"), corpus_stats)
     return dict(corpus_stats)

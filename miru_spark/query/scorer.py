@@ -35,7 +35,9 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -87,28 +89,96 @@ def expand_prefixes(index_dir: str, prefix_set: set[str]) -> dict[str, list[str]
 
 
 # --------------------------------------------------------------------- local
-# Serving caches (miru serves from an in-memory/mmapped LSM; our analog is
-# caching the pyarrow dataset handles + the dense doc_len array). Keyed by
-# the index generation = mtime of corpus_stats.json, which every
-# merge/refresh rewrites LAST — so a re-merged index invalidates both caches.
+# Serving caches (miru serves from memory-resident indexes behind its LAB
+# block cache, LabInvertedIndex.java:31-73). Every key starts with
+# (index_dir, generation); the generation is the mtime of corpus_stats.json,
+# which every merge/refresh rewrites LAST (atomically). The first call that
+# sees a new generation of an index sweeps that index's older generations
+# out of every cache here, so a long-lived server strands nothing across
+# refreshes.
+#
+# - _DATASET_CACHE: pyarrow dataset handles (file discovery per call
+#   otherwise);
+# - _DOCLEN_CACHE: dense doc_id → doc_len / ts arrays and the sorted
+#   all-ids mask, built only for termless shapes and large posting
+#   universes, never on the sparse path;
+# - _POSTING_CACHE: decoded postings of hot terms, LRU by entry count;
+# - _BLOCK_CACHE: decoded doc_meta row groups and per-(field, value) filter
+#   bitmaps, LRU bounded in bytes;
+# - _META_LAYOUT: every doc_meta row group's doc_id min/max, read from the
+#   parquet footers once per generation.
 _DATASET_CACHE: dict[tuple, pads.Dataset] = {}
 _DOCLEN_CACHE: dict[tuple, np.ndarray] = {}
-_DOCMETA_CACHE: dict[tuple, pd.DataFrame] = {}
 _POSTING_CACHE: dict[tuple, tuple] = {}  # (dir, gen, term) → postings tuple
 _POSTING_CACHE_MAX = 4096  # hot-term cache (miru's LAB block-cache analog)
+_META_LAYOUT: dict[tuple, "_MetaLayout"] = {}
+# The block cache lives in every process that serves, including each
+# executor Python worker running _gather_display_fields: 32 workers × this
+# bound (1 GiB) must stay far below one dense doc_meta table at 100M docs
+# (~10 GB), which CLAUDE.md bans from workers.
+_BLOCK_CACHE_MAX_BYTES = 32 << 20
+_LIVE_GENERATION: dict[str, float] = {}
+
+
+class _ByteLRU:
+    """LRU map bounded by the summed byte size of its values (dicts iterate
+    in insertion order; hits re-insert at the tail). An entry larger than
+    the bound is evicted at once: the caller still holds it for its call."""
+
+    def __init__(self):
+        self.entries: dict[tuple, tuple[object, int]] = {}
+        self.nbytes = 0
+
+    def get(self, key):
+        hit = self.entries.pop(key, None)
+        if hit is None:
+            return None
+        self.entries[key] = hit
+        return hit[0]
+
+    def put(self, key, value, nbytes: int) -> None:
+        self.pop(key)
+        self.entries[key] = (value, nbytes)
+        self.nbytes += nbytes
+        while self.nbytes > _BLOCK_CACHE_MAX_BYTES:
+            self.pop(next(iter(self.entries)))
+
+    def pop(self, key) -> None:
+        old = self.entries.pop(key, None)
+        if old is not None:
+            self.nbytes -= old[1]
+
+
+_BLOCK_CACHE = _ByteLRU()
 
 
 def _index_generation(index_dir: str) -> float:
     try:
-        return os.path.getmtime(os.path.join(index_dir, "corpus_stats.json"))
+        gen = os.path.getmtime(os.path.join(index_dir, "corpus_stats.json"))
     except OSError:
-        return -1.0
+        gen = -1.0
+    if _LIVE_GENERATION.get(index_dir) != gen:
+        _LIVE_GENERATION[index_dir] = gen
+        _sweep_stale(index_dir, gen)
+    return gen
+
+
+def _sweep_stale(index_dir: str, gen: float) -> None:
+    """Drop every cache entry of ``index_dir`` whose generation is not ``gen``."""
+    def stale(k):
+        return k[0] == index_dir and k[1] != gen
+
+    for cache in (_DATASET_CACHE, _DOCLEN_CACHE, _POSTING_CACHE, _META_LAYOUT):
+        for k in [k for k in cache if stale(k)]:
+            del cache[k]
+    for k in [k for k in _BLOCK_CACHE.entries if stale(k)]:
+        _BLOCK_CACHE.pop(k)
 
 
 def _dataset(index_dir: str, part: str) -> pads.Dataset:
     """Cached pyarrow dataset (file discovery is a filesystem walk per call
     otherwise — measured as the bulk of warm-query latency)."""
-    key = (index_dir, part, _index_generation(index_dir))
+    key = (index_dir, _index_generation(index_dir), part)
     ds = _DATASET_CACHE.get(key)
     if ds is None:
         ds = pads.dataset(os.path.join(index_dir, part))
@@ -116,16 +186,143 @@ def _dataset(index_dir: str, part: str) -> pads.Dataset:
     return ds
 
 
-# Above this many ids the sparse filtered read stops paying (it touches
+@dataclass
+class _MetaLayout:
+    """doc_meta's row groups as parallel arrays: file path and footer, row
+    group index, doc_id min/max. Per-pid writes are packed several to a
+    task, so row-group id ranges overlap; a lookup visits every group whose
+    range covers a wanted id."""
+
+    paths: list[str]
+    footers: list
+    file: np.ndarray
+    row_group: np.ndarray
+    lo: np.ndarray
+    hi: np.ndarray
+    columns: list[str]
+
+
+def _meta_layout(index_dir: str, gen: float) -> _MetaLayout:
+    key = (index_dir, gen)
+    layout = _META_LAYOUT.get(key)
+    if layout is None:
+        paths = sorted(_dataset(index_dir, "doc_meta").files)
+        footers = [pq.read_metadata(p) for p in paths]
+        rows = []  # (file, row group, lo, hi)
+        for f, md in enumerate(footers):
+            j = md.schema.names.index("doc_id")
+            for r in range(md.num_row_groups):
+                rg = md.row_group(r)
+                if rg.num_rows == 0:
+                    continue
+                st = rg.column(j).statistics
+                if st is not None and st.has_min_max:
+                    rows.append((f, r, st.min, st.max))
+                else:  # no stats: the group covers every id
+                    rows.append((f, r, np.iinfo(np.int64).min, np.iinfo(np.int64).max))
+        cols = np.array(rows, dtype=np.int64).reshape(-1, 4)
+        layout = _MetaLayout(
+            paths, footers, cols[:, 0], cols[:, 1], cols[:, 2], cols[:, 3],
+            footers[0].schema.names if footers else [],
+        )
+        _META_LAYOUT[key] = layout
+    return layout
+
+
+def _read_row_group(path: str, footer, row_group: int, columns: list[str]):
+    """The one doc_meta parquet read of the serving path."""
+    with pq.ParquetFile(path, metadata=footer) as pf:
+        return pf.read_row_group(row_group, columns=columns)
+
+
+class _MetaBlock:
+    """One decoded doc_meta row group: doc_ids sorted, plus the columns read
+    so far as Arrow arrays in the same order. Columns load on first use, so
+    a doc_len fetch never decodes the display strings."""
+
+    def __init__(self, ids: np.ndarray):
+        self.order = None if np.all(ids[1:] > ids[:-1]) else np.argsort(ids, kind="stable")
+        self.ids = ids if self.order is None else ids[self.order]
+        self.cols: dict[str, pa.Array] = {}
+        self.nbytes = self.ids.nbytes + (0 if self.order is None else self.order.nbytes)
+
+    def add(self, name: str, col) -> None:
+        col = col.combine_chunks()
+        self.cols[name] = col if self.order is None else col.take(self.order)
+        self.nbytes += self.cols[name].nbytes
+
+
+def _meta_block(index_dir: str, gen: float, layout: _MetaLayout, g: int, columns) -> _MetaBlock:
+    f, r = int(layout.file[g]), int(layout.row_group[g])
+    key = (index_dir, gen, layout.paths[f], r)
+    blk = _BLOCK_CACHE.get(key)
+    need = [c for c in columns if blk is None or c not in blk.cols]
+    if need:
+        t = _read_row_group(
+            layout.paths[f], layout.footers[f], r, (["doc_id"] if blk is None else []) + need
+        )
+        if blk is None:
+            blk = _MetaBlock(np.asarray(t.column("doc_id"), dtype=np.int64))
+        for c in need:
+            blk.add(c, t.column(c))
+        _BLOCK_CACHE.put(key, blk, blk.nbytes)
+    return blk
+
+
+def _meta_lookup(index_dir: str, ids, columns: list[str]) -> dict:
+    """doc_meta ``columns`` for ``ids`` (Arrow arrays, row i ↔ ids[i]),
+    served from the row-group cache.
+
+    Visits only the row groups whose footer doc_id range covers a wanted id.
+    Hit rows are taken from the groups in one pass per column, early once
+    the groups held for it outgrow the cache bound: a large id set never
+    holds the whole table (the worker rule in CLAUDE.md). An empty id set
+    reads no file; ids absent from doc_meta raise."""
+    ids = np.asarray(ids, dtype=np.int64)
+    if ids.size == 0:
+        return {c: pa.nulls(0) for c in columns}
+    want, inv = np.unique(ids, return_inverse=True)
+    gen = _index_generation(index_dir)
+    layout = _meta_layout(index_dir, gen)
+    start = np.searchsorted(want, layout.lo, side="left")
+    stop = np.searchsorted(want, layout.hi, side="right")
+    touched = np.nonzero(start < stop)[0]
+    got, parts = [], {c: [] for c in columns}
+    held, rows, offset, held_bytes = [], [], 0, 0  # groups with hits not yet taken
+    for i, g in enumerate(touched):
+        sub = want[start[g] : stop[g]]
+        blk = _meta_block(index_dir, gen, layout, g, columns)
+        pos = np.minimum(np.searchsorted(blk.ids, sub), blk.ids.size - 1)
+        hit = blk.ids[pos] == sub
+        if hit.any():
+            got.append(sub[hit])
+            rows.append(pos[hit] + offset)  # row in the held groups' concatenation
+            held.append(blk)
+            offset += blk.ids.size
+            held_bytes += blk.nbytes
+        if held and (i == touched.size - 1 or held_bytes > _BLOCK_CACHE_MAX_BYTES):
+            r = np.concatenate(rows)
+            for c in columns:
+                parts[c].append(pa.chunked_array([b.cols[c] for b in held]).take(r).combine_chunks())
+            held, rows, offset, held_bytes = [], [], 0, 0
+    n_got = sum(x.size for x in got)
+    if n_got != want.size:
+        raise ValueError(f"doc_meta is missing {want.size - n_got} of {want.size} ids")
+    # row groups overlap, so the hits do not arrive in id order
+    out = np.argsort(np.concatenate(got), kind="stable")[inv]
+    return {c: pa.chunked_array(parts[c]).take(out) for c in columns}
+
+
+# Above this many ids the sparse read stops paying (it touches
 # min(|ids|, row groups) groups; a big spread set degenerates to the full
-# scan plus filter overhead) — fall back to the dense cached array.
+# scan plus lookup overhead) — fall back to the dense cached array.
 _SPARSE_IDS_MAX = 65536
 
 
 class _SparseCol:
-    """Driver-side docID → value map fetched with a row-group-pruned isin
-    read — numpy-fancy-indexable like the dense array, but it touches only
-    the row groups containing the requested ids. This is the first-query /
+    """Driver-side docID → value map fetched through the doc_meta row-group
+    cache — numpy-fancy-indexable like the dense array, but it touches only
+    the row groups covering the requested ids. This is the first-query /
     rare-term serving shape at large N: the 100M-doc run measured the dense
     doc_len+meta materialization at minutes of wall for a 1-hit query."""
 
@@ -157,16 +354,8 @@ class _SparseCol:
 
 def _sparse_col(index_dir: str, column: str, ids: np.ndarray) -> _SparseCol:
     want = np.unique(np.asarray(ids, dtype=np.int64))
-    t = _dataset(index_dir, "doc_meta").to_table(
-        columns=["doc_id", column],
-        filter=pads.field("doc_id").isin(want.tolist()),
-    )
-    got = np.asarray(t.column("doc_id"), dtype=np.int64)
-    if got.size != want.size:
-        raise ValueError(
-            f"doc_meta is missing {want.size - got.size} of {want.size} ids"
-        )
-    return _SparseCol(got, np.asarray(t.column(column), dtype=np.int64))
+    vals = _meta_lookup(index_dir, want, [column])[column]
+    return _SparseCol(want, np.asarray(vals, dtype=np.int64))
 
 
 def _doclens_for(index_dir: str, postings: dict, ast) -> "np.ndarray | _SparseCol":
@@ -174,7 +363,7 @@ def _doclens_for(index_dir: str, postings: dict, ast) -> "np.ndarray | _SparseCo
     already exists (or must — termless-matchable shapes draw candidates
     from index masks, not postings), else a sparse fetch of the posting
     universe when it is small. Never populates the dense cache itself."""
-    key = (index_dir, _index_generation(index_dir))
+    key = (index_dir, _index_generation(index_dir), "doc_len")
     if key in _DOCLEN_CACHE or qp.can_match_termless(ast):
         return _doclens(index_dir)
     sizes = sum(p[0].size for p in postings.values())
@@ -186,12 +375,11 @@ def _doclens_for(index_dir: str, postings: dict, ast) -> "np.ndarray | _SparseCo
 
 def _docts_for(index_dir: str, cand: np.ndarray) -> "np.ndarray | _SparseCol":
     """Doc-time provider for a KNOWN candidate set: dense cache if present,
-    sparse row-group-pruned fetch when the set is small."""
-    key = (index_dir, "ts", _index_generation(index_dir))
-    if key in _DOCLEN_CACHE or cand.size > _SPARSE_IDS_MAX:
+    sparse row-group fetch when the set is small."""
+    gen = _index_generation(index_dir)
+    if (index_dir, gen, "ts") in _DOCLEN_CACHE or cand.size > _SPARSE_IDS_MAX:
         return _docts(index_dir)
-    ds = _dataset(index_dir, "doc_meta")
-    if "ts" not in ds.schema.names:
+    if "ts" not in _meta_layout(index_dir, gen).columns:
         raise ValueError("index has no doc-time column (built without ts)")
     return _sparse_col(index_dir, "ts", cand)
 
@@ -199,7 +387,7 @@ def _docts_for(index_dir: str, cand: np.ndarray) -> "np.ndarray | _SparseCol":
 def _doclens(index_dir: str) -> np.ndarray:
     """Dense docID → doc_len array. Driver-side cache — fine for the serving
     path at partition scale; the distributed path joins instead."""
-    key = (index_dir, _index_generation(index_dir))
+    key = (index_dir, _index_generation(index_dir), "doc_len")
     arr = _DOCLEN_CACHE.get(key)
     if arr is None:
         t = _dataset(index_dir, "doc_meta").to_table(columns=["doc_id", "doc_len"])
@@ -215,7 +403,7 @@ def _docts(index_dir: str) -> np.ndarray:
     """Dense docID → event-time array (S4 doc-time index, the serving analog
     of miru's MiruTimeIndex.java:15-56 / LabTimeIndex.java:139-150). Raises
     if the index was built without a ts column."""
-    key = (index_dir, "ts", _index_generation(index_dir))
+    key = (index_dir, _index_generation(index_dir), "ts")
     arr = _DOCLEN_CACHE.get(key)
     if arr is None:
         ds = _dataset(index_dir, "doc_meta")
@@ -232,9 +420,9 @@ def _docts(index_dir: str) -> np.ndarray:
 
 def _all_doc_ids(index_dir: str) -> np.ndarray:
     """Sorted full index mask (every doc_id) — ONE int64 column read, not
-    the 5-column _docmeta table (at 100M docs the string columns are ~10x
-    the bytes and would be pinned in cache just to extract ids)."""
-    key = (index_dir, "all_ids", _index_generation(index_dir))
+    the display columns (at 100M docs the string columns are ~10x the
+    bytes and would be pinned in cache just to extract ids)."""
+    key = (index_dir, _index_generation(index_dir), "all_ids")
     arr = _DOCLEN_CACHE.get(key)
     if arr is None:
         t = _dataset(index_dir, "doc_meta").to_table(columns=["doc_id"])
@@ -243,49 +431,17 @@ def _all_doc_ids(index_dir: str) -> np.ndarray:
     return arr
 
 
-def _docmeta(index_dir: str) -> pd.DataFrame:
-    """Cached gather source (doc_id, repo, path, commit, lang) — the serving
-    analog of miru's in-memory activity index; the distributed path joins the
-    parquet instead (no driver materialization)."""
-    key = (index_dir, _index_generation(index_dir))
-    meta = _DOCMETA_CACHE.get(key)
-    if meta is None:
-        meta = (
-            _dataset(index_dir, "doc_meta")
-            .to_table(columns=["doc_id", "repo", "path", "commit", "lang"])
-            .to_pandas()
-        )
-        _DOCMETA_CACHE[key] = meta
-    return meta
+_DISPLAY_COLS = ["repo", "path", "commit", "lang"]
 
 
-def _docmeta_for(index_dir: str, ids: np.ndarray) -> pd.DataFrame:
-    """Gather source for a KNOWN id set: the cached full table when one
-    exists, else row-group-pruned isin reads of just those ids — NEVER a
-    dense materialization (at 100M docs that is a multi-GB table; this
-    runs inside executor Python workers via _gather_display_fields, where
-    a dense fallback would pin that table once per worker). Large id sets
-    are read in chunks so the isin value list stays bounded."""
-    key = (index_dir, _index_generation(index_dir))
-    if key in _DOCMETA_CACHE:
-        return _docmeta(index_dir)
-    cols = ["doc_id", "repo", "path", "commit", "lang"]
-    ds = _dataset(index_dir, "doc_meta")
-    uids = np.unique(np.asarray(ids, dtype=np.int64))
-    chunk = 100_000
-    parts = [
-        ds.to_table(
-            columns=cols, filter=pads.field("doc_id").isin(uids[i : i + chunk].tolist())
-        ).to_pandas()
-        for i in range(0, uids.size, chunk)
-    ]
-    if not parts:
-        # typed empty frame, no scan: even an isin([]) read walks row-group
-        # stats across every doc_meta file
-        return pd.DataFrame(
-            {c: pd.Series(dtype="int64" if c == "doc_id" else "object") for c in cols}
-        )
-    return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
+def _docmeta_for(index_dir: str, ids: np.ndarray) -> dict[str, np.ndarray]:
+    """Display fields {repo, path, commit, lang} for a KNOWN id set, row i ↔
+    ids[i], through the row-group cache — NEVER a dense materialization (at
+    100M docs that is a multi-GB table; this runs inside executor Python
+    workers via _gather_display_fields, where a dense fallback would pin
+    that table once per worker)."""
+    cols = _meta_lookup(index_dir, ids, _DISPLAY_COLS)
+    return {c: np.asarray(cols[c]) for c in _DISPLAY_COLS}
 
 
 def _gather_display_fields(top: DataFrame, index_dir: str) -> DataFrame:
@@ -298,22 +454,21 @@ def _gather_display_fields(top: DataFrame, index_dir: str) -> DataFrame:
     join and the per-doc aggregation's exchange — at 100M docs, the widest
     shuffle in the plan — to survive in only k rows. Here the scoring plan
     carries nothing but doc_id/score (plus AST-referenced filter fields)
-    and the k surviving rows gather their fields via the same row-group-
-    pruned doc_meta read the serving path uses (`_docmeta_for`): executor-
-    side mapInPandas, no exchange, touches only the row groups covering
-    the k ids (0.3 s for 512 of 1.04M rows at 100M docs, BENCH_100M_Q2)."""
-    names = [f.name for f in top.schema.fields] + ["repo", "path", "commit", "lang"]
+    and the k surviving rows gather their fields through the same doc_meta
+    row-group cache the serving path uses (`_docmeta_for`): executor-side
+    mapInPandas, no exchange, touches only the row groups covering the k
+    ids (0.3 s for 512 of 1.04M rows at 100M docs with the earlier
+    isin-filtered read, BENCH_100M_Q2)."""
+    names = [f.name for f in top.schema.fields] + _DISPLAY_COLS
     out_schema = T.StructType(
-        list(top.schema.fields)
-        + [T.StructField(c, T.StringType()) for c in ("repo", "path", "commit", "lang")]
+        list(top.schema.fields) + [T.StructField(c, T.StringType()) for c in _DISPLAY_COLS]
     )
 
     def gather(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = _docmeta_for(index_dir, pdf["doc_id"].to_numpy())
-            yield pdf.merge(m, on="doc_id", how="left")[names]
+            yield pdf.assign(**_docmeta_for(index_dir, pdf["doc_id"].to_numpy()))[names]
 
     return top.mapInPandas(gather, schema=out_schema)
 
@@ -377,15 +532,10 @@ def load_postings(
         if entry is None:
             continue
         out[term] = entry
-        if len(_POSTING_CACHE) >= _POSTING_CACHE_MAX:
-            # sweep entries from other index generations first (a refreshed
-            # index must keep earning cache hits), then LRU-evict (dicts
-            # iterate in insertion order; hits re-insert at the tail)
-            stale = [k for k in _POSTING_CACHE if (k[0], k[1]) != (index_dir, gen)]
-            for k in stale[: max(1, len(stale))]:
-                del _POSTING_CACHE[k]
-            while len(_POSTING_CACHE) >= _POSTING_CACHE_MAX:
-                del _POSTING_CACHE[next(iter(_POSTING_CACHE))]
+        # LRU-evict (dicts iterate in insertion order; hits re-insert at the
+        # tail); a refreshed index's old generations are already swept
+        while len(_POSTING_CACHE) >= _POSTING_CACHE_MAX:
+            del _POSTING_CACHE[next(iter(_POSTING_CACHE))]
         _POSTING_CACHE[(index_dir, gen, term)] = entry
     return out
 
@@ -393,10 +543,24 @@ def load_postings(
 def load_filter_bitmap(index_dir: str, field: str, values: list[str]) -> bytes:
     """Roaring OR of the selected values' filter bitmaps (miru's
     getCompositeAuthz pattern, miru-plugin/.../index/MiruAuthzIndex.java:13),
-    done container-level in miru_spark.roaring."""
-    ds = _dataset(index_dir, "filters")
-    t = ds.to_table(filter=(pads.field("field") == field) & (pads.field("value").isin(values)))
-    return roaring.or_many([b.as_py() for b in t.column("doc_ids")])
+    done container-level in miru_spark.roaring. Each value's bitmap is read
+    once per index generation and kept in the block cache (a value absent
+    from the index caches as the empty bitmap)."""
+    gen = _index_generation(index_dir)
+    keys = {v: (index_dir, gen, f"filters/{field}", v) for v in values}
+    bitmaps = {v: _BLOCK_CACHE.get(k) for v, k in keys.items()}
+    missing = sorted(v for v, b in bitmaps.items() if b is None)
+    if missing:
+        t = _dataset(index_dir, "filters").to_table(
+            columns=["value", "doc_ids"],
+            filter=(pads.field("field") == field) & (pads.field("value").isin(missing)),
+        )
+        # one row per (field, value): build_field_filters groups by both
+        read = dict(zip(t.column("value").to_pylist(), t.column("doc_ids").to_pylist()))
+        for v in missing:
+            bitmaps[v] = read.get(v) or roaring.or_many([])
+            _BLOCK_CACHE.put(keys[v], bitmaps[v], len(bitmaps[v]))
+    return roaring.or_many(list(bitmaps.values()))
 
 
 def load_filter_set(index_dir: str, field: str, values: list[str]) -> np.ndarray:
@@ -669,11 +833,10 @@ def search_local(
     scores = _score_candidates(cand, scoring_terms, postings, doclens, h.n_docs, h.avgdl)
     kk = min(k, cand.size)
     order = np.lexsort((cand, scores))[::-1][:kk]  # (score desc, docID desc)
-    top = pd.DataFrame({"doc_id": cand[order], "score": scores[order]})
+    top = {"doc_id": cand[order], "score": scores[order]}
     if gather:  # lazy gather of stored fields (miru's Promise gather, FullText.java:204-218)
-        meta = _docmeta_for(index_dir, top["doc_id"].to_numpy())
-        top = top.merge(meta, on="doc_id", how="left")
-    return top.reset_index(drop=True)
+        top.update(_docmeta_for(index_dir, top["doc_id"]))
+    return pd.DataFrame(top)
 
 
 # --------------------------------------------------------------- distributed

@@ -1,0 +1,128 @@
+"""The serving path's caches: the byte-bounded block cache of decoded
+doc_meta row groups and filter bitmaps (scorer._BLOCK_CACHE), and the sweep
+of an index's stale generations out of every serving cache."""
+
+import os
+import shutil
+
+import numpy as np
+import pyarrow.parquet as pq
+import pytest
+
+from miru_spark.query import scorer as sc
+
+QUERIES = [
+    ("merge AND sort", None),
+    ("rareterm0", None),
+    ("merge OR sort OR index", None),
+    ("merge AND NOT sort", None),
+    ("merge", ["python"]),
+]
+
+
+def _cache_keys():
+    return [
+        k
+        for cache in (sc._DATASET_CACHE, sc._DOCLEN_CACHE, sc._POSTING_CACHE,
+                      sc._META_LAYOUT, sc._BLOCK_CACHE.entries)
+        for k in cache
+    ]
+
+
+@pytest.fixture
+def reads(monkeypatch):
+    """Counts doc_meta row-group reads and the dataset scans each serving
+    call starts, per index part, behind a fresh block cache and no dense
+    doc_len array (so queries take the sparse path)."""
+    counts = {"row_groups": 0}
+    read_row_group, dataset = sc._read_row_group, sc._dataset
+
+    def counting_read(*args, **kwargs):
+        counts["row_groups"] += 1
+        return read_row_group(*args, **kwargs)
+
+    def counting_dataset(index_dir, part):
+        counts[part] = counts.get(part, 0) + 1
+        return dataset(index_dir, part)
+
+    monkeypatch.setattr(sc, "_read_row_group", counting_read)
+    monkeypatch.setattr(sc, "_dataset", counting_dataset)
+    monkeypatch.setattr(sc, "_BLOCK_CACHE", sc._ByteLRU())
+    monkeypatch.setattr(sc, "_DOCLEN_CACHE", {})
+    monkeypatch.setattr(sc, "_META_LAYOUT", {})
+    return counts
+
+
+def _answers(index_dir):
+    return [sc.search_local(index_dir, q, k=10, lang_filter=lang) for q, lang in QUERIES]
+
+
+def test_warm_repeat_reads_no_doc_meta_parquet(tiny_index, reads):
+    cold = _answers(tiny_index)
+    assert reads["row_groups"] > 0 and reads.get("filters", 0) > 0
+    reads.clear()
+    reads["row_groups"] = 0
+    warm = _answers(tiny_index)
+    assert reads == {"row_groups": 0}, reads  # no doc_meta, filters or posting reads
+    assert (tiny_index, sc._index_generation(tiny_index), "doc_len") not in sc._DOCLEN_CACHE
+    for a, b in zip(cold, warm):
+        assert a.equals(b)
+    assert sum(n for _, n in sc._BLOCK_CACHE.entries.values()) == sc._BLOCK_CACHE.nbytes
+
+
+def test_byte_bound_holds_and_answers_unchanged(tiny_index, reads, monkeypatch):
+    expected = _answers(tiny_index)
+    sizes = [n for _, n in sc._BLOCK_CACHE.entries.values()]
+    assert len(sizes) > 2
+    bound = sorted(sizes)[len(sizes) // 2] * 2  # holds a few entries, not all
+    assert bound < sum(sizes)
+    monkeypatch.setattr(sc, "_BLOCK_CACHE_MAX_BYTES", bound)
+    monkeypatch.setattr(sc, "_BLOCK_CACHE", sc._ByteLRU())
+    for _ in range(2):
+        for (q, lang), want in zip(QUERIES, expected):
+            got = sc.search_local(tiny_index, q, k=10, lang_filter=lang)
+            assert got.equals(want), q
+            assert sc._BLOCK_CACHE.nbytes <= bound
+            assert sum(n for _, n in sc._BLOCK_CACHE.entries.values()) == sc._BLOCK_CACHE.nbytes
+
+
+def test_meta_lookup_empty_and_absent_ids(tiny_index, reads):
+    before = dict(reads)
+    assert len(sc._meta_lookup(tiny_index, np.empty(0, dtype=np.int64), ["doc_len"])["doc_len"]) == 0
+    assert reads == before  # an empty id set reads no file
+    n_docs = sc.IndexHandle.open(tiny_index).n_docs
+    with pytest.raises(ValueError, match="doc_meta is missing 1 of 2 ids"):
+        sc._meta_lookup(tiny_index, [0, n_docs + 5], ["doc_len"])
+    with pytest.raises(ValueError, match="doc_meta is missing"):
+        sc._docmeta_for(tiny_index, np.array([n_docs + 7]))
+    col = sc._sparse_col(tiny_index, "doc_len", np.array([1, 0]))
+    with pytest.raises(KeyError):
+        col[np.array([2])]
+
+
+def test_filter_bitmaps_match_doc_meta(tiny_index, reads):
+    meta = pq.read_table(os.path.join(tiny_index, "doc_meta"), columns=["doc_id", "lang"]).to_pandas()
+    langs = sorted(meta["lang"].unique())[:2] + ["no-such-lang"]
+    for _ in range(2):  # cold, then from the block cache
+        got = sc.load_filter_set(tiny_index, "lang", langs)
+        want = np.sort(meta.loc[meta["lang"].isin(langs), "doc_id"].to_numpy())
+        np.testing.assert_array_equal(got, want)
+    assert reads.get("filters") == 1  # the absent value is cached too
+
+
+def test_new_generation_sweeps_stale_cache_entries(tiny_index, tmp_path):
+    idx = str(tmp_path / "copy")
+    shutil.copytree(tiny_index, idx)
+    sc.search_local(idx, "lang:python OR merge", k=10)  # termless: dense arrays too
+    for q, lang in QUERIES:
+        sc.search_local(idx, q, k=10, lang_filter=lang)
+    old = sc._index_generation(idx)
+    for cache in (sc._DATASET_CACHE, sc._DOCLEN_CACHE, sc._POSTING_CACHE,
+                  sc._META_LAYOUT, sc._BLOCK_CACHE.entries):
+        assert any(k[:2] == (idx, old) for k in cache)
+    stats = os.path.join(idx, "corpus_stats.json")
+    os.utime(stats, (os.path.getatime(stats), os.path.getmtime(stats) + 10))
+    sc.search_local(idx, "merge AND sort", k=10, lang_filter=["python"])
+    assert sc._index_generation(idx) != old
+    assert not [k for k in _cache_keys() if k[:2] == (idx, old)]
+    assert sum(n for _, n in sc._BLOCK_CACHE.entries.values()) == sc._BLOCK_CACHE.nbytes

@@ -135,28 +135,43 @@ def test_wand_topk_property(data):
     np.testing.assert_allclose(scores[order], exp_scores[:kk], rtol=1e-12)
 
 
-def test_sparse_serving_reads_match_dense(tiny_index):
-    """Cold-cache serving of a small-universe query takes the sparse
-    row-group-pruned read path (_sparse_col / _docmeta_for); its results
-    must be identical to the dense-cache path, and it must not populate
-    the dense caches it exists to avoid."""
+def test_sparse_serving_reads_match_dense(tiny_index, monkeypatch):
+    """Serving a small-universe query takes the sparse path through the
+    doc_meta row-group cache (_sparse_col / _docmeta_for). Its answer with
+    a cold cache, with a warm cache and with the dense doc_len array must
+    agree, its display fields must equal a full pyarrow read of doc_meta,
+    and the sparse path must never populate the dense array it avoids."""
+    import os
+
     import numpy as np
+    import pyarrow.parquet as pq
 
     from miru_spark.query import scorer as sc
 
+    full = (
+        pq.read_table(os.path.join(tiny_index, "doc_meta"))
+        .to_pandas()
+        .set_index("doc_id")
+    )
     gen = sc._index_generation(tiny_index)
+    monkeypatch.setattr(sc, "_DOCLEN_CACHE", {})
     for q in ("rareterm0", "merge AND sort"):
-        sc._DOCLEN_CACHE.pop((tiny_index, gen), None)
-        sc._DOCMETA_CACHE.pop((tiny_index, gen), None)
+        monkeypatch.setattr(sc, "_BLOCK_CACHE", sc._ByteLRU())
+        sc._DOCLEN_CACHE.clear()
         cold = sc.search_local(tiny_index, q, k=10)
-        assert (tiny_index, gen) not in sc._DOCLEN_CACHE
-        assert (tiny_index, gen) not in sc._DOCMETA_CACHE
-        sc._doclens(tiny_index)  # warm the dense caches
-        sc._docmeta(tiny_index)
+        assert sc._BLOCK_CACHE.entries, q
         warm = sc.search_local(tiny_index, q, k=10)
-        assert cold["doc_id"].tolist() == warm["doc_id"].tolist(), q
-        assert np.allclose(cold["score"], warm["score"])
-        assert cold["path"].tolist() == warm["path"].tolist(), q
+        assert (tiny_index, gen, "doc_len") not in sc._DOCLEN_CACHE
+        sc._doclens(tiny_index)  # warm the dense array: the dense path
+        dense = sc.search_local(tiny_index, q, k=10)
+        assert len(cold), q
+        for other in (warm, dense):
+            assert cold["doc_id"].tolist() == other["doc_id"].tolist(), q
+            assert np.allclose(cold["score"], other["score"])
+        want = full.loc[cold["doc_id"], ["repo", "path", "commit", "lang"]]
+        for c in want.columns:
+            assert cold[c].tolist() == want[c].tolist(), (q, c)
+            assert warm[c].tolist() == want[c].tolist(), (q, c)
 
 
 def test_sparse_col_rejects_absent_ids():
