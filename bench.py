@@ -52,7 +52,7 @@ def main() -> None:
     # pressure cuts memory bandwidth >10x with no guest-visible signal
     # (tools/host_probe.py); stamping the probe into the bench JSON lets a
     # reader tell a real regression from a degraded-host artifact.
-    from tools.host_probe import probe
+    from tools.host_probe import BW_HEALTHY_GBPS, probe
     bw_pre = probe()
 
     queries: dict[str, float] = {}
@@ -180,7 +180,7 @@ def main() -> None:
     # taken under a degraded host move shuffle-heavy ops 2-3x and must not
     # be transcribed as a row of record) — a run outside the band is marked
     # ADVISORY rather than silently comparable
-    healthy = bw_pre["bw_gbps"] >= 8.0 and bw_post["bw_gbps"] >= 8.0
+    healthy = min(bw_pre["bw_gbps"], bw_post["bw_gbps"]) >= BW_HEALTHY_GBPS
     print(json.dumps({
         "metric": "index-build + BM25 serve + headline query suite wall time",
         "value": round(total, 3),

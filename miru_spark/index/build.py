@@ -47,7 +47,7 @@ from miru_spark.analyzer import tokenize_arrow_flat
 from miru_spark import roaring
 from miru_spark.codec import encode_postings
 from miru_spark.corpus import verify_sha256
-from miru_spark.jsonio import save_json_atomic
+from miru_spark.jsonio import load_json, save_json_atomic
 
 KEY_COLS = ["repo", "path", "commit"]
 
@@ -391,6 +391,11 @@ def build_field_filters(spark: SparkSession, index_dir: str) -> None:
     The analog of miru's per-term Roaring filter bitmaps / authz index
     (miru-plugin/.../index/MiruAuthzIndex.java:9-13); AND/OR/ANDNOT against
     candidate doc sets at query time. Low-cardinality fields only.
+
+    Ends by re-saving ``corpus_stats.json``: its mtime is the serving
+    caches' generation stamp, and merge_segments writes it BEFORE this
+    rewrite — a query in between would cache the old bitmaps under the new
+    generation. Re-saving it makes it once more the last file written.
     """
     meta = spark.read.parquet(os.path.join(index_dir, "doc_meta"))
     out_schema = T.StructType(
@@ -414,6 +419,8 @@ def build_field_filters(spark: SparkSession, index_dir: str) -> None:
         frames.append(kv.groupBy("field", "value").applyInPandas(enc, schema=out_schema))
     out = frames[0].unionAll(frames[1])
     out.write.mode("overwrite").parquet(os.path.join(index_dir, "filters"))
+    stats_path = os.path.join(index_dir, "corpus_stats.json")
+    save_json_atomic(stats_path, load_json(stats_path, None))
 
 
 def build_index(

@@ -250,7 +250,8 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
         "n_terms": int(n_terms),
         "n_pids": int(n_pids),
     }
-    # the serving caches' generation stamp: written last, and atomically so a
-    # query racing a refresh never parses a torn file
+    # the serving caches' generation stamp: written after every merged
+    # artifact, and atomically so a query racing a refresh never parses a
+    # torn file (build_field_filters re-stamps it after rewriting filters/)
     save_json_atomic(os.path.join(index_dir, "corpus_stats.json"), corpus_stats)
     return dict(corpus_stats)

@@ -265,13 +265,11 @@ def _index_complete(idx: str) -> bool:
 def _finish_engine_topk(spark: SparkSession, res: DataFrame) -> DataFrame:
     """Execute the engine's top-k plan and rank the ≤k survivors driver-side.
 
-    ``search_distributed`` terminal plans to TakeOrderedAndProject (per-
-    partition heaps, driver merge — PLANS.md). Stacking a projection+window
-    ON TOP of its limit defeats that fusion: the optimizer pushes the
-    projection through the limit and the plan degrades to a full
-    range-sort + exchange of every candidate (observed via explain). So the
-    doc_id decode / rounding / rank happen HERE, on the k rows TOAP already
-    delivered to the driver — the same place its merge ends anyway."""
+    ``search_distributed`` already cuts to k rows inside its plan (a
+    WindowGroupLimit Partial/Final pair around the exchange — PLANS.md).
+    The doc_id decode / rounding / rank happen HERE, on the ≤k rows it
+    delivers to the driver, rather than as more plan stacked on its
+    result."""
     pdf = res.toPandas()
     schema = "doc_id long, score double, rank int"
     if len(pdf) == 0:
@@ -686,18 +684,19 @@ BATCH_CNF_QUERIES = [
 
 
 def ft_bm25_batch_cnf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched serving in MASKS mode (`plan="masks"` forced — the O(1)-plan-
-    size query-log form): every query's boolean converts to CNF clause
-    bitmasks evaluated as broadcast DATA (parser.cnf_clauses), covering the
-    shapes the flat 4-query gate does not — negated literals, De Morgan'd
-    groups, OR-distribution, and a pure-negative query whose matches enter
-    through the doc_meta branch at score 0.0. Oracle: per-query SQL generated
-    from the SAME CNF (independent DuckDB tokenization + boolean evaluation
-    over per-term matched flags)."""
+    """Batched serving in MASKS mode, the O(1)-plan-size query-log form
+    that search_batch takes because every query here is CNF-able
+    (tests/test_batch_search.py pins that): every query's boolean converts
+    to CNF clause bitmasks evaluated as broadcast DATA (parser.cnf_clauses),
+    covering the shapes the flat 4-query gate does not — negated literals,
+    De Morgan'd groups, OR-distribution, and a pure-negative query whose
+    matches enter through the doc_meta branch at score 0.0. Oracle:
+    per-query SQL generated from the SAME CNF (independent DuckDB
+    tokenization + boolean evaluation over per-term matched flags)."""
     from miru_spark.query.scorer import search_batch
 
     idx = build_documents_index(spark, sf_dir)
-    res = search_batch(spark, idx, BATCH_CNF_QUERIES, k=10, plan="masks")
+    res = search_batch(spark, idx, BATCH_CNF_QUERIES, k=10)
     return res.select(
         "query_id",
         F.substring("path", 5, 10).cast("long").alias("doc_id"),

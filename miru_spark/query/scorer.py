@@ -9,14 +9,17 @@ Tie order is miru's: (score desc, docID desc) (FullText.java:294-303).
 
 Two execution paths, rank-identical by test:
 
-- ``search_distributed``: the throughput path. Pure DataFrame program —
-  postings for ONLY the query terms are read (parquet predicate pushdown on
-  the term-range-partitioned merged index), decoded by a vectorized
-  mapInPandas, joined to doc lengths, aggregated per doc, boolean-filtered
-  by the query AST, ``orderBy(desc(score), desc(doc_id)).limit(k)``.
-  Scales to any corpus: no driver materialization, Catalyst/AQE handle the
-  joins; skew on head terms is bounded because merged rows are pre-sharded
-  (merge.py salting).
+- ``search_distributed`` / ``search_batch``: the throughput path, ONE
+  DataFrame program (``_bm25_topk``) over a batch of queries —
+  ``search_distributed`` is a batch of one. Postings for ONLY the query
+  terms are read (parquet predicate pushdown on the term-range-partitioned
+  merged index), decoded by a vectorized mapInPandas, fanned out per query,
+  joined to the masked doc_meta relation, aggregated per (query, doc),
+  boolean-filtered by each query's AST, and cut to the per-query top-k by a
+  ``row_number() <= k`` window that Spark plans as a WindowGroupLimit
+  Partial/Final pair around the exchange. Scales to any corpus: no driver
+  materialization, Catalyst/AQE handle the joins; skew on head terms is
+  bounded because merged rows are pre-sharded (merge.py salting).
 
 - ``search_local``: the serving-latency path. pyarrow reads only the posting
   rows of the query terms; numpy set algebra evaluates the filter AST
@@ -865,7 +868,7 @@ def _ast_to_condition(node, expansions, term_bits=None) -> F.Column:
 
     Evaluating the SAME condition over a row whose `mts` is the empty array
     (or `mbits` = 0) yields the query's termless-match predicate — the
-    doc_meta candidate branch reuses this directly (see search_distributed)."""
+    doc_meta candidate branch reuses this directly (see _bm25_topk)."""
     if isinstance(node, qp.Term):
         if term_bits is not None:
             return F.col("mbits").bitwiseAND(F.lit(1 << term_bits[node.term])) != 0
@@ -911,17 +914,275 @@ def _ast_to_condition(node, expansions, term_bits=None) -> F.Column:
 
 
 _BITMASK_MAX_TERMS = 63  # bits 0..62 of a signed long; beyond → collect_set
+# driver tables above this many rows join normally (AQE picks the strategy)
+# instead of being broadcast
+_BROADCAST_MAX_ROWS = 2_000_000
+_TOPK_SCHEMA = (
+    "query_id int, doc_id long, score double, rank int, "
+    "repo string, path string, commit string, lang string"
+)
 
 
-def _term_bit_column(term_bits: dict[str, int]) -> F.Column:
-    """term → its bit as a single flat CASE (one condition per term, no
-    nesting — linear plan size, see CLAUDE.md on when-chain blowup)."""
-    it = iter(sorted(term_bits.items()))
-    t0, i0 = next(it)
-    col = F.when(F.col("term") == t0, F.lit(1 << i0))
-    for t, i in it:
-        col = col.when(F.col("term") == t, F.lit(1 << i))
-    return col.otherwise(F.lit(0)).cast("long")
+def _driver_table(spark: SparkSession, columns: dict, schema: str) -> DataFrame:
+    """A driver-built table (removed ids, query fan-out, CNF clauses) as a
+    DataFrame, broadcast while it is driver-sized. Built from pandas so
+    Arrow plans it as a LocalRelation (an RDD only past
+    spark.sql.execution.arrow.localRelationThreshold, 48 MiB); a
+    list-built table is a LogicalRDD, which costs a Spark job per
+    broadcast."""
+    pdf = pd.DataFrame(columns)
+    df = spark.createDataFrame(pdf, schema)
+    return F.broadcast(df) if len(pdf) <= _BROADCAST_MAX_ROWS else df
+
+
+def _decode_posting_rows(batches):
+    for pdf in batches:
+        for term, db, tb in zip(pdf["term"], pdf["docids"], pdf["tfs"]):
+            d, tf = decode_postings(db, tb)
+            yield pd.DataFrame({"term": term, "doc_id": d, "tf": tf.astype(np.int32)})
+
+
+def _bm25_topk(
+    spark: SparkSession,
+    index_dir: str,
+    queries: list[str],
+    k: int,
+    lang_filter: list[str] | None = None,
+    repo_filter: list[str] | None = None,
+    time_range: tuple[int, int] | None = None,
+) -> DataFrame:
+    """The distributed BM25 plan: per-query top-k of N queries in ONE job
+    over ONE posting scan. Returns ``_TOPK_SCHEMA`` rows.
+
+    - driver: parse each query, expand prefixes, probe required terms
+      against the dictionary (the AND short-circuit — provably-empty
+      queries never reach the cluster);
+    - ``meta``: the one doc_meta relation, with every candidate mask
+      applied to it as a filter — lang/repo/time push into the parquet
+      scan, removed ids leave through one broadcast anti-join. Statistics
+      (df, avgdl, N) stay corpus-global (miru's buildIndexMask /
+      buildTimeRangeMask composition, MiruBitmapsRoaring.java:457-521);
+    - cluster: one term-pushdown scan covering the UNION of all live
+      queries' terms, one vectorized posting decode, then a broadcast
+      (query_id, term, scoring, bitval) fan-out so each decoded posting row
+      feeds every query that wants its term; joined to idf and to ``meta``
+      (doc_len + AST-referenced filter fields only), one (query_id, doc_id)
+      aggregation of BM25 contributions and matched-term bits;
+    - per-query AST filter, in one of two forms chosen from the input:
+      *masks* when every query is a boolean over term literals with ≤63
+      terms (parser.cnf_clauses: per-query CNF clause masks as broadcast
+      DATA, one ``forall`` filter — plan size O(1) in N, the query-log
+      form), else *CASE* (Field/Range/Xor or wider queries: one flat CASE
+      over query_id, each AST condition once — plan size linear in N, see
+      CLAUDE.md on when-chain blowup);
+    - queries that can match with ZERO term hits (a Field/Range/All clause
+      OR/XOR-reachable, or wholly termless) get candidate rows from ONE
+      extra ``meta`` scan at score 0.0, anti-joined against the docs
+      already decided by the aggregation (the reference evaluates field
+      filters against full index masks, MiruAggregateUtil.java:1098-1241);
+    - per-query top-k: row_number over (round(score, 6) desc, doc_id desc)
+      — the oracle's tie rule — filtered to rank ≤ k, which Spark plans as
+      a WindowGroupLimit Partial/Final pair around the exchange (per-
+      partition top-k before anything is shuffled); the raw float64 score
+      is returned. Display fields gather after the cut
+      (``_gather_display_fields``).
+    """
+    h = IndexHandle.open(index_dir)
+    from miru_spark import analyzers as anz
+
+    analyzer = anz.load(index_dir)
+    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta"))
+    has_ts = "ts" in meta.columns
+    if time_range is not None and not has_ts:
+        raise ValueError("index has no doc-time column (built without ts)")
+
+    parsed = []
+    all_required: set[str] = set()
+    for qid, q in enumerate(queries):
+        ast = qp.parse_query(q, analyzer=analyzer)
+        if qp.ranges(ast) and not has_ts:
+            # loud here — otherwise the missing ts column fails late with an
+            # opaque AnalysisException
+            raise ValueError(f"query {qid!r}: index has no doc-time column (built without ts)")
+        parsed.append((qid, ast))
+        all_required |= qp.required_terms(ast)
+
+    # one dictionary probe for every required term of every query
+    present: set[str] = set()
+    if all_required:
+        present = set(
+            _dataset(index_dir, "stats").to_table(
+                columns=["term"], filter=pads.field("term").isin(sorted(all_required))
+            ).column("term").to_pylist()
+        )
+    live = []  # (qid, ast, expansions, needed terms)
+    for qid, ast in parsed:
+        if qp.required_terms(ast) - present:
+            continue  # a required conjunct is absent → provably empty
+        expansions = expand_prefixes(index_dir, qp.prefixes(ast))
+        needed = qp.all_terms(ast) | {t for ts in expansions.values() for t in ts}
+        if needed or qp.can_match_termless(ast):
+            live.append((qid, ast, expansions, needed))
+    if not live:
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    union_needed = sorted(set().union(*(x[3] for x in live)))
+
+    # masks form: each query's CNF over its OWN bit assignment; None → CASE
+    masks: dict | None = {}
+    for qid, ast, expansions, needed in live:
+        clauses = qp.cnf_clauses(ast, expansions)
+        if clauses is None or len(needed) > _BITMASK_MAX_TERMS:
+            masks = None
+            break
+        bits = {t: i for i, t in enumerate(sorted(needed))}
+        masks[qid] = (bits, [
+            (sum(1 << bits[t] for t in pos), sum(1 << bits[t] for t in neg))
+            for pos, neg in clauses
+        ])
+    # CASE form: one bit assignment over the UNION of the queries' terms
+    # (collect_set of the terms past 63), so every condition tests its own
+    # terms' bits
+    union_bits = (
+        {t: i for i, t in enumerate(union_needed)}
+        if len(union_needed) <= _BITMASK_MAX_TERMS
+        else None
+    )
+    bitmask = masks is not None or union_bits is not None
+
+    if lang_filter:
+        meta = meta.filter(F.col("lang").isin(lang_filter))
+    if repo_filter:
+        meta = meta.filter(F.col("repo").isin(repo_filter))
+    if time_range is not None:
+        meta = meta.filter(F.col("ts").between(time_range[0], time_range[1]))
+    removed = removal.removed_array(index_dir)
+    if removed.size:
+        rdf = _driver_table(spark, {"doc_id": removed.astype(np.int64)}, "doc_id long")
+        meta = meta.join(rdf, "doc_id", "left_anti")
+    # the scoring plan carries ONLY doc_len + the AST-referenced filter
+    # fields; display fields gather post-top-k
+    cond_fields = sorted(
+        set().union(*(qp.filter_fields(x[1]) for x in live)) - {"doc_id", "doc_len"}
+    )
+    meta = meta.select("doc_id", "doc_len", *cond_fields)
+
+    agg = out = None
+    if union_needed:
+        fan = {"query_id": [], "term": [], "scoring": [], "bitval": []}
+        for qid, ast, expansions, needed in live:
+            scoring = qp.positive_terms(ast) | {
+                t for p in qp.positive_prefixes(ast) for t in expansions.get(p, [])
+            }
+            bits = masks[qid][0] if masks is not None else union_bits
+            for t in sorted(needed):
+                fan["query_id"].append(qid)
+                fan["term"].append(t)
+                fan["scoring"].append(t in scoring)
+                fan["bitval"].append(0 if bits is None else 1 << bits[t])
+        qt = _driver_table(
+            spark, fan, "query_id int, term string, scoring boolean, bitval long"
+        )
+        hits = (
+            spark.read.parquet(os.path.join(index_dir, "merged"))
+            .select("term", "docids", "tfs")  # column pruning: skip block metadata
+            .filter(F.col("term").isin(union_needed))
+            .mapInPandas(_decode_posting_rows, schema=_POSTING_ROW_SCHEMA)
+        )
+        stats = (
+            spark.read.parquet(os.path.join(index_dir, "stats"))
+            .filter(F.col("term").isin(union_needed))
+            .select("term", "df")
+            .withColumn(
+                "idf", F.log((F.lit(h.n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
+            )
+        )
+        scored = (
+            hits.join(qt, "term")  # fan out each posting row per interested query
+            .join(F.broadcast(stats), "term")
+            .join(meta, "doc_id")
+            .withColumn(
+                "contrib",
+                F.when(
+                    F.col("scoring"),
+                    F.col("idf")
+                    * (F.col("tf") * (K1 + 1.0))
+                    / (F.col("tf") + K1 * (1.0 - B + B * F.col("doc_len") / h.avgdl)),
+                ).otherwise(F.lit(0.0)),
+            )
+        )
+        matched = (
+            F.bit_or("bitval").alias("mbits") if bitmask else F.collect_set("term").alias("mts")
+        )
+        agg = scored.groupBy("query_id", "doc_id").agg(
+            matched,
+            F.sum("contrib").alias("score"),
+            *[F.first(c).alias(c) for c in cond_fields],
+        )
+        if masks is not None:
+            qc = _driver_table(
+                spark,
+                {"query_id": [x[0] for x in live], "clauses": [masks[x[0]][1] for x in live]},
+                "query_id int, clauses array<struct<pos: long, neg: long>>",
+            )
+            out = agg.join(qc, "query_id").filter(
+                F.forall(
+                    "clauses",
+                    lambda c: (F.col("mbits").bitwiseAND(c["pos"]) != 0)
+                    | (F.col("mbits").bitwiseAND(c["neg"]) != c["neg"]),
+                )
+            )
+        else:
+            cond = F.lit(False)
+            for qid, ast, expansions, _ in live:
+                cond = F.when(
+                    F.col("query_id") == qid, _ast_to_condition(ast, expansions, union_bits)
+                ).otherwise(cond)
+            out = agg.filter(cond)
+        out = out.select("query_id", "doc_id", "score")
+
+    # termless-match predicates: the query's condition over an EMPTY
+    # matched-terms set — a driver constant in masks form (the CNF at M=∅:
+    # every clause needs a non-empty neg mask), an expression otherwise
+    if masks is not None:
+        termless = [
+            (qid, F.lit(True)) for qid, (_, cl) in masks.items() if all(neg for _, neg in cl)
+        ]
+    else:
+        termless = [
+            (qid, _ast_to_condition(ast, expansions, union_bits))
+            for qid, ast, expansions, _ in live
+            if qp.can_match_termless(ast)
+        ]
+    if termless:
+        # ONE meta scan for every termless-capable query: per-query
+        # predicates as an array of (qid, matched) structs, exploded to
+        # (query_id, doc_id) candidate rows at score 0.0
+        empty = F.lit(0).cast("long") if bitmask else F.array().cast("array<string>")
+        matches = F.filter(
+            F.array(*[F.struct(F.lit(qid).alias("qid"), c.alias("m")) for qid, c in termless]),
+            lambda s: s["m"],
+        )
+        extra = (
+            meta.withColumn("mbits" if bitmask else "mts", empty)
+            .select(F.explode(matches).alias("q"), "doc_id")
+            .select(F.col("q.qid").alias("query_id"), "doc_id", F.lit(0.0).alias("score"))
+        )
+        if agg is not None:
+            # docs with any posting hit were decided by the aggregation
+            extra = extra.join(
+                agg.select("query_id", "doc_id"), ["query_id", "doc_id"], "left_anti"
+            )
+            out = out.unionByName(extra)
+        else:
+            out = extra
+
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("query_id").orderBy(
+        F.round("score", 6).desc(), F.col("doc_id").desc()
+    )
+    top = out.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _gather_display_fields(top, index_dir)
 
 
 def search_distributed(
@@ -933,494 +1194,34 @@ def search_distributed(
     repo_filter: list[str] | None = None,
     time_range: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """Throughput path: one declarative plan over the merged index.
+    """Throughput path: the top-k of one query as a batch of one
+    (``_bm25_topk``). Masks — removal always; ``lang_filter`` /
+    ``repo_filter`` / ``time_range=(lo, hi)`` (inclusive doc time) when
+    given — restrict the candidates, never the statistics.
 
-    Reads only the query terms' posting rows (pushdown on the range-
-    partitioned `term` column), decodes them with a vectorized mapInPandas,
-    joins doc lengths, sums BM25 contributions per doc, evaluates the query
-    AST as a boolean filter, and takes the global top-k. Everything after the
-    decode is Catalyst-planned (hash aggregate + TakeOrderedAndProject).
-
-    Queries where a Field/Range/All clause is OR/XOR-reachable (or the whole
-    query is termless — `lang:x AND ts:[..]`, `NOT q`) additionally union a
-    doc_meta scan branch: rows that satisfy the AST with an EMPTY matched-
-    terms set, anti-joined against the posting-hit docs, entering at BM25
-    score 0.0. The reference evaluates field filters uniformly against full
-    index masks (MiruAggregateUtil.java:1098-1241); this is the Spark form —
-    the meta branch is a parquet-pushed filter scan of the forward index,
-    no shuffle beyond the union's top-k.
-    """
-    h = IndexHandle.open(index_dir)
-    from miru_spark import analyzers as anz
-
-    ast = qp.parse_query(query, analyzer=anz.load(index_dir))
-    termless = qp.can_match_termless(ast)
-    expansions = expand_prefixes(index_dir, qp.prefixes(ast))
-    needed = sorted(qp.all_terms(ast) | {t for ts in expansions.values() for t in ts})
-    scoring = qp.positive_terms(ast) | {
-        t for p in qp.positive_prefixes(ast) for t in expansions.get(p, [])
-    }
-    empty_schema = "doc_id long, score double, repo string, path string, commit string, lang string"
-    if not needed and not termless:
-        return spark.createDataFrame([], empty_schema)
-
-    # driver-side abort-if-empty (miru's AND short circuit,
-    # MiruAggregateUtil.java:1143): a required conjunct term absent from the
-    # dictionary → the answer is provably empty, skip the whole job
-    required = qp.required_terms(ast)
-    if required:
-        ds = _dataset(index_dir, "stats")
-        present = set(
-            ds.to_table(columns=["term"], filter=pads.field("term").isin(sorted(required)))
-            .column("term").to_pylist()
-        )
-        if required - present:
-            return spark.createDataFrame([], empty_schema)
-
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta"))
-    has_ts = "ts" in meta.columns
-    if (time_range is not None or qp.ranges(ast)) and not has_ts:
-        raise ValueError("index has no doc-time column (built without ts)")
-    if time_range is not None:
-        # doc-time candidate mask (S4): parquet-pushed filter on the forward
-        # index BEFORE the join — out-of-range docs never enter scoring;
-        # df/avgdl/N stay corpus-global (mask-only semantics)
-        meta = meta.filter(F.col("ts").between(time_range[0], time_range[1]))
-    # lang/repo candidate masks push into the same scan (inner join on
-    # doc_id → masked docs never enter scoring; statistics stay global)
-    if lang_filter:
-        meta = meta.filter(F.col("lang").isin(lang_filter))
-    if repo_filter:
-        meta = meta.filter(F.col("repo").isin(repo_filter))
-    # the scoring plan carries ONLY doc_len + AST-referenced filter fields;
-    # display fields gather post-top-k (_gather_display_fields)
-    cond_fields = sorted(qp.filter_fields(ast) - {"doc_id", "doc_len"})
-    meta_cols = ["doc_id", "doc_len"] + cond_fields
-    removed = removal.removed_array(index_dir)
-
-    # matched-terms agg state: one long bitmask when the query needs ≤63
-    # distinct terms (the serving norm), collect_set(string) beyond that
-    term_bits = (
-        {t: i for i, t in enumerate(needed)} if len(needed) <= _BITMASK_MAX_TERMS else None
-    )
-    cond = _ast_to_condition(ast, expansions, term_bits)
-    out_cols = ["doc_id", "score"]  # display fields gather post-top-k
-    agg = out = None
-    if needed:
-        merged = (
-            spark.read.parquet(os.path.join(index_dir, "merged"))
-            .select("term", "docids", "tfs")  # column pruning: skip block metadata
-            .filter(F.col("term").isin(needed))
-        )
-
-        def explode_postings(batches):
-            for pdf in batches:
-                for term, db, tb in zip(pdf["term"], pdf["docids"], pdf["tfs"]):
-                    d, tf = decode_postings(db, tb)
-                    yield pd.DataFrame({"term": term, "doc_id": d, "tf": tf.astype(np.int32)})
-
-        hits = merged.mapInPandas(explode_postings, schema=_POSTING_ROW_SCHEMA)
-
-        # removal mask: ANDNOT the (small) removed-doc set out of the hits before
-        # the aggregation — broadcast anti-join, statistics stay corpus-global
-        # (miru buildIndexMask semantics, MiruBitmapsRoaring.java:457-505)
-        if removed.size:
-            rdf = spark.createDataFrame([(int(x),) for x in removed.tolist()], "doc_id long")
-            hits = hits.join(F.broadcast(rdf), "doc_id", "left_anti")
-
-        # per-term idf from global stats (tiny — driver lookup, broadcast via literal map)
-        stats = (
-            spark.read.parquet(os.path.join(index_dir, "stats"))
-            .filter(F.col("term").isin(needed))
-            .select("term", "df")
-        )
-        stats = stats.withColumn(
-            "idf", F.log((F.lit(h.n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-        )
-
-        scored = (
-            hits.join(F.broadcast(stats), "term")
-            .join(meta.select(*meta_cols), "doc_id")
-            .withColumn(
-                "contrib",
-                F.when(
-                    F.col("term").isin(sorted(scoring)),
-                    F.col("idf")
-                    * (F.col("tf") * (K1 + 1.0))
-                    / (F.col("tf") + K1 * (1.0 - B + B * F.col("doc_len") / h.avgdl)),
-                ).otherwise(F.lit(0.0)),
-            )
-        )
-        if term_bits is not None:
-            scored = scored.withColumn("tbit", _term_bit_column(term_bits))
-            matched_agg = F.bit_or("tbit").alias("mbits")
-        else:
-            matched_agg = F.collect_set("term").alias("mts")
-        aggs = [
-            matched_agg,
-            F.sum("contrib").alias("score"),
-        ] + [F.first(c).alias(c) for c in cond_fields]
-        agg = scored.groupBy("doc_id").agg(*aggs)
-        out = agg.filter(cond)
-
-    if termless:
-        # forward-index candidate branch: docs matching the AST with ZERO
-        # term hits (the condition over an empty mts IS that predicate).
-        # Docs with any posting hit on an AST term were already decided in
-        # the agg branch with their true mts — anti-join them out. Entry
-        # score is 0.0 (no scored term matched).
-        if term_bits is not None:
-            mmeta = meta.select(*meta_cols).withColumn("mbits", F.lit(0).cast("long"))
-        else:
-            mmeta = meta.select(*meta_cols).withColumn(
-                "mts", F.array().cast("array<string>")
-            )
-        extra = mmeta.filter(cond).withColumn("score", F.lit(0.0))
-        if removed.size:
-            rdf2 = spark.createDataFrame([(int(x),) for x in removed.tolist()], "doc_id long")
-            extra = extra.join(F.broadcast(rdf2), "doc_id", "left_anti")
-        if agg is not None:
-            extra = extra.join(agg.select("doc_id"), "doc_id", "left_anti")
-            out = out.select(*out_cols).unionByName(extra.select(*out_cols))
-        else:
-            out = extra
-    top = (
-        out.select(*out_cols)
-        .orderBy(F.desc("score"), F.desc("doc_id"))
-        .limit(k)
-    )
-    return _gather_display_fields(top, index_dir).orderBy(
-        F.desc("score"), F.desc("doc_id")
+    Returns (doc_id, score, repo, path, commit, lang) in rank order:
+    (score rounded to 6 dp desc, doc_id desc)."""
+    top = _bm25_topk(spark, index_dir, [query], k, lang_filter, repo_filter, time_range)
+    # ≤k rows: one partition sorted locally, not a sampled range exchange
+    return top.coalesce(1).sortWithinPartitions("rank").select(
+        "doc_id", "score", *_DISPLAY_COLS
     )
 
 
 def search_batch(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[str],
-    k: int = 10,
-    plan: str = "auto",
+    spark: SparkSession, index_dir: str, queries: list[str], k: int = 10
 ) -> DataFrame:
-    """N queries answered in ONE job over ONE posting scan.
+    """N queries answered in ONE job over ONE posting scan (``_bm25_topk``).
 
-    The per-query form of ``search_distributed`` pays a full Spark job —
-    scan + decode + shuffle + driver round-trip — per query string; serving
-    a query LOG that way re-reads the index N times. This is the batched
-    throughput path (the ``lsh_ann_batch`` treatment applied to BM25;
-    reference analog: miru answers many MiruRequests against ONE shared
-    request context/index handle rather than re-opening the index per
-    question, MiruService solve loop):
-
-    - driver: parse each query, expand prefixes, probe required terms
-      against the dictionary (the AND short-circuit — provably-empty
-      queries never reach the cluster);
-    - cluster: one term-pushdown scan covering the UNION of all live
-      queries' terms, one vectorized posting decode, one removal anti-join,
-      then a broadcast (query_id, term, scoring) fan-out so each decoded
-      posting row feeds every query that wants its term;
-    - one (query_id, doc_id) aggregation; per-query AST filters applied as
-      a flat CASE over query_id (each AST condition appears exactly once —
-      plan size linear in N, see CLAUDE.md on when-chain blowup);
-    - per-query top-k via row_number over the (score desc, doc_id desc)
-      tie order on the 6-dp-rounded score.
-
-    The index is read once regardless of N; adding a query whose terms
-    overlap an existing one costs only its broadcast fan-out rows. Queries
-    where a Field/Range/All clause is OR/XOR-reachable (or that are wholly
-    termless) get the same doc_meta candidate branch as
-    ``search_distributed`` — ONE extra meta scan covers all such queries
-    (per-query termless predicates evaluated as an array of structs, rows
-    exploded per matching query).
+    Answering a query LOG one ``search_distributed`` call at a time pays a
+    full Spark job — scan + decode + shuffle + driver round-trip — per
+    query; here the index is read once regardless of N, and a query whose
+    terms overlap another's costs only its broadcast fan-out rows (the
+    ``lsh_ann_batch`` treatment applied to BM25; reference analog: miru
+    answers many MiruRequests against ONE shared request context rather
+    than re-opening the index per question, MiruService solve loop).
 
     Returns (query_id int, doc_id long, score double, rank int, repo, path,
     commit, lang) — doc_id is the ENGINE docID; callers map to their own
-    ids from ``path`` as usual.
-    """
-    h = IndexHandle.open(index_dir)
-    from miru_spark import analyzers as anz
-
-    analyzer = anz.load(index_dir)
-    out_schema = (
-        "query_id int, doc_id long, score double, rank int, "
-        "repo string, path string, commit string, lang string"
-    )
-
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta"))
-    has_ts = "ts" in meta.columns
-
-    live: list[tuple[int, object, dict]] = []  # (qid, ast, expansions)
-    union_needed: set[str] = set()
-    all_required: set[str] = set()
-    parsed = []
-    for qid, q in enumerate(queries):
-        ast = qp.parse_query(q, analyzer=analyzer)
-        if qp.ranges(ast) and not has_ts:
-            # same loud guard as search_distributed — otherwise the missing
-            # ts column fails late with an opaque AnalysisException
-            raise ValueError(
-                f"query {qid!r}: index has no doc-time column (built without ts)"
-            )
-        parsed.append((qid, ast))
-        all_required |= qp.required_terms(ast)
-
-    # one dictionary probe for every required term of every query
-    present: set[str] = set()
-    if all_required:
-        ds = _dataset(index_dir, "stats")
-        present = set(
-            ds.to_table(
-                columns=["term"], filter=pads.field("term").isin(sorted(all_required))
-            ).column("term").to_pylist()
-        )
-    for qid, ast in parsed:
-        if qp.required_terms(ast) - present:
-            continue  # a required conjunct is absent → provably empty
-        expansions = expand_prefixes(index_dir, qp.prefixes(ast))
-        needed = qp.all_terms(ast) | {t for ts in expansions.values() for t in ts}
-        if not needed and not qp.can_match_termless(ast):
-            continue
-        union_needed |= needed
-        live.append((qid, ast, expansions))
-    if not live:
-        return spark.createDataFrame([], out_schema)
-    termless_live = [x for x in live if qp.can_match_termless(x[1])]
-
-    # ---- masks mode: per-query conditions as DATA, plan size O(1) in N ----
-    # Every live query that is a boolean over term literals (no Field/Range/
-    # Xor) converts to CNF clause masks over a PER-QUERY bit assignment
-    # (parser.cnf_clauses). The batch then needs no per-query expression at
-    # all: one broadcast (query_id, term, bitval) fan-out, one bit_or agg,
-    # one broadcast (query_id, clauses) table and a single forall filter.
-    # The legacy CASE form (plan size linear in N — fine for interactive
-    # batches, fatal for a 100k-query log replay) remains for batches
-    # containing Field/Range/Xor queries.
-    mask_specs: dict | None = None
-    if plan != "case":
-        mask_specs = {}
-        for qid, ast, expansions in live:
-            needed_q = sorted(
-                qp.all_terms(ast) | {t for ts in expansions.values() for t in ts}
-            )
-            clauses = qp.cnf_clauses(ast, expansions)
-            if clauses is None or len(needed_q) > _BITMASK_MAX_TERMS:
-                mask_specs = None
-                break
-            bits = {t: i for i, t in enumerate(needed_q)}
-            cl = [
-                (
-                    sum(1 << bits[t] for t in pos),
-                    sum(1 << bits[t] for t in neg),
-                )
-                for pos, neg in clauses
-            ]
-            # the CNF evaluated at M=∅: a clause with an empty neg mask can
-            # never hold termlessly — this IS the termless-match predicate
-            matches_empty = all(neg for _, neg in cl)
-            mask_specs[qid] = (bits, cl, matches_empty)
-        if mask_specs is None and plan == "masks":
-            raise ValueError(
-                "batch contains a query not expressible as CNF term masks "
-                "(Field/Range/Xor clause or >63 distinct terms)"
-            )
-
-    # scoring plan carries ONLY doc_len + the union of the live queries'
-    # AST-referenced filter fields; display fields gather post-top-k
-    cond_fields = sorted(
-        set().union(*(qp.filter_fields(a) for _, a, _ in live)) - {"doc_id", "doc_len"}
-    )
-    meta_cols = ["doc_id", "doc_len"] + cond_fields
-
-    removed = removal.removed_array(index_dir)
-    out_cols = ["query_id", "doc_id", "score"]
-    # legacy form: one bit assignment over the UNION of all live queries'
-    # terms — every query's condition tests its own terms' bits
-    union_sorted = sorted(union_needed)
-    term_bits = (
-        {t: i for i, t in enumerate(union_sorted)}
-        if len(union_sorted) <= _BITMASK_MAX_TERMS
-        else None
-    )
-    agg = out = None
-    if union_needed:
-        # (query_id, term, scoring[, bitval]) fan-out table
-        qt_rows = []
-        for qid, ast, expansions in live:
-            scoring = qp.positive_terms(ast) | {
-                t for p in qp.positive_prefixes(ast) for t in expansions.get(p, [])
-            }
-            needed = qp.all_terms(ast) | {t for ts in expansions.values() for t in ts}
-            for t in sorted(needed):
-                if mask_specs is not None:
-                    qt_rows.append((qid, t, t in scoring, 1 << mask_specs[qid][0][t]))
-                else:
-                    qt_rows.append((qid, t, t in scoring))
-        qt_schema = "query_id int, term string, scoring boolean" + (
-            ", bitval long" if mask_specs is not None else ""
-        )
-        qt = spark.createDataFrame(qt_rows, qt_schema)
-        # broadcast the fan-out while it is driver-sized; a log-replay-scale
-        # batch (tens of millions of (query, term) rows) joins normally and
-        # AQE picks the strategy
-        if len(qt_rows) <= 2_000_000:
-            qt = F.broadcast(qt)
-
-        merged = (
-            spark.read.parquet(os.path.join(index_dir, "merged"))
-            .select("term", "docids", "tfs")
-            .filter(F.col("term").isin(sorted(union_needed)))
-        )
-
-        def explode_postings(batches):
-            for pdf in batches:
-                for term, db, tb in zip(pdf["term"], pdf["docids"], pdf["tfs"]):
-                    d, tf = decode_postings(db, tb)
-                    yield pd.DataFrame({"term": term, "doc_id": d, "tf": tf.astype(np.int32)})
-
-        hits = merged.mapInPandas(explode_postings, schema=_POSTING_ROW_SCHEMA)
-
-        if removed.size:
-            rdf = spark.createDataFrame([(int(x),) for x in removed.tolist()], "doc_id long")
-            hits = hits.join(F.broadcast(rdf), "doc_id", "left_anti")
-
-        stats = (
-            spark.read.parquet(os.path.join(index_dir, "stats"))
-            .filter(F.col("term").isin(sorted(union_needed)))
-            .select("term", "df")
-            .withColumn(
-                "idf", F.log((F.lit(h.n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-            )
-        )
-
-        scored = (
-            hits.join(qt, "term")  # fan out each posting row per interested query
-            .join(F.broadcast(stats), "term")
-            .join(meta.select(*meta_cols), "doc_id")
-            .withColumn(
-                "contrib",
-                F.when(
-                    F.col("scoring"),
-                    F.col("idf")
-                    * (F.col("tf") * (K1 + 1.0))
-                    / (F.col("tf") + K1 * (1.0 - B + B * F.col("doc_len") / h.avgdl)),
-                ).otherwise(F.lit(0.0)),
-            )
-        )
-        if mask_specs is not None:
-            # masks mode: mbits = bit_or of the fan-out's PER-QUERY bitvals;
-            # the filter is ONE expression over a broadcast clause table —
-            # no per-query expressions anywhere in the plan
-            agg = scored.groupBy("query_id", "doc_id").agg(
-                F.bit_or("bitval").alias("mbits"),
-                F.sum("contrib").alias("score"),
-            )
-            qc = spark.createDataFrame(
-                [(qid, mask_specs[qid][1]) for qid, _, _ in live],
-                "query_id int, clauses array<struct<pos: long, neg: long>>",
-            )
-            if len(live) <= 1_000_000:
-                qc = F.broadcast(qc)
-            out = (
-                agg.join(qc, "query_id")
-                .filter(
-                    F.forall(
-                        "clauses",
-                        lambda c: (F.col("mbits").bitwiseAND(c["pos"]) != 0)
-                        | (F.col("mbits").bitwiseAND(c["neg"]) != c["neg"]),
-                    )
-                )
-                .withColumn("score", F.round(F.col("score"), 6))
-            )
-        else:
-            if term_bits is not None:
-                scored = scored.withColumn("tbit", _term_bit_column(term_bits))
-                matched_agg = F.bit_or("tbit").alias("mbits")
-            else:
-                matched_agg = F.collect_set("term").alias("mts")
-            aggs = [
-                matched_agg,
-                F.sum("contrib").alias("score"),
-            ] + [F.first(c).alias(c) for c in cond_fields]
-            agg = scored.groupBy("query_id", "doc_id").agg(*aggs)
-
-            # flat CASE over query_id: each query's AST condition appears once
-            cond = F.lit(False)
-            for qid, ast, expansions in live:
-                cond = F.when(
-                    F.col("query_id") == qid, _ast_to_condition(ast, expansions, term_bits)
-                ).otherwise(cond)
-            out = agg.filter(cond).withColumn("score", F.round(F.col("score"), 6))
-
-    if mask_specs is not None:
-        # the termless predicate is a per-query CONSTANT in masks mode (the
-        # CNF at M=∅) — computed on the driver, no per-query expressions
-        empty_qids = [qid for qid, _, _ in live if mask_specs[qid][2]]
-        extra = None
-        if empty_qids:
-            extra = (
-                meta.select("doc_id")
-                .select(
-                    F.explode(F.array(*[F.lit(q) for q in empty_qids])).alias(
-                        "query_id"
-                    ),
-                    "doc_id",
-                    F.lit(0.0).alias("score"),
-                )
-            )
-    elif termless_live:
-        # ONE meta scan for every termless-capable query: per-query predicate
-        # over an empty mts, evaluated as an array of (qid, matched) structs,
-        # exploded to (query_id, doc) candidate rows at score 0.0
-        if term_bits is not None:
-            mmeta = meta.select(*meta_cols).withColumn("mbits", F.lit(0).cast("long"))
-        else:
-            mmeta = meta.select(*meta_cols).withColumn(
-                "mts", F.array().cast("array<string>")
-            )
-        matches = F.filter(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(qid).alias("qid"),
-                        _ast_to_condition(ast, expansions, term_bits).alias("m"),
-                    )
-                    for qid, ast, expansions in termless_live
-                ]
-            ),
-            lambda s: s["m"],
-        )
-        extra = (
-            mmeta.withColumn("qids", matches)
-            .filter(F.size("qids") > 0)
-            .select(F.explode("qids").alias("q"), "doc_id")
-            .select(
-                F.col("q.qid").alias("query_id"),
-                "doc_id",
-                F.lit(0.0).alias("score"),
-            )
-        )
-    else:
-        extra = None
-
-    if extra is not None:
-        if removed.size:
-            rdf2 = spark.createDataFrame([(int(x),) for x in removed.tolist()], "doc_id long")
-            extra = extra.join(F.broadcast(rdf2), "doc_id", "left_anti")
-        if agg is not None:
-            extra = extra.join(
-                agg.select("query_id", "doc_id"), ["query_id", "doc_id"], "left_anti"
-            )
-            out = out.select(*out_cols).unionByName(extra.select(*out_cols))
-        else:
-            out = extra
-
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.desc("doc_id"))
-    top = (
-        out.select(*out_cols)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-    return _gather_display_fields(top, index_dir).select(
-        "query_id", "doc_id", "score", "rank", "repo", "path", "commit", "lang"
-    )
+    ids from ``path`` as usual."""
+    return _bm25_topk(spark, index_dir, queries, k)

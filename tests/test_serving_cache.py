@@ -126,3 +126,36 @@ def test_new_generation_sweeps_stale_cache_entries(tiny_index, tmp_path):
     assert sc._index_generation(idx) != old
     assert not [k for k in _cache_keys() if k[:2] == (idx, old)]
     assert sum(n for _, n in sc._BLOCK_CACHE.entries.values()) == sc._BLOCK_CACHE.nbytes
+
+
+def test_filters_rewrite_after_merge_starts_a_new_generation(spark, tmp_path):
+    """merge_segments stamps corpus_stats.json before build_field_filters
+    rewrites filters/. A filtered query in that window caches the old
+    bitmaps; the filters rewrite must start a generation of its own, so the
+    next filtered query answers like a cold cache."""
+    from pyspark.sql import functions as F
+
+    from miru_spark.corpus import generate_corpus
+    from miru_spark.index.build import build_field_filters
+    from miru_spark.index.merge import merge_segments
+    from miru_spark.streaming.ingest import append_batch, refresh
+
+    idx = str(tmp_path / "idx")
+    full = generate_corpus(spark, n_rows=120, seed=7, partitions=1)
+    rowidx = F.regexp_extract("path", r"f(\d+)\.", 1).cast("long")
+    append_batch(full.filter(rowidx < 60), 0, idx, partitions_per_batch=1)
+    refresh(spark, idx)
+    append_batch(full.filter(rowidx >= 60), 1, idx, partitions_per_batch=1)
+
+    def filtered(index_dir):
+        return sc.search_local(index_dir, "merge OR sort OR def", k=1000, lang_filter=["python"])
+
+    merge_segments(spark, idx)
+    filtered(idx)  # the window: new generation, old filters/
+    build_field_filters(spark, idx)
+    warm = filtered(idx)
+    cold_dir = str(tmp_path / "cold")
+    shutil.copytree(idx, cold_dir)  # another path: nothing of it is cached
+    cold = filtered(cold_dir)
+    assert len(cold) > 0 and (cold["doc_id"] >= 60).any()  # the second batch answers
+    assert warm.equals(cold)

@@ -140,7 +140,7 @@ def main() -> None:
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH_ANN_1M.json"))
     args = ap.parse_args()
 
-    from tools.host_probe import probe
+    from tools.host_probe import BW_HEALTHY_GBPS, probe
 
     from miru_spark.pipeline.similarity import ann_partitioned_topk
     from miru_spark.session import get_spark
@@ -240,7 +240,7 @@ def main() -> None:
         out["buckets_probed"] / out["bucket_dirs_total"], 4
     )
     out["probe_post"] = probe()["bw_gbps"]
-    out["probe_healthy"] = out["probe_pre"] >= 8.0 and out["probe_post"] >= 8.0
+    out["probe_healthy"] = min(out["probe_pre"], out["probe_post"]) >= BW_HEALTHY_GBPS
     spark.stop()
     with open(args.out, "w") as f:
         json.dump(out, f, indent=2)

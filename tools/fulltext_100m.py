@@ -75,7 +75,7 @@ def main() -> None:
         print(f"corpus ready: {corpus_path}")
         return
 
-    from tools.host_probe import probe
+    from tools.host_probe import BW_HEALTHY_GBPS, probe
 
     from miru_spark.session import get_spark
     from miru_spark.query.scorer import search_distributed, search_local
@@ -139,9 +139,7 @@ def main() -> None:
     out["merged_total_rows"] = int(merged.select(F.count("*")).first()[0])
 
     out["probe_post"] = probe()["bw_gbps"]
-    out["probe_healthy"] = (
-        out["probe_pre"] >= 8.0 and out["probe_post"] >= 8.0
-    )
+    out["probe_healthy"] = min(out["probe_pre"], out["probe_post"]) >= BW_HEALTHY_GBPS
     spark.stop()
     with open(args.out, "w") as f:
         json.dump(out, f, indent=2)

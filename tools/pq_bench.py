@@ -119,7 +119,7 @@ def main() -> None:
         pq_topk_from_codes,
     )
     from miru_spark.session import get_spark
-    from tools.host_probe import probe
+    from tools.host_probe import BW_HEALTHY_GBPS, probe
 
     out: dict = {
         "rows": args.rows,
@@ -227,7 +227,7 @@ def main() -> None:
     out["adc_plan_reads_embedding"] = "embedding" in plan
 
     out["probe_post"] = probe()["bw_gbps"]
-    out["probe_healthy"] = min(out["probe_pre"], out["probe_post"]) >= 8.0
+    out["probe_healthy"] = min(out["probe_pre"], out["probe_post"]) >= BW_HEALTHY_GBPS
 
     with open(args.out, "w") as f:
         json.dump(out, f, indent=2)
