@@ -10,12 +10,17 @@ weaker rows-only check.
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from miru_spark import analyzers as anz
 from miru_spark.analyzer import SPLIT_PATTERN
+from miru_spark.functions.cache import release_scope
 from miru_spark.functions.composer import long_to_lex
 from miru_spark.operators import catwalk_store as cstore
 from miru_spark.operators import feature_cache
@@ -599,54 +604,96 @@ FROM s QUALIFY rank <= 10 ORDER BY rank
 """
 
 
+def _lloyd_ctes(
+    src: str,
+    vec: str,
+    pos: str,
+    keys: tuple[str, ...],
+    k: int,
+    prefix: str = "",
+) -> str:
+    """CTE fragment for one 2-iteration (the gates' n_iter) deterministic
+    Lloyd's run — the SQL twin of `quantize._pq_fit_df`, the one Spark
+    loop. ``src`` (vec_id, *keys, ``vec``) holds the vectors, ``pos`` (i)
+    their 1-based positions;
+    ``keys`` are the columns each run is independent per: none for the
+    IVF coarse quantizer over whole vectors, ("subspace",) for PQ. Seeds
+    = the k smallest vec_ids per key; argmin on 9-dp-ROUNDED squared L2
+    with ties to the lower cluster; means ROUNDED 6 dp before the next
+    iteration (round-then-compare on BOTH engines). Emits
+    {prefix}seeds, then per iteration t: {prefix}d{t} (distances),
+    {prefix}a{t} (assignment), {prefix}c{t+1} (codebook), ending at
+    {prefix}c2 (final codebook) and {prefix}a2 (final assignment)."""
+
+    def cols(alias: str = "") -> str:  # "k1, k2, " — empty without keys
+        return "".join(f"{alias}{key}, " for key in keys)
+
+    def same(a: str, b: str) -> list[str]:
+        return [f"{a}.{key} = {b}.{key}" for key in keys]
+
+    def dist(cent: str) -> str:
+        on = " AND ".join(same("s", "t"))
+        joins = (
+            f"JOIN {cent} t ON {on} CROSS JOIN {pos} p"
+            if keys
+            else f"CROSS JOIN {pos} p CROSS JOIN {cent} t"
+        )
+        return (
+            f"SELECT s.vec_id, {cols('s.')}t.cluster,"
+            f" round(sum((s.{vec}[p.i] - t.c[p.i]) * (s.{vec}[p.i] - t.c[p.i])), 9) AS d"
+            f" FROM {src} s {joins} GROUP BY s.vec_id, {cols('s.')}t.cluster"
+        )
+
+    def argmin(d: str) -> str:
+        return (
+            f"SELECT vec_id, {cols()}cluster FROM ("
+            f" SELECT vec_id, {cols()}cluster, row_number() OVER"
+            f" (PARTITION BY {cols()}vec_id ORDER BY d, cluster) AS rn"
+            f" FROM {d}) WHERE rn = 1"
+        )
+
+    def update(a: str) -> str:
+        on = " AND ".join(["s.vec_id = a.vec_id", *same("s", "a")])
+        return (
+            f"SELECT {cols()}cluster, list(mm ORDER BY i) AS c FROM ("
+            f" SELECT {cols('a.')}a.cluster, p.i, round(avg(s.{vec}[p.i]), 6) AS mm"
+            f" FROM {src} s JOIN {a} a ON {on} CROSS JOIN {pos} p"
+            f" GROUP BY {cols('a.')}a.cluster, p.i)"
+            f" GROUP BY {cols()}cluster"
+        )
+
+    if keys:
+        seeds = (
+            f"SELECT {cols()}rn - 1 AS cluster, {vec} AS c FROM (\n"
+            f"    SELECT {cols()}{vec}, row_number() OVER"
+            f" (PARTITION BY {', '.join(keys)} ORDER BY vec_id) AS rn\n"
+            f"    FROM {src}) WHERE rn <= {k}"
+        )
+    else:  # a top-N: with the window form above, the ivfpq_* oracles ran
+        # ~35% slower (DuckDB 1.0, 4 threads, sf0.01)
+        seeds = (
+            f"SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster,"
+            f" {vec} AS c\n  FROM {src} ORDER BY vec_id LIMIT {k}"
+        )
+    ctes = [f"{prefix}seeds AS (\n  {seeds})"]
+    cent = f"{prefix}seeds"
+    for t in range(3):  # 2 updates, plus the final assignment
+        ctes.append(f"{prefix}d{t} AS ({dist(cent)})")
+        ctes.append(f"{prefix}a{t} AS ({argmin(f'{prefix}d{t}')})")
+        if t < 2:
+            cent = f"{prefix}c{t + 1}"
+            ctes.append(f"{cent} AS ({update(f'{prefix}a{t}')})")
+    return ",\n".join(ctes)
+
+
 def _ivf_train_oracle_sql(k: int = 4) -> str:
     """ivf_train oracle: the ENTIRE 2-iteration deterministic Lloyd's
-    program in SQL. Mirrors the Spark contract exactly: seeds = k smallest
-    vec_ids; assignment = squared-L2 argmin on 9-dp-ROUNDED distances with
-    ties to the lower cluster id; update = element-wise mean ROUNDED 6 dp
-    before the next iteration (round-then-compare on BOTH engines — the
-    repo's standard float parity protocol)."""
-
-    def dist(cent_cte: str) -> str:
-        return (
-            f"SELECT e.vec_id, s.cluster,"
-            f" round(sum((e.v[p.i] - s.c[p.i]) * (e.v[p.i] - s.c[p.i])), 9) AS d"
-            f" FROM e CROSS JOIN pos p CROSS JOIN {cent_cte} s"
-            f" GROUP BY e.vec_id, s.cluster"
-        )
-
-    def argmin(d_cte: str) -> str:
-        return (
-            f"SELECT vec_id, cluster FROM ("
-            f" SELECT vec_id, cluster,"
-            f" row_number() OVER (PARTITION BY vec_id ORDER BY d, cluster) AS rn"
-            f" FROM {d_cte}) WHERE rn = 1"
-        )
-
-    def update(a_cte: str) -> str:
-        return (
-            f"SELECT cluster, list(m ORDER BY i) AS c FROM ("
-            f" SELECT {a_cte}.cluster AS cluster, p.i AS i,"
-            f" round(avg(e.v[p.i]), 6) AS m"
-            f" FROM e JOIN {a_cte} USING (vec_id) CROSS JOIN pos p"
-            f" GROUP BY {a_cte}.cluster, p.i)"
-            f" GROUP BY cluster"
-        )
-
+    program in SQL (`_lloyd_ctes` with no key columns — IVF training is PQ
+    with m = 1), then final sizes + codebook unpivot."""
     return f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 pos AS (SELECT unnest(range(1, 65))::INT AS i),
-seeds AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, v AS c
-  FROM e ORDER BY vec_id LIMIT {k}),
-d0 AS ({dist('seeds')}),
-a0 AS ({argmin('d0')}),
-c1 AS ({update('a0')}),
-d1 AS ({dist('c1')}),
-a1 AS ({argmin('d1')}),
-c2 AS ({update('a1')}),
-d2 AS ({dist('c2')}),
-a2 AS ({argmin('d2')}),
+{_lloyd_ctes("e", "v", "pos", (), k)},
 sizes AS (SELECT cluster, count(*) AS n FROM a2 GROUP BY cluster),
 cent AS (SELECT cluster, p.i - 1 AS pos, c[p.i] AS val FROM c2 CROSS JOIN pos p)
 SELECT cent.cluster AS cluster, sizes.n AS n, cent.pos AS pos, cent.val AS val
@@ -654,123 +701,35 @@ FROM cent JOIN sizes USING (cluster) ORDER BY cluster, pos
 """
 
 
-def _pq_chain(ksub: int = 4) -> str:
-    """CTE fragment for one 2-iteration per-subspace deterministic Lloyd's
-    run (seeds .. a2), assuming CTEs `sub` (vec_id, subspace, sv) and `pos`
-    (i) exist. Mirrors `pipeline/quantize._pq_fit_df`'s contract exactly —
-    same seeds rule, same 9-dp round-before-argmin, same 6-dp-rounded
-    means — which is the _ivf_train_oracle_sql protocol extended with a
-    subspace key. Shared by the flat-PQ (_pq_ctes) and IVF-PQ
-    (_ivfpq_ctes, over residual subvectors) oracles."""
-
-    def dist(cent_cte: str) -> str:
-        return (
-            f"SELECT s.vec_id, s.subspace, t.cluster,"
-            f" round(sum((s.sv[p.i] - t.c[p.i]) * (s.sv[p.i] - t.c[p.i])), 9) AS d"
-            f" FROM sub s JOIN {cent_cte} t ON s.subspace = t.subspace"
-            f" CROSS JOIN pos p GROUP BY s.vec_id, s.subspace, t.cluster"
-        )
-
-    def argmin(d_cte: str) -> str:
-        return (
-            f"SELECT vec_id, subspace, cluster FROM ("
-            f" SELECT vec_id, subspace, cluster,"
-            f" row_number() OVER (PARTITION BY vec_id, subspace ORDER BY d, cluster) AS rn"
-            f" FROM {d_cte}) WHERE rn = 1"
-        )
-
-    def update(a_cte: str) -> str:
-        return (
-            f"SELECT subspace, cluster, list(mm ORDER BY i) AS c FROM ("
-            f" SELECT a.subspace AS subspace, a.cluster AS cluster, p.i AS i,"
-            f" round(avg(s.sv[p.i]), 6) AS mm"
-            f" FROM sub s JOIN {a_cte} a"
-            f" ON s.vec_id = a.vec_id AND s.subspace = a.subspace"
-            f" CROSS JOIN pos p GROUP BY a.subspace, a.cluster, p.i)"
-            f" GROUP BY subspace, cluster"
-        )
-
-    return f"""seeds AS (
-  SELECT subspace, rn - 1 AS cluster, sv AS c FROM (
-    SELECT subspace, sv,
-           row_number() OVER (PARTITION BY subspace ORDER BY vec_id) AS rn
-    FROM sub) WHERE rn <= {ksub}),
-d0 AS ({dist('seeds')}),
-a0 AS ({argmin('d0')}),
-c1 AS ({update('a0')}),
-d1 AS ({dist('c1')}),
-a1 AS ({argmin('d1')}),
-c2 AS ({update('a1')}),
-d2 AS ({dist('c2')}),
-a2 AS ({argmin('d2')})"""
-
-
 def _pq_ctes(m: int = 4, ksub: int = 4, dsub: int = 16) -> str:
     """Shared CTE prefix for the flat-PQ oracles: the ENTIRE 2-iteration
-    per-subspace deterministic Lloyd's program in SQL (`_pq_chain`) over
-    the raw embedding subvectors, ending at c2 (final codebooks) and a2
-    (final per-(vec, subspace) code assignment)."""
+    per-subspace deterministic Lloyd's program in SQL (`_lloyd_ctes` keyed
+    by subspace) over the raw embedding subvectors, ending at c2 (final
+    codebooks) and a2 (final per-(vec, subspace) code assignment)."""
     return f"""
 WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
 js AS (SELECT unnest(range(0, {m}))::INT AS j),
 sub AS (SELECT vec_id, j AS subspace, v[j*{dsub}+1 : j*{dsub}+{dsub}] AS sv
         FROM e, js),
 pos AS (SELECT unnest(range(1, {dsub + 1}))::INT AS i),
-{_pq_chain(ksub)}"""
+{_lloyd_ctes("sub", "sv", "pos", ("subspace",), ksub)}"""
 
 
 def _ivfpq_ctes(
     kc: int = 4, m: int = 4, ksub: int = 4, dsub: int = 16, dim: int = 64
 ) -> str:
     """Shared CTE prefix for the IVF-PQ oracles: the coarse 2-iteration
-    Lloyd's over FULL vectors (cseeds..ca2, the _ivf_train_oracle_sql
-    protocol), residual computation r = x - centroid[cell] (exact IEEE
-    subtraction of identical doubles — no extra rounding, matching
-    `quantize._residuals`), then the per-subspace PQ chain (`_pq_chain`)
-    over the residual subvectors. Ends at: cc2/ca2 (coarse codebook +
-    assignment), res (vec_id, label, cell, rv), c2/a2 (residual PQ
-    codebook + codes)."""
-
-    def cdist(cent_cte: str) -> str:
-        return (
-            f"SELECT e.vec_id, s.cluster,"
-            f" round(sum((e.v[p.i] - s.c[p.i]) * (e.v[p.i] - s.c[p.i])), 9) AS d"
-            f" FROM e CROSS JOIN fpos p CROSS JOIN {cent_cte} s"
-            f" GROUP BY e.vec_id, s.cluster"
-        )
-
-    def cargmin(d_cte: str) -> str:
-        return (
-            f"SELECT vec_id, cluster FROM ("
-            f" SELECT vec_id, cluster,"
-            f" row_number() OVER (PARTITION BY vec_id ORDER BY d, cluster) AS rn"
-            f" FROM {d_cte}) WHERE rn = 1"
-        )
-
-    def cupdate(a_cte: str) -> str:
-        return (
-            f"SELECT cluster, list(m ORDER BY i) AS c FROM ("
-            f" SELECT {a_cte}.cluster AS cluster, p.i AS i,"
-            f" round(avg(e.v[p.i]), 6) AS m"
-            f" FROM e JOIN {a_cte} USING (vec_id) CROSS JOIN fpos p"
-            f" GROUP BY {a_cte}.cluster, p.i)"
-            f" GROUP BY cluster"
-        )
-
+    Lloyd's over FULL vectors (`_lloyd_ctes` with no key columns, prefix
+    c: cseeds..ca2), residual computation r = x - centroid[cell] (exact
+    IEEE subtraction of identical doubles — no extra rounding, matching
+    `quantize._residuals`), then the per-subspace Lloyd's (keyed by
+    subspace) over the residual subvectors. Ends at: cc2/ca2 (coarse
+    codebook + assignment), res (vec_id, label, cell, rv), c2/a2 (residual
+    PQ codebook + codes)."""
     return f"""
 WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
 fpos AS (SELECT unnest(range(1, {dim + 1}))::INT AS i),
-cseeds AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, v AS c
-  FROM e ORDER BY vec_id LIMIT {kc}),
-cd0 AS ({cdist('cseeds')}),
-ca0 AS ({cargmin('cd0')}),
-cc1 AS ({cupdate('ca0')}),
-cd1 AS ({cdist('cc1')}),
-ca1 AS ({cargmin('cd1')}),
-cc2 AS ({cupdate('ca1')}),
-cd2 AS ({cdist('cc2')}),
-ca2 AS ({cargmin('cd2')}),
+{_lloyd_ctes("e", "v", "fpos", (), kc, prefix="c")},
 res AS (
   SELECT e.vec_id, e.label, ca2.cluster AS cell,
          list(e.v[p.i] - cc.c[p.i] ORDER BY p.i) AS rv
@@ -780,7 +739,7 @@ js AS (SELECT unnest(range(0, {m}))::INT AS j),
 sub AS (SELECT vec_id, j AS subspace, rv[j*{dsub}+1 : j*{dsub}+{dsub}] AS sv
         FROM res, js),
 pos AS (SELECT unnest(range(1, {dsub + 1}))::INT AS i),
-{_pq_chain(ksub)}"""
+{_lloyd_ctes("sub", "sv", "pos", ("subspace",), ksub)}"""
 
 
 def _pq_train_oracle_sql() -> str:
@@ -1167,6 +1126,44 @@ def entry(spark: SparkSession) -> DataFrame:
     return ft.ft_engine_bm25(spark, "/root/testdata/sf0.001")
 
 
+def _gate_index_path(prefix: str) -> str:
+    """A fresh index path inside a UNIQUE temp dir, removed at interpreter
+    exit. Unique per invocation: a fixed shared path would let a concurrent
+    session's rmtree delete this one's half-built index, and would
+    invalidate the lazy DataFrame a prior invocation returned (it still
+    reads the path at collect time) — so the dir lives until the process
+    ends, and no longer."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return os.path.join(d, "idx")
+
+
+def _ivfpq_lifecycle_serve(
+    spark: SparkSession, sf_dir: str, n_batches: int = 1, removed: tuple = ()
+) -> DataFrame:
+    """Gate form of the stored IVF-PQ lifecycle: train the codebooks once
+    on the corpus (gate defaults kc = m = ksub = 4, n_iter = 2), build the
+    STORED index from ``n_batches`` `ivfpq_append` batches (vec_id mod
+    n_batches — deterministic at any partitioning), tombstone ``removed``
+    with `ivfpq_remove`, then serve the standard probed-ADC top-k for
+    query vec_id 0 (k = 10, nprobe = 2) from the stored table. The index
+    is rebuilt from scratch every invocation on purpose: the lifecycle IS
+    the thing under test (like catwalk_saved_model)."""
+    from pyspark.sql import functions as F
+
+    emb, cents, books, _res, _dsub = quantize._ivfpq_fit(spark, sf_dir, 4, 4, 4, 2)
+    q = quantize._query_vec(emb, 0)
+    path = _gate_index_path("miru_ivfpq_gate_")
+    for b in range(n_batches):
+        batch = emb.filter(F.col("vec_id") % n_batches == b)
+        quantize.ivfpq_append(spark, path, batch, cents, books)
+    for s in ("ivfpq_emb", "ivfpq_res"):
+        release_scope(s)
+    if removed:
+        quantize.ivfpq_remove(spark, path, removed)
+    return quantize.ivfpq_topk_from_codes(spark, path, cents, books, q)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # fulltext (SURVEY.md §2.3/2.6: Q1/F3/T1/T3 as DataFrame programs)
@@ -1274,13 +1271,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pq_recall": quantize.pq_recall,
         "ivfpq_recall": quantize.ivfpq_recall,
         # incremental index maintenance: the stored IVF-PQ index built by
-        # TWO ivfpq_append batches (frozen codebooks, no retrain) must
-        # serve identically to the encode-all program — shares
-        # ivfpq_topk's full value-hash oracle
-        "ivfpq_append_serve": quantize.ivfpq_append_serve,
+        # TWO ivfpq_append batches (vec_id parity halves; frozen codebooks,
+        # no retrain) must serve identically to the encode-all program —
+        # appends that drop, duplicate, or mis-encode a row flip
+        # ivfpq_topk's full value-hash oracle, which this gate shares
+        "ivfpq_append_serve": lambda spark, sf: _ivfpq_lifecycle_serve(
+            spark, sf, n_batches=2
+        ),
         # removal lifecycle: tombstone the two rows that head ivfpq_topk's
-        # result, serve honoring the mask — ranks re-assign over survivors
-        "ivfpq_remove_serve": quantize.ivfpq_remove_serve,
+        # result at sf0.01 (388, 415 — a removal whose ids never ranked
+        # would be vacuous), serve honoring the mask — ranks re-assign over
+        # survivors; oracle = ivfpq_topk with those ids excluded first
+        "ivfpq_remove_serve": lambda spark, sf: _ivfpq_lifecycle_serve(
+            spark, sf, removed=(388, 415)
+        ),
         # threshold 0.4: the synthetic embeddings have no true near-dups
         # (max within-label cosine ≈ 0.47), so the gate runs at a threshold
         # that yields a NON-EMPTY result — proving the join + math, not a

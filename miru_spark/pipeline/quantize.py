@@ -13,8 +13,11 @@ score against codes via the Asymmetric Distance Computation (ADC): an
 m x ksub lookup table of exact query-subvector-to-centroid distances, so
 the corpus scan reads ONLY the code columns and does ONLY table lookups.
 
-Deterministic contract (the same protocol as `similarity.ivf_train`, which
-is what makes an exact DuckDB value-hash oracle possible):
+Deterministic contract (what makes an exact DuckDB value-hash oracle
+possible). `_pq_fit_df` is the ONE Lloyd's loop in the repo: the IVF coarse
+quantizer (`similarity.ivf_train`, the coarse half of IVF-PQ) is the same
+loop with m=1, dsub=dim — plain k-means over whole vectors is PQ with a
+single subspace (Jegou et al. 2011):
 - seeds per subspace = the subvectors of the ``ksub`` smallest vec_ids
   (never rand());
 - assignment = squared-L2 argmin on 9-dp-ROUNDED distances, ties to the
@@ -47,7 +50,7 @@ Scale shape:
   form is `pq_rerank_*`: ADC shortlist -> exact re-rank over only the
   shortlisted rows.
 - Composition (IVF-PQ, `ivfpq_*`): assign each vector to one of ``kc``
-  coarse Lloyd's cells (`similarity._ivf_fit`), PQ-encode the RESIDUAL
+  coarse Lloyd's cells (`_pq_fit_df` with m=1), PQ-encode the RESIDUAL
   x - centroid[cell], and store codes cell-PARTITIONED. Serving probes
   the ``nprobe`` nearest cells only: the coarse cell prunes the SCAN
   (hive partition dirs -> PartitionFilters, the `lsh_ann_partitioned`
@@ -66,6 +69,9 @@ ksub=256, trained on a sample.
 """
 
 from __future__ import annotations
+
+import os
+from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -116,11 +122,22 @@ def _sub_slice(j: int, dsub: int) -> Column:
     return F.slice(F.col("embedding"), j * dsub + 1, dsub)
 
 
+def _query_vec(emb: DataFrame, query_vec_id: int) -> list[float]:
+    """The query's embedding as driver-side doubles (one-row collect), or
+    a ValueError when ``query_vec_id`` is not in the corpus."""
+    rows = (
+        emb.filter(F.col("vec_id") == query_vec_id).select("embedding").collect()
+    )
+    if not rows:
+        raise ValueError(f"query vec_id {query_vec_id} not in corpus")
+    return [float(v) for v in rows[0]["embedding"]]
+
+
 def _pq_fit(
     spark: SparkSession, sf_dir: str, m: int, ksub: int, n_iter: int
 ) -> tuple[list[list[list[float]]], dict[tuple[int, int], int], int]:
-    """Train the m per-subspace codebooks (deterministic Lloyd's, shared
-    contract with `similarity.ivf_train`). Returns (books, sizes, dsub)
+    """Train the m per-subspace codebooks (the deterministic Lloyd's of
+    `_pq_fit_df`). Returns (books, sizes, dsub)
     where books[j][c] is subspace j's cluster-c centroid (6-dp doubles) and
     sizes[(j, c)] the final assignment count. Every per-iteration exchange
     carries m*ksub*dsub rows; the corpus never shuffles."""
@@ -135,10 +152,12 @@ def _pq_fit(
 def _pq_fit_df(
     emb: DataFrame, m: int, ksub: int, n_iter: int
 ) -> tuple[list[list[list[float]]], dict[tuple[int, int], int], int]:
-    """`_pq_fit` over an explicit (vec_id, embedding) DataFrame — the form
-    the IVF-PQ composition trains on (its "embedding" column holds coarse
-    RESIDUALS). The caller must cache ``emb``: the loop scans it
-    n_iter+2 times (seeds, per-iteration update, final sizes)."""
+    """`_pq_fit` over an explicit (vec_id, embedding) DataFrame — the ONE
+    Lloyd's loop: m=1 trains the IVF coarse quantizer over whole vectors
+    (`similarity.ivf_train`, `_ivfpq_fit`), m>1 the PQ codebooks (over
+    coarse RESIDUALS in the IVF-PQ composition). The caller must cache
+    ``emb``: the loop scans it n_iter+2 times (seeds, per-iteration update,
+    final sizes)."""
     seed_rows = emb.orderBy("vec_id").limit(ksub).collect()
     if len(seed_rows) < ksub:
         raise ValueError(f"corpus has fewer than ksub={ksub} vectors")
@@ -256,10 +275,7 @@ def _round_half_up(x: float, nd: int) -> float:
 
 
 def _adc_table(
-    spark: SparkSession,
-    books: list[list[list[float]]],
-    q: list[float],
-    dsub: int,
+    books: list[list[list[float]]], q: list[float], dsub: int
 ) -> list[list[float]]:
     """The m x ksub query-to-centroid distance table, computed DRIVER-SIDE
     with bit-identical semantics to the in-plan form: a left-fold of
@@ -275,8 +291,7 @@ def _adc_table(
     nested HOF expressions cheaply (a 1-row hoist job still cost ~8 s of
     pure plan analysis/codegen per query — the ENTIRE serving wall; the
     1M code scan itself is sub-second). m*ksub*dsub driver float ops is
-    the right venue. ``spark`` stays in the signature for API stability."""
-    del spark  # driver-side on purpose; see docstring
+    the right venue."""
     table = []
     for j, book in enumerate(books):
         qsub = [float(q[j * dsub + i]) for i in range(dsub)]
@@ -355,7 +370,7 @@ def pq_topk_from_codes(
     if len(query_vec) != m * dsub:
         raise ValueError(f"query dim {len(query_vec)} != m*dsub {m * dsub}")
     codes = spark.read.parquet(codes_path)
-    dtab = _adc_table(spark, books, [float(v) for v in query_vec], dsub)
+    dtab = _adc_table(books, [float(v) for v in query_vec], dsub)
     adc_terms = [
         F.element_at(
             F.array(*[F.lit(v) for v in dtab[j]]),
@@ -398,17 +413,12 @@ def pq_topk(
 
     books, _sizes, dsub = _pq_fit(spark, sf_dir, m, ksub, n_iter)
     emb = _emb(spark, sf_dir)
-    q_rows = (
-        emb.filter(F.col("vec_id") == query_vec_id).select("embedding").collect()
-    )
-    if not q_rows:
-        raise ValueError(f"query vec_id {query_vec_id} not in corpus")
-    q = [float(v) for v in q_rows[0]["embedding"]]
+    q = _query_vec(emb, query_vec_id)
 
     # ADC lookup table hoisted out of the per-row plan (_adc_table) —
     # indexing the plain-literal array by the row's code is the only
     # per-row "distance" work beyond the argmin encode.
-    dtab = _adc_table(spark, books, q, dsub)
+    dtab = _adc_table(books, q, dsub)
     adc_terms = []
     for j in range(m):
         code = _code_col(_sub_slice(j, dsub), books[j])
@@ -454,13 +464,7 @@ def pq_rerank_topk(
     )
     ids = [r["vec_id"] for r in adc_df.collect()]  # bounded: `shortlist` rows
     emb = _emb(spark, sf_dir)
-    q = [
-        float(v)
-        for v in emb.filter(F.col("vec_id") == query_vec_id)
-        .select("embedding")
-        .collect()[0]["embedding"]
-    ]
-    return _rerank_exact(emb, q, ids, k)
+    return _rerank_exact(emb, _query_vec(emb, query_vec_id), ids, k)
 
 
 def pq_rerank_from_codes(
@@ -490,21 +494,18 @@ def pq_rerank_from_codes(
 
 def _residuals(emb: DataFrame, cents: list[list[float]]) -> DataFrame:
     """(vec_id, label, cell, embedding=RESIDUAL double array): each row's
-    coarse cell (argmin over the kc folded-literal centroids, the
-    `similarity._assign_col` contract) and x - centroid[cell]. Two chained
+    coarse cell (`_code_col` over the whole vector: the m=1 argmin over
+    the kc folded-literal centroids) and x - centroid[cell]. Two chained
     projections so the cell argmin is evaluated once, not re-embedded in
     the residual expression (the CollapseProject/when-chain lesson).
     Subtraction of identical doubles is exact IEEE on both engines, so no
     extra rounding is needed on the residual itself — the PQ chain's
     9-dp round-before-argmin absorbs downstream sum-order noise."""
-    from miru_spark.pipeline.similarity import _assign_col
-
     cents_lit = F.array(
         *[F.array(*[F.lit(float(v)) for v in c]) for c in cents]
     )
-    with_cell = emb.select(
-        "vec_id", "label", "embedding", _assign_col(cents).alias("cell")
-    )
+    cell = _code_col(F.col("embedding"), cents)
+    with_cell = emb.select("vec_id", "label", "embedding", cell.alias("cell"))
     resid = F.zip_with(
         F.col("embedding"),
         F.element_at(cents_lit, F.col("cell") + 1),
@@ -517,36 +518,31 @@ def _ivfpq_fit(
     spark: SparkSession, sf_dir: str, kc: int, m: int, ksub: int, n_iter: int
 ) -> tuple[DataFrame, list[list[float]], list[list[list[float]]], DataFrame, int]:
     """Train the full IVF-PQ index: coarse Lloyd's over the embeddings
-    (kc cells), then per-subspace PQ Lloyd's over the RESIDUALS — both on
-    the shared deterministic contract (seeds = smallest vec_ids, 9-dp
-    round-before-argmin, 6-dp means, fail-loud empty cells), which is what
-    keeps the whole composition exactly SQL-expressible. Returns
+    (kc cells, `_pq_fit_df` with m=1), then per-subspace PQ Lloyd's over
+    the RESIDUALS — one loop, one deterministic contract (seeds = smallest
+    vec_ids, 9-dp round-before-argmin, 6-dp means, fail-loud empty cells),
+    which is what keeps the whole composition exactly SQL-expressible. Returns
     (emb, coarse_cents, books, residual_df, dsub); emb and residual_df are
     scope-cached (the Lloyd's loops scan each n_iter+2 times)."""
-    from miru_spark.pipeline.similarity import _emb, _ivf_fit
+    from miru_spark.pipeline.similarity import _emb
 
     emb = scoped_cache(
         _emb(spark, sf_dir).select("vec_id", "label", "embedding"), "ivfpq_emb"
     )
-    cents, _n_by = _ivf_fit(emb, kc, n_iter)
+    coarse, _sizes, _dim = _pq_fit_df(emb, 1, kc, n_iter)
+    cents = coarse[0]
     res = scoped_cache(_residuals(emb, cents), "ivfpq_res")
     books, _sizes, dsub = _pq_fit_df(res, m, ksub, n_iter)
     return emb, cents, books, res, dsub
 
 
 def _probe_cells(cents: list[list[float]], q: list[float], nprobe: int) -> list[int]:
-    """The nprobe coarse cells nearest the query: squared-L2 left-fold in
-    element order + Spark-rule 9-dp rounding (`_round_half_up`), ties to
-    the lower cell id — the driver-side mirror of `_assign_col`'s ORDER BY
-    (d, cluster) contract, so both engines probe the same cells."""
-    ds = []
-    for cell, c in enumerate(cents):
-        acc = 0.0
-        for x, y in zip(q, c):
-            acc = acc + (x - y) * (x - y)
-        ds.append((_round_half_up(acc, 9), cell))
-    ds.sort()
-    return [cell for _, cell in ds[:nprobe]]
+    """The nprobe coarse cells nearest the query: the coarse codebook's
+    m=1 ADC row (`_adc_table` — the 9-dp-rounded distances `_code_col`
+    argmins over), sorted with ties to the lower cell id, so both engines
+    probe the same cells."""
+    ds = _adc_table([cents], q, len(q))[0]
+    return sorted(range(len(cents)), key=lambda cell: (ds[cell], cell))[:nprobe]
 
 
 def _ivfpq_adc(
@@ -596,17 +592,10 @@ def ivfpq_topk(
     pruning in the stored form (`ivfpq_topk_from_codes`) — the scan cost
     is nprobe/kc of the corpus's CODE bytes, not its float bytes."""
     emb, cents, books, res, dsub = _ivfpq_fit(spark, sf_dir, kc, m, ksub, n_iter)
-    q_rows = (
-        emb.filter(F.col("vec_id") == query_vec_id).select("embedding").collect()
-    )
-    if not q_rows:
-        raise ValueError(f"query vec_id {query_vec_id} not in corpus")
-    q = [float(v) for v in q_rows[0]["embedding"]]
+    q = _query_vec(emb, query_vec_id)
     probed = _probe_cells(cents, q, nprobe)
     dtabs = {
-        cell: _adc_table(
-            spark, books, [q[i] - cents[cell][i] for i in range(len(q))], dsub
-        )
+        cell: _adc_table(books, [q[i] - cents[cell][i] for i in range(len(q))], dsub)
         for cell in probed
     }
     code_cols = [_code_col(_sub_slice(j, dsub), books[j]) for j in range(m)]
@@ -645,13 +634,7 @@ def ivfpq_rerank_topk(
     from miru_spark.pipeline.similarity import _emb
 
     emb = _emb(spark, sf_dir)
-    q = [
-        float(v)
-        for v in emb.filter(F.col("vec_id") == query_vec_id)
-        .select("embedding")
-        .collect()[0]["embedding"]
-    ]
-    return _rerank_exact(emb, q, ids, k)
+    return _rerank_exact(emb, _query_vec(emb, query_vec_id), ids, k)
 
 
 def ivfpq_encode(
@@ -708,16 +691,13 @@ def ivfpq_topk_from_codes(
         raise ValueError(f"query dim {len(q)} != m*dsub {m * dsub}")
     probed = _probe_cells(cents, q, nprobe)
     dtabs = {
-        cell: _adc_table(
-            spark, books, [q[i] - cents[cell][i] for i in range(len(q))], dsub
-        )
+        cell: _adc_table(books, [q[i] - cents[cell][i] for i in range(len(q))], dsub)
         for cell in probed
     }
+    tomb = _read_tombstones(spark, codes_path) if honor_tombstones else None
     codes = spark.read.parquet(codes_path).filter(F.col("cell").isin(probed))
-    if honor_tombstones:
-        tomb = _read_tombstones(spark, codes_path)
-        if tomb is not None:
-            codes = codes.join(F.broadcast(tomb), "vec_id", "left_anti")
+    if tomb is not None:
+        codes = codes.join(F.broadcast(tomb), "vec_id", "left_anti")
     code_cols = [F.col(f"c{j}").cast("int") for j in range(m)]
     adc = _ivfpq_adc(dtabs, probed, kc, code_cols)
     scored = codes.filter(F.col("vec_id") != query_vec_id).select(
@@ -838,7 +818,7 @@ def pq_recall(
     # broadcast distance-table relation: (qid, subspace, code, d)
     dtab_rows = []
     for qid in sorted(qvecs):
-        tab = _adc_table(spark, books, qvecs[qid], dsub)
+        tab = _adc_table(books, qvecs[qid], dsub)
         for j in range(m):
             for c in range(ksub):
                 dtab_rows.append((qid, j, c, tab[j][c]))
@@ -961,7 +941,7 @@ def ivfpq_recall(
         order = _probe_cells(cents, q, kc)  # all cells, probe order
         for rank, cell in enumerate(order, start=1):
             tab = _adc_table(
-                spark, books, [q[i] - cents[cell][i] for i in range(len(q))], dsub
+                books, [q[i] - cents[cell][i] for i in range(len(q))], dsub
             )
             for j in range(m):
                 for c in range(ksub):
@@ -1085,11 +1065,11 @@ def ivfpq_append(
     manifest rename exactly like `index/build.py` segments and
     `pipeline/epoch.py` shards do; the gate form is single-process.
     Returns the number of rows appended."""
-    import os
-
     m = len(books)
     dsub = len(books[0][0])
     batch = new_emb.select("vec_id", "label", "embedding")
+    # decided before any job runs, so an unsupported scheme fails first
+    standing = check_ids and _has_table(codes_path)
     n = batch.count()  # counted BEFORE encoding: the write is the only
     # action that pays the encode + repartition (no double execution)
     if check_ids:
@@ -1099,10 +1079,10 @@ def ivfpq_append(
                 f"append batch carries duplicate vec_ids "
                 f"({n} rows, {n_distinct} distinct)"
             )
-        # first write is decided by path existence, NOT by swallowing read
-        # errors — a corrupt standing index must fail the append, not
+        # first write is decided by listing the path, NOT by swallowing
+        # read errors — a corrupt standing index must fail the append, not
         # silently disable the guard (fail-loud contract)
-        if os.path.exists(codes_path):
+        if standing:
             existing = spark.read.parquet(codes_path).select("vec_id")
             tomb = _read_tombstones(spark, codes_path)
             if tomb is not None:
@@ -1124,67 +1104,47 @@ def ivfpq_append(
     return n
 
 
-def ivfpq_append_serve(
-    spark: SparkSession,
-    sf_dir: str,
-    query_vec_id: int = 0,
-    k: int = 10,
-    kc: int = 4,
-    nprobe: int = 2,
-    m: int = 4,
-    ksub: int = 4,
-    n_iter: int = 2,
-) -> DataFrame:
-    """Gate form of the incremental lifecycle: train the codebooks once on
-    the corpus, build the STORED index with TWO `ivfpq_append` batches
-    (vec_id parity halves — deterministic at any partitioning), then serve
-    the standard probed-ADC top-k from the appended table. The result must
-    be identical to the train-once/encode-all program, so the gate shares
-    `ivfpq_topk`'s full value-hash oracle — appends that drop, duplicate,
-    or mis-encode a row flip the hash. The index is rebuilt from scratch
-    every invocation on purpose (the lifecycle IS the thing under test,
-    like catwalk_saved_model)."""
-    import os
-    import tempfile
-
-    emb, cents, books, _res, _dsub = _ivfpq_fit(spark, sf_dir, kc, m, ksub, n_iter)
-    q_rows = (
-        emb.filter(F.col("vec_id") == query_vec_id).select("embedding").collect()
-    )
-    if not q_rows:
-        raise ValueError(f"query vec_id {query_vec_id} not in corpus")
-    q = [float(v) for v in q_rows[0]["embedding"]]
-    # mkdtemp: a UNIQUE directory per invocation — a fixed shared path
-    # would let a concurrent session's rmtree delete this one's half-built
-    # index, and would invalidate the lazy DataFrame a prior invocation
-    # returned (it still reads the path at collect time)
-    path = os.path.join(tempfile.mkdtemp(prefix="miru_ivfpq_append_"), "idx")
-    ivfpq_append(spark, path, emb.filter(F.col("vec_id") % 2 == 0), cents, books)
-    ivfpq_append(spark, path, emb.filter(F.col("vec_id") % 2 == 1), cents, books)
-    for s in ("ivfpq_emb", "ivfpq_res"):
-        release_scope(s)
-    return ivfpq_topk_from_codes(
-        spark, path, cents, books, q, query_vec_id=query_vec_id, k=k, nprobe=nprobe
-    )
-
-
 # ---- Removal: tombstones + compaction for the stored index ----
 
 _TOMBSTONE_SUBDIR = "_tombstones"
+
+
+def _local_path(path: str) -> str:
+    """The local filesystem path behind a stored-index location: plain
+    paths pass through, ``file:`` URIs lose their scheme, and any other
+    ``scheme://`` RAISES. Existence is decided with os.path, which cannot
+    see a remote filesystem — an s3a:// tombstone table would read as
+    absent and its removed rows would silently serve again."""
+    if path.startswith("file:"):
+        return urlparse(path).path
+    if "://" in path:
+        raise ValueError(
+            f"unsupported scheme {path.split('://', 1)[0]}:// in {path}: the "
+            "IVF-PQ maintenance path only decides existence on local paths "
+            "and file:// URIs"
+        )
+    return path
+
+
+def _has_table(path: str) -> bool:
+    """Whether ``path`` holds a parquet table: a directory with at least
+    one entry Hadoop input listing does not hide (``_``/``.`` prefixes)."""
+    local = _local_path(path)
+    return os.path.isdir(local) and any(
+        not name.startswith(("_", ".")) for name in os.listdir(local)
+    )
 
 
 def _read_tombstones(spark: SparkSession, codes_path: str):
     """The distinct tombstoned vec_ids, or None when none exist. The
     subdirectory is underscore-prefixed, so Hadoop input listing hides it
     from the main table read (the _SUCCESS convention). Absence is decided
-    by PATH EXISTENCE only — a present-but-unreadable tombstone table must
-    RAISE, not silently serve rows the operator explicitly removed (the
-    fail-loud contract; swallowing read errors here would be a silent
-    un-deletion)."""
-    import os
-
+    by LISTING the path (`_has_table`) only — a present-but-unreadable
+    tombstone table must RAISE, not silently serve rows the operator
+    explicitly removed (the fail-loud contract; swallowing read errors
+    here would be a silent un-deletion)."""
     path = os.path.join(codes_path, _TOMBSTONE_SUBDIR)
-    if not os.path.exists(path):
+    if not _has_table(path):
         return None
     return spark.read.parquet(path).select("vec_id").distinct()
 
@@ -1201,10 +1161,11 @@ def ivfpq_remove(spark: SparkSession, codes_path: str, ids) -> int:
     its vec_id until a COMPACTION — re-ingesting a removed id before
     compacting would write a row that silently never serves, so
     `ivfpq_append`'s guard rejects tombstoned ids too (compact to a new
-    path, then append the replacement). Returns the count of ids
-    tombstoned in this call."""
-    import os
-
+    path, then append the replacement). Raises on a path with no main
+    table: a lone tombstone directory would make every later read fail
+    schema inference. Returns the count of ids tombstoned in this call."""
+    if not _has_table(codes_path):
+        raise ValueError(f"no IVF-PQ index table at {codes_path} to remove from")
     ids = sorted({int(i) for i in ids})
     if not ids:
         return 0
@@ -1221,53 +1182,20 @@ def ivfpq_compact(spark: SparkSession, codes_path: str, out_path: str) -> int:
     to a NEW directory on purpose — the swap is the caller's journaled
     step (the `index/compact.py` contract: data first, then an atomic
     manifest/pointer flip; an in-place distributed-FS overwrite is not
-    crash-safe). Returns the surviving row count."""
-    codes = spark.read.parquet(codes_path)
+    crash-safe). Returns the surviving row count; raises, writing
+    nothing, when no row survives (an empty partitioned write leaves no
+    file to infer a schema from, so the result could never be read)."""
     tomb = _read_tombstones(spark, codes_path)
+    codes = spark.read.parquet(codes_path)
     if tomb is not None:
         codes = codes.join(F.broadcast(tomb), "vec_id", "left_anti")
+    n = codes.count()
+    if not n:
+        raise ValueError(
+            f"compacting {codes_path} would leave an empty index: every row "
+            "is tombstoned"
+        )
     codes.repartition("cell").write.mode("overwrite").partitionBy(
         "cell"
     ).parquet(out_path)
-    # count from the WRITTEN table (parquet footer metadata — no second
-    # scan/shuffle of the survivor plan)
-    return spark.read.parquet(out_path).count()
-
-
-def ivfpq_remove_serve(
-    spark: SparkSession,
-    sf_dir: str,
-    removed: tuple = (388, 415),
-    query_vec_id: int = 0,
-    k: int = 10,
-    kc: int = 4,
-    nprobe: int = 2,
-    m: int = 4,
-    ksub: int = 4,
-    n_iter: int = 2,
-) -> DataFrame:
-    """Gate form of the removal lifecycle: build the stored index, TOMBSTONE
-    the two rows that head ivfpq_topk's result at the gate corpus (388 and
-    415 at sf0.01 — chosen so the removal provably CHANGES the served
-    top-k; a removal gate whose removed ids never ranked would be
-    vacuous), and serve. Oracle = the ivfpq_topk program with the removed
-    ids excluded before ranking."""
-    import os
-    import tempfile
-
-    emb, cents, books, _res, _dsub = _ivfpq_fit(spark, sf_dir, kc, m, ksub, n_iter)
-    q_rows = (
-        emb.filter(F.col("vec_id") == query_vec_id).select("embedding").collect()
-    )
-    if not q_rows:
-        raise ValueError(f"query vec_id {query_vec_id} not in corpus")
-    q = [float(v) for v in q_rows[0]["embedding"]]
-    # unique dir per invocation — see ivfpq_append_serve
-    path = os.path.join(tempfile.mkdtemp(prefix="miru_ivfpq_remove_"), "idx")
-    ivfpq_append(spark, path, emb, cents, books)
-    for s in ("ivfpq_emb", "ivfpq_res"):
-        release_scope(s)
-    ivfpq_remove(spark, path, removed)
-    return ivfpq_topk_from_codes(
-        spark, path, cents, books, q, query_vec_id=query_vec_id, k=k, nprobe=nprobe
-    )
+    return n

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from miru_spark.functions.cache import release_scope, scoped_cache
 from miru_spark.functions.topk import ranked_topk as _ranked_topk
+from miru_spark.pipeline.quantize import _pq_fit_df
 from pyspark.sql import functions as F
 
 
@@ -387,44 +388,6 @@ def ann_partitioned_topk(
     return out, bucket_list
 
 
-def _sqdist_to(cent: list[float]) -> Column:
-    """Squared L2 distance from the ``embedding`` column to one centroid
-    (a driver-side list of doubles, entering the plan as a folded literal
-    array). Element math in float64 so Spark and DuckDB agree bit-for-bit
-    on identical inputs; the summation-ORDER noise between the two engines
-    (~1e-13 relative) is absorbed by rounding the distance before argmin."""
-    arr = F.array(*[F.lit(float(v)) for v in cent])
-    return F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            arr,
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _assign_col(cents: list[list[float]]) -> Column:
-    """argmin-over-centroids as ONE array_min over (distance, cluster)
-    structs — k subexpressions, each appearing once (the fold-style when-
-    chain alternative re-embeds every prior branch; see CLAUDE.md lang_id
-    note). Distances rounded to 9 dp so double sum-order noise cannot flip
-    the argmin between engines; genuine sub-1e-9 ties break to the lower
-    cluster id via struct ordering on both."""
-    return F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    F.round(_sqdist_to(c), 9).alias("d"),
-                    F.lit(j).alias("cluster"),
-                )
-                for j, c in enumerate(cents)
-            ]
-        )
-    )["cluster"]
-
-
 def ivf_train(
     spark: SparkSession, sf_dir: str, k: int = 4, n_iter: int = 2
 ) -> DataFrame:
@@ -434,85 +397,36 @@ def ivf_train(
     one row per (cluster, dimension) with the final cell size —
     (cluster, n, pos, val), val rounded 6 dp.
 
-    Deterministic contract (what makes an exact SQL oracle possible):
+    This is product quantization with ONE subspace (Jegou, Douze & Schmid
+    2011: the IVF coarse quantizer is plain k-means over whole vectors), so
+    it runs `quantize._pq_fit_df` with m=1, dsub=dim — the one
+    deterministic Lloyd's loop in the repo:
     - seeds = the embeddings of the k smallest vec_ids — never rand();
     - assignment = squared-L2 argmin with distances rounded 9 dp first,
       ties to the lower cluster id (both engines);
     - update = element-wise mean rounded 6 dp, so the next iteration's
       centroid literals are bit-identical regardless of partitioning or
-      engine; raises if any cell empties (the two engines would need an
-      identical refill rule; pick k so it cannot).
+      engine; raises ("empty PQ cell") if any cell empties (the two
+      engines would need an identical refill rule; pick k so it cannot).
 
     Scale shape (Lloyd's on Spark done right): per iteration exactly ONE
-    map-side-combined aggregate keyed by (cluster, pos) — k*dim rows cross
-    the exchange, never the corpus — and the k*dim centroid table returns
-    to the plan as broadcast-folded literals, so assignment is a map-only
-    pass. Per-iteration cost is one corpus scan; at 100 TB you train on a
-    sample with the same code. Reference analog: the coarse quantizer of
-    IVF indexes; the reference engine has no vector stage, so this extends
-    the similarity tier rather than mirroring a reference file."""
+    map-side-combined aggregate keyed by (subspace=0, cluster, pos) — k*dim
+    rows cross the exchange, never the corpus — and the k*dim centroid
+    table returns to the plan as broadcast-folded literals, so assignment
+    is a map-only pass. Per-iteration cost is one corpus scan; at 100 TB
+    you train on a sample with the same code. Reference analog: the coarse
+    quantizer of IVF indexes; the reference engine has no vector stage, so
+    this extends the similarity tier rather than mirroring a reference
+    file."""
     emb = scoped_cache(
         _emb(spark, sf_dir).select("vec_id", "embedding"), "ivf_train_emb"
     )
-    cents, n_by = _ivf_fit(emb, k, n_iter)
+    books, sizes, dim = _pq_fit_df(emb, 1, k, n_iter)
     cent_df = spark.createDataFrame(
-        [
-            (j, n_by[j], p, cents[j][p])
-            for j in range(k)
-            for p in range(len(cents[j]))
-        ],
+        [(c, sizes[(0, c)], p, books[0][c][p]) for c in range(k) for p in range(dim)],
         "cluster int, n long, pos int, val double",
     )
     return cent_df.orderBy("cluster", "pos")
-
-
-def _ivf_fit(
-    emb: DataFrame, k: int, n_iter: int
-) -> tuple[list[list[float]], dict[int, int]]:
-    """The deterministic Lloyd's loop behind `ivf_train`, factored so the
-    IVF-PQ composition (`quantize.ivfpq_topk`) can train the coarse
-    quantizer on the same contract. ``emb`` must carry (vec_id, embedding)
-    and should be cached by the caller (the loop scans it n_iter+2 times).
-    Returns (centroids, final cell sizes); raises if any cell empties."""
-    seed_rows = emb.orderBy("vec_id").limit(k).collect()
-    if len(seed_rows) < k:
-        raise ValueError(f"corpus has fewer than k={k} vectors")
-    cents = [[float(v) for v in r["embedding"]] for r in seed_rows]
-
-    for _ in range(n_iter):
-        assigned = emb.select("embedding", _assign_col(cents).alias("cluster"))
-        rows = (
-            assigned.select("cluster", F.posexplode("embedding").alias("pos", "v"))
-            .groupBy("cluster", "pos")
-            .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("c"))
-            .collect()
-        )
-        got = {int(r["cluster"]) for r in rows}
-        if got != set(range(k)):
-            raise ValueError(f"empty cluster(s) {sorted(set(range(k)) - got)}")
-        dim = max(int(r["pos"]) for r in rows) + 1
-        nxt = [[0.0] * dim for _ in range(k)]
-        for r in rows:
-            nxt[int(r["cluster"])][int(r["pos"])] = float(r["c"])
-        cents = nxt
-
-    # FINAL assignment must honor the same empty-cell contract as the
-    # iteration loop: an inner join against sizes would silently drop an
-    # emptied cluster's codebook rows, so collect the (bounded, k-row)
-    # size table and guard before emitting.
-    size_rows = (
-        emb.select(_assign_col(cents).alias("cluster"))
-        .groupBy("cluster")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    got = {int(r["cluster"]) for r in size_rows}
-    if got != set(range(k)):
-        raise ValueError(
-            f"empty cluster(s) after final assignment {sorted(set(range(k)) - got)}"
-        )
-    n_by = {int(r["cluster"]): int(r["n"]) for r in size_rows}
-    return cents, n_by
 
 
 def _lsh_bucket_col(n_planes: int = 8, dim: int = 64, col: Column | None = None) -> Column:

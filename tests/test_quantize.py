@@ -208,6 +208,7 @@ def test_adc_table_bitwise_matches_spark_evaluation(spark, sfdir):
     from miru_spark.pipeline.quantize import (
         _adc_table,
         _pq_fit,
+        _probe_cells,
         _round_half_up,
         _sqdist_lit,
     )
@@ -219,7 +220,7 @@ def test_adc_table_bitwise_matches_spark_evaluation(spark, sfdir):
         .filter("vec_id = 0")
         .collect()[0]["embedding"]
     ]
-    dtab = _adc_table(spark, books, q, dsub)
+    dtab = _adc_table(books, q, dsub)
     exprs = []
     for j, book in enumerate(books):
         qsub = F.array(*[F.lit(float(q[j * dsub + i])) for i in range(dsub)])
@@ -229,6 +230,22 @@ def test_adc_table_bitwise_matches_spark_evaluation(spark, sfdir):
     for j, book in enumerate(books):
         for c in range(len(book)):
             assert dtab[j][c] == row[f"d_{j}_{c}"], (j, c)
+
+    # _probe_cells (the m=1 ADC row, sorted) must order cells exactly as
+    # the Spark-evaluated round(_sqdist_lit(q, cent), 9) does, ties to the
+    # lower cell: each subspace codebook plus a duplicate of its cell 0
+    # (an exact tie with cell 0) serves as a coarse codebook
+    for j, book in enumerate(books):
+        cents = book + [book[0]]
+        qsub = q[j * dsub : (j + 1) * dsub]
+        qlit = F.array(*[F.lit(v) for v in qsub])
+        d = spark.range(1).select(
+            *[F.round(_sqdist_lit(qlit, c), 9) for c in cents]
+        ).collect()[0]
+        want = sorted(range(len(cents)), key=lambda c: (d[c], c))
+        assert _probe_cells(cents, qsub, len(cents)) == want, j
+        assert want.index(0) < want.index(len(book))
+        assert _probe_cells(cents, qsub, 2) == want[:2]
 
     # the rounding rule itself, at an exact half boundary where Python's
     # banker's round would disagree (2.5e-9 -> banker's 2e-9, HALF_UP 3e-9)
@@ -248,13 +265,16 @@ def test_pq_train_raises_on_indivisible_dim(spark, sfdir):
         pq_train(spark, sfdir, m=5)
 
 
-def test_pq_train_raises_on_empty_cell(spark, tmp_path):
+@pytest.mark.parametrize("train", ["pq_train", "ivf_train"])
+def test_pq_train_raises_on_empty_cell(spark, tmp_path, train):
     """An all-identical corpus ties every assignment to code 0, emptying
     codes 1..ksub-1 — the train must RAISE (fail loud), never emit a
-    codebook with silently-missing cells (the ivf_train lesson)."""
+    codebook with silently-missing cells. ivf_train is the same Lloyd's
+    loop with m = 1, so it raises the same way."""
     from pyspark.sql import types as T
 
     from miru_spark.pipeline.quantize import pq_train
+    from miru_spark.pipeline.similarity import ivf_train
 
     d = str(tmp_path / "flat")
     vec = [1.0] * 64
@@ -268,17 +288,18 @@ def test_pq_train_raises_on_empty_cell(spark, tmp_path):
     spark.createDataFrame(
         [(i, vec, 0) for i in range(10)], schema
     ).write.parquet(f"{d}/embeddings.parquet")
+    fit = {"pq_train": pq_train, "ivf_train": ivf_train}[train]
     with pytest.raises(ValueError, match="empty PQ cell"):
-        pq_train(spark, d)
+        fit(spark, d)
 
 
 # ---- IVF-PQ: coarse cells + residual codes ----
 
 
 def _np_coarse_fit(X, kc, n_iter):
-    """similarity._ivf_fit's contract re-implemented serially: seeds = the
-    kc smallest vec_ids' vectors, argmin on 9-dp-rounded squared L2 (ties
-    to the lower cell), means rounded 6 dp."""
+    """The coarse (m = 1) Lloyd's contract re-implemented serially: seeds =
+    the kc smallest vec_ids' vectors, argmin on 9-dp-rounded squared L2
+    (ties to the lower cell), means rounded 6 dp."""
     C = X[:kc].copy()
 
     def assign(C):
@@ -568,3 +589,148 @@ def test_ivfpq_remove_tombstones_and_compact(spark, sfdir, tmp_path):
         spark, compacted, cents, books, q, k=10
     ).collect()
     assert [tuple(r) for r in after] == [tuple(r) for r in got]
+
+
+# ---- Stored-index edge states: toy index, no training ----
+
+
+def _toy_store(spark, path):
+    """Stored IVF-PQ index over 12 toy 4-dim vectors with hand-made frozen
+    codebooks (kc = 2 cells, m = 2 subspaces, ksub = 2 codes), built by
+    `ivfpq_append` — the real write path, no Lloyd's run. Returns
+    (emb, cents, books, query)."""
+    from miru_spark.pipeline.quantize import ivfpq_append
+
+    emb = spark.createDataFrame(
+        [(i, i % 3, [0.1 * (i % 5), 0.2 * (i % 3), 0.05 * i, 1.0]) for i in range(12)],
+        "vec_id bigint, label int, embedding array<float>",
+    )
+    cents = [[0.0, 0.0, 0.0, 1.0], [0.4, 0.4, 0.5, 1.0]]
+    books = [[[0.0, 0.0], [0.2, 0.2]], [[0.0, 0.0], [0.3, 0.1]]]
+    ivfpq_append(spark, path, emb, cents, books)
+    return emb, cents, books, [0.3, 0.2, 0.25, 1.0]
+
+
+def test_ivfpq_remove_without_table_raises(spark, tmp_path):
+    """Removing from a path with no main table is an error naming the
+    path, and writes nothing — a lone `_tombstones` dir would make every
+    later read die on schema inference instead."""
+    import os
+    import re
+
+    from miru_spark.pipeline.quantize import ivfpq_remove
+
+    path = str(tmp_path / "no_index")
+    with pytest.raises(ValueError, match=re.escape(path)):
+        ivfpq_remove(spark, path, [1, 2])
+    assert not os.path.exists(path)
+
+
+def test_ivfpq_compact_to_zero_survivors_raises(spark, tmp_path):
+    """Compacting a fully tombstoned index raises before writing: an empty
+    partitioned write leaves nothing to infer a schema from."""
+    import os
+
+    from miru_spark.pipeline.quantize import ivfpq_compact, ivfpq_remove
+
+    path = str(tmp_path / "idx")
+    _toy_store(spark, path)
+    ivfpq_remove(spark, path, range(12))
+    out = str(tmp_path / "compacted")
+    with pytest.raises(ValueError, match="empty index"):
+        ivfpq_compact(spark, path, out)
+    assert not os.path.exists(out)
+
+
+def test_ivfpq_file_uri_honors_tombstones_remote_scheme_raises(spark, tmp_path):
+    """Tombstones must mask through a file:// URI exactly as through the
+    plain path (os.path cannot see a URI; treating it as absent would
+    silently un-delete), and the append guard must see the standing table
+    through the URI (skipping it would write duplicate rows). A remote
+    scheme the existence check cannot see raises before any Spark job."""
+    import pyspark.sql.functions as F
+
+    from miru_spark.pipeline.quantize import (
+        ivfpq_append,
+        ivfpq_remove,
+        ivfpq_topk_from_codes,
+    )
+
+    plain = str(tmp_path / "idx")
+    uri = "file://" + plain
+    emb, cents, books, q = _toy_store(spark, uri)
+
+    def served(path):
+        return [
+            tuple(r)
+            for r in ivfpq_topk_from_codes(
+                spark, path, cents, books, q, query_vec_id=-1, k=5
+            ).collect()
+        ]
+
+    base = served(plain)
+    assert served(uri) == base
+    removed = [base[0][0], base[1][0]]
+    assert ivfpq_remove(spark, uri, removed) == 2
+    for path in (uri, plain):
+        got = served(path)
+        assert {r[0] for r in got}.isdisjoint(removed), path
+        assert got[0][0] == base[2][0]
+    with pytest.raises(ValueError, match="already exist"):
+        ivfpq_append(
+            spark, uri, emb.filter(F.col("vec_id") == removed[0]), cents, books
+        )
+
+    sc = spark.sparkContext
+    group = "miru_remote_scheme_guard"
+    sc.setJobGroup(group, "no job may run for an unsupported scheme")
+    try:
+        remote = "s3a://bucket/idx"
+        with pytest.raises(ValueError, match="s3a"):
+            ivfpq_topk_from_codes(spark, remote, cents, books, q)
+        with pytest.raises(ValueError, match="s3a"):
+            ivfpq_remove(spark, remote, [1])
+        with pytest.raises(ValueError, match="s3a"):
+            ivfpq_append(spark, remote, emb, cents, books)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+
+
+def test_gate_index_dir_removed_at_exit():
+    """The lifecycle gates build their index under a fresh temp dir per
+    invocation; it must be gone once the interpreter that made it exits."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os, __spark_entry__ as e\n"
+        "p = e._gate_index_path('miru_exit_test_')\n"
+        "os.makedirs(p)\n"
+        "open(os.path.join(p, 'part-0.parquet'), 'w').close()\n"
+        "print(os.path.isdir(p), os.path.dirname(p))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True,
+        check=True,
+    ).stdout.split()
+    assert out[0] == "True"
+    assert os.path.basename(out[1]).startswith("miru_exit_test_")
+    assert not os.path.exists(out[1])
+
+
+def test_pq_bench_resolves_kernel_names():
+    """tools/pq_bench.py imports the private PQ kernel names at module
+    scope, so a rename fails here rather than on the next bench run."""
+    import importlib
+    import os
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if repo not in sys.path:
+        sys.path.insert(0, repo)
+    bench = importlib.import_module("tools.pq_bench")
+    assert callable(bench._pq_fit) and callable(bench._code_col)

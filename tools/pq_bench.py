@@ -45,13 +45,26 @@ sys.path.insert(0, REPO)
 
 import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
+from miru_spark.functions.topk import ranked_topk  # noqa: E402
+from miru_spark.pipeline.quantize import (  # noqa: E402
+    _code_col,
+    _pq_fit,
+    _sqdist_lit,
+    _sub_slice,
+    pq_rerank_from_codes,
+    pq_topk_from_codes,
+)
+from miru_spark.pipeline.similarity import _emb  # noqa: E402
+from miru_spark.session import get_spark  # noqa: E402
 from tools.ann_partitioned_bench import (  # noqa: E402
     DIM,
     N_CENTERS,
     _centers,
     _vectors_for_ids,
 )
+from tools.host_probe import BW_HEALTHY_GBPS, probe  # noqa: E402
 
 
 def build_corpus(spark, rows: int, parts: int) -> str:
@@ -109,18 +122,6 @@ def main() -> None:
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH_PQ_1M.json"))
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
-    from miru_spark.functions.topk import ranked_topk
-    from miru_spark.pipeline.quantize import (
-        _pq_fit,
-        _sqdist_lit,
-        pq_rerank_from_codes,
-        pq_topk_from_codes,
-    )
-    from miru_spark.session import get_spark
-    from tools.host_probe import BW_HEALTHY_GBPS, probe
-
     out: dict = {
         "rows": args.rows,
         "dim": DIM,
@@ -150,9 +151,6 @@ def main() -> None:
     # pq_encode refits internally for its standalone contract; the refit
     # would double-count training here, so inline the same encode plan
     # against the already-trained books.
-    from miru_spark.pipeline.quantize import _code_col, _sub_slice
-    from miru_spark.pipeline.similarity import _emb
-
     cols = [F.col("vec_id"), F.col("label")] + [
         _code_col(_sub_slice(j, dsub), books[j]).cast("smallint").alias(f"c{j}")
         for j in range(args.m)
