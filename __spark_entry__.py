@@ -1166,73 +1166,6 @@ def _ivfpq_lifecycle_serve(
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        # fulltext (SURVEY.md §2.3/2.6: Q1/F3/T1/T3 as DataFrame programs)
-        "ft_bm25_and": ft.ft_bm25_and,
-        "ft_bm25_or": ft.ft_bm25_or,
-        "ft_engine_bm25": ft.ft_engine_bm25,  # the real index engine e2e
-        "ft_bm25_stopworded_en": ft.ft_bm25_stopworded_en,  # Q2 locale analyzer e2e
-        "ft_bm25_stopworded_de": ft.ft_bm25_stopworded_de,  # Q2 de set via de_at walk
-        "ft_bm25_stemmed_en": ft.ft_bm25_stemmed_en,  # Q2 S-stemmer e2e (both sides)
-        # Q2 Porter e2e — ROWS-ONLY by design: Porter has no DuckDB form in
-        # this sandbox (analyzers.duckdb_tokens_sql raises with the reason);
-        # value parity pinned by tests/test_porter.py instead
-        "ft_bm25_porter_en": ft.ft_bm25_porter_en,
-        "ft_highlights": ft.ft_highlights,  # Q3 best-4-fragment highlighter
-        "ft_serve_bm25": ft.ft_serve_bm25,  # serving path: WAND + roaring filters
-        "ft_bm25_batch": ft.ft_bm25_batch,  # N queries, ONE posting scan (search_batch)
-        "ft_bm25_batch_cnf": ft.ft_bm25_batch_cnf,  # masks mode: CNF shapes, O(1) plan in N
-        "ft_bm25_after_delete": ft.ft_bm25_after_delete,  # F5 removal mask
-        "ft_bm25_time_range": ft.ft_bm25_time_range,  # S4 doc-time mask
-        # OR-reachable Range clause → doc_meta candidate branch unioned into
-        # the distributed path (MiruAggregateUtil.java:1098-1241 uniformity)
-        "ft_bm25_or_timerange": ft.ft_bm25_or_timerange,
-        # mustNots-only query → pButNotQ(all, q) inclusiveFilter=true
-        # (LuceneBackedQueryParser.java:139-141), served via search_local
-        "ft_not_only": ft.ft_not_only,
-        "ft_snippets": ft.ft_snippets,
-        "ft_tfidf_miru": ft.ft_tfidf_miru,
-        "ft_term_stats": ft.ft_term_stats,
-        "ft_conjunctive_count": ft.ft_conjunctive_count,
-        "ft_xor_count": ft.ft_xor_count,
-        "ft_prefix_count": ft.ft_prefix_count,
-        "numeric_lex_range": ft.numeric_lex_range,  # MiruTermComposer analog
-        # miru plugin analogs (§2.4 A-series, §2.2 F-series, §2.5 J, §2.6 T)
-        "distincts_gather": rel.distincts_gather,
-        "distinct_count": rel.distinct_count,
-        "aggregate_counts": rel.aggregate_counts,
-        "paired_latest": rel.paired_latest,
-        "analytics_waveform": rel.analytics_waveform,
-        "anomaly_metrics": rel.anomaly_metrics,
-        "stumptown_tail": rel.stumptown_tail,
-        "trending_peaks": rel.trending_peaks,
-        "reco_collaborative": rel.reco_collaborative,
-        "bloom_prune_join": rel.bloom_prune_join,  # J6 real bloom pre-join pruning
-        "catwalk_model": rel.catwalk_model,  # J4 model gather (flat)
-        "catwalk_features": rel.catwalk_features,  # J4 full FeatureScore shape
-        # cross-partition model merge + min-score/max-per-feature pruning
-        # (CatwalkModelService.java:100-237) — oracle trains on the union,
-        # hash-equality proves the per-range merge is exact
-        "catwalk_merged": rel.catwalk_merged,
-        "strut_scores": rel.strut_scores,  # J5 scoring over catwalk_features
-        # CatwalkModelService persistence lifecycle (saveModel/getModel/repair):
-        # staged per-range persisted folds, reloaded from disk, merged — must
-        # hash-match union-training / full-retrain scoring
-        "catwalk_saved_model": cstore.catwalk_saved_model,
-        "strut_scores_saved": cstore.strut_scores_saved,
-        "filter_boolean": rel.filter_boolean,
-        "filter_xor": rel.filter_xor,
-        "time_range_count": rel.time_range_count,
-        "topk_time": rel.topk_time,
-        "topn_per_group": rel.topn_per_group,
-        "gather_features": rel.gather_features,
-        # A3 full fidelity: lastScoredId incremental cache — split ingestion
-        # through the persisted cache must hash-match the one-shot SQL oracle
-        "gather_features_cached": feature_cache.gather_features_cached,
-        "semi_join_orders": rel.semi_join_orders,
-        "anti_join_orders": rel.anti_join_orders,
-        "bloom_containment": rel.bloom_containment,
-        "pricing_summary": rel.pricing_summary,
-        "shipping_priority": rel.shipping_priority,
         # training-data pipeline: dedup
         "dedup_exact": dedup.dedup_exact,
         "ngram_jaccard_pairs": dedup.ngram_jaccard_pairs,
@@ -1329,6 +1262,73 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "domain_quota_sample": text.domain_quota_sample,
         "doc_fingerprints": text.doc_fingerprints,
         "winnow_fingerprints": text.winnow_fingerprints,  # MOSS rolling hash
+        # fulltext (SURVEY.md §2.3/2.6: Q1/F3/T1/T3 as DataFrame programs)
+        "ft_bm25_and": ft.ft_bm25_and,
+        "ft_bm25_or": ft.ft_bm25_or,
+        "ft_engine_bm25": ft.ft_engine_bm25,  # the real index engine e2e
+        "ft_bm25_stopworded_en": ft.ft_bm25_stopworded_en,  # Q2 locale analyzer e2e
+        "ft_bm25_stopworded_de": ft.ft_bm25_stopworded_de,  # Q2 de set via de_at walk
+        "ft_bm25_stemmed_en": ft.ft_bm25_stemmed_en,  # Q2 S-stemmer e2e (both sides)
+        # Q2 Porter e2e — ROWS-ONLY by design: Porter has no DuckDB form in
+        # this sandbox (analyzers.duckdb_tokens_sql raises with the reason);
+        # value parity pinned by tests/test_porter.py instead
+        "ft_bm25_porter_en": ft.ft_bm25_porter_en,
+        "ft_highlights": ft.ft_highlights,  # Q3 best-4-fragment highlighter
+        "ft_serve_bm25": ft.ft_serve_bm25,  # serving path: WAND + roaring filters
+        "ft_bm25_batch": ft.ft_bm25_batch,  # N queries, ONE posting scan (search_batch)
+        "ft_bm25_batch_cnf": ft.ft_bm25_batch_cnf,  # masks mode: CNF shapes, O(1) plan in N
+        "ft_bm25_after_delete": ft.ft_bm25_after_delete,  # F5 removal mask
+        "ft_bm25_time_range": ft.ft_bm25_time_range,  # S4 doc-time mask
+        # OR-reachable Range clause → doc_meta candidate branch unioned into
+        # the distributed path (MiruAggregateUtil.java:1098-1241 uniformity)
+        "ft_bm25_or_timerange": ft.ft_bm25_or_timerange,
+        # mustNots-only query → pButNotQ(all, q) inclusiveFilter=true
+        # (LuceneBackedQueryParser.java:139-141), served via search_local
+        "ft_not_only": ft.ft_not_only,
+        "ft_snippets": ft.ft_snippets,
+        "ft_tfidf_miru": ft.ft_tfidf_miru,
+        "ft_term_stats": ft.ft_term_stats,
+        "ft_conjunctive_count": ft.ft_conjunctive_count,
+        "ft_xor_count": ft.ft_xor_count,
+        "ft_prefix_count": ft.ft_prefix_count,
+        "numeric_lex_range": ft.numeric_lex_range,  # MiruTermComposer analog
+        # miru plugin analogs (§2.4 A-series, §2.2 F-series, §2.5 J, §2.6 T)
+        "distincts_gather": rel.distincts_gather,
+        "distinct_count": rel.distinct_count,
+        "aggregate_counts": rel.aggregate_counts,
+        "paired_latest": rel.paired_latest,
+        "analytics_waveform": rel.analytics_waveform,
+        "anomaly_metrics": rel.anomaly_metrics,
+        "stumptown_tail": rel.stumptown_tail,
+        "trending_peaks": rel.trending_peaks,
+        "reco_collaborative": rel.reco_collaborative,
+        "bloom_prune_join": rel.bloom_prune_join,  # J6 real bloom pre-join pruning
+        "catwalk_model": rel.catwalk_model,  # J4 model gather (flat)
+        "catwalk_features": rel.catwalk_features,  # J4 full FeatureScore shape
+        # cross-partition model merge + min-score/max-per-feature pruning
+        # (CatwalkModelService.java:100-237) — oracle trains on the union,
+        # hash-equality proves the per-range merge is exact
+        "catwalk_merged": rel.catwalk_merged,
+        "strut_scores": rel.strut_scores,  # J5 scoring over catwalk_features
+        # CatwalkModelService persistence lifecycle (saveModel/getModel/repair):
+        # staged per-range persisted folds, reloaded from disk, merged — must
+        # hash-match union-training / full-retrain scoring
+        "catwalk_saved_model": cstore.catwalk_saved_model,
+        "strut_scores_saved": cstore.strut_scores_saved,
+        "filter_boolean": rel.filter_boolean,
+        "filter_xor": rel.filter_xor,
+        "time_range_count": rel.time_range_count,
+        "topk_time": rel.topk_time,
+        "topn_per_group": rel.topn_per_group,
+        "gather_features": rel.gather_features,
+        # A3 full fidelity: lastScoredId incremental cache — split ingestion
+        # through the persisted cache must hash-match the one-shot SQL oracle
+        "gather_features_cached": feature_cache.gather_features_cached,
+        "semi_join_orders": rel.semi_join_orders,
+        "anti_join_orders": rel.anti_join_orders,
+        "bloom_containment": rel.bloom_containment,
+        "pricing_summary": rel.pricing_summary,
+        "shipping_priority": rel.shipping_priority,
     }
 
 

@@ -103,9 +103,14 @@ def expand_prefixes(index_dir: str, prefix_set: set[str]) -> dict[str, list[str]
 # - _DATASET_CACHE: pyarrow dataset handles (file discovery per call
 #   otherwise);
 # - _DOCLEN_CACHE: dense doc_id → doc_len / ts arrays and the sorted
-#   all-ids mask, built only for termless shapes and large posting
-#   universes, never on the sparse path;
+#   all-ids mask: doc_len only once a scoring term has more than
+#   _SPARSE_IDS_MAX postings, ts for Range clauses and large time-masked
+#   candidate sets, all-ids for termless shapes — never on the sparse path;
 # - _POSTING_CACHE: decoded postings of hot terms, LRU by entry count;
+# - _TERM_DOCLENS: each scoring term's doc lengths as int32, aligned with
+#   its posting docIDs (miru keeps TF beside the postings the same way,
+#   LabFieldIndex.java:478-542). Same key, entry-count bound and sweep as
+#   _POSTING_CACHE; terms over _SPARSE_IDS_MAX postings are never cached;
 # - _BLOCK_CACHE: decoded doc_meta row groups and per-(field, value) filter
 #   bitmaps, LRU bounded in bytes;
 # - _META_LAYOUT: every doc_meta row group's doc_id min/max, read from the
@@ -114,6 +119,7 @@ _DATASET_CACHE: dict[tuple, pads.Dataset] = {}
 _DOCLEN_CACHE: dict[tuple, np.ndarray] = {}
 _POSTING_CACHE: dict[tuple, tuple] = {}  # (dir, gen, term) → postings tuple
 _POSTING_CACHE_MAX = 4096  # hot-term cache (miru's LAB block-cache analog)
+_TERM_DOCLENS: dict[tuple, np.ndarray] = {}  # (dir, gen, term) → int32 doc_lens
 _META_LAYOUT: dict[tuple, "_MetaLayout"] = {}
 # The block cache lives in every process that serves, including each
 # executor Python worker running _gather_display_fields: 32 workers × this
@@ -171,11 +177,29 @@ def _sweep_stale(index_dir: str, gen: float) -> None:
     def stale(k):
         return k[0] == index_dir and k[1] != gen
 
-    for cache in (_DATASET_CACHE, _DOCLEN_CACHE, _POSTING_CACHE, _META_LAYOUT):
+    for cache in (_DATASET_CACHE, _DOCLEN_CACHE, _POSTING_CACHE, _TERM_DOCLENS, _META_LAYOUT):
         for k in [k for k in cache if stale(k)]:
             del cache[k]
     for k in [k for k in _BLOCK_CACHE.entries if stale(k)]:
         _BLOCK_CACHE.pop(k)
+
+
+def _lru_get(cache: dict, key):
+    """An entry-count LRU hit re-inserts at the tail (dicts iterate in
+    insertion order)."""
+    hit = cache.pop(key, None)
+    if hit is not None:
+        cache[key] = hit
+    return hit
+
+
+def _lru_put(cache: dict, key, value) -> None:
+    """Insert at the tail, evicting from the head down to
+    _POSTING_CACHE_MAX entries; a refreshed index's old generations are
+    already swept."""
+    while len(cache) >= _POSTING_CACHE_MAX:
+        del cache[next(iter(cache))]
+    cache[key] = value
 
 
 def _dataset(index_dir: str, part: str) -> pads.Dataset:
@@ -325,9 +349,11 @@ _SPARSE_IDS_MAX = 65536
 class _SparseCol:
     """Driver-side docID → value map fetched through the doc_meta row-group
     cache — numpy-fancy-indexable like the dense array, but it touches only
-    the row groups covering the requested ids. This is the first-query /
-    rare-term serving shape at large N: the 100M-doc run measured the dense
-    doc_len+meta materialization at minutes of wall for a 1-hit query."""
+    the row groups covering the requested ids. The serving path uses it for
+    a time-masked candidate set's ``ts`` (``_docts_for``); doc lengths
+    travel with the postings instead (``_doclens_for``). At large N the
+    dense materialization costs minutes of wall for a 1-hit query (the
+    100M-doc run)."""
 
     def __init__(self, ids: np.ndarray, vals: np.ndarray):
         o = np.argsort(ids)
@@ -361,19 +387,55 @@ def _sparse_col(index_dir: str, column: str, ids: np.ndarray) -> _SparseCol:
     return _SparseCol(want, np.asarray(vals, dtype=np.int64))
 
 
-def _doclens_for(index_dir: str, postings: dict, ast) -> "np.ndarray | _SparseCol":
-    """Doc-length provider for one query: the cached dense array when it
-    already exists (or must — termless-matchable shapes draw candidates
-    from index masks, not postings), else a sparse fetch of the posting
-    universe when it is small. Never populates the dense cache itself."""
-    key = (index_dir, _index_generation(index_dir), "doc_len")
-    if key in _DOCLEN_CACHE or qp.can_match_termless(ast):
-        return _doclens(index_dir)
-    sizes = sum(p[0].size for p in postings.values())
-    if not postings or sizes > _SPARSE_IDS_MAX:
-        return _doclens(index_dir)
-    uni = np.unique(np.concatenate([p[0] for p in postings.values()]))
-    return _sparse_col(index_dir, "doc_len", uni)
+class _DenseLens:
+    """A large term's doc lengths, indexed by posting position like a cached
+    aligned array, but gathered from the dense docID → doc_len array only
+    at the positions asked for: a conjunction over a head term pays for its
+    candidates, not for the term's whole posting list."""
+
+    def __init__(self, dense: np.ndarray, docids: np.ndarray):
+        self._dense = dense
+        self._docids = docids
+
+    def __getitem__(self, pos):
+        return self._dense[self._docids[pos]]
+
+
+def _doclens_for(index_dir: str, postings: dict, terms, diag: dict | None = None) -> dict:
+    """term → its doc lengths aligned with its postings: ``lens[t][i]`` is
+    the doc_len of ``postings[t][0][i]``. BM25 never needs a doc length
+    outside a scoring term's own postings.
+
+    A term with at most _SPARSE_IDS_MAX postings resolves once per index
+    generation — one doc_meta row-group lookup for all of a call's missing
+    terms — and stays in _TERM_DOCLENS beside its postings, so a warm query
+    reads no doc_meta. A larger term reads the dense array (``_doclens``)
+    per query and is not cached. ``diag["doclen_fetched"]`` counts the
+    postings whose doc length this call looked up in doc_meta."""
+    gen = _index_generation(index_dir)
+    lens, missing = {}, []
+    for t in sorted(terms):
+        if t not in postings:
+            continue
+        d = postings[t][0]
+        if d.size > _SPARSE_IDS_MAX:
+            lens[t] = _DenseLens(_doclens(index_dir), d)
+        elif (hit := _lru_get(_TERM_DOCLENS, (index_dir, gen, t))) is not None:
+            lens[t] = hit
+        else:
+            missing.append(t)
+    fetched = 0
+    if missing:
+        ids = np.concatenate([postings[t][0] for t in missing])
+        vals = np.asarray(_meta_lookup(index_dir, ids, ["doc_len"])["doc_len"], dtype=np.int32)
+        for t in missing:
+            n = postings[t][0].size
+            lens[t] = vals[fetched : fetched + n].copy()  # owns its bytes once cached
+            fetched += n
+            _lru_put(_TERM_DOCLENS, (index_dir, gen, t), lens[t])
+    if diag is not None:
+        diag["doclen_fetched"] = fetched
+    return lens
 
 
 def _docts_for(index_dir: str, cand: np.ndarray) -> "np.ndarray | _SparseCol":
@@ -489,9 +551,8 @@ def load_postings(
     missing = set()
     for term in terms:
         key = (index_dir, gen, term)
-        hit = _POSTING_CACHE.get(key)
+        hit = _lru_get(_POSTING_CACHE, key)
         if hit is not None:
-            _POSTING_CACHE[key] = _POSTING_CACHE.pop(key)  # LRU move-to-end
             out[term] = hit
         else:
             missing.add(term)
@@ -535,11 +596,7 @@ def load_postings(
         if entry is None:
             continue
         out[term] = entry
-        # LRU-evict (dicts iterate in insertion order; hits re-insert at the
-        # tail); a refreshed index's old generations are already swept
-        while len(_POSTING_CACHE) >= _POSTING_CACHE_MAX:
-            del _POSTING_CACHE[next(iter(_POSTING_CACHE))]
-        _POSTING_CACHE[(index_dir, gen, term)] = entry
+        _lru_put(_POSTING_CACHE, (index_dir, gen, term), entry)
     return out
 
 
@@ -646,12 +703,13 @@ def _eval_ast(node, postings, expansions, index_dir=None) -> np.ndarray:
 
 
 def _score_candidates(cand, scoring_terms, postings, doclens, n_docs, avgdl):
-    """Exact BM25 over the candidate vector. Per-term contribution vectors
-    are computed concurrently (numpy releases the GIL), then ACCUMULATED in
-    sorted term order — float sums stay bit-reproducible and rank-identical
-    to the sequential oracle."""
+    """Exact BM25 over the candidate vector; ``doclens`` maps each scoring
+    term to its posting-aligned doc lengths (``_doclens_for``), read at the
+    same positions as its tfs. Per-term contribution vectors are computed
+    concurrently (numpy releases the GIL), then ACCUMULATED in sorted term
+    order — float sums stay bit-reproducible and rank-identical to the
+    sequential oracle."""
     scores = np.zeros(cand.size, dtype=np.float64)
-    dl = doclens[cand].astype(np.float64)
     terms = [t for t in sorted(scoring_terms) if t in postings]
 
     def _contrib(term):
@@ -661,8 +719,11 @@ def _score_candidates(cand, scoring_terms, postings, doclens, n_docs, avgdl):
         mask = (pos < d.size) & (d[pos_c] == cand)
         if not mask.any():
             return None
+        at = pos_c[mask]
         idf = bm25_idf(float(d.size), n_docs)
-        return mask, idf * bm25_tf_norm(tf[pos_c[mask]].astype(np.float64), dl[mask], avgdl)
+        return mask, idf * bm25_tf_norm(
+            tf[at].astype(np.float64), doclens[term][at].astype(np.float64), avgdl
+        )
 
     if len(terms) > 2 and cand.size > 100_000:
         from concurrent.futures import ThreadPoolExecutor
@@ -709,6 +770,7 @@ def _blockmax_wand_candidates(
     Classic document-at-a-time WAND advances one pivot per step (per-row
     Python — banned here); this formulation does the same block-UB skipping
     as array passes: one searchsorted per term over the candidate vector.
+    ``doclens`` is the per-term posting-aligned form of ``_doclens_for``.
     """
     ubs = {}
     for t in scoring_terms:
@@ -723,17 +785,18 @@ def _blockmax_wand_candidates(
     # postings (rare terms have the highest idf/UB but can't seed a kth bound)
     theta = 0.0
     for t in order:
-        d0, tf0 = postings[t][:2]
+        d, tf = postings[t][:2]
+        at = slice(None)
         if removed is not None and removed.size:
             # θ must lower-bound the kth best among ELIGIBLE docs: seeding it
             # from removed docs' scores could prune a valid candidate. idf
             # still uses the stored df (removal doesn't rewrite statistics —
             # miru's mask-only semantics).
-            keep_m = ~np.isin(d0, removed, assume_unique=True)
-            d0, tf0 = d0[keep_m], tf0[keep_m]
-        if d0.size > k:
-            s = bm25_idf(float(postings[t][0].size), n_docs) * bm25_tf_norm(
-                tf0.astype(np.float64), doclens[d0].astype(np.float64), avgdl
+            at = ~np.isin(d, removed, assume_unique=True)
+        tf0 = tf[at]
+        if tf0.size > k:
+            s = bm25_idf(float(d.size), n_docs) * bm25_tf_norm(
+                tf0.astype(np.float64), doclens[t][at].astype(np.float64), avgdl
             )
             theta = float(np.partition(s, s.size - k)[s.size - k])
             break
@@ -779,7 +842,9 @@ def search_local(
     diag: dict | None = None,
 ) -> pd.DataFrame:
     """Serving path: parse → numpy set algebra → block-max WAND → BM25 top-k
-    → gather. Pass ``diag={}`` to capture pruning statistics.
+    → gather. Pass ``diag={}`` to capture pruning statistics and
+    ``doclen_fetched``, the postings whose doc length this call read from
+    doc_meta (0 once the scoring terms' aligned doc lengths are cached).
 
     Masks (ANDNOT/AND into the candidate set, never into the statistics —
     miru's buildIndexMask / buildTimeRangeMask composition,
@@ -800,7 +865,7 @@ def search_local(
     pure_or = isinstance(ast, (qp.Term, qp.Or)) and all(
         isinstance(c, qp.Term) for c in getattr(ast, "children", ())
     )
-    doclens = _doclens_for(index_dir, postings, ast)
+    doclens = _doclens_for(index_dir, postings, scoring_terms, diag)
     removed = removal.removed_array(index_dir)
     # WAND θ is seeded from unfiltered single-term scores, so ANY candidate
     # mask that θ doesn't account for (lang/repo/time) makes pruning unsound

@@ -24,6 +24,11 @@ def _mk(doc_ids, tfs):
     return (d, t, bl, bm)
 
 
+def _aligned(postings, doclens):
+    """The kernels' doc-length input: per term, aligned with its docIDs."""
+    return {t: doclens[p[0]] for t, p in postings.items()}
+
+
 def _bruteforce_topk(postings, doclens, k):
     all_docs = np.unique(np.concatenate([p[0] for p in postings.values()]))
     scores = np.zeros(all_docs.size)
@@ -51,10 +56,11 @@ def test_blockmax_prunes_blocks_and_keeps_topk():
     b_tfs = np.ones(b_docs.size, dtype=np.int64)
     b_tfs[:BLOCK_SIZE] = 30  # head block inflates B's global UB above θ
     postings = {"a": _mk(a_docs, a_tfs), "b": _mk(b_docs, b_tfs)}
+    lens = _aligned(postings, doclens)
 
     diag = {}
     cand = _blockmax_wand_candidates(
-        {"a", "b"}, postings, 10, N_DOCS, doclens, AVGDL, diag=diag
+        {"a", "b"}, postings, 10, N_DOCS, lens, AVGDL, diag=diag
     )
     assert diag["theta"] > 0.0
     assert diag["essential_terms"] == 2  # B passed the MaxScore split
@@ -65,7 +71,7 @@ def test_blockmax_prunes_blocks_and_keeps_topk():
 
     # soundness: exact top-k from the pruned set == exact top-k from everything
     exp_docs, exp_scores = _bruteforce_topk(postings, doclens, 10)
-    got_scores = _score_candidates(cand, {"a", "b"}, postings, doclens, N_DOCS, AVGDL)
+    got_scores = _score_candidates(cand, {"a", "b"}, postings, lens, N_DOCS, AVGDL)
     order = np.lexsort((cand, got_scores))[::-1][:10]
     np.testing.assert_array_equal(cand[order], exp_docs)
     np.testing.assert_allclose(got_scores[order], exp_scores, rtol=1e-12)
@@ -79,10 +85,11 @@ def test_blockmax_nonessential_term_dropped():
     weak_docs = np.arange(10_000, 19_000, dtype=np.int64)
     weak_tfs = np.ones(weak_docs.size, dtype=np.int64)
     postings = {"strong": _mk(strong_docs, strong_tfs), "weak": _mk(weak_docs, weak_tfs)}
+    lens = _aligned(postings, doclens)
 
     diag = {}
     cand = _blockmax_wand_candidates(
-        {"strong", "weak"}, postings, 10, N_DOCS, doclens, AVGDL, diag=diag
+        {"strong", "weak"}, postings, 10, N_DOCS, lens, AVGDL, diag=diag
     )
     # weak-only docs must all be pruned (by MaxScore split or block bounds)
     assert not np.intersect1d(cand, weak_docs).size
@@ -97,8 +104,29 @@ def test_blockmax_exact_theta_tie_kept():
     tfs = np.ones(docs.size, dtype=np.int64)  # all identical scores → all tie at θ
     other = _mk(np.arange(500, 600, dtype=np.int64), np.ones(100, dtype=np.int64))
     postings = {"a": _mk(docs, tfs), "b": other}
-    cand = _blockmax_wand_candidates({"a", "b"}, postings, 10, N_DOCS, doclens, AVGDL)
+    lens = _aligned(postings, doclens)
+    cand = _blockmax_wand_candidates({"a", "b"}, postings, 10, N_DOCS, lens, AVGDL)
     assert np.isin(docs, cand).all()
+
+
+def test_theta_seed_reads_doclens_of_eligible_postings():
+    """With removed docs, θ is the exact kth single-term score over the
+    eligible postings, each scored with its own doc length (the lengths
+    vary, so a length read at the wrong posting moves θ)."""
+    doclens = np.arange(N_DOCS, dtype=np.int64) % 97 + 10
+    docs = np.arange(0, 400, 2, dtype=np.int64)
+    tfs = np.ones(docs.size, dtype=np.int64)  # equal tf: doc length decides
+    rare = np.arange(1000, 1005, dtype=np.int64)  # too few postings to seed θ
+    postings = {"a": _mk(docs, tfs), "b": _mk(rare, np.ones(rare.size, dtype=np.int64))}
+    removed = docs[::3]
+    diag = {}
+    _blockmax_wand_candidates({"a", "b"}, postings, 10, N_DOCS, _aligned(postings, doclens),
+                              AVGDL, diag=diag, removed=removed)
+    keep = ~np.isin(docs, removed)
+    s = bm25_idf(float(docs.size), N_DOCS) * bm25_tf_norm(
+        tfs[keep].astype(np.float64), doclens[docs[keep]].astype(np.float64), AVGDL
+    )
+    assert diag["theta"] == np.sort(s)[-10]
 
 
 from hypothesis import given, settings
@@ -124,12 +152,13 @@ def test_wand_topk_property(data):
         ).astype(np.int64)
         postings[f"t{t}"] = _mk(docs, tfs)
     k = data.draw(st.integers(1, 15))
+    lens = _aligned(postings, doclens)
 
-    cand = _blockmax_wand_candidates(set(postings), postings, k, N_DOCS, doclens, AVGDL)
+    cand = _blockmax_wand_candidates(set(postings), postings, k, N_DOCS, lens, AVGDL)
     exp_docs, exp_scores = _bruteforce_topk(postings, doclens, k)
     kk = min(k, exp_docs.size)
     assert np.isin(exp_docs[:kk], cand).all()
-    scores = _score_candidates(cand, set(postings), postings, doclens, N_DOCS, AVGDL)
+    scores = _score_candidates(cand, set(postings), postings, lens, N_DOCS, AVGDL)
     order = np.lexsort((cand, scores))[::-1][:kk]
     np.testing.assert_array_equal(cand[order], exp_docs[:kk])
     np.testing.assert_allclose(scores[order], exp_scores[:kk], rtol=1e-12)
