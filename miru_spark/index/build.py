@@ -30,7 +30,6 @@ Scale notes (100 TB / 10^12 files):
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 from collections.abc import Iterator
@@ -47,6 +46,7 @@ from miru_spark.analyzer import tokenize_arrow_flat
 from miru_spark import roaring
 from miru_spark.codec import encode_postings
 from miru_spark.corpus import verify_sha256
+from miru_spark.index.merge import ROW_GROUP_BYTES, forward_index
 from miru_spark.jsonio import load_json, save_json_atomic
 
 KEY_COLS = ["repo", "path", "commit"]
@@ -313,6 +313,28 @@ def _build_segment_rows(
     return rows, stats, meta
 
 
+def write_parquet_atomic(table: pa.Table, path: str, **options) -> None:
+    """The one parquet write of index files: a hidden tmp file (scans skip
+    names starting with "."), then an atomic rename."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.tmp-{uuid.uuid4().hex}")
+    pq.write_table(table, tmp, compression="snappy", **options)
+    os.replace(tmp, path)
+
+
+def write_forward_index(meta: pa.Table, path: str) -> None:
+    """One pid's doc_meta_local file, read by position: row groups decode to
+    at most ROW_GROUP_BYTES; dictionaries only on low-cardinality columns."""
+    per_row = max(1, meta.nbytes // max(1, meta.num_rows))
+    write_parquet_atomic(
+        meta,
+        path,
+        row_group_size=max(1, ROW_GROUP_BYTES // per_row),
+        use_dictionary=["repo", "commit", "lang", "doc_len", "pid"],
+        column_encoding={"local_doc_id": "DELTA_BINARY_PACKED", "path": "PLAIN", "ts": "PLAIN"},
+    )
+
+
 def build_segments(
     keyed: DataFrame, index_dir: str, resume: bool = True
 ) -> DataFrame:
@@ -336,11 +358,6 @@ def build_segments(
     os.makedirs(meta_dir, exist_ok=True)
     os.makedirs(man_dir, exist_ok=True)
 
-    def _write_atomic(table: pa.Table, path: str) -> None:
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        pq.write_table(table, tmp, compression="snappy")
-        os.replace(tmp, path)
-
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = [p for p in batches if len(p)]
         if not parts:
@@ -348,17 +365,16 @@ def build_segments(
         pdf = pd.concat(parts, ignore_index=True)
         pid = int(pdf["_pid"].iloc[0])
         man_path = os.path.join(man_dir, f"partition_{pid}.json")
-        if resume and os.path.exists(man_path):
-            with open(man_path) as f:
-                m = json.load(f)
-            if (
-                m.get("n_docs") == len(pdf)
-                and os.path.exists(m["segment_file"])
-                and os.path.exists(m.get("meta_file", ""))
-            ):
-                m["status"] = "skipped"
-                yield pd.DataFrame([m])[[f.name for f in MANIFEST_ROW_SCHEMA.fields]]
-                return
+        m = load_json(man_path, None) if resume else None
+        if (
+            m is not None
+            and m.get("n_docs") == len(pdf)
+            and os.path.exists(m["segment_file"])
+            and os.path.exists(m.get("meta_file", ""))
+        ):
+            m["status"] = "skipped"
+            yield pd.DataFrame([m])[[f.name for f in MANIFEST_ROW_SCHEMA.fields]]
+            return
         rows, stats, meta = _build_segment_rows(pdf, stopwords, analyzer)
         meta = meta.append_column("pid", pa.array([pid] * len(meta), pa.int32()))
         seg_file = os.path.join(seg_dir, f"seg_{pid}.parquet")
@@ -372,13 +388,10 @@ def build_segments(
             },
             schema=SEGMENT_SCHEMA,
         )
-        _write_atomic(table, seg_file)  # data durable BEFORE manifest
-        _write_atomic(meta, meta_file)
+        write_parquet_atomic(table, seg_file)  # data durable BEFORE manifest
+        write_forward_index(meta, meta_file)
         manifest = dict(pid=pid, **stats, segment_file=seg_file, meta_file=meta_file, status="built")
-        mtmp = man_path + f".tmp-{uuid.uuid4().hex}"
-        with open(mtmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(mtmp, man_path)
+        save_json_atomic(man_path, manifest)
         yield pd.DataFrame([manifest])[[f.name for f in MANIFEST_ROW_SCHEMA.fields]]
 
     return keyed.mapInPandas(build, schema=MANIFEST_ROW_SCHEMA)
@@ -397,7 +410,7 @@ def build_field_filters(spark: SparkSession, index_dir: str) -> None:
     rewrite — a query in between would cache the old bitmaps under the new
     generation. Re-saving it makes it once more the last file written.
     """
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta"))
+    meta = forward_index(spark, index_dir)
     out_schema = T.StructType(
         [
             T.StructField("field", T.StringType()),
@@ -476,7 +489,6 @@ def build_index(
     build_field_filters(spark, index_dir)
     summary["partitions"] = len(manifests)
     summary["skipped_partitions"] = sum(1 for m in manifests if m["status"] == "skipped")
-    summary["n_docs"] = sum(m["n_docs"] for m in manifests)
     summary["n_tokens"] = sum(m["n_tokens"] for m in manifests)
     save_json_atomic(os.path.join(index_dir, "build_summary.json"), summary)
     return summary

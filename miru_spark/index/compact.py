@@ -24,52 +24,50 @@ into single segments:
   never shift. ``merge_segments`` reconciles before reading manifests.
 
 Global docIDs are unchanged: offsets derive from manifest counts in pid
-order, and compaction preserves both pid order and per-group totals.
-Run ``merge_segments`` afterwards to refresh the queryable index.
+order, and compaction preserves both pid order and per-group totals. Each
+swap re-publishes the merge's (pid, offset, n_docs) table without the
+retired pids, so the published index keeps serving until the next merge.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from miru_spark.index.merge import _concat_runs
-from miru_spark.jsonio import save_json_atomic
+from miru_spark.index.build import write_forward_index, write_parquet_atomic
+from miru_spark.index.merge import _concat_runs, load_pid_offsets, republish_without
+from miru_spark.jsonio import load_json, save_json_atomic
 
 
 def _load_manifests(index_dir: str) -> list[dict]:
     reconcile(index_dir)
     man_dir = os.path.join(index_dir, "manifests")
-    out = []
-    for name in os.listdir(man_dir):
-        if name.endswith(".json"):
-            with open(os.path.join(man_dir, name)) as f:
-                out.append(json.load(f))
+    out = [load_json(os.path.join(man_dir, n), None) for n in os.listdir(man_dir) if n.endswith(".json")]
     return sorted(out, key=lambda m: m["pid"])
 
 
 def _finish_swap(index_dir: str, journal: dict) -> None:
     """Roll a journaled group swap FORWARD (idempotent: every step tolerates
-    having already happened). Order: retire old manifests, retire old data,
-    promote staged data, publish compacted manifest, drop journal."""
+    having already happened). Order: retire old manifests, promote staged
+    data, publish compacted manifest, re-publish the offset table, retire
+    old data (after no table names it), drop journal."""
     man_dir = os.path.join(index_dir, "manifests")
     for pid in journal["retired_pids"]:
         p = os.path.join(man_dir, f"partition_{pid}.json")
         if os.path.exists(p):
             os.remove(p)
-    for f_ in journal["retired_files"]:
-        if os.path.exists(f_):
-            os.remove(f_)
     for staged, final in journal["promote"]:
         if os.path.exists(staged):
             os.replace(staged, final)
     mpath = os.path.join(man_dir, f"partition_{journal['manifest']['pid']}.json")
     save_json_atomic(mpath, journal["manifest"])
+    republish_without(index_dir, journal["retired_pids"])
+    for f_ in journal["retired_files"]:
+        if os.path.exists(f_):
+            os.remove(f_)
     os.remove(journal["_path"])
 
 
@@ -85,8 +83,7 @@ def reconcile(index_dir: str) -> int:
     for name in os.listdir(man_dir):
         if name.endswith(".journal"):
             p = os.path.join(man_dir, name)
-            with open(p) as f:
-                journal = json.load(f)
+            journal = load_json(p, None)
             journal["_path"] = p
             _finish_swap(index_dir, journal)
             n += 1
@@ -97,9 +94,8 @@ def reconcile(index_dir: str) -> int:
     referenced: set[str] = set()
     for name in os.listdir(man_dir):
         if name.endswith(".journal"):
-            with open(os.path.join(man_dir, name)) as f:
-                for staged, _final in json.load(f)["promote"]:
-                    referenced.add(os.path.abspath(staged))
+            for staged, _final in load_json(os.path.join(man_dir, name), None)["promote"]:
+                referenced.add(os.path.abspath(staged))
     for sub in ("segments", "doc_meta_local"):
         d = os.path.join(index_dir, sub)
         if not os.path.isdir(d):
@@ -111,23 +107,22 @@ def reconcile(index_dir: str) -> int:
     return n
 
 
-def _write_atomic(table: pa.Table, path: str) -> None:
-    tmp = path + f".tmp-{uuid.uuid4().hex}"
-    pq.write_table(table, tmp, compression="snappy")
-    os.replace(tmp, path)
-
-
 def compact(index_dir: str, target_docs: int = 1_000_000) -> dict:
     """Greedily group adjacent pids until ~target_docs, rewrite each group
     as one segment. Driver-side file rewrite (segments are small relative to
     the corpus; a Spark job version would map over groups identically).
     Returns {groups, before_partitions, after_partitions}."""
     manifests = _load_manifests(index_dir)
+    published = set(load_pid_offsets(index_dir)[0].tolist())
     groups: list[list[dict]] = []
     cur: list[dict] = []
     cur_docs = 0
     for m in manifests:
-        if cur and cur_docs + m["n_docs"] > target_docs:
+        # merged pids and pids appended since never share a group
+        if cur and (
+            cur_docs + m["n_docs"] > target_docs
+            or (m["pid"] in published) != (cur[-1]["pid"] in published)
+        ):
             groups.append(cur)
             cur, cur_docs = [], 0
         cur.append(m)
@@ -165,7 +160,7 @@ def compact(index_dir: str, target_docs: int = 1_000_000) -> dict:
         staged_seg = os.path.join(seg_dir, f"_compact_seg_{new_pid}.parquet")
         staged_meta = os.path.join(meta_dir, f"_compact_meta_{new_pid}.parquet")
         schema = pq.read_schema(group[0]["segment_file"])
-        _write_atomic(pa.Table.from_pandas(out[[f.name for f in schema]], schema=schema), staged_seg)
+        write_parquet_atomic(pa.Table.from_pandas(out[[f.name for f in schema]], schema=schema), staged_seg)
 
         # --- forward index: concat with rebased local ids
         metas = []
@@ -176,7 +171,7 @@ def compact(index_dir: str, target_docs: int = 1_000_000) -> dict:
             metas.append(t)
         meta_out = pd.concat(metas, ignore_index=True)
         mschema = pq.read_schema(group[0]["meta_file"])
-        _write_atomic(pa.Table.from_pandas(meta_out[[f.name for f in mschema]], schema=mschema), staged_meta)
+        write_forward_index(pa.Table.from_pandas(meta_out[[f.name for f in mschema]], schema=mschema), staged_meta)
 
         # --- journal the swap (staged data durable first), then roll forward
         manifest = {

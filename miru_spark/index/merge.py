@@ -19,19 +19,20 @@ by Catalyst, never touching posting payloads.
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from miru_spark.codec import encode_varint
-from miru_spark.jsonio import save_json_atomic
+from miru_spark.jsonio import load_json, save_json_atomic
 
 TARGET_POSTINGS_PER_SHARD = 250_000
+# row-group bound of merged/ and doc_meta_local: the unit a lookup decodes
+ROW_GROUP_BYTES = 8 * 1024 * 1024
 
 MERGED_SCHEMA = T.StructType(
     [
@@ -49,25 +50,53 @@ MERGED_SCHEMA = T.StructType(
 )
 
 
-def _load_offsets(index_dir: str) -> dict[int, int]:
-    """pid → global docID offset, the prefix sum of manifest doc counts in
-    pid order (pids are key-ordered ranges, so local rank + offset = global
-    key rank — identical to assign_doc_ids at any parallelism)."""
-    from miru_spark.index.compact import reconcile
+def publish_pid_offsets(index_dir: str, pids, n_docs) -> None:
+    """Write the (pid, offset, n_docs) table that maps a doc_id to its
+    doc_meta_local row: the last pid whose offset is <= doc_id, row doc_id −
+    offset. Not in corpus_stats.json, which every query reads."""
+    n = np.asarray(n_docs, dtype=np.int64)
+    table = {"pid": np.asarray(pids).tolist(), "offset": (np.cumsum(n) - n).tolist(), "n_docs": n.tolist()}
+    save_json_atomic(os.path.join(index_dir, "pid_offsets.json"), table)
 
-    reconcile(index_dir)  # complete any interrupted compaction swap first
-    man_dir = os.path.join(index_dir, "manifests")
-    counts: dict[int, int] = {}
-    for name in os.listdir(man_dir):
-        if name.endswith(".json"):
-            with open(os.path.join(man_dir, name)) as f:
-                m = json.load(f)
-            counts[m["pid"]] = m["n_docs"]
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    return offsets
+
+def load_pid_offsets(index_dir: str) -> np.ndarray:
+    """The published (pid, offset, n_docs) table as a (3, P) int64 array;
+    empty before the first merge."""
+    t = load_json(os.path.join(index_dir, "pid_offsets.json"), {"pid": [], "offset": [], "n_docs": []})
+    return np.array([t["pid"], t["offset"], t["n_docs"]], dtype=np.int64).reshape(3, -1)
+
+
+def republish_without(index_dir: str, retired) -> None:
+    """Re-publish the offset table once compaction folded the ``retired``
+    pids into the pid before them (same offsets, fewer pids), then restamp
+    the generation: serving caches hold footers of the replaced files."""
+    pid, _, n = load_pid_offsets(index_dir)
+    gone = np.isin(pid, list(retired))
+    if not gone.any():
+        return
+    folded = np.zeros_like(n)
+    np.add.at(folded, np.maximum.accumulate(np.where(gone, 0, np.arange(pid.size))), n)
+    publish_pid_offsets(index_dir, pid[~gone], folded[~gone])
+    stats_path = os.path.join(index_dir, "corpus_stats.json")
+    save_json_atomic(stats_path, load_json(stats_path, None))
+
+
+def forward_index(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The published forward index: doc_meta_local joined to the broadcast
+    (pid, offset, n_docs) table, doc_id = offset + local_doc_id. Rows of
+    pids not merged yet, or past a pid's published count, stay invisible."""
+    pid, off, n = load_pid_offsets(index_dir)
+    table = spark.createDataFrame(
+        pd.DataFrame({"pid": pid.astype(np.int32), "_off": off, "_n": n}),
+        "pid int, _off long, _n long",
+    )
+    local = spark.read.parquet(os.path.join(index_dir, "doc_meta_local"))
+    cols = [c for c in local.columns if c not in ("local_doc_id", "pid")]
+    return (
+        local.join(F.broadcast(table), "pid")
+        .filter(F.col("local_doc_id") < F.col("_n"))
+        .select((F.col("local_doc_id") + F.col("_off")).alias("doc_id"), *cols)
+    )
 
 
 INTERMEDIATE_SCHEMA = T.StructType(
@@ -137,15 +166,26 @@ def _concat_runs(pdf: pd.DataFrame, off: dict, runcol: str) -> dict:
 
 
 def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None) -> dict:
-    """segments/*.parquet → merged/ + stats/ + doc_meta/ + corpus_stats.json.
+    """segments/*.parquet → merged/ + stats/ + pid_offsets.json +
+    corpus_stats.json.
 
     Applies the global docID offsets during the first concatenation level
     (free — only first varints are rewritten). ``fanin`` bounds how many runs
     any single reduce task concatenates: with more partitions than ``fanin``,
     intermediate hierarchical levels merge ``fanin`` adjacent runs at a time
     (within their salt shard, so skew bounds still hold) — the tree merge a
-    10^6-partition build needs so no task ever sees a million runs."""
-    offsets = _load_offsets(index_dir)
+    10^6-partition build needs so no task ever sees a million runs.
+
+    The forward index is not rewritten: the (pid, offset, n_docs) table
+    addresses doc_meta_local by docID (miru's partition + local docID
+    activity index, MiruActivityIndex.java:16-45)."""
+    from miru_spark.index.compact import _load_manifests
+
+    # pids are key-ordered ranges: local rank + offset = global key rank
+    pids, n_docs, n_tokens = np.array(
+        [(m["pid"], m["n_docs"], m["n_tokens"]) for m in _load_manifests(index_dir)], dtype=np.int64
+    ).reshape(-1, 3).T
+    offsets = dict(zip(pids.tolist(), (np.cumsum(n_docs) - n_docs).tolist()))
     off_b = spark.sparkContext.broadcast(offsets)
     seg = spark.read.parquet(os.path.join(index_dir, "segments"))
     n_pids = max(offsets) + 1
@@ -209,47 +249,20 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
         # small row groups → parquet min/max term stats prune at ~few-rows
         # granularity; without this, a 3-head-term query decompressed every
         # blob in a 100MB+ row group (measured 72s vs 2s at 10M docs)
-        .option("parquet.block.size", 8 * 1024 * 1024)
+        .option("parquet.block.size", ROW_GROUP_BYTES)
         .parquet(os.path.join(index_dir, "merged"))
     )
     merged.unpersist()
 
-    # globalize the forward index: doc_id = local rank + partition offset
-    # (slim columns only — content never takes this path)
-    off_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], "pid int, _off long"
-    )
-    meta_local = spark.read.parquet(os.path.join(index_dir, "doc_meta_local"))
-    meta_cols = ["repo", "path", "commit", "lang", "doc_len"] + (
-        ["ts"] if "ts" in meta_local.columns else []  # S4 doc-time passthrough
-    )
-    (
-        meta_local.join(F.broadcast(off_df), "pid")
-        .select((F.col("local_doc_id") + F.col("_off")).alias("doc_id"), *meta_cols)
-        .write.mode("overwrite")
-        # bounded row groups: the serving path (scorer._meta_lookup, behind
-        # the rare-term doc_len fetch and the top-k gather) decodes and
-        # caches whole row groups, so this bounds the unit it reads. It
-        # prunes by footer doc_id min/max, which only helps where ranges
-        # are narrow: this write does not sort by doc_id, and a task packs
-        # several pids' rows, so its groups' ranges overlap and a lookup
-        # visits every group whose range covers a wanted id
-        .option("parquet.block.size", 8 * 1024 * 1024)
-        .parquet(os.path.join(index_dir, "doc_meta"))
-    )
-
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta"))
-    agg = meta.agg(
-        F.count("*").alias("n"), F.avg("doc_len").alias("avgdl"), F.max("doc_id").alias("max_doc")
-    ).first()
     n_terms = stats.count()
     corpus_stats = {
-        "n_docs": int(agg["n"]),
-        "avgdl": float(agg["avgdl"]),
-        "max_doc_id": int(agg["max_doc"]),
+        "n_docs": int(n_docs.sum()),
+        "avgdl": int(n_tokens.sum()) / int(n_docs.sum()),
+        "max_doc_id": int(n_docs.sum()) - 1,
         "n_terms": int(n_terms),
         "n_pids": int(n_pids),
     }
+    publish_pid_offsets(index_dir, pids, n_docs)
     # the serving caches' generation stamp: written after every merged
     # artifact, and atomically so a query racing a refresh never parses a
     # torn file (build_field_filters re-stamps it after rewriting filters/)

@@ -35,13 +35,13 @@ content is a rebuild/compaction concern by construction.
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 
 import numpy as np
 
 from miru_spark import roaring
+from miru_spark.jsonio import load_json, save_json_atomic
 
 _LOG = "removal_log.json"
 _BITMAP = "removed.roaring"
@@ -55,11 +55,7 @@ def _log_path(index_dir: str) -> str:
 
 
 def _load_log(index_dir: str) -> dict:
-    p = _log_path(index_dir)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {"versions": {}, "removed": []}
+    return load_json(_log_path(index_dir), {"versions": {}, "removed": []})
 
 
 def _write_atomic(path: str, data: bytes) -> None:
@@ -73,7 +69,7 @@ def _save(index_dir: str, log: dict) -> None:
     ids = np.array(sorted(int(d) for d in log["removed"]), dtype=np.int64)
     # bitmap (data) BEFORE log (authority) — crash leaves a replayable gap
     _write_atomic(os.path.join(index_dir, _BITMAP), roaring.from_array(ids))
-    _write_atomic(_log_path(index_dir), json.dumps(log).encode())
+    save_json_atomic(_log_path(index_dir), log)
 
 
 def remove_docs(index_dir: str, doc_ids: list[int], version: int) -> int:
@@ -160,9 +156,11 @@ def resolve_keys_map(
     keys (a per-key job would make a 10k-op drain run 10k Spark jobs)."""
     from pyspark.sql import functions as F
 
+    from miru_spark.index.merge import forward_index
+
     if not keys:
         return {}
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta"))
+    meta = forward_index(spark, index_dir)
     kdf = spark.createDataFrame(
         [(r, p, c) for r, p, c in keys], "repo string, path string, commit string"
     )

@@ -5,9 +5,9 @@ a uniquely-named temp file, then `os.replace` into place (atomic on POSIX),
 so a crash leaves either the old file or the new one, never a torn write.
 Previously each module carried its own copy of this pattern; a fix to the
 convention (e.g. fsync-before-replace) now lands here once for every JSON
-artifact. (Binary/parquet payloads keep local equivalents of the same
-tmp+rename pattern: index/removal.py bytes, index/compact.py tables,
-sync.py file copies.)
+artifact. (Parquet index files go through index/build.py's
+write_parquet_atomic; index/removal.py bytes and sync.py file copies keep
+local equivalents of the same tmp+rename pattern.)
 """
 
 from __future__ import annotations

@@ -15,6 +15,7 @@ float summation order.
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import tempfile
@@ -301,17 +302,28 @@ def _docs_as_corpus(docs: DataFrame) -> DataFrame:
     )
 
 
+def _gate_index_dir(name: str, sf_dir: str) -> str:
+    """The tmp dir of a cached gate index, named by a hash of schema.py (its
+    version) and the build-path sources: an index older code built is never
+    reused or resumed into."""
+    from miru_spark import analyzer, analyzers, codec, schema
+    from miru_spark.index import build, merge
+
+    h = hashlib.sha256()
+    for mod in (schema, codec, build, merge, analyzer, analyzers):
+        with open(mod.__file__, "rb") as f:
+            h.update(f.read())
+    tag = f"{name}_{h.hexdigest()[:16]}_" + sf_dir.strip("/").replace("/", "_")
+    return os.path.join(tempfile.gettempdir(), tag)
+
+
 def build_documents_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per sf_dir per process) a real inverted index over the
-    documents table; returns the index dir. The dir name carries a layout
-    version so stale tmp indexes from older code (no ts column) are never
-    resumed into."""
+    documents table; returns the index dir (``_gate_index_dir``)."""
     idx = _ENGINE_INDEX_CACHE.get(sf_dir)
     if idx and os.path.exists(os.path.join(idx, "corpus_stats.json")):
         return idx
-    idx = os.path.join(
-        tempfile.gettempdir(), "miru_idx_v2_" + sf_dir.strip("/").replace("/", "_")
-    )
+    idx = _gate_index_dir("miru_idx", sf_dir)
     if not _index_complete(idx):
         from miru_spark.index.build import build_index
 
@@ -393,10 +405,7 @@ def build_documents_index_stopworded(
     if idx and os.path.exists(os.path.join(idx, "corpus_stats.json")):
         return idx
     tag = f"{locale}_{stem}" if stem else locale
-    idx = os.path.join(
-        tempfile.gettempdir(),
-        f"miru_idx_sw_{tag}_v1_" + sf_dir.strip("/").replace("/", "_"),
-    )
+    idx = _gate_index_dir(f"miru_idx_sw_{tag}", sf_dir)
     if not _index_complete(idx):
         from miru_spark import analyzers as anz
         from miru_spark.index.build import build_index

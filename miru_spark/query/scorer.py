@@ -48,6 +48,7 @@ from pyspark.sql import types as T
 from miru_spark import roaring
 from miru_spark.codec import decode_block_meta, decode_postings
 from miru_spark.index import removal
+from miru_spark.index.merge import forward_index, load_pid_offsets
 from miru_spark.query import parser as qp
 
 K1 = 1.2
@@ -95,32 +96,33 @@ def expand_prefixes(index_dir: str, prefix_set: set[str]) -> dict[str, list[str]
 # Serving caches (miru serves from memory-resident indexes behind its LAB
 # block cache, LabInvertedIndex.java:31-73). Every key starts with
 # (index_dir, generation); the generation is the mtime of corpus_stats.json,
-# which every merge/refresh rewrites LAST (atomically). The first call that
+# which every merge/refresh rewrites LAST (atomically) and which compaction
+# re-stamps after it re-publishes the offset table. The first call that
 # sees a new generation of an index sweeps that index's older generations
 # out of every cache here, so a long-lived server strands nothing across
 # refreshes.
 #
 # - _DATASET_CACHE: pyarrow dataset handles (file discovery per call
-#   otherwise);
-# - _DOCLEN_CACHE: dense doc_id → doc_len / ts arrays and the sorted
-#   all-ids mask: doc_len only once a scoring term has more than
-#   _SPARSE_IDS_MAX postings, ts for Range clauses and large time-masked
-#   candidate sets, all-ids for termless shapes — never on the sparse path;
+#   otherwise), the published (pid, offset, n_docs) table, and each
+#   doc_meta_local file's footer with its row groups' first rows, read on
+#   first use;
+# - _DOCLEN_CACHE: dense doc_id → doc_len / ts arrays (the pid files'
+#   columns concatenated in pid order) and the all-ids mask: doc_len only
+#   once a scoring term has more than _SPARSE_IDS_MAX postings, ts for
+#   Range clauses and large time-masked candidate sets, all-ids for
+#   termless shapes — never on the sparse path;
 # - _POSTING_CACHE: decoded postings of hot terms, LRU by entry count;
 # - _TERM_DOCLENS: each scoring term's doc lengths as int32, aligned with
 #   its posting docIDs (miru keeps TF beside the postings the same way,
 #   LabFieldIndex.java:478-542). Same key, entry-count bound and sweep as
 #   _POSTING_CACHE; terms over _SPARSE_IDS_MAX postings are never cached;
-# - _BLOCK_CACHE: decoded doc_meta row groups and per-(field, value) filter
-#   bitmaps, LRU bounded in bytes;
-# - _META_LAYOUT: every doc_meta row group's doc_id min/max, read from the
-#   parquet footers once per generation.
-_DATASET_CACHE: dict[tuple, pads.Dataset] = {}
+# - _BLOCK_CACHE: decoded doc_meta_local row groups and per-(field, value)
+#   filter bitmaps, LRU bounded in bytes.
+_DATASET_CACHE: dict[tuple, object] = {}
 _DOCLEN_CACHE: dict[tuple, np.ndarray] = {}
 _POSTING_CACHE: dict[tuple, tuple] = {}  # (dir, gen, term) → postings tuple
 _POSTING_CACHE_MAX = 4096  # hot-term cache (miru's LAB block-cache analog)
 _TERM_DOCLENS: dict[tuple, np.ndarray] = {}  # (dir, gen, term) → int32 doc_lens
-_META_LAYOUT: dict[tuple, "_MetaLayout"] = {}
 # The block cache lives in every process that serves, including each
 # executor Python worker running _gather_display_fields: 32 workers × this
 # bound (1 GiB) must stay far below one dense doc_meta table at 100M docs
@@ -177,7 +179,7 @@ def _sweep_stale(index_dir: str, gen: float) -> None:
     def stale(k):
         return k[0] == index_dir and k[1] != gen
 
-    for cache in (_DATASET_CACHE, _DOCLEN_CACHE, _POSTING_CACHE, _TERM_DOCLENS, _META_LAYOUT):
+    for cache in (_DATASET_CACHE, _DOCLEN_CACHE, _POSTING_CACHE, _TERM_DOCLENS):
         for k in [k for k in cache if stale(k)]:
             del cache[k]
     for k in [k for k in _BLOCK_CACHE.entries if stale(k)]:
@@ -213,131 +215,109 @@ def _dataset(index_dir: str, part: str) -> pads.Dataset:
     return ds
 
 
-@dataclass
-class _MetaLayout:
-    """doc_meta's row groups as parallel arrays: file path and footer, row
-    group index, doc_id min/max. Per-pid writes are packed several to a
-    task, so row-group id ranges overlap; a lookup visits every group whose
-    range covers a wanted id."""
-
-    paths: list[str]
-    footers: list
-    file: np.ndarray
-    row_group: np.ndarray
-    lo: np.ndarray
-    hi: np.ndarray
-    columns: list[str]
+def _pid_offsets(index_dir: str, gen: float) -> np.ndarray:
+    """The published (pid, offset, n_docs) table, (3, P) int64."""
+    key = (index_dir, gen, "pid_offsets")
+    table = _DATASET_CACHE.get(key)
+    if table is None:
+        table = _DATASET_CACHE[key] = load_pid_offsets(index_dir)
+    return table
 
 
-def _meta_layout(index_dir: str, gen: float) -> _MetaLayout:
-    key = (index_dir, gen)
-    layout = _META_LAYOUT.get(key)
-    if layout is None:
-        paths = sorted(_dataset(index_dir, "doc_meta").files)
-        footers = [pq.read_metadata(p) for p in paths]
-        rows = []  # (file, row group, lo, hi)
-        for f, md in enumerate(footers):
-            j = md.schema.names.index("doc_id")
-            for r in range(md.num_row_groups):
-                rg = md.row_group(r)
-                if rg.num_rows == 0:
-                    continue
-                st = rg.column(j).statistics
-                if st is not None and st.has_min_max:
-                    rows.append((f, r, st.min, st.max))
-                else:  # no stats: the group covers every id
-                    rows.append((f, r, np.iinfo(np.int64).min, np.iinfo(np.int64).max))
-        cols = np.array(rows, dtype=np.int64).reshape(-1, 4)
-        layout = _MetaLayout(
-            paths, footers, cols[:, 0], cols[:, 1], cols[:, 2], cols[:, 3],
-            footers[0].schema.names if footers else [],
-        )
-        _META_LAYOUT[key] = layout
-    return layout
+def _meta_file(index_dir: str, gen: float, pid: int) -> tuple:
+    """(path, footer, first row of each row group + the row count) of one
+    pid's doc_meta_local file."""
+    key = (index_dir, gen, "doc_meta_local", pid)
+    hit = _DATASET_CACHE.get(key)
+    if hit is None:
+        path = os.path.join(index_dir, "doc_meta_local", f"meta_{pid}.parquet")
+        footer = pq.read_metadata(path)
+        rows = [footer.row_group(r).num_rows for r in range(footer.num_row_groups)]
+        hit = _DATASET_CACHE[key] = (path, footer, np.concatenate([[0], np.cumsum(rows)]))
+    return hit
+
+
+def _meta_columns(index_dir: str, gen: float) -> list[str]:
+    return _meta_file(index_dir, gen, int(_pid_offsets(index_dir, gen)[0, 0]))[1].schema.names
 
 
 def _read_row_group(path: str, footer, row_group: int, columns: list[str]):
-    """The one doc_meta parquet read of the serving path."""
+    """The one doc_meta_local parquet read of the serving path."""
     with pq.ParquetFile(path, metadata=footer) as pf:
         return pf.read_row_group(row_group, columns=columns)
 
 
-class _MetaBlock:
-    """One decoded doc_meta row group: doc_ids sorted, plus the columns read
-    so far as Arrow arrays in the same order. Columns load on first use, so
-    a doc_len fetch never decodes the display strings."""
-
-    def __init__(self, ids: np.ndarray):
-        self.order = None if np.all(ids[1:] > ids[:-1]) else np.argsort(ids, kind="stable")
-        self.ids = ids if self.order is None else ids[self.order]
-        self.cols: dict[str, pa.Array] = {}
-        self.nbytes = self.ids.nbytes + (0 if self.order is None else self.order.nbytes)
-
-    def add(self, name: str, col) -> None:
-        col = col.combine_chunks()
-        self.cols[name] = col if self.order is None else col.take(self.order)
-        self.nbytes += self.cols[name].nbytes
-
-
-def _meta_block(index_dir: str, gen: float, layout: _MetaLayout, g: int, columns) -> _MetaBlock:
-    f, r = int(layout.file[g]), int(layout.row_group[g])
-    key = (index_dir, gen, layout.paths[f], r)
-    blk = _BLOCK_CACHE.get(key)
-    need = [c for c in columns if blk is None or c not in blk.cols]
+def _meta_block(index_dir: str, gen: float, pid: int, rg: int, columns) -> tuple[dict, int]:
+    """One row group's ``columns`` (Arrow arrays) and their bytes, through the
+    block cache; a doc_len fetch never decodes the display strings."""
+    key = (index_dir, gen, pid, rg)
+    blk, nbytes = _BLOCK_CACHE.get(key) or ({}, 0)
+    need = [c for c in columns if c not in blk]
     if need:
-        t = _read_row_group(
-            layout.paths[f], layout.footers[f], r, (["doc_id"] if blk is None else []) + need
-        )
-        if blk is None:
-            blk = _MetaBlock(np.asarray(t.column("doc_id"), dtype=np.int64))
-        for c in need:
-            blk.add(c, t.column(c))
-        _BLOCK_CACHE.put(key, blk, blk.nbytes)
-    return blk
+        path, footer, _ = _meta_file(index_dir, gen, pid)
+        t = _read_row_group(path, footer, rg, need)
+        blk = {**blk, **{c: t.column(c).combine_chunks() for c in need}}
+        nbytes = sum(col.nbytes for col in blk.values())
+        _BLOCK_CACHE.put(key, (blk, nbytes), nbytes)
+    return blk, nbytes
 
 
-def _meta_lookup(index_dir: str, ids, columns: list[str]) -> dict:
+def _runs(a: np.ndarray) -> list[int]:
+    """Start of every run of equal values in ``a``, then ``a.size``."""
+    return [0, *(np.flatnonzero(a[1:] != a[:-1]) + 1).tolist(), a.size]
+
+
+def _meta_lookup(index_dir: str, ids, columns: list[str], diag: dict | None = None) -> dict:
     """doc_meta ``columns`` for ``ids`` (Arrow arrays, row i ↔ ids[i]),
-    served from the row-group cache.
-
-    Visits only the row groups whose footer doc_id range covers a wanted id.
-    Hit rows are taken from the groups in one pass per column, early once
-    the groups held for it outgrow the cache bound: a large id set never
-    holds the whole table (the worker rule in CLAUDE.md). An empty id set
-    reads no file; ids absent from doc_meta raise."""
+    served from the row-group cache, by position: pid = the last published
+    entry whose offset is <= the id, row = id − offset, row group from the
+    footer's row counts. Only groups holding a wanted id are read, and taken
+    from early once the groups held outgrow the cache bound (the worker rule
+    in CLAUDE.md). Ids outside the published generation raise.
+    ``diag["meta_row_groups_read"]`` counts the groups read, cached or not."""
     ids = np.asarray(ids, dtype=np.int64)
     if ids.size == 0:
         return {c: pa.nulls(0) for c in columns}
-    want, inv = np.unique(ids, return_inverse=True)
+    want = np.unique(ids)
+    inv = np.searchsorted(want, ids)
     gen = _index_generation(index_dir)
-    layout = _meta_layout(index_dir, gen)
-    start = np.searchsorted(want, layout.lo, side="left")
-    stop = np.searchsorted(want, layout.hi, side="right")
-    touched = np.nonzero(start < stop)[0]
-    got, parts = [], {c: [] for c in columns}
-    held, rows, offset, held_bytes = [], [], 0, 0  # groups with hits not yet taken
-    for i, g in enumerate(touched):
-        sub = want[start[g] : stop[g]]
-        blk = _meta_block(index_dir, gen, layout, g, columns)
-        pos = np.minimum(np.searchsorted(blk.ids, sub), blk.ids.size - 1)
-        hit = blk.ids[pos] == sub
-        if hit.any():
-            got.append(sub[hit])
-            rows.append(pos[hit] + offset)  # row in the held groups' concatenation
-            held.append(blk)
-            offset += blk.ids.size
-            held_bytes += blk.nbytes
-        if held and (i == touched.size - 1 or held_bytes > _BLOCK_CACHE_MAX_BYTES):
-            r = np.concatenate(rows)
+    pids, offsets, counts = _pid_offsets(index_dir, gen)
+    n_missing = np.count_nonzero((want < 0) | (want >= offsets[-1] + counts[-1]))
+    if n_missing:
+        raise ValueError(f"doc_meta is missing {n_missing} of {want.size} ids")
+    entry = np.searchsorted(offsets, want, side="right") - 1
+    row = want - offsets[entry]
+    groups = []  # (pid, row group, wanted rows in it), in doc_id order
+    cuts = _runs(entry)
+    for s, t in zip(cuts[:-1], cuts[1:]):
+        pid = int(pids[entry[s]])
+        first = _meta_file(index_dir, gen, pid)[2]
+        if first.size == 2:  # the whole file is one row group
+            groups.append((pid, 0, row[s:t]))
+            continue
+        g = np.searchsorted(first, row[s:t], side="right") - 1
+        gcuts = _runs(g)
+        groups += [(pid, int(g[a]), row[s + a : s + b] - first[g[a]]) for a, b in zip(gcuts[:-1], gcuts[1:])]
+    parts = {c: [] for c in columns}
+    held, rows, base, held_bytes = [], [], 0, 0  # groups with hits not yet taken
+    for i, (pid, g, r) in enumerate(groups):
+        blk, nbytes = _meta_block(index_dir, gen, pid, g, columns)
+        held.append(blk)
+        rows.append(r + base)  # row in the held groups' concatenation
+        base += len(blk[columns[0]])
+        held_bytes += nbytes
+        if i == len(groups) - 1 or held_bytes > _BLOCK_CACHE_MAX_BYTES:
+            take = np.concatenate(rows)
+            if i == len(groups) - 1 and not parts[columns[0]]:
+                take, inv = take[inv], None  # one flush: take in ids order
             for c in columns:
-                parts[c].append(pa.chunked_array([b.cols[c] for b in held]).take(r).combine_chunks())
-            held, rows, offset, held_bytes = [], [], 0, 0
-    n_got = sum(x.size for x in got)
-    if n_got != want.size:
-        raise ValueError(f"doc_meta is missing {want.size - n_got} of {want.size} ids")
-    # row groups overlap, so the hits do not arrive in id order
-    out = np.argsort(np.concatenate(got), kind="stable")[inv]
-    return {c: pa.chunked_array(parts[c]).take(out) for c in columns}
+                parts[c].append(pa.chunked_array([b[c] for b in held]).take(take))
+            held, rows, base, held_bytes = [], [], 0, 0
+    if diag is not None:
+        diag["meta_row_groups_read"] = diag.get("meta_row_groups_read", 0) + len(groups)
+    if inv is None:
+        return {c: parts[c][0] for c in columns}
+    return {c: pa.chunked_array([x for p in parts[c] for x in p.chunks]).take(inv) for c in columns}
 
 
 # Above this many ids the sparse read stops paying (it touches
@@ -444,68 +424,64 @@ def _docts_for(index_dir: str, cand: np.ndarray) -> "np.ndarray | _SparseCol":
     gen = _index_generation(index_dir)
     if (index_dir, gen, "ts") in _DOCLEN_CACHE or cand.size > _SPARSE_IDS_MAX:
         return _docts(index_dir)
-    if "ts" not in _meta_layout(index_dir, gen).columns:
+    if "ts" not in _meta_columns(index_dir, gen):
         raise ValueError("index has no doc-time column (built without ts)")
     return _sparse_col(index_dir, "ts", cand)
 
 
-def _doclens(index_dir: str) -> np.ndarray:
-    """Dense docID → doc_len array. Driver-side cache — fine for the serving
-    path at partition scale; the distributed path joins instead."""
-    key = (index_dir, _index_generation(index_dir), "doc_len")
+def _dense_column(index_dir: str, column: str) -> np.ndarray:
+    """Dense docID → ``column`` int64 array: the published pids' columns
+    concatenated in pid order, each cut to its published count (driver-side;
+    the distributed path joins instead)."""
+    gen = _index_generation(index_dir)
+    key = (index_dir, gen, column)
     arr = _DOCLEN_CACHE.get(key)
     if arr is None:
-        t = _dataset(index_dir, "doc_meta").to_table(columns=["doc_id", "doc_len"])
-        ids = np.asarray(t.column("doc_id"), dtype=np.int64)
-        lens = np.asarray(t.column("doc_len"), dtype=np.int64)
-        arr = np.zeros(int(ids.max()) + 1, dtype=np.int64)
-        arr[ids] = lens
-        _DOCLEN_CACHE[key] = arr
+        parts = []
+        for pid, n in zip(*_pid_offsets(index_dir, gen)[[0, 2]]):
+            path, footer, _ = _meta_file(index_dir, gen, int(pid))
+            with pq.ParquetFile(path, metadata=footer) as pf:
+                parts.append(np.asarray(pf.read(columns=[column]).column(column), dtype=np.int64)[:n])
+        arr = _DOCLEN_CACHE[key] = np.concatenate(parts)
     return arr
+
+
+def _doclens(index_dir: str) -> np.ndarray:
+    """Dense docID → doc_len array."""
+    return _dense_column(index_dir, "doc_len")
 
 
 def _docts(index_dir: str) -> np.ndarray:
     """Dense docID → event-time array (S4 doc-time index, the serving analog
     of miru's MiruTimeIndex.java:15-56 / LabTimeIndex.java:139-150). Raises
     if the index was built without a ts column."""
-    key = (index_dir, _index_generation(index_dir), "ts")
-    arr = _DOCLEN_CACHE.get(key)
-    if arr is None:
-        ds = _dataset(index_dir, "doc_meta")
-        if "ts" not in ds.schema.names:
-            raise ValueError("index has no doc-time column (built without ts)")
-        t = ds.to_table(columns=["doc_id", "ts"])
-        ids = np.asarray(t.column("doc_id"), dtype=np.int64)
-        ts = np.asarray(t.column("ts"), dtype=np.int64)
-        arr = np.zeros(int(ids.max()) + 1, dtype=np.int64)
-        arr[ids] = ts
-        _DOCLEN_CACHE[key] = arr
-    return arr
+    if "ts" not in _meta_columns(index_dir, _index_generation(index_dir)):
+        raise ValueError("index has no doc-time column (built without ts)")
+    return _dense_column(index_dir, "ts")
 
 
 def _all_doc_ids(index_dir: str) -> np.ndarray:
-    """Sorted full index mask (every doc_id) — ONE int64 column read, not
-    the display columns (at 100M docs the string columns are ~10x the
-    bytes and would be pinned in cache just to extract ids)."""
-    key = (index_dir, _index_generation(index_dir), "all_ids")
+    """Sorted full index mask (every doc_id): the published docIDs are
+    dense from 0."""
+    gen = _index_generation(index_dir)
+    key = (index_dir, gen, "all_ids")
     arr = _DOCLEN_CACHE.get(key)
     if arr is None:
-        t = _dataset(index_dir, "doc_meta").to_table(columns=["doc_id"])
-        arr = np.sort(np.asarray(t.column("doc_id"), dtype=np.int64))
-        _DOCLEN_CACHE[key] = arr
+        _, offsets, counts = _pid_offsets(index_dir, gen)
+        arr = _DOCLEN_CACHE[key] = np.arange(offsets[-1] + counts[-1], dtype=np.int64)
     return arr
 
 
 _DISPLAY_COLS = ["repo", "path", "commit", "lang"]
 
 
-def _docmeta_for(index_dir: str, ids: np.ndarray) -> dict[str, np.ndarray]:
+def _docmeta_for(index_dir: str, ids: np.ndarray, diag: dict | None = None) -> dict[str, np.ndarray]:
     """Display fields {repo, path, commit, lang} for a KNOWN id set, row i ↔
     ids[i], through the row-group cache — NEVER a dense materialization (at
     100M docs that is a multi-GB table; this runs inside executor Python
     workers via _gather_display_fields, where a dense fallback would pin
     that table once per worker)."""
-    cols = _meta_lookup(index_dir, ids, _DISPLAY_COLS)
+    cols = _meta_lookup(index_dir, ids, _DISPLAY_COLS, diag)
     return {c: np.asarray(cols[c]) for c in _DISPLAY_COLS}
 
 
@@ -842,9 +818,10 @@ def search_local(
     diag: dict | None = None,
 ) -> pd.DataFrame:
     """Serving path: parse → numpy set algebra → block-max WAND → BM25 top-k
-    → gather. Pass ``diag={}`` to capture pruning statistics and
+    → gather. Pass ``diag={}`` to capture pruning statistics,
     ``doclen_fetched``, the postings whose doc length this call read from
-    doc_meta (0 once the scoring terms' aligned doc lengths are cached).
+    doc_meta (0 once the scoring terms' aligned doc lengths are cached), and
+    ``meta_row_groups_read``, the row groups the top-k gather read.
 
     Masks (ANDNOT/AND into the candidate set, never into the statistics —
     miru's buildIndexMask / buildTimeRangeMask composition,
@@ -903,7 +880,7 @@ def search_local(
     order = np.lexsort((cand, scores))[::-1][:kk]  # (score desc, docID desc)
     top = {"doc_id": cand[order], "score": scores[order]}
     if gather:  # lazy gather of stored fields (miru's Promise gather, FullText.java:204-218)
-        top.update(_docmeta_for(index_dir, top["doc_id"]))
+        top.update(_docmeta_for(index_dir, top["doc_id"], diag))
     return pd.DataFrame(top)
 
 
@@ -1022,8 +999,9 @@ def _bm25_topk(
     - driver: parse each query, expand prefixes, probe required terms
       against the dictionary (the AND short-circuit — provably-empty
       queries never reach the cluster);
-    - ``meta``: the one doc_meta relation, with every candidate mask
-      applied to it as a filter — lang/repo/time push into the parquet
+    - ``meta``: the one forward-index relation (``merge.forward_index``:
+      doc_meta_local joined to the broadcast pid offsets), with every
+      candidate mask applied to it as a filter — lang/repo/time push into the parquet
       scan, removed ids leave through one broadcast anti-join. Statistics
       (df, avgdl, N) stay corpus-global (miru's buildIndexMask /
       buildTimeRangeMask composition, MiruBitmapsRoaring.java:457-521);
@@ -1056,7 +1034,7 @@ def _bm25_topk(
     from miru_spark import analyzers as anz
 
     analyzer = anz.load(index_dir)
-    meta = spark.read.parquet(os.path.join(index_dir, "doc_meta"))
+    meta = forward_index(spark, index_dir)
     has_ts = "ts" in meta.columns
     if time_range is not None and not has_ts:
         raise ValueError("index has no doc-time column (built without ts)")

@@ -225,7 +225,7 @@ def refresh(spark: SparkSession, index_dir: str) -> dict:
     periodically on a live stream."""
     from miru_spark.index.merge import merge_segments
 
-    summary = merge_segments(spark, index_dir)  # also globalizes doc_meta
+    summary = merge_segments(spark, index_dir)  # also publishes the pid offsets
     build_field_filters(spark, index_dir)
     pending = _load_pending(index_dir)
     if pending:

@@ -35,6 +35,8 @@ import os
 import shutil
 import uuid
 
+from miru_spark.index import removal
+from miru_spark.index.merge import republish_without
 from miru_spark.jsonio import load_json as _load_json
 from miru_spark.jsonio import save_json_atomic as _write_atomic_json
 from miru_spark.schema import check_additive, load_schema, save_schema
@@ -59,14 +61,10 @@ def _copy_atomic(src: str, dst: str) -> None:
 def _sync_removal_log(src_dir: str, dst_dir: str) -> int:
     """Version-guarded merge of the removal log (higher version wins per
     doc — MiruIndexer.java:140-147 applied across clusters)."""
-    from miru_spark import roaring
-    import numpy as np
-
     src_log = _load_json(os.path.join(src_dir, "removal_log.json"), None)
     if src_log is None:
         return 0
-    dst_path = os.path.join(dst_dir, "removal_log.json")
-    dst_log = _load_json(dst_path, {"versions": {}, "removed": []})
+    dst_log = removal._load_log(dst_dir)
     removed = set(dst_log["removed"])
     src_removed_set = set(src_log["removed"])  # hoisted: O(1) per key below
     changed = 0
@@ -84,13 +82,7 @@ def _sync_removal_log(src_dir: str, dst_dir: str) -> int:
                 changed += 1  # version bump alone must persist too
     if changed:
         dst_log["removed"] = sorted(removed)
-        ids = np.array(dst_log["removed"], dtype=np.int64)
-        # bitmap (data) before log (authority) — same order as removal.py
-        with open(os.path.join(dst_dir, "removed.roaring") + ".tmp", "wb") as f:
-            f.write(roaring.from_array(ids))
-        os.replace(os.path.join(dst_dir, "removed.roaring") + ".tmp",
-                   os.path.join(dst_dir, "removed.roaring"))
-        _write_atomic_json(dst_path, dst_log)
+        removal._save(dst_dir, dst_log)  # bitmap (data) before log (authority)
     return changed
 
 
@@ -125,8 +117,7 @@ def sync_index(src_dir: str, dst_dir: str) -> dict:
     src_pids: set[int] = set()
     names = sorted(n for n in os.listdir(man_dir) if n.endswith(".json"))
     for name in names:
-        with open(os.path.join(man_dir, name)) as f:
-            m = json.load(f)
+        m = _load_json(os.path.join(man_dir, name), None)
         pid = m["pid"]
         src_pids.add(pid)
         fp = _manifest_fingerprint(m)
@@ -159,8 +150,7 @@ def sync_index(src_dir: str, dst_dir: str) -> dict:
         for n in sorted(os.listdir(dst_man_dir)):
             if not n.endswith(".json"):
                 continue
-            with open(os.path.join(dst_man_dir, n)) as f:
-                dm = json.load(f)
+            dm = _load_json(os.path.join(dst_man_dir, n), None)
             if dm["pid"] in src_pids:
                 continue
             os.remove(os.path.join(dst_man_dir, n))
@@ -170,6 +160,8 @@ def sync_index(src_dir: str, dst_dir: str) -> dict:
             progress.pop(str(dm["pid"]), None)
             _write_atomic_json(progress_path, progress)
             retired.append(dm["pid"])
+    # the replica's published generation still names the retired pids
+    republish_without(dst_dir, retired)
 
     removal_ops = _sync_removal_log(src_dir, dst_dir)
     return {

@@ -3,6 +3,8 @@ from __future__ import annotations
 import os
 import shutil
 
+import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from miru_spark.session import get_spark
@@ -39,3 +41,23 @@ def tiny_index(spark, tiny_corpus, tmp_path_factory):
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.path.join(TESTDATA, "sf0.001")
+
+
+@pytest.fixture(scope="session")
+def global_doc_meta():
+    """index_dir → the published forward index as one pandas frame keyed by
+    global doc_id: each published pid's doc_meta_local rows, offset by the
+    merge's (pid, offset, n_docs) table."""
+    from miru_spark.index.merge import load_pid_offsets
+
+    def read(index_dir, columns=None):
+        frames = []
+        for pid, off, n in load_pid_offsets(index_dir).T:
+            path = os.path.join(index_dir, "doc_meta_local", f"meta_{pid}.parquet")
+            t = pq.read_table(path).to_pandas().iloc[:n]
+            t.insert(0, "doc_id", t.pop("local_doc_id") + off)
+            frames.append(t.drop(columns="pid"))
+        meta = pd.concat(frames, ignore_index=True)
+        return meta if columns is None else meta[columns]
+
+    return read

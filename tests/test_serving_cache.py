@@ -1,5 +1,5 @@
 """The serving path's caches: the byte-bounded block cache of decoded
-doc_meta row groups and filter bitmaps (scorer._BLOCK_CACHE), the
+doc_meta_local row groups and filter bitmaps (scorer._BLOCK_CACHE), the
 posting-aligned doc lengths (scorer._TERM_DOCLENS), and the sweep of an
 index's stale generations out of every serving cache."""
 
@@ -7,7 +7,6 @@ import os
 import shutil
 
 import numpy as np
-import pyarrow.parquet as pq
 import pytest
 
 from miru_spark.query import scorer as sc
@@ -25,7 +24,7 @@ def _cache_keys():
     return [
         k
         for cache in (sc._DATASET_CACHE, sc._DOCLEN_CACHE, sc._POSTING_CACHE,
-                      sc._TERM_DOCLENS, sc._META_LAYOUT, sc._BLOCK_CACHE.entries)
+                      sc._TERM_DOCLENS, sc._BLOCK_CACHE.entries)
         for k in cache
     ]
 
@@ -50,7 +49,6 @@ def reads(monkeypatch):
     monkeypatch.setattr(sc, "_dataset", counting_dataset)
     monkeypatch.setattr(sc, "_BLOCK_CACHE", sc._ByteLRU())
     monkeypatch.setattr(sc, "_DOCLEN_CACHE", {})
-    monkeypatch.setattr(sc, "_META_LAYOUT", {})
     return counts
 
 
@@ -101,8 +99,8 @@ def test_meta_lookup_empty_and_absent_ids(tiny_index, reads):
         col[np.array([2])]
 
 
-def test_filter_bitmaps_match_doc_meta(tiny_index, reads):
-    meta = pq.read_table(os.path.join(tiny_index, "doc_meta"), columns=["doc_id", "lang"]).to_pandas()
+def test_filter_bitmaps_match_doc_meta(tiny_index, reads, global_doc_meta):
+    meta = global_doc_meta(tiny_index, ["doc_id", "lang"])
     langs = sorted(meta["lang"].unique())[:2] + ["no-such-lang"]
     for _ in range(2):  # cold, then from the block cache
         got = sc.load_filter_set(tiny_index, "lang", langs)
@@ -120,7 +118,7 @@ def test_new_generation_sweeps_stale_cache_entries(tiny_index, tmp_path):
         sc.search_local(idx, q, k=10, lang_filter=lang)
     old = sc._index_generation(idx)
     for cache in (sc._DATASET_CACHE, sc._DOCLEN_CACHE, sc._POSTING_CACHE,
-                  sc._TERM_DOCLENS, sc._META_LAYOUT, sc._BLOCK_CACHE.entries):
+                  sc._TERM_DOCLENS, sc._BLOCK_CACHE.entries):
         assert any(k[:2] == (idx, old) for k in cache)
     stats = os.path.join(idx, "corpus_stats.json")
     os.utime(stats, (os.path.getatime(stats), os.path.getmtime(stats) + 10))
@@ -298,10 +296,10 @@ def doclen_lookups(monkeypatch):
     calls = []
     lookup = sc._meta_lookup
 
-    def counting(index_dir, ids, columns):
+    def counting(index_dir, ids, columns, diag=None):
         if "doc_len" in columns:
             calls.append(len(ids))
-        return lookup(index_dir, ids, columns)
+        return lookup(index_dir, ids, columns, diag)
 
     monkeypatch.setattr(sc, "_meta_lookup", counting)
     return calls

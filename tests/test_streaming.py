@@ -158,3 +158,81 @@ def test_streaming_e2e_compose_dedup_removal_refresh_serve(spark, tmp_path):
         gdmap = {(r.repo, r.path): round(float(r.score), 6) for r in gd.itertuples()}
         assert gdmap == emap, q
         assert not vic_set & set(gmap), "removed docs must not serve"
+
+
+# queries of every shape the published generation serves: a conjunction, a
+# pure negation, a lang mask and a ts Range reachable through OR
+WINDOW_QUERIES = [
+    ("merge AND sort", {}),
+    ("NOT merge", {}),
+    ("merge OR sort", {"lang_filter": ["python", "go"]}),
+    ("ts:[0 TO 17] OR sort", {}),
+]
+
+
+def _window_answers(spark, index_dir):
+    from miru_spark.query.scorer import search_batch, search_distributed
+
+    local = [search_local(index_dir, q, k=20, **m) for q, m in WINDOW_QUERIES]
+    batch = (
+        search_batch(spark, index_dir, [q for q, _ in WINDOW_QUERIES], k=20)
+        .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
+    )
+    dist = [search_distributed(spark, index_dir, q, k=20, **m).toPandas() for q, m in WINDOW_QUERIES]
+    return local, batch, dist
+
+
+def _assert_same_answers(a, b):
+    for x, y in zip(a[0] + [a[1]] + a[2], b[0] + [b[1]] + b[2]):
+        assert len(x) > 0
+        assert x.equals(y), (x, y)
+
+
+def test_published_generation_stays_consistent(spark, tmp_path):
+    """Between an append and its refresh, and between a compaction and the
+    next refresh, every path answers from the last published generation;
+    after the refresh the answers equal a fresh build's. No step writes a
+    doc_meta/ directory."""
+    from miru_spark.index.compact import compact
+    from miru_spark.index.merge import load_pid_offsets
+    from miru_spark.sync import sync_index
+
+    full = generate_corpus(spark, n_rows=240, seed=13, partitions=1)
+    rowidx = F.regexp_extract("path", r"f(\d+)\.", 1).cast("long")
+    full = full.withColumn("ts", F.pmod(rowidx, F.lit(37))).persist()
+    waves = [full.filter((rowidx >= lo) & (rowidx < lo + 80)) for lo in (0, 80, 160)]
+
+    def no_doc_meta(index_dir):
+        assert not os.path.exists(os.path.join(index_dir, "doc_meta"))
+
+    idx = str(tmp_path / "idx")
+    for b in (0, 1):
+        append_batch(waves[b], b, idx, partitions_per_batch=2)
+        refresh(spark, idx)
+    published = _window_answers(spark, idx)
+    pid, off, _ = load_pid_offsets(idx)
+
+    append_batch(waves[2], 2, idx, partitions_per_batch=2)  # not yet refreshed
+    _assert_same_answers(published, _window_answers(spark, idx))
+
+    stats = compact(idx, target_docs=10_000)
+    assert stats["after_partitions"] == 2  # the published group, the appended one
+    kept, kept_off, _ = load_pid_offsets(idx)
+    assert kept.tolist() == [pid[0]] and kept_off.tolist() == [off[0]]
+    _assert_same_answers(published, _window_answers(spark, idx))
+    no_doc_meta(idx)
+
+    refresh(spark, idx)
+    no_doc_meta(idx)
+    fresh = str(tmp_path / "fresh")
+    for b in (0, 1, 2):
+        append_batch(waves[b], b, fresh, partitions_per_batch=2)
+    refresh(spark, fresh)
+    after = _window_answers(spark, idx)
+    _assert_same_answers(after, _window_answers(spark, fresh))
+
+    replica = str(tmp_path / "replica")
+    sync_index(idx, replica)
+    refresh(spark, replica)
+    no_doc_meta(replica)
+    _assert_same_answers(after, _window_answers(spark, replica))

@@ -164,24 +164,18 @@ def test_wand_topk_property(data):
     np.testing.assert_allclose(scores[order], exp_scores[:kk], rtol=1e-12)
 
 
-def test_sparse_serving_reads_match_dense(tiny_index, monkeypatch):
+def test_sparse_serving_reads_match_dense(tiny_index, monkeypatch, global_doc_meta):
     """Serving a small-universe query takes the sparse path through the
     doc_meta row-group cache (_sparse_col / _docmeta_for). Its answer with
     a cold cache, with a warm cache and with the dense doc_len array must
-    agree, its display fields must equal a full pyarrow read of doc_meta,
-    and the sparse path must never populate the dense array it avoids."""
-    import os
-
+    agree, its display fields must equal a full pyarrow read of the forward
+    index, and the sparse path must never populate the dense array it
+    avoids."""
     import numpy as np
-    import pyarrow.parquet as pq
 
     from miru_spark.query import scorer as sc
 
-    full = (
-        pq.read_table(os.path.join(tiny_index, "doc_meta"))
-        .to_pandas()
-        .set_index("doc_id")
-    )
+    full = global_doc_meta(tiny_index).set_index("doc_id")
     gen = sc._index_generation(tiny_index)
     monkeypatch.setattr(sc, "_DOCLEN_CACHE", {})
     for q in ("rareterm0", "merge AND sort"):
