@@ -30,6 +30,7 @@ Scale notes (100 TB / 10^12 files):
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 from collections.abc import Iterator
@@ -365,16 +366,17 @@ def build_segments(
         pdf = pd.concat(parts, ignore_index=True)
         pid = int(pdf["_pid"].iloc[0])
         man_path = os.path.join(man_dir, f"partition_{pid}.json")
-        m = load_json(man_path, None) if resume else None
-        if (
-            m is not None
-            and m.get("n_docs") == len(pdf)
-            and os.path.exists(m["segment_file"])
-            and os.path.exists(m.get("meta_file", ""))
-        ):
-            m["status"] = "skipped"
-            yield pd.DataFrame([m])[[f.name for f in MANIFEST_ROW_SCHEMA.fields]]
-            return
+        if resume and os.path.exists(man_path):
+            with open(man_path) as f:
+                m = json.load(f)
+            if (
+                m.get("n_docs") == len(pdf)
+                and os.path.exists(m["segment_file"])
+                and os.path.exists(m.get("meta_file", ""))
+            ):
+                m["status"] = "skipped"
+                yield pd.DataFrame([m])[[f.name for f in MANIFEST_ROW_SCHEMA.fields]]
+                return
         rows, stats, meta = _build_segment_rows(pdf, stopwords, analyzer)
         meta = meta.append_column("pid", pa.array([pid] * len(meta), pa.int32()))
         seg_file = os.path.join(seg_dir, f"seg_{pid}.parquet")

@@ -31,6 +31,7 @@ retired pids, so the published index keeps serving until the next merge.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pandas as pd
@@ -39,13 +40,17 @@ import pyarrow.parquet as pq
 
 from miru_spark.index.build import write_forward_index, write_parquet_atomic
 from miru_spark.index.merge import _concat_runs, load_pid_offsets, republish_without
-from miru_spark.jsonio import load_json, save_json_atomic
+from miru_spark.jsonio import save_json_atomic
 
 
 def _load_manifests(index_dir: str) -> list[dict]:
     reconcile(index_dir)
     man_dir = os.path.join(index_dir, "manifests")
-    out = [load_json(os.path.join(man_dir, n), None) for n in os.listdir(man_dir) if n.endswith(".json")]
+    out = []
+    for name in os.listdir(man_dir):
+        if name.endswith(".json"):
+            with open(os.path.join(man_dir, name)) as f:
+                out.append(json.load(f))
     return sorted(out, key=lambda m: m["pid"])
 
 
@@ -83,7 +88,8 @@ def reconcile(index_dir: str) -> int:
     for name in os.listdir(man_dir):
         if name.endswith(".journal"):
             p = os.path.join(man_dir, name)
-            journal = load_json(p, None)
+            with open(p) as f:
+                journal = json.load(f)
             journal["_path"] = p
             _finish_swap(index_dir, journal)
             n += 1
@@ -94,8 +100,9 @@ def reconcile(index_dir: str) -> int:
     referenced: set[str] = set()
     for name in os.listdir(man_dir):
         if name.endswith(".journal"):
-            for staged, _final in load_json(os.path.join(man_dir, name), None)["promote"]:
-                referenced.add(os.path.abspath(staged))
+            with open(os.path.join(man_dir, name)) as f:
+                for staged, _final in json.load(f)["promote"]:
+                    referenced.add(os.path.abspath(staged))
     for sub in ("segments", "doc_meta_local"):
         d = os.path.join(index_dir, sub)
         if not os.path.isdir(d):

@@ -61,8 +61,12 @@ def publish_pid_offsets(index_dir: str, pids, n_docs) -> None:
 
 def load_pid_offsets(index_dir: str) -> np.ndarray:
     """The published (pid, offset, n_docs) table as a (3, P) int64 array;
-    empty before the first merge."""
-    t = load_json(os.path.join(index_dir, "pid_offsets.json"), {"pid": [], "offset": [], "n_docs": []})
+    empty before the first merge. An index merged before the table existed
+    has no published forward index and raises."""
+    path = os.path.join(index_dir, "pid_offsets.json")
+    if not os.path.exists(path) and os.path.exists(os.path.join(index_dir, "corpus_stats.json")):
+        raise ValueError(f"{index_dir}: index predates pid_offsets.json; re-run merge_segments")
+    t = load_json(path, {"pid": [], "offset": [], "n_docs": []})
     return np.array([t["pid"], t["offset"], t["n_docs"]], dtype=np.int64).reshape(3, -1)
 
 
@@ -70,6 +74,8 @@ def republish_without(index_dir: str, retired) -> None:
     """Re-publish the offset table once compaction folded the ``retired``
     pids into the pid before them (same offsets, fewer pids), then restamp
     the generation: serving caches hold footers of the replaced files."""
+    if not os.path.exists(os.path.join(index_dir, "pid_offsets.json")):
+        return  # no published table names them: never merged, or merged before it existed
     pid, _, n = load_pid_offsets(index_dir)
     gone = np.isin(pid, list(retired))
     if not gone.any():

@@ -35,13 +35,14 @@ content is a rebuild/compaction concern by construction.
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
 import numpy as np
 
 from miru_spark import roaring
-from miru_spark.jsonio import load_json, save_json_atomic
+from miru_spark.index.merge import forward_index
 
 _LOG = "removal_log.json"
 _BITMAP = "removed.roaring"
@@ -55,7 +56,11 @@ def _log_path(index_dir: str) -> str:
 
 
 def _load_log(index_dir: str) -> dict:
-    return load_json(_log_path(index_dir), {"versions": {}, "removed": []})
+    p = _log_path(index_dir)
+    if os.path.exists(p):
+        with open(p) as f:
+            return json.load(f)
+    return {"versions": {}, "removed": []}
 
 
 def _write_atomic(path: str, data: bytes) -> None:
@@ -69,7 +74,7 @@ def _save(index_dir: str, log: dict) -> None:
     ids = np.array(sorted(int(d) for d in log["removed"]), dtype=np.int64)
     # bitmap (data) BEFORE log (authority) — crash leaves a replayable gap
     _write_atomic(os.path.join(index_dir, _BITMAP), roaring.from_array(ids))
-    save_json_atomic(_log_path(index_dir), log)
+    _write_atomic(_log_path(index_dir), json.dumps(log).encode())
 
 
 def remove_docs(index_dir: str, doc_ids: list[int], version: int) -> int:
@@ -155,8 +160,6 @@ def resolve_keys_map(
     """Batch form: key → docIDs, ONE broadcast-join job for any number of
     keys (a per-key job would make a 10k-op drain run 10k Spark jobs)."""
     from pyspark.sql import functions as F
-
-    from miru_spark.index.merge import forward_index
 
     if not keys:
         return {}

@@ -19,6 +19,7 @@ import hashlib
 import math
 import os
 import tempfile
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -309,11 +310,8 @@ def _gate_index_dir(name: str, sf_dir: str) -> str:
     from miru_spark import analyzer, analyzers, codec, schema
     from miru_spark.index import build, merge
 
-    h = hashlib.sha256()
-    for mod in (schema, codec, build, merge, analyzer, analyzers):
-        with open(mod.__file__, "rb") as f:
-            h.update(f.read())
-    tag = f"{name}_{h.hexdigest()[:16]}_" + sf_dir.strip("/").replace("/", "_")
+    src = b"".join(Path(m.__file__).read_bytes() for m in (schema, codec, build, merge, analyzer, analyzers))
+    tag = f"{name}_{hashlib.sha256(src).hexdigest()[:16]}_" + sf_dir.strip("/").replace("/", "_")
     return os.path.join(tempfile.gettempdir(), tag)
 
 

@@ -105,7 +105,7 @@ def expand_prefixes(index_dir: str, prefix_set: set[str]) -> dict[str, list[str]
 # - _DATASET_CACHE: pyarrow dataset handles (file discovery per call
 #   otherwise), the published (pid, offset, n_docs) table, and each
 #   doc_meta_local file's footer with its row groups' first rows, read on
-#   first use;
+#   first use and keyed also by the file's mtime and size;
 # - _DOCLEN_CACHE: dense doc_id → doc_len / ts arrays (the pid files'
 #   columns concatenated in pid order) and the all-ids mask: doc_len only
 #   once a scoring term has more than _SPARSE_IDS_MAX postings, ts for
@@ -116,8 +116,8 @@ def expand_prefixes(index_dir: str, prefix_set: set[str]) -> dict[str, list[str]
 #   its posting docIDs (miru keeps TF beside the postings the same way,
 #   LabFieldIndex.java:478-542). Same key, entry-count bound and sweep as
 #   _POSTING_CACHE; terms over _SPARSE_IDS_MAX postings are never cached;
-# - _BLOCK_CACHE: decoded doc_meta_local row groups and per-(field, value)
-#   filter bitmaps, LRU bounded in bytes.
+# - _BLOCK_CACHE: decoded doc_meta_local row groups (under their file's
+#   key) and per-(field, value) filter bitmaps, LRU bounded in bytes.
 _DATASET_CACHE: dict[tuple, object] = {}
 _DOCLEN_CACHE: dict[tuple, np.ndarray] = {}
 _POSTING_CACHE: dict[tuple, tuple] = {}  # (dir, gen, term) → postings tuple
@@ -225,20 +225,21 @@ def _pid_offsets(index_dir: str, gen: float) -> np.ndarray:
 
 
 def _meta_file(index_dir: str, gen: float, pid: int) -> tuple:
-    """(path, footer, first row of each row group + the row count) of one
-    pid's doc_meta_local file."""
-    key = (index_dir, gen, "doc_meta_local", pid)
+    """(cache key, path, footer, row groups' first rows + row count) of a pid's
+    file, keyed also by mtime and size: compaction and sync replace it in place."""
+    path = os.path.join(index_dir, "doc_meta_local", f"meta_{pid}.parquet")
+    st = os.stat(path)
+    key = (index_dir, gen, "doc_meta_local", pid, st.st_mtime_ns, st.st_size)
     hit = _DATASET_CACHE.get(key)
     if hit is None:
-        path = os.path.join(index_dir, "doc_meta_local", f"meta_{pid}.parquet")
         footer = pq.read_metadata(path)
         rows = [footer.row_group(r).num_rows for r in range(footer.num_row_groups)]
-        hit = _DATASET_CACHE[key] = (path, footer, np.concatenate([[0], np.cumsum(rows)]))
+        hit = _DATASET_CACHE[key] = (key, path, footer, np.concatenate([[0], np.cumsum(rows)]))
     return hit
 
 
 def _meta_columns(index_dir: str, gen: float) -> list[str]:
-    return _meta_file(index_dir, gen, int(_pid_offsets(index_dir, gen)[0, 0]))[1].schema.names
+    return _meta_file(index_dir, gen, int(_pid_offsets(index_dir, gen)[0, 0]))[2].schema.names
 
 
 def _read_row_group(path: str, footer, row_group: int, columns: list[str]):
@@ -247,14 +248,14 @@ def _read_row_group(path: str, footer, row_group: int, columns: list[str]):
         return pf.read_row_group(row_group, columns=columns)
 
 
-def _meta_block(index_dir: str, gen: float, pid: int, rg: int, columns) -> tuple[dict, int]:
-    """One row group's ``columns`` (Arrow arrays) and their bytes, through the
-    block cache; a doc_len fetch never decodes the display strings."""
-    key = (index_dir, gen, pid, rg)
+def _meta_block(meta_file: tuple, rg: int, columns) -> tuple[dict, int]:
+    """Row group ``rg`` of a ``_meta_file``: its ``columns`` (Arrow arrays) and
+    bytes, via the block cache; a doc_len fetch never decodes display strings."""
+    key, path, footer, _ = meta_file
+    key = (*key, rg)
     blk, nbytes = _BLOCK_CACHE.get(key) or ({}, 0)
     need = [c for c in columns if c not in blk]
     if need:
-        path, footer, _ = _meta_file(index_dir, gen, pid)
         t = _read_row_group(path, footer, rg, need)
         blk = {**blk, **{c: t.column(c).combine_chunks() for c in need}}
         nbytes = sum(col.nbytes for col in blk.values())
@@ -262,13 +263,8 @@ def _meta_block(index_dir: str, gen: float, pid: int, rg: int, columns) -> tuple
     return blk, nbytes
 
 
-def _runs(a: np.ndarray) -> list[int]:
-    """Start of every run of equal values in ``a``, then ``a.size``."""
-    return [0, *(np.flatnonzero(a[1:] != a[:-1]) + 1).tolist(), a.size]
-
-
 def _meta_lookup(index_dir: str, ids, columns: list[str], diag: dict | None = None) -> dict:
-    """doc_meta ``columns`` for ``ids`` (Arrow arrays, row i ↔ ids[i]),
+    """doc_meta ``columns`` for ``ids`` (numpy arrays, row i ↔ ids[i]),
     served from the row-group cache, by position: pid = the last published
     entry whose offset is <= the id, row = id − offset, row group from the
     footer's row counts. Only groups holding a wanted id are read, and taken
@@ -286,38 +282,31 @@ def _meta_lookup(index_dir: str, ids, columns: list[str], diag: dict | None = No
     if n_missing:
         raise ValueError(f"doc_meta is missing {n_missing} of {want.size} ids")
     entry = np.searchsorted(offsets, want, side="right") - 1
-    row = want - offsets[entry]
-    groups = []  # (pid, row group, wanted rows in it), in doc_id order
-    cuts = _runs(entry)
-    for s, t in zip(cuts[:-1], cuts[1:]):
-        pid = int(pids[entry[s]])
-        first = _meta_file(index_dir, gen, pid)[2]
-        if first.size == 2:  # the whole file is one row group
-            groups.append((pid, 0, row[s:t]))
-            continue
-        g = np.searchsorted(first, row[s:t], side="right") - 1
-        gcuts = _runs(g)
-        groups += [(pid, int(g[a]), row[s + a : s + b] - first[g[a]]) for a, b in zip(gcuts[:-1], gcuts[1:])]
+    starts, groups = [], []  # the touched pids' row groups: first doc_id, (file, group)
+    for e in np.unique(entry):
+        meta_file = _meta_file(index_dir, gen, int(pids[e]))
+        starts.append(offsets[e] + meta_file[3][:-1])
+        groups += [(meta_file, r) for r in range(meta_file[3].size - 1)]
+    starts = np.concatenate(starts)
+    g = np.searchsorted(starts, want, side="right") - 1
+    local = want - starts[g]  # row within its group
+    cuts = [*np.unique(g, return_index=True)[1].tolist(), want.size]
     parts = {c: [] for c in columns}
     held, rows, base, held_bytes = [], [], 0, 0  # groups with hits not yet taken
-    for i, (pid, g, r) in enumerate(groups):
-        blk, nbytes = _meta_block(index_dir, gen, pid, g, columns)
+    for a, b in zip(cuts[:-1], cuts[1:]):
+        blk, nbytes = _meta_block(*groups[g[a]], columns)
         held.append(blk)
-        rows.append(r + base)  # row in the held groups' concatenation
+        rows.append(local[a:b] + base)  # row in the held groups' concatenation
         base += len(blk[columns[0]])
         held_bytes += nbytes
-        if i == len(groups) - 1 or held_bytes > _BLOCK_CACHE_MAX_BYTES:
+        if b == want.size or held_bytes > _BLOCK_CACHE_MAX_BYTES:
             take = np.concatenate(rows)
-            if i == len(groups) - 1 and not parts[columns[0]]:
-                take, inv = take[inv], None  # one flush: take in ids order
             for c in columns:
-                parts[c].append(pa.chunked_array([b[c] for b in held]).take(take))
+                parts[c].append(np.asarray(pa.chunked_array([h[c] for h in held]).take(take)))
             held, rows, base, held_bytes = [], [], 0, 0
     if diag is not None:
-        diag["meta_row_groups_read"] = diag.get("meta_row_groups_read", 0) + len(groups)
-    if inv is None:
-        return {c: parts[c][0] for c in columns}
-    return {c: pa.chunked_array([x for p in parts[c] for x in p.chunks]).take(inv) for c in columns}
+        diag["meta_row_groups_read"] = diag.get("meta_row_groups_read", 0) + len(cuts) - 1
+    return {c: np.concatenate(parts[c])[inv] for c in columns}
 
 
 # Above this many ids the sparse read stops paying (it touches
@@ -389,7 +378,7 @@ def _doclens_for(index_dir: str, postings: dict, terms, diag: dict | None = None
     A term with at most _SPARSE_IDS_MAX postings resolves once per index
     generation — one doc_meta row-group lookup for all of a call's missing
     terms — and stays in _TERM_DOCLENS beside its postings, so a warm query
-    reads no doc_meta. A larger term reads the dense array (``_doclens``)
+    reads no doc_meta. A larger term reads the dense array (``_dense_column``)
     per query and is not cached. ``diag["doclen_fetched"]`` counts the
     postings whose doc length this call looked up in doc_meta."""
     gen = _index_generation(index_dir)
@@ -399,7 +388,7 @@ def _doclens_for(index_dir: str, postings: dict, terms, diag: dict | None = None
             continue
         d = postings[t][0]
         if d.size > _SPARSE_IDS_MAX:
-            lens[t] = _DenseLens(_doclens(index_dir), d)
+            lens[t] = _DenseLens(_dense_column(index_dir, "doc_len"), d)
         elif (hit := _lru_get(_TERM_DOCLENS, (index_dir, gen, t))) is not None:
             lens[t] = hit
         else:
@@ -422,10 +411,9 @@ def _docts_for(index_dir: str, cand: np.ndarray) -> "np.ndarray | _SparseCol":
     """Doc-time provider for a KNOWN candidate set: dense cache if present,
     sparse row-group fetch when the set is small."""
     gen = _index_generation(index_dir)
-    if (index_dir, gen, "ts") in _DOCLEN_CACHE or cand.size > _SPARSE_IDS_MAX:
-        return _docts(index_dir)
-    if "ts" not in _meta_columns(index_dir, gen):
-        raise ValueError("index has no doc-time column (built without ts)")
+    dense = (index_dir, gen, "ts") in _DOCLEN_CACHE or cand.size > _SPARSE_IDS_MAX
+    if dense or "ts" not in _meta_columns(index_dir, gen):
+        return _docts(index_dir)  # raises without a ts column
     return _sparse_col(index_dir, "ts", cand)
 
 
@@ -437,18 +425,12 @@ def _dense_column(index_dir: str, column: str) -> np.ndarray:
     key = (index_dir, gen, column)
     arr = _DOCLEN_CACHE.get(key)
     if arr is None:
-        parts = []
-        for pid, n in zip(*_pid_offsets(index_dir, gen)[[0, 2]]):
-            path, footer, _ = _meta_file(index_dir, gen, int(pid))
-            with pq.ParquetFile(path, metadata=footer) as pf:
-                parts.append(np.asarray(pf.read(columns=[column]).column(column), dtype=np.int64)[:n])
-        arr = _DOCLEN_CACHE[key] = np.concatenate(parts)
+        path = os.path.join(index_dir, "doc_meta_local", "meta_{}.parquet")
+        arr = _DOCLEN_CACHE[key] = np.concatenate([
+            np.asarray(pq.read_table(path.format(pid), columns=[column]).column(0), dtype=np.int64)[:n]
+            for pid, n in zip(*_pid_offsets(index_dir, gen)[[0, 2]])
+        ])
     return arr
-
-
-def _doclens(index_dir: str) -> np.ndarray:
-    """Dense docID → doc_len array."""
-    return _dense_column(index_dir, "doc_len")
 
 
 def _docts(index_dir: str) -> np.ndarray:
@@ -467,8 +449,7 @@ def _all_doc_ids(index_dir: str) -> np.ndarray:
     key = (index_dir, gen, "all_ids")
     arr = _DOCLEN_CACHE.get(key)
     if arr is None:
-        _, offsets, counts = _pid_offsets(index_dir, gen)
-        arr = _DOCLEN_CACHE[key] = np.arange(offsets[-1] + counts[-1], dtype=np.int64)
+        arr = _DOCLEN_CACHE[key] = np.arange(_pid_offsets(index_dir, gen)[2].sum(), dtype=np.int64)
     return arr
 
 

@@ -35,7 +35,6 @@ import os
 import shutil
 import uuid
 
-from miru_spark.index import removal
 from miru_spark.index.merge import republish_without
 from miru_spark.jsonio import load_json as _load_json
 from miru_spark.jsonio import save_json_atomic as _write_atomic_json
@@ -61,10 +60,14 @@ def _copy_atomic(src: str, dst: str) -> None:
 def _sync_removal_log(src_dir: str, dst_dir: str) -> int:
     """Version-guarded merge of the removal log (higher version wins per
     doc — MiruIndexer.java:140-147 applied across clusters)."""
+    from miru_spark import roaring
+    import numpy as np
+
     src_log = _load_json(os.path.join(src_dir, "removal_log.json"), None)
     if src_log is None:
         return 0
-    dst_log = removal._load_log(dst_dir)
+    dst_path = os.path.join(dst_dir, "removal_log.json")
+    dst_log = _load_json(dst_path, {"versions": {}, "removed": []})
     removed = set(dst_log["removed"])
     src_removed_set = set(src_log["removed"])  # hoisted: O(1) per key below
     changed = 0
@@ -82,7 +85,13 @@ def _sync_removal_log(src_dir: str, dst_dir: str) -> int:
                 changed += 1  # version bump alone must persist too
     if changed:
         dst_log["removed"] = sorted(removed)
-        removal._save(dst_dir, dst_log)  # bitmap (data) before log (authority)
+        ids = np.array(dst_log["removed"], dtype=np.int64)
+        # bitmap (data) before log (authority) — same order as removal.py
+        with open(os.path.join(dst_dir, "removed.roaring") + ".tmp", "wb") as f:
+            f.write(roaring.from_array(ids))
+        os.replace(os.path.join(dst_dir, "removed.roaring") + ".tmp",
+                   os.path.join(dst_dir, "removed.roaring"))
+        _write_atomic_json(dst_path, dst_log)
     return changed
 
 
@@ -117,7 +126,8 @@ def sync_index(src_dir: str, dst_dir: str) -> dict:
     src_pids: set[int] = set()
     names = sorted(n for n in os.listdir(man_dir) if n.endswith(".json"))
     for name in names:
-        m = _load_json(os.path.join(man_dir, name), None)
+        with open(os.path.join(man_dir, name)) as f:
+            m = json.load(f)
         pid = m["pid"]
         src_pids.add(pid)
         fp = _manifest_fingerprint(m)
@@ -138,36 +148,33 @@ def sync_index(src_dir: str, dst_dir: str) -> dict:
         shipped.append(pid)
 
     # retire replica partitions the source no longer has (compaction folded
-    # them into a surviving pid): manifest FIRST, data files after — the
-    # same delete order compaction's _finish_swap uses.  A crash between the
-    # two steps then leaves only orphan data bytes (harmless: nothing
-    # references them, and a re-ship of the same pid overwrites them), never
-    # a live manifest pointing at missing files, which would break the next
-    # merge/refresh on the replica until another sync pass re-retired it.
+    # them into a surviving pid): re-publish the offset table without them,
+    # then delete their data files, then their manifests, so an interrupted
+    # pass leaves no published pid without files and the next one finishes.
     retired = []
     dst_man_dir = os.path.join(dst_dir, "manifests")
     if os.path.isdir(dst_man_dir):
         for n in sorted(os.listdir(dst_man_dir)):
             if not n.endswith(".json"):
                 continue
-            dm = _load_json(os.path.join(dst_man_dir, n), None)
-            if dm["pid"] in src_pids:
-                continue
-            os.remove(os.path.join(dst_man_dir, n))
-            for f_ in (dm["segment_file"], dm["meta_file"]):
-                if os.path.exists(f_):
-                    os.remove(f_)
-            progress.pop(str(dm["pid"]), None)
-            _write_atomic_json(progress_path, progress)
-            retired.append(dm["pid"])
-    # the replica's published generation still names the retired pids
-    republish_without(dst_dir, retired)
+            with open(os.path.join(dst_man_dir, n)) as f:
+                dm = json.load(f)
+            if dm["pid"] not in src_pids:
+                retired.append((n, dm))
+    republish_without(dst_dir, [dm["pid"] for _, dm in retired])
+    for n, dm in retired:
+        for f_ in (dm["segment_file"], dm["meta_file"]):
+            if os.path.exists(f_):
+                os.remove(f_)
+        os.remove(os.path.join(dst_man_dir, n))
+        progress.pop(str(dm["pid"]), None)
+        _write_atomic_json(progress_path, progress)
 
     removal_ops = _sync_removal_log(src_dir, dst_dir)
     return {
         "shipped_pids": shipped,
         "skipped_pids": skipped,
-        "retired_pids": retired,
+        "retired_pids": [dm["pid"] for _, dm in retired],
         "removal_ops": removal_ops,
         "schema_synced": schema_synced,
     }

@@ -11,6 +11,7 @@ import sys
 
 import numpy as np
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from miru_spark.index.merge import forward_index, load_pid_offsets
@@ -141,3 +142,17 @@ def test_gate_index_dir_follows_build_sources(tmp_path, monkeypatch):
             m.setattr(mod, "__file__", str(copy))
             assert _gate_index_dir("miru_idx", "/data/sf0.01") != base
     assert _gate_index_dir("miru_idx", "/data/sf0.01") == base
+
+
+def test_index_without_offset_table_raises(spark, tiny_index, tmp_path):
+    """An index merged before pid_offsets.json existed has no published
+    forward index: serving and the Spark consumers say so instead of
+    answering from an empty one."""
+    idx = str(tmp_path / "old")
+    shutil.copytree(tiny_index, idx)
+    os.remove(os.path.join(idx, "pid_offsets.json"))
+    for call in (lambda: sc.search_local(idx, "merge OR sort", k=5),
+                 lambda: forward_index(spark, idx),
+                 lambda: sc.search_distributed(spark, idx, "merge OR sort", k=5)):
+        with pytest.raises(ValueError, match="predates pid_offsets.json; re-run merge_segments"):
+            call()

@@ -184,7 +184,7 @@ def _dense_reference(index_dir, query, monkeypatch, diag, **masks):
     """Reference search_local: every candidate's doc_len read by docID from
     the dense doc_meta array (WAND's θ seed gathers from it too), term
     contributions accumulated in sorted term order."""
-    dense = sc._doclens(index_dir)
+    dense = sc._dense_column(index_dir, "doc_len")
 
     def doclens_for(index_dir, postings, terms, diag=None):
         return {t: dense[postings[t][0]] for t in terms if t in postings}

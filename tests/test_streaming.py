@@ -188,14 +188,17 @@ def _assert_same_answers(a, b):
         assert x.equals(y), (x, y)
 
 
-def test_published_generation_stays_consistent(spark, tmp_path):
+def test_published_generation_stays_consistent(spark, tmp_path, monkeypatch):
     """Between an append and its refresh, and between a compaction and the
-    next refresh, every path answers from the last published generation;
-    after the refresh the answers equal a fresh build's. No step writes a
-    doc_meta/ directory."""
-    from miru_spark.index.compact import compact
+    next refresh, every path answers from the last published generation:
+    also inside the swap, after compaction (or a sync to a replica) replaced
+    a published pid's file but before it re-published the offset table, and
+    on a replica whose sync crashed after that re-publish. After a refresh
+    the answers equal a fresh build's. No step writes a doc_meta/ directory."""
+    from miru_spark.index import compact as compact_mod
     from miru_spark.index.merge import load_pid_offsets
-    from miru_spark.sync import sync_index
+    from miru_spark import sync as sync_mod
+    from miru_spark.query import scorer as sc
 
     full = generate_corpus(spark, n_rows=240, seed=13, partitions=1)
     rowidx = F.regexp_extract("path", r"f(\d+)\.", 1).cast("long")
@@ -205,22 +208,51 @@ def test_published_generation_stays_consistent(spark, tmp_path):
     def no_doc_meta(index_dir):
         assert not os.path.exists(os.path.join(index_dir, "doc_meta"))
 
+    def in_window(republish, index_dir, expected):
+        """republish_without, answering from ``index_dir`` just before it:
+        footers stay cached from the published generation, row groups are
+        read cold from the files the swap replaced."""
+        def hook(*args):
+            monkeypatch.setattr(sc, "_BLOCK_CACHE", sc._ByteLRU())
+            _assert_same_answers(expected, _window_answers(spark, index_dir))
+            republish(*args)
+        return hook
+
     idx = str(tmp_path / "idx")
     for b in (0, 1):
         append_batch(waves[b], b, idx, partitions_per_batch=2)
         refresh(spark, idx)
     published = _window_answers(spark, idx)
     pid, off, _ = load_pid_offsets(idx)
+    replica = str(tmp_path / "replica")
+    sync_mod.sync_index(idx, replica)
+    refresh(spark, replica)
+    _assert_same_answers(published, _window_answers(spark, replica))
 
     append_batch(waves[2], 2, idx, partitions_per_batch=2)  # not yet refreshed
     _assert_same_answers(published, _window_answers(spark, idx))
 
-    stats = compact(idx, target_docs=10_000)
+    republish = compact_mod.republish_without
+    with monkeypatch.context() as m:
+        m.setattr(compact_mod, "republish_without", in_window(republish, idx, published))
+        stats = compact_mod.compact(idx, target_docs=10_000)
     assert stats["after_partitions"] == 2  # the published group, the appended one
     kept, kept_off, _ = load_pid_offsets(idx)
     assert kept.tolist() == [pid[0]] and kept_off.tolist() == [off[0]]
     _assert_same_answers(published, _window_answers(spark, idx))
     no_doc_meta(idx)
+
+    def crash_after(*args):
+        in_window(republish, replica, published)(*args)
+        raise RuntimeError("crash before the retired files are deleted")
+
+    with monkeypatch.context() as m:
+        m.setattr(sync_mod, "republish_without", crash_after)
+        with pytest.raises(RuntimeError, match="crash"):
+            sync_mod.sync_index(idx, replica)
+    assert load_pid_offsets(replica)[0].tolist() == [pid[0]]
+    monkeypatch.setattr(sc, "_BLOCK_CACHE", sc._ByteLRU())
+    _assert_same_answers(published, _window_answers(spark, replica))
 
     refresh(spark, idx)
     no_doc_meta(idx)
@@ -231,8 +263,8 @@ def test_published_generation_stays_consistent(spark, tmp_path):
     after = _window_answers(spark, idx)
     _assert_same_answers(after, _window_answers(spark, fresh))
 
-    replica = str(tmp_path / "replica")
-    sync_index(idx, replica)
+    # the next pass retires what the crashed one left
+    assert sync_mod.sync_index(idx, replica)["retired_pids"] == pid[1:].tolist()
     refresh(spark, replica)
     no_doc_meta(replica)
     _assert_same_answers(after, _window_answers(spark, replica))

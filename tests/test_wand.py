@@ -185,7 +185,7 @@ def test_sparse_serving_reads_match_dense(tiny_index, monkeypatch, global_doc_me
         assert sc._BLOCK_CACHE.entries, q
         warm = sc.search_local(tiny_index, q, k=10)
         assert (tiny_index, gen, "doc_len") not in sc._DOCLEN_CACHE
-        sc._doclens(tiny_index)  # warm the dense array: the dense path
+        sc._dense_column(tiny_index, "doc_len")  # warm the dense array: the dense path
         dense = sc.search_local(tiny_index, q, k=10)
         assert len(cold), q
         for other in (warm, dense):
