@@ -93,52 +93,38 @@ def expand_prefixes(index_dir: str, prefix_set: set[str]) -> dict[str, list[str]
 
 
 # --------------------------------------------------------------------- local
-# Serving caches (miru serves from memory-resident indexes behind its LAB
-# block cache, LabInvertedIndex.java:31-73). Every key starts with
-# (index_dir, generation); the generation is the mtime of corpus_stats.json,
-# which every merge/refresh rewrites LAST (atomically) and which compaction
-# re-stamps after it re-publishes the offset table. The first call that
-# sees a new generation of an index sweeps that index's older generations
-# out of every cache here, so a long-lived server strands nothing across
-# refreshes.
-#
-# - _DATASET_CACHE: pyarrow dataset handles (file discovery per call
-#   otherwise), the published (pid, offset, n_docs) table, and each
-#   doc_meta_local file's footer with its row groups' first rows, read on
-#   first use and keyed also by the file's mtime and size;
-# - _DOCLEN_CACHE: dense doc_id → doc_len / ts arrays (the pid files'
-#   columns concatenated in pid order) and the all-ids mask: doc_len only
-#   once a scoring term has more than _SPARSE_IDS_MAX postings, ts for
-#   Range clauses and large time-masked candidate sets, all-ids for
-#   termless shapes — never on the sparse path;
-# - _POSTING_CACHE: decoded postings of hot terms, LRU by entry count;
-# - _TERM_DOCLENS: each scoring term's doc lengths as int32, aligned with
-#   its posting docIDs (miru keeps TF beside the postings the same way,
-#   LabFieldIndex.java:478-542). Same key, entry-count bound and sweep as
-#   _POSTING_CACHE; terms over _SPARSE_IDS_MAX postings are never cached;
-# - _BLOCK_CACHE: decoded doc_meta_local row groups (under their file's
-#   key) and per-(field, value) filter bitmaps, LRU bounded in bytes.
-_DATASET_CACHE: dict[tuple, object] = {}
-_DOCLEN_CACHE: dict[tuple, np.ndarray] = {}
-_POSTING_CACHE: dict[tuple, tuple] = {}  # (dir, gen, term) → postings tuple
-_POSTING_CACHE_MAX = 4096  # hot-term cache (miru's LAB block-cache analog)
-_TERM_DOCLENS: dict[tuple, np.ndarray] = {}  # (dir, gen, term) → int32 doc_lens
-# The block cache lives in every process that serves, including each
-# executor Python worker running _gather_display_fields: 32 workers × this
-# bound (1 GiB) must stay far below one dense doc_meta table at 100M docs
-# (~10 GB), which CLAUDE.md bans from workers.
-_BLOCK_CACHE_MAX_BYTES = 32 << 20
+# The serving cache (miru serves from memory-resident indexes behind its LAB
+# block cache, LabInvertedIndex.java:31-73) is one LRU, _CACHE, bounded by
+# the summed bytes of its entries: pyarrow dataset handles, the published pid
+# offset table, doc_meta_local footers and row groups, filter bitmaps, dense
+# docID → doc_len / ts / all-ids arrays, decoded postings and each scoring
+# term's doc lengths aligned with them (miru keeps TF beside the postings the
+# same way, LabFieldIndex.java:478-542). An entry larger than the bound is
+# served uncached. Postings are keyed (index_dir, gen, term) and every other
+# kind (index_dir, gen, kind, ...), so no term collides with another kind.
+# The generation is the mtime of corpus_stats.json, which every merge/refresh
+# rewrites LAST (atomically) and which compaction re-stamps after it
+# re-publishes the offset table; the first call that sees a new generation of
+# an index sweeps that index's older ones out, so a long-lived server strands
+# nothing across refreshes. The cache lives in every process that serves,
+# including each executor Python worker running _gather_display_fields: 32
+# workers × this bound (1 GiB) must stay far below one dense doc_meta table
+# at 100M docs (~10 GB), which CLAUDE.md bans from workers.
+_CACHE_MAX_BYTES = 32 << 20
 _LIVE_GENERATION: dict[str, float] = {}
 
 
 class _ByteLRU:
     """LRU map bounded by the summed byte size of its values (dicts iterate
-    in insertion order; hits re-insert at the tail). An entry larger than
-    the bound is evicted at once: the caller still holds it for its call."""
+    in insertion order; hits re-insert at the tail). ``put`` returns the
+    value; one larger than the bound is not kept and evicts nothing."""
 
     def __init__(self):
         self.entries: dict[tuple, tuple[object, int]] = {}
         self.nbytes = 0
+
+    def __contains__(self, key) -> bool:
+        return key in self.entries
 
     def get(self, key):
         hit = self.entries.pop(key, None)
@@ -147,12 +133,14 @@ class _ByteLRU:
         self.entries[key] = hit
         return hit[0]
 
-    def put(self, key, value, nbytes: int) -> None:
-        self.pop(key)
-        self.entries[key] = (value, nbytes)
-        self.nbytes += nbytes
-        while self.nbytes > _BLOCK_CACHE_MAX_BYTES:
-            self.pop(next(iter(self.entries)))
+    def put(self, key, value, nbytes: int):
+        if nbytes <= _CACHE_MAX_BYTES:
+            self.pop(key)
+            self.entries[key] = (value, nbytes)
+            self.nbytes += nbytes
+            while self.nbytes > _CACHE_MAX_BYTES:
+                self.pop(next(iter(self.entries)))
+        return value
 
     def pop(self, key) -> None:
         old = self.entries.pop(key, None)
@@ -160,7 +148,8 @@ class _ByteLRU:
             self.nbytes -= old[1]
 
 
-_BLOCK_CACHE = _ByteLRU()
+_CACHE = _ByteLRU()
+_POSTING_CACHE = _CACHE  # the name perfbench probes posting residency by
 
 
 def _index_generation(index_dir: str) -> float:
@@ -176,52 +165,33 @@ def _index_generation(index_dir: str) -> float:
 
 def _sweep_stale(index_dir: str, gen: float) -> None:
     """Drop every cache entry of ``index_dir`` whose generation is not ``gen``."""
-    def stale(k):
-        return k[0] == index_dir and k[1] != gen
-
-    for cache in (_DATASET_CACHE, _DOCLEN_CACHE, _POSTING_CACHE, _TERM_DOCLENS):
-        for k in [k for k in cache if stale(k)]:
-            del cache[k]
-    for k in [k for k in _BLOCK_CACHE.entries if stale(k)]:
-        _BLOCK_CACHE.pop(k)
+    for k in [k for k in _CACHE.entries if k[0] == index_dir and k[1] != gen]:
+        _CACHE.pop(k)
 
 
-def _lru_get(cache: dict, key):
-    """An entry-count LRU hit re-inserts at the tail (dicts iterate in
-    insertion order)."""
-    hit = cache.pop(key, None)
-    if hit is not None:
-        cache[key] = hit
+def _cached(key: tuple, load, nbytes=lambda v: v.nbytes):
+    """``key``'s cache entry; a miss stores ``load()``, charged ``nbytes(value)``."""
+    hit = _CACHE.get(key)
+    if hit is None:
+        hit = load()
+        _CACHE.put(key, hit, nbytes(hit))
     return hit
-
-
-def _lru_put(cache: dict, key, value) -> None:
-    """Insert at the tail, evicting from the head down to
-    _POSTING_CACHE_MAX entries; a refreshed index's old generations are
-    already swept."""
-    while len(cache) >= _POSTING_CACHE_MAX:
-        del cache[next(iter(cache))]
-    cache[key] = value
 
 
 def _dataset(index_dir: str, part: str) -> pads.Dataset:
     """Cached pyarrow dataset (file discovery is a filesystem walk per call
-    otherwise — measured as the bulk of warm-query latency)."""
-    key = (index_dir, _index_generation(index_dir), part)
-    ds = _DATASET_CACHE.get(key)
-    if ds is None:
-        ds = pads.dataset(os.path.join(index_dir, part))
-        _DATASET_CACHE[key] = ds
-    return ds
+    otherwise — measured as the bulk of warm-query latency), charged the
+    bytes of its file paths."""
+    return _cached(
+        (index_dir, _index_generation(index_dir), "dataset", part),
+        lambda: pads.dataset(os.path.join(index_dir, part)),
+        lambda ds: sum(map(len, ds.files)),
+    )
 
 
 def _pid_offsets(index_dir: str, gen: float) -> np.ndarray:
     """The published (pid, offset, n_docs) table, (3, P) int64."""
-    key = (index_dir, gen, "pid_offsets")
-    table = _DATASET_CACHE.get(key)
-    if table is None:
-        table = _DATASET_CACHE[key] = load_pid_offsets(index_dir)
-    return table
+    return _cached((index_dir, gen, "file", "pid_offsets.json"), lambda: load_pid_offsets(index_dir))
 
 
 def _meta_file(index_dir: str, gen: float, pid: int) -> tuple:
@@ -230,12 +200,13 @@ def _meta_file(index_dir: str, gen: float, pid: int) -> tuple:
     path = os.path.join(index_dir, "doc_meta_local", f"meta_{pid}.parquet")
     st = os.stat(path)
     key = (index_dir, gen, "doc_meta_local", pid, st.st_mtime_ns, st.st_size)
-    hit = _DATASET_CACHE.get(key)
-    if hit is None:
+
+    def load():
         footer = pq.read_metadata(path)
         rows = [footer.row_group(r).num_rows for r in range(footer.num_row_groups)]
-        hit = _DATASET_CACHE[key] = (key, path, footer, np.concatenate([[0], np.cumsum(rows)]))
-    return hit
+        return key, path, footer, np.concatenate([[0], np.cumsum(rows)])
+
+    return _cached(key, load, lambda hit: hit[2].serialized_size + hit[3].nbytes)
 
 
 def _meta_columns(index_dir: str, gen: float) -> list[str]:
@@ -250,22 +221,22 @@ def _read_row_group(path: str, footer, row_group: int, columns: list[str]):
 
 def _meta_block(meta_file: tuple, rg: int, columns) -> tuple[dict, int]:
     """Row group ``rg`` of a ``_meta_file``: its ``columns`` (Arrow arrays) and
-    bytes, via the block cache; a doc_len fetch never decodes display strings."""
+    bytes, via the serving cache; a doc_len fetch never decodes display strings."""
     key, path, footer, _ = meta_file
     key = (*key, rg)
-    blk, nbytes = _BLOCK_CACHE.get(key) or ({}, 0)
+    blk, nbytes = _CACHE.get(key) or ({}, 0)
     need = [c for c in columns if c not in blk]
     if need:
         t = _read_row_group(path, footer, rg, need)
         blk = {**blk, **{c: t.column(c).combine_chunks() for c in need}}
         nbytes = sum(col.nbytes for col in blk.values())
-        _BLOCK_CACHE.put(key, (blk, nbytes), nbytes)
+        _CACHE.put(key, (blk, nbytes), nbytes)
     return blk, nbytes
 
 
 def _meta_lookup(index_dir: str, ids, columns: list[str], diag: dict | None = None) -> dict:
     """doc_meta ``columns`` for ``ids`` (numpy arrays, row i ↔ ids[i]),
-    served from the row-group cache, by position: pid = the last published
+    served from the serving cache, by position: pid = the last published
     entry whose offset is <= the id, row = id − offset, row group from the
     footer's row counts. Only groups holding a wanted id are read, and taken
     from early once the groups held outgrow the cache bound (the worker rule
@@ -299,7 +270,7 @@ def _meta_lookup(index_dir: str, ids, columns: list[str], diag: dict | None = No
         rows.append(local[a:b] + base)  # row in the held groups' concatenation
         base += len(blk[columns[0]])
         held_bytes += nbytes
-        if b == want.size or held_bytes > _BLOCK_CACHE_MAX_BYTES:
+        if b == want.size or held_bytes > _CACHE_MAX_BYTES:
             take = np.concatenate(rows)
             for c in columns:
                 parts[c].append(np.asarray(pa.chunked_array([h[c] for h in held]).take(take)))
@@ -377,19 +348,21 @@ def _doclens_for(index_dir: str, postings: dict, terms, diag: dict | None = None
 
     A term with at most _SPARSE_IDS_MAX postings resolves once per index
     generation — one doc_meta row-group lookup for all of a call's missing
-    terms — and stays in _TERM_DOCLENS beside its postings, so a warm query
-    reads no doc_meta. A larger term reads the dense array (``_dense_column``)
-    per query and is not cached. ``diag["doclen_fetched"]`` counts the
+    terms — and stays in the cache beside its postings, so a warm query
+    reads no doc_meta. A larger term gathers from the dense array
+    (``_dense_column``, read once per call while it outgrows the cache) and
+    is not cached. ``diag["doclen_fetched"]`` counts the
     postings whose doc length this call looked up in doc_meta."""
     gen = _index_generation(index_dir)
-    lens, missing = {}, []
+    lens, missing, dense = {}, [], None
     for t in sorted(terms):
         if t not in postings:
             continue
         d = postings[t][0]
         if d.size > _SPARSE_IDS_MAX:
-            lens[t] = _DenseLens(_dense_column(index_dir, "doc_len"), d)
-        elif (hit := _lru_get(_TERM_DOCLENS, (index_dir, gen, t))) is not None:
+            dense = _dense_column(index_dir, "doc_len") if dense is None else dense
+            lens[t] = _DenseLens(dense, d)
+        elif (hit := _CACHE.get((index_dir, gen, "doclens", t))) is not None:
             lens[t] = hit
         else:
             missing.append(t)
@@ -401,7 +374,7 @@ def _doclens_for(index_dir: str, postings: dict, terms, diag: dict | None = None
             n = postings[t][0].size
             lens[t] = vals[fetched : fetched + n].copy()  # owns its bytes once cached
             fetched += n
-            _lru_put(_TERM_DOCLENS, (index_dir, gen, t), lens[t])
+            _CACHE.put((index_dir, gen, "doclens", t), lens[t], lens[t].nbytes)
     if diag is not None:
         diag["doclen_fetched"] = fetched
     return lens
@@ -411,7 +384,7 @@ def _docts_for(index_dir: str, cand: np.ndarray) -> "np.ndarray | _SparseCol":
     """Doc-time provider for a KNOWN candidate set: dense cache if present,
     sparse row-group fetch when the set is small."""
     gen = _index_generation(index_dir)
-    dense = (index_dir, gen, "ts") in _DOCLEN_CACHE or cand.size > _SPARSE_IDS_MAX
+    dense = (index_dir, gen, "dense", "ts") in _CACHE or cand.size > _SPARSE_IDS_MAX
     if dense or "ts" not in _meta_columns(index_dir, gen):
         return _docts(index_dir)  # raises without a ts column
     return _sparse_col(index_dir, "ts", cand)
@@ -422,15 +395,11 @@ def _dense_column(index_dir: str, column: str) -> np.ndarray:
     concatenated in pid order, each cut to its published count (driver-side;
     the distributed path joins instead)."""
     gen = _index_generation(index_dir)
-    key = (index_dir, gen, column)
-    arr = _DOCLEN_CACHE.get(key)
-    if arr is None:
-        path = os.path.join(index_dir, "doc_meta_local", "meta_{}.parquet")
-        arr = _DOCLEN_CACHE[key] = np.concatenate([
-            np.asarray(pq.read_table(path.format(pid), columns=[column]).column(0), dtype=np.int64)[:n]
-            for pid, n in zip(*_pid_offsets(index_dir, gen)[[0, 2]])
-        ])
-    return arr
+    path = os.path.join(index_dir, "doc_meta_local", "meta_{}.parquet")
+    return _cached((index_dir, gen, "dense", column), lambda: np.concatenate([
+        np.asarray(pq.read_table(path.format(pid), columns=[column]).column(0), dtype=np.int64)[:n]
+        for pid, n in zip(*_pid_offsets(index_dir, gen)[[0, 2]])
+    ]))
 
 
 def _docts(index_dir: str) -> np.ndarray:
@@ -446,11 +415,8 @@ def _all_doc_ids(index_dir: str) -> np.ndarray:
     """Sorted full index mask (every doc_id): the published docIDs are
     dense from 0."""
     gen = _index_generation(index_dir)
-    key = (index_dir, gen, "all_ids")
-    arr = _DOCLEN_CACHE.get(key)
-    if arr is None:
-        arr = _DOCLEN_CACHE[key] = np.arange(_pid_offsets(index_dir, gen)[2].sum(), dtype=np.int64)
-    return arr
+    return _cached((index_dir, gen, "dense", "all_ids"),
+                   lambda: np.arange(_pid_offsets(index_dir, gen)[2].sum(), dtype=np.int64))
 
 
 _DISPLAY_COLS = ["repo", "path", "commit", "lang"]
@@ -458,7 +424,7 @@ _DISPLAY_COLS = ["repo", "path", "commit", "lang"]
 
 def _docmeta_for(index_dir: str, ids: np.ndarray, diag: dict | None = None) -> dict[str, np.ndarray]:
     """Display fields {repo, path, commit, lang} for a KNOWN id set, row i ↔
-    ids[i], through the row-group cache — NEVER a dense materialization (at
+    ids[i], through the serving cache — NEVER a dense materialization (at
     100M docs that is a multi-GB table; this runs inside executor Python
     workers via _gather_display_fields, where a dense fallback would pin
     that table once per worker)."""
@@ -476,8 +442,8 @@ def _gather_display_fields(top: DataFrame, index_dir: str) -> DataFrame:
     join and the per-doc aggregation's exchange — at 100M docs, the widest
     shuffle in the plan — to survive in only k rows. Here the scoring plan
     carries nothing but doc_id/score (plus AST-referenced filter fields)
-    and the k surviving rows gather their fields through the same doc_meta
-    row-group cache the serving path uses (`_docmeta_for`): executor-side
+    and the k surviving rows gather their fields through the same serving
+    cache as search_local (`_docmeta_for`): executor-side
     mapInPandas, no exchange, touches only the row groups covering the k
     ids (0.3 s for 512 of 1.04M rows at 100M docs with the earlier
     isin-filtered read, BENCH_100M_Q2)."""
@@ -507,8 +473,7 @@ def load_postings(
     out: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = {}
     missing = set()
     for term in terms:
-        key = (index_dir, gen, term)
-        hit = _lru_get(_POSTING_CACHE, key)
+        hit = _CACHE.get((index_dir, gen, term))
         if hit is not None:
             out[term] = hit
         else:
@@ -553,7 +518,7 @@ def load_postings(
         if entry is None:
             continue
         out[term] = entry
-        _lru_put(_POSTING_CACHE, (index_dir, gen, term), entry)
+        _CACHE.put((index_dir, gen, term), entry, sum(a.nbytes for a in entry))
     return out
 
 
@@ -561,11 +526,11 @@ def load_filter_bitmap(index_dir: str, field: str, values: list[str]) -> bytes:
     """Roaring OR of the selected values' filter bitmaps (miru's
     getCompositeAuthz pattern, miru-plugin/.../index/MiruAuthzIndex.java:13),
     done container-level in miru_spark.roaring. Each value's bitmap is read
-    once per index generation and kept in the block cache (a value absent
+    once per index generation and kept in the serving cache (a value absent
     from the index caches as the empty bitmap)."""
     gen = _index_generation(index_dir)
     keys = {v: (index_dir, gen, f"filters/{field}", v) for v in values}
-    bitmaps = {v: _BLOCK_CACHE.get(k) for v, k in keys.items()}
+    bitmaps = {v: _CACHE.get(k) for v, k in keys.items()}
     missing = sorted(v for v, b in bitmaps.items() if b is None)
     if missing:
         t = _dataset(index_dir, "filters").to_table(
@@ -576,7 +541,7 @@ def load_filter_bitmap(index_dir: str, field: str, values: list[str]) -> bytes:
         read = dict(zip(t.column("value").to_pylist(), t.column("doc_ids").to_pylist()))
         for v in missing:
             bitmaps[v] = read.get(v) or roaring.or_many([])
-            _BLOCK_CACHE.put(keys[v], bitmaps[v], len(bitmaps[v]))
+            _CACHE.put(keys[v], bitmaps[v], len(bitmaps[v]))
     return roaring.or_many(list(bitmaps.values()))
 
 

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from types import SimpleNamespace
 
 import pandas as pd
 import pyarrow.parquet as pq
@@ -61,3 +62,27 @@ def global_doc_meta():
         return meta if columns is None else meta[columns]
 
     return read
+
+
+@pytest.fixture
+def serving_cache(monkeypatch):
+    """A private, empty serving cache for the test: scorer's ``_CACHE`` and
+    its ``_POSTING_CACHE`` alias. ``reset()`` swaps in another empty one;
+    ``drop_row_groups()`` evicts only the doc_meta_local row groups and the
+    filter bitmaps, so footers, postings and doc lengths stay warm."""
+    from miru_spark.query import scorer as sc
+
+    def reset():
+        cache = sc._ByteLRU()
+        monkeypatch.setattr(sc, "_CACHE", cache)
+        monkeypatch.setattr(sc, "_POSTING_CACHE", cache)
+        return cache
+
+    def drop_row_groups():
+        # a row group's key is its file's footer key plus the group number
+        for k in [k for k in sc._CACHE.entries
+                  if (k[2] == "doc_meta_local" and len(k) == 7) or k[2].startswith("filters/")]:
+            sc._CACHE.pop(k)
+
+    reset()
+    return SimpleNamespace(reset=reset, drop_row_groups=drop_row_groups)

@@ -93,7 +93,7 @@ def _tiny_row_groups(src, dst, rows_per_group):
     return dst
 
 
-def test_cold_gather_reads_only_wanted_row_groups(tiny_index, tmp_path, monkeypatch):
+def test_cold_gather_reads_only_wanted_row_groups(tiny_index, tmp_path, monkeypatch, serving_cache):
     rows_per_group = 7
     idx = _tiny_row_groups(tiny_index, str(tmp_path / "rg"), rows_per_group)
     pid, off, n = load_pid_offsets(idx)
@@ -110,7 +110,7 @@ def test_cold_gather_reads_only_wanted_row_groups(tiny_index, tmp_path, monkeypa
                          ("NOT merge", {}), ("rareterm0", {})):
         want = sc.search_local(tiny_index, query, k=10, **masks)
         sc.search_local(idx, query, k=10, gather=False, **masks)  # warm doc lengths
-        monkeypatch.setattr(sc, "_BLOCK_CACHE", sc._ByteLRU())  # cold row groups
+        serving_cache.drop_row_groups()
         reads.clear()
         diag = {}
         got = sc.search_local(idx, query, k=10, diag=diag, **masks)

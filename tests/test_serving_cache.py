@@ -1,7 +1,7 @@
-"""The serving path's caches: the byte-bounded block cache of decoded
-doc_meta_local row groups and filter bitmaps (scorer._BLOCK_CACHE), the
-posting-aligned doc lengths (scorer._TERM_DOCLENS), and the sweep of an
-index's stale generations out of every serving cache."""
+"""The serving path's one byte-bounded cache (scorer._CACHE): decoded
+postings and their aligned doc lengths, doc_meta_local footers and row
+groups, filter bitmaps, dense per-doc arrays and dataset handles; its bound,
+its keys, and the sweep of an index's stale generations."""
 
 import os
 import shutil
@@ -20,20 +20,23 @@ QUERIES = [
 ]
 
 
-def _cache_keys():
-    return [
-        k
-        for cache in (sc._DATASET_CACHE, sc._DOCLEN_CACHE, sc._POSTING_CACHE,
-                      sc._TERM_DOCLENS, sc._BLOCK_CACHE.entries)
-        for k in cache
-    ]
+def _kind(key):
+    """A cache key's kind: postings are keyed (index_dir, gen, term), a
+    row group by its file's footer key plus the group number."""
+    if len(key) == 3:
+        return "postings"
+    return "row_group" if key[2] == "doc_meta_local" and len(key) == 7 else key[2]
+
+
+def _assert_sizes_add_up():
+    assert sum(n for _, n in sc._CACHE.entries.values()) == sc._CACHE.nbytes
 
 
 @pytest.fixture
-def reads(monkeypatch):
+def reads(monkeypatch, serving_cache):
     """Counts doc_meta row-group reads and the dataset scans each serving
-    call starts, per index part, behind a fresh block cache and no dense
-    doc_len array (so queries take the sparse path)."""
+    call starts, per index part, behind a fresh cache (no dense doc_len
+    array, so queries take the sparse path)."""
     counts = {"row_groups": 0}
     read_row_group, dataset = sc._read_row_group, sc._dataset
 
@@ -47,8 +50,6 @@ def reads(monkeypatch):
 
     monkeypatch.setattr(sc, "_read_row_group", counting_read)
     monkeypatch.setattr(sc, "_dataset", counting_dataset)
-    monkeypatch.setattr(sc, "_BLOCK_CACHE", sc._ByteLRU())
-    monkeypatch.setattr(sc, "_DOCLEN_CACHE", {})
     return counts
 
 
@@ -63,26 +64,51 @@ def test_warm_repeat_reads_no_doc_meta_parquet(tiny_index, reads):
     reads["row_groups"] = 0
     warm = _answers(tiny_index)
     assert reads == {"row_groups": 0}, reads  # no doc_meta, filters or posting reads
-    assert (tiny_index, sc._index_generation(tiny_index), "doc_len") not in sc._DOCLEN_CACHE
+    assert (tiny_index, sc._index_generation(tiny_index), "dense", "doc_len") not in sc._CACHE
     for a, b in zip(cold, warm):
         assert a.equals(b)
-    assert sum(n for _, n in sc._BLOCK_CACHE.entries.values()) == sc._BLOCK_CACHE.nbytes
+    _assert_sizes_add_up()
 
 
-def test_byte_bound_holds_and_answers_unchanged(tiny_index, reads, monkeypatch):
+def test_byte_bound_holds_and_answers_unchanged(tiny_index, reads, serving_cache, monkeypatch):
+    """One bound over every kind: below what QUERIES hold at once, entries
+    of different kinds evict each other and every answer stays the unbounded one."""
     expected = _answers(tiny_index)
-    sizes = [n for _, n in sc._BLOCK_CACHE.entries.values()]
-    assert len(sizes) > 2
-    bound = sorted(sizes)[len(sizes) // 2] * 2  # holds a few entries, not all
-    assert bound < sum(sizes)
-    monkeypatch.setattr(sc, "_BLOCK_CACHE_MAX_BYTES", bound)
-    monkeypatch.setattr(sc, "_BLOCK_CACHE", sc._ByteLRU())
+    sizes = {}
+    for k, (_, n) in sc._CACHE.entries.items():
+        sizes.setdefault(_kind(k), []).append(n)
+    held = {"postings", "doclens", "row_group", "filters/lang"}
+    assert held <= set(sizes)
+    bound = sum(sum(sizes[kind]) for kind in held) // 3
+    assert bound >= max(max(sizes[kind]) for kind in held)  # every entry fits alone
+    monkeypatch.setattr(sc, "_CACHE_MAX_BYTES", bound)
+    serving_cache.reset()
+    evicted, before = set(), set()
     for _ in range(2):
         for (q, lang), want in zip(QUERIES, expected):
             got = sc.search_local(tiny_index, q, k=10, lang_filter=lang)
             assert got.equals(want), q
-            assert sc._BLOCK_CACHE.nbytes <= bound
-            assert sum(n for _, n in sc._BLOCK_CACHE.entries.values()) == sc._BLOCK_CACHE.nbytes
+            assert sc._CACHE.nbytes <= bound
+            _assert_sizes_add_up()
+            evicted |= {_kind(k) for k in before - set(sc._CACHE.entries)}
+            before = set(sc._CACHE.entries)
+    assert {"postings", "doclens", "row_group"} <= evicted
+
+
+def test_oversized_entry_is_served_not_kept(monkeypatch):
+    """An entry larger than the bound goes back to its caller and leaves
+    every older entry in place."""
+    monkeypatch.setattr(sc, "_CACHE_MAX_BYTES", 10 << 20)
+    cache = sc._ByteLRU()
+    for i in range(10):
+        assert cache.put(("idx", 0.0, "blob", i), i, 1 << 20) == i
+    before = dict(cache.entries)
+    big = np.zeros(1)
+    assert cache.put(("idx", 0.0, "big", 0), big, (10 << 20) + 1) is big
+    assert ("idx", 0.0, "big", 0) not in cache
+    assert cache.entries == before and cache.nbytes == 10 << 20
+    cache.put(("idx", 0.0, "blob", 10), 10, 1 << 20)  # one that fits still evicts the oldest
+    assert ("idx", 0.0, "blob", 0) not in cache and cache.nbytes == 10 << 20
 
 
 def test_meta_lookup_empty_and_absent_ids(tiny_index, reads):
@@ -109,7 +135,7 @@ def test_filter_bitmaps_match_doc_meta(tiny_index, reads, global_doc_meta):
     assert reads.get("filters") == 1  # the absent value is cached too
 
 
-def test_new_generation_sweeps_stale_cache_entries(tiny_index, tmp_path):
+def test_new_generation_sweeps_stale_cache_entries(tiny_index, tmp_path, serving_cache):
     idx = str(tmp_path / "copy")
     shutil.copytree(tiny_index, idx)
     sc.search_local(idx, "lang:python OR merge", k=10)  # termless
@@ -117,15 +143,15 @@ def test_new_generation_sweeps_stale_cache_entries(tiny_index, tmp_path):
     for q, lang in QUERIES:
         sc.search_local(idx, q, k=10, lang_filter=lang)
     old = sc._index_generation(idx)
-    for cache in (sc._DATASET_CACHE, sc._DOCLEN_CACHE, sc._POSTING_CACHE,
-                  sc._TERM_DOCLENS, sc._BLOCK_CACHE.entries):
-        assert any(k[:2] == (idx, old) for k in cache)
+    kinds = {"postings", "doclens", "dataset", "file", "doc_meta_local", "row_group",
+             "filters/lang", "dense"}
+    assert {_kind(k) for k in sc._CACHE.entries if k[:2] == (idx, old)} == kinds
     stats = os.path.join(idx, "corpus_stats.json")
     os.utime(stats, (os.path.getatime(stats), os.path.getmtime(stats) + 10))
     sc.search_local(idx, "merge AND sort", k=10, lang_filter=["python"])
     assert sc._index_generation(idx) != old
-    assert not [k for k in _cache_keys() if k[:2] == (idx, old)]
-    assert sum(n for _, n in sc._BLOCK_CACHE.entries.values()) == sc._BLOCK_CACHE.nbytes
+    assert not [k for k in sc._CACHE.entries if k[:2] == (idx, old)]
+    _assert_sizes_add_up()
 
 
 def test_filters_rewrite_after_merge_starts_a_new_generation(spark, tmp_path):
@@ -243,22 +269,27 @@ def ts_index(spark, tiny_corpus, tmp_path_factory):
     shutil.rmtree(index_dir, ignore_errors=True)
 
 
-@pytest.fixture
-def fresh_doclens(monkeypatch):
-    monkeypatch.setattr(sc, "_TERM_DOCLENS", {})
-    monkeypatch.setattr(sc, "_DOCLEN_CACHE", {})
+def _cached_doclens(index_dir):
+    """term → its cached aligned doc lengths, for ``index_dir``'s generation."""
+    gen = sc._index_generation(index_dir)
+    return {k[3]: v for k, (v, _) in sc._CACHE.entries.items()
+            if k[:3] == (index_dir, gen, "doclens")}
 
 
-def test_aligned_doclens_bitwise_equal_dense(tiny_index, fresh_doclens, monkeypatch):
+def _cached_postings(index_dir, term):
+    return sc._CACHE.entries[(index_dir, sc._index_generation(index_dir), term)][0]
+
+
+def test_aligned_doclens_bitwise_equal_dense(tiny_index, serving_cache, monkeypatch):
     _assert_matches_dense(tiny_index, SHAPES, monkeypatch)
-    gen = sc._index_generation(tiny_index)
-    assert any(k[:2] == (tiny_index, gen) for k in sc._TERM_DOCLENS)
-    for (_, _, t), lens in sc._TERM_DOCLENS.items():
+    cached = _cached_doclens(tiny_index)
+    assert cached
+    for t, lens in cached.items():
         assert lens.dtype == np.int32
-        assert lens.size == sc._POSTING_CACHE[(tiny_index, gen, t)][0].size
+        assert lens.size == _cached_postings(tiny_index, t)[0].size
 
 
-def test_aligned_doclens_time_masks_and_removals(ts_index, tmp_path, fresh_doclens, monkeypatch):
+def test_aligned_doclens_time_masks_and_removals(ts_index, tmp_path, serving_cache, monkeypatch):
     from miru_spark.index import removal
 
     _assert_matches_dense(ts_index, TIME_SHAPES, monkeypatch)
@@ -272,7 +303,7 @@ def test_aligned_doclens_time_masks_and_removals(ts_index, tmp_path, fresh_docle
         assert not victims & set(sc.search_local(idx, q, k=10, **masks)["doc_id"])
 
 
-def test_large_terms_gather_from_dense_array(tiny_index, fresh_doclens, monkeypatch):
+def test_large_terms_gather_from_dense_array(tiny_index, serving_cache, monkeypatch):
     """Terms over _SPARSE_IDS_MAX postings read the dense array per query
     and are never cached; the small ones still resolve once."""
     monkeypatch.setattr(sc, "_SPARSE_IDS_MAX", 12)
@@ -280,14 +311,14 @@ def test_large_terms_gather_from_dense_array(tiny_index, fresh_doclens, monkeypa
     diag = {}
     assert len(sc.search_local(tiny_index, "merge AND sort", k=10, diag=diag))
     assert diag["doclen_fetched"] == 0  # both terms are large
-    assert (tiny_index, gen, "doc_len") in sc._DOCLEN_CACHE
-    assert not sc._TERM_DOCLENS
+    assert (tiny_index, gen, "dense", "doc_len") in sc._CACHE
+    assert not _cached_doclens(tiny_index)
     _assert_matches_dense(tiny_index, SHAPES, monkeypatch)
-    cached = [k for k in sc._TERM_DOCLENS if k[:2] == (tiny_index, gen)]
+    cached = _cached_doclens(tiny_index)
     assert cached
-    assert all(sc._POSTING_CACHE[k][0].size <= 12 for k in cached)
-    assert sc._POSTING_CACHE[(tiny_index, gen, "merge")][0].size > 12
-    assert (tiny_index, gen, "merge") not in sc._TERM_DOCLENS
+    assert all(_cached_postings(tiny_index, t)[0].size <= 12 for t in cached)
+    assert _cached_postings(tiny_index, "merge")[0].size > 12
+    assert "merge" not in cached
 
 
 @pytest.fixture
@@ -305,7 +336,7 @@ def doclen_lookups(monkeypatch):
     return calls
 
 
-def test_warm_query_reads_no_doc_lengths(spark, tmp_path, fresh_doclens, doclen_lookups):
+def test_warm_query_reads_no_doc_lengths(spark, tmp_path, serving_cache, doclen_lookups):
     """A repeated query resolves no doc length from doc_meta; a refresh
     starts a generation that fetches them again and answers like a cold
     cache."""
@@ -343,3 +374,50 @@ def test_warm_query_reads_no_doc_lengths(spark, tmp_path, fresh_doclens, doclen_
     assert after.equals(sc.search_local(cold_dir, query, k=10))
     doclen_lookups.clear()
     assert served()[1] == 0 and doclen_lookups == []
+
+
+# ------------------------------------------------------------- one key space
+KIND_NAMES = ["doc_len", "ts", "all_ids", "pid_offsets", "merged", "stats", "filters"]
+
+
+def test_terms_named_like_cache_kinds_answer_cold(spark, tmp_path, serving_cache, monkeypatch):
+    """Terms spelled like another kind's name (the dense arrays, the offset
+    table, the dataset parts) share the cache with those entries but never
+    their keys: with the dense arrays resident, querying them answers like a
+    cold cache, and ``(index_dir, gen, term) in _POSTING_CACHE``, the
+    residency probe of perfbench's trace, holds exactly for loaded terms."""
+    from pyspark.sql import functions as F
+
+    from miru_spark.corpus import generate_corpus
+    from miru_spark.index.build import build_index
+
+    rowidx = F.regexp_extract("path", r"f(\d+)\.", 1).cast("long")
+    # the p-th name goes into every (3p + 2)-th doc: 30 docs down to 3, so
+    # some names are over _SPARSE_IDS_MAX (4) postings and some are not
+    extra = F.concat_ws(" ", *[F.when(rowidx % (3 * p + 2) == 0, F.lit(t))
+                               for p, t in enumerate(KIND_NAMES)])
+    corpus = (generate_corpus(spark, n_rows=60, seed=5, partitions=1)
+              .withColumn("content", F.concat_ws(" ", "content", extra))
+              .withColumn("sha256", F.sha2("content", 256))
+              .withColumn("ts", F.pmod(rowidx, F.lit(37))))
+    idx = str(tmp_path / "idx")
+    build_index(spark, corpus, idx, num_partitions=2)
+    monkeypatch.setattr(sc, "_SPARSE_IDS_MAX", 4)
+    gen = sc._index_generation(idx)
+    primers = ["ts:[0 TO 17]", "NOT merge", "merge"]  # dense ts, all ids, doc_len
+    for q in primers:
+        sc.search_local(idx, q, k=10)
+    for name in ("ts", "all_ids", "doc_len"):
+        assert (idx, gen, "dense", name) in sc._CACHE, name
+    assert (idx, gen, "file", "pid_offsets.json") in sc._CACHE
+    assert (idx, gen, "dataset", "merged") in sc._CACHE
+
+    queries = [*KIND_NAMES, " OR ".join(KIND_NAMES), "doc_len AND NOT ts", *primers]
+    warm = [sc.search_local(idx, q, k=10) for q in queries]
+    assert all(len(w) for w in warm)
+    for t in [*KIND_NAMES, "merge", "sort", "no_such_term"]:
+        loaded = t in KIND_NAMES or t == "merge"
+        assert ((idx, gen, t) in sc._POSTING_CACHE) == loaded, t
+    for q, want in zip(queries, warm):
+        serving_cache.reset()
+        assert sc.search_local(idx, q, k=10).equals(want), q

@@ -188,7 +188,7 @@ def _assert_same_answers(a, b):
         assert x.equals(y), (x, y)
 
 
-def test_published_generation_stays_consistent(spark, tmp_path, monkeypatch):
+def test_published_generation_stays_consistent(spark, tmp_path, monkeypatch, serving_cache):
     """Between an append and its refresh, and between a compaction and the
     next refresh, every path answers from the last published generation:
     also inside the swap, after compaction (or a sync to a replica) replaced
@@ -198,7 +198,6 @@ def test_published_generation_stays_consistent(spark, tmp_path, monkeypatch):
     from miru_spark.index import compact as compact_mod
     from miru_spark.index.merge import load_pid_offsets
     from miru_spark import sync as sync_mod
-    from miru_spark.query import scorer as sc
 
     full = generate_corpus(spark, n_rows=240, seed=13, partitions=1)
     rowidx = F.regexp_extract("path", r"f(\d+)\.", 1).cast("long")
@@ -213,7 +212,7 @@ def test_published_generation_stays_consistent(spark, tmp_path, monkeypatch):
         footers stay cached from the published generation, row groups are
         read cold from the files the swap replaced."""
         def hook(*args):
-            monkeypatch.setattr(sc, "_BLOCK_CACHE", sc._ByteLRU())
+            serving_cache.drop_row_groups()
             _assert_same_answers(expected, _window_answers(spark, index_dir))
             republish(*args)
         return hook
@@ -251,7 +250,7 @@ def test_published_generation_stays_consistent(spark, tmp_path, monkeypatch):
         with pytest.raises(RuntimeError, match="crash"):
             sync_mod.sync_index(idx, replica)
     assert load_pid_offsets(replica)[0].tolist() == [pid[0]]
-    monkeypatch.setattr(sc, "_BLOCK_CACHE", sc._ByteLRU())
+    serving_cache.drop_row_groups()
     _assert_same_answers(published, _window_answers(spark, replica))
 
     refresh(spark, idx)

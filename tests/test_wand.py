@@ -164,7 +164,7 @@ def test_wand_topk_property(data):
     np.testing.assert_allclose(scores[order], exp_scores[:kk], rtol=1e-12)
 
 
-def test_sparse_serving_reads_match_dense(tiny_index, monkeypatch, global_doc_meta):
+def test_sparse_serving_reads_match_dense(tiny_index, serving_cache, global_doc_meta):
     """Serving a small-universe query takes the sparse path through the
     doc_meta row-group cache (_sparse_col / _docmeta_for). Its answer with
     a cold cache, with a warm cache and with the dense doc_len array must
@@ -177,14 +177,12 @@ def test_sparse_serving_reads_match_dense(tiny_index, monkeypatch, global_doc_me
 
     full = global_doc_meta(tiny_index).set_index("doc_id")
     gen = sc._index_generation(tiny_index)
-    monkeypatch.setattr(sc, "_DOCLEN_CACHE", {})
     for q in ("rareterm0", "merge AND sort"):
-        monkeypatch.setattr(sc, "_BLOCK_CACHE", sc._ByteLRU())
-        sc._DOCLEN_CACHE.clear()
+        serving_cache.reset()
         cold = sc.search_local(tiny_index, q, k=10)
-        assert sc._BLOCK_CACHE.entries, q
+        assert any(k[2] == "doc_meta_local" and len(k) == 7 for k in sc._CACHE.entries), q
         warm = sc.search_local(tiny_index, q, k=10)
-        assert (tiny_index, gen, "doc_len") not in sc._DOCLEN_CACHE
+        assert (tiny_index, gen, "dense", "doc_len") not in sc._CACHE
         sc._dense_column(tiny_index, "doc_len")  # warm the dense array: the dense path
         dense = sc.search_local(tiny_index, q, k=10)
         assert len(cold), q
