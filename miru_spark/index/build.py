@@ -47,7 +47,7 @@ from miru_spark.analyzer import tokenize_arrow_flat
 from miru_spark import roaring
 from miru_spark.codec import encode_postings
 from miru_spark.corpus import verify_sha256
-from miru_spark.index.merge import ROW_GROUP_BYTES, forward_index
+from miru_spark.index.merge import ROW_GROUP_BYTES, forward_index, whole_groups
 from miru_spark.jsonio import load_json, save_json_atomic
 
 KEY_COLS = ["repo", "path", "commit"]
@@ -407,33 +407,43 @@ def build_field_filters(spark: SparkSession, index_dir: str) -> None:
     (miru-plugin/.../index/MiruAuthzIndex.java:9-13); AND/OR/ANDNOT against
     candidate doc sets at query time. Low-cardinality fields only.
 
+    One scan of the forward index, stacked into (field, value, doc_id) rows,
+    hashed by (field, value) and sorted by doc_id within each group; a
+    ``mapInArrow`` kernel encodes every group's sorted ids with
+    ``roaring.from_array`` (``merge.whole_groups``: no pandas, no Python call
+    per group from Spark).
+
     Ends by re-saving ``corpus_stats.json``: its mtime is the serving
     caches' generation stamp, and merge_segments writes it BEFORE this
     rewrite — a query in between would cache the old bitmaps under the new
     generation. Re-saving it makes it once more the last file written.
     """
-    meta = forward_index(spark, index_dir)
-    out_schema = T.StructType(
-        [
-            T.StructField("field", T.StringType()),
-            T.StructField("value", T.StringType()),
-            T.StructField("n", T.LongType()),
-            T.StructField("doc_ids", T.BinaryType()),
-        ]
+    keys = ("field", "value")
+
+    def enc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch, starts in whole_groups(batches, keys):
+            bounds = np.append(starts, batch.num_rows)
+            ids = batch.column("doc_id").to_numpy()
+            bitmaps = [roaring.from_array(ids[s:e]) for s, e in zip(bounds[:-1], bounds[1:])]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("field").take(starts),
+                    batch.column("value").take(starts),
+                    pa.array(np.diff(bounds)),
+                    pa.array(bitmaps, pa.binary()),
+                ],
+                names=["field", "value", "n", "doc_ids"],
+            )
+
+    (
+        forward_index(spark, index_dir)
+        .selectExpr("stack(2, 'lang', lang, 'repo', repo) AS (field, value)", "doc_id")
+        .repartition(*keys)
+        .sortWithinPartitions(*keys, "doc_id")
+        .mapInArrow(enc, "field string, value string, n long, doc_ids binary")
+        .write.mode("overwrite")
+        .parquet(os.path.join(index_dir, "filters"))
     )
-
-    def enc(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
-        return pd.DataFrame(
-            [{"field": key[0], "value": key[1], "n": len(ids), "doc_ids": roaring.from_array(ids)}]
-        )
-
-    frames = []
-    for field in ("lang", "repo"):
-        kv = meta.select(F.lit(field).alias("field"), F.col(field).alias("value"), "doc_id")
-        frames.append(kv.groupBy("field", "value").applyInPandas(enc, schema=out_schema))
-    out = frames[0].unionAll(frames[1])
-    out.write.mode("overwrite").parquet(os.path.join(index_dir, "filters"))
     stats_path = os.path.join(index_dir, "corpus_stats.json")
     save_json_atomic(stats_path, load_json(stats_path, None))
 

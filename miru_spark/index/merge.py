@@ -20,9 +20,13 @@ by Catalyst, never touching posting payloads.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -106,24 +110,74 @@ def forward_index(spark: SparkSession, index_dir: str) -> DataFrame:
 
 
 INTERMEDIATE_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("shard", T.IntegerType()),
-        T.StructField("runkey", T.LongType()),
-        T.StructField("df", T.LongType()),
-        T.StructField("cf", T.LongType()),
-        T.StructField("min_doc", T.LongType()),
-        T.StructField("max_doc", T.LongType()),
-        T.StructField("docids", T.BinaryType()),
-        T.StructField("tfs", T.BinaryType()),
-        T.StructField("block_last", T.BinaryType()),
-        T.StructField("block_max_tf", T.BinaryType()),
-    ]
+    MERGED_SCHEMA.fields[:2] + [T.StructField("runkey", T.LongType())] + MERGED_SCHEMA.fields[2:]
 )
+RUN_COLS = [f.name for f in MERGED_SCHEMA.fields[2:]]
 
 
-def _concat_runs(pdf: pd.DataFrame, off: dict, runcol: str) -> dict:
-    """Concatenate docID-ordered posting runs WITHOUT decoding.
+def _group_starts(batch: pa.RecordBatch, keys) -> np.ndarray:
+    """Rows of ``batch`` (sorted by ``keys``) where a new group starts.
+    Null keys form one group, as under groupBy."""
+    new = np.zeros(batch.num_rows, dtype=bool)
+    new[:1] = True
+    for k in keys:
+        col = batch.column(k)
+        a, b = col.slice(1), col.slice(0, len(col) - 1)
+        ne = pc.not_equal(a, b)
+        if ne.null_count:
+            ne = pc.if_else(pc.is_null(ne), pc.xor(pc.is_null(a), pc.is_null(b)), ne)
+        new[1:] |= ne.to_numpy(zero_copy_only=False)
+    return np.flatnonzero(new)
+
+
+def whole_groups(batches, keys) -> Iterator[tuple[pa.RecordBatch, np.ndarray]]:
+    """Regroup Arrow batches sorted by ``keys`` into batches of whole groups:
+    each group lands in exactly one yielded batch, wherever the input batch
+    boundaries fall. Yields (batch, group start rows). The open group at the
+    end of a batch is carried into the next one, so memory stays bounded by
+    one input batch plus one group — and a kernel sees many groups per call
+    instead of one Python call per group."""
+    carry = None
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        if carry is not None:
+            batch = pa.Table.from_batches([carry, batch]).combine_chunks().to_batches()[0]
+        starts = _group_starts(batch, keys)
+        last = int(starts[-1])
+        if last:
+            yield batch.slice(0, last), starts[:-1]
+        carry = batch.slice(last)
+    if carry is not None:
+        yield carry, np.zeros(1, dtype=np.int64)
+
+
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenated aranges [starts[i], starts[i] + lens[i])."""
+    return np.repeat(starts - (np.cumsum(lens) - lens), lens) + np.arange(int(lens.sum()))
+
+
+def _binary_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets, data) of a binary array: row i is data[offsets[i]:offsets[i+1]]."""
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    _, offs, data = arr.buffers()
+    offs = np.frombuffer(offs, dtype=width)[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
+    return offs, np.frombuffer(data, dtype=np.uint8)
+
+
+def _binary(offs: np.ndarray, data: np.ndarray) -> pa.Array:
+    """Binary array whose row i is data[offs[i]:offs[i+1]]."""
+    lo, hi = int(offs[0]), int(offs[-1])
+    buffers = [None, pa.py_buffer((offs - lo).astype(np.int32)), pa.py_buffer(data[lo:hi])]
+    return pa.Array.from_buffers(pa.binary(), len(offs) - 1, buffers)
+
+
+def _concat_runs(
+    batch: pa.RecordBatch, starts: np.ndarray, off: np.ndarray | None, runcol: str
+) -> list[pa.Array]:
+    """Concatenate docID-ordered posting runs WITHOUT decoding, one output
+    row per group of ``batch`` (groups start at ``starts``, runs within a
+    group ordered by ``runcol``). Returns the RUN_COLS arrays.
 
     Delta encoding makes a run position-independent except for its first
     gap: rewriting run i's first varint to
@@ -131,56 +185,80 @@ def _concat_runs(pdf: pd.DataFrame, off: dict, runcol: str) -> dict:
     byte-concatenating the rest globalizes + merges in O(bytes) — the same
     only-touch-the-boundary property miru gets from atomized posting keys
     (LabInvertedIndex.java:87-150). TF payloads are gap-free varints (pure
-    concat); block_last arrays shift by the offset vectorized. ``off`` maps
-    runcol → docID offset (empty after the first level: ids already global).
+    concat); block_last arrays shift by the offset. ``off`` maps runcol →
+    docID offset (None after the first level: ids already global).
     Associative, so hierarchical multi-level merging yields identical bytes.
+    All of it is vectorized over the batch: no Python work per run or group.
     """
-    pdf = pdf.sort_values(runcol)  # run order == docID order (disjoint ranges)
-    d_parts: list[bytes] = []
-    bl_parts: list[bytes] = []
-    prev_last = 0
-    gmin = -1
-    df = 0
-    cf = 0
-    for rk, db, mind, maxd, bl, rdf, rcf in zip(
-        pdf[runcol], pdf["docids"], pdf["min_doc"], pdf["max_doc"],
-        pdf["block_last"], pdf["df"], pdf["cf"]
-    ):
-        o = off.get(int(rk), 0)
-        gfirst = int(mind) + o
-        k = 1  # length of the first varint in db
-        while db[k - 1] & 0x80:
-            k += 1
-        d_parts.append(encode_varint(np.array([gfirst - prev_last], dtype=np.uint64)))
-        d_parts.append(db[k:])
-        bl_parts.append((np.frombuffer(bl, dtype=np.int64) + o).tobytes() if o else bytes(bl))
-        prev_last = int(maxd) + o
-        if gmin < 0:
-            gmin = gfirst
-        df += int(rdf)
-        cf += int(rcf)
-    return {
-        "df": df,
-        "cf": cf,
-        "min_doc": gmin,
-        "max_doc": prev_last,
-        "docids": b"".join(d_parts),
-        "tfs": b"".join(pdf["tfs"]),
-        "block_last": b"".join(bl_parts),
-        "block_max_tf": b"".join(pdf["block_max_tf"]),
-    }
+    n = batch.num_rows
+    bounds = np.append(starts, n)
+    o = off[batch.column(runcol).to_numpy()] if off is not None else np.zeros(n, dtype=np.int64)
+    gmin = batch.column("min_doc").to_numpy() + o
+    glast = batch.column("max_doc").to_numpy() + o
+    prev_last = np.concatenate([[0], glast[:-1]])
+    prev_last[starts] = 0
+    gaps = (gmin - prev_last).astype(np.uint64)
+    gap_len = np.ones(n, dtype=np.int64)  # LEB128 bytes of each new first varint
+    for j in range(1, 10):
+        gap_len += (gaps >> np.uint64(7 * j)) > 0
+
+    # docids: drop each run's first varint, splice in its new gap
+    offs, data = _binary_parts(batch.column("docids"))
+    first_len = np.ones(n, dtype=np.int64)  # LEB128 bytes of each run's first varint
+    cont = np.flatnonzero(data[offs[:-1]] & 0x80)
+    while cont.size:
+        first_len[cont] += 1
+        cont = cont[(data[offs[:-1][cont] + first_len[cont] - 1] & 0x80) != 0]
+    keep = np.ones(data.size, dtype=bool)
+    keep[_ranges(offs[:-1], first_len)] = False
+    out_offs = np.concatenate([[0], np.cumsum(gap_len + np.diff(offs) - first_len)])
+    is_gap = np.zeros(int(out_offs[-1]), dtype=bool)
+    is_gap[_ranges(out_offs[:-1], gap_len)] = True
+    docids = np.empty(is_gap.size, dtype=np.uint8)
+    docids[is_gap] = np.frombuffer(encode_varint(gaps), dtype=np.uint8)
+    docids[~is_gap] = data[offs[0] : offs[-1]][keep[offs[0] : offs[-1]]]
+
+    bl_offs, bl = _binary_parts(batch.column("block_last"))
+    if off is not None:
+        bl = bl[bl_offs[0] : bl_offs[-1]].view(np.int64) + np.repeat(o, np.diff(bl_offs) // 8)
+        bl, bl_offs = bl.view(np.uint8), bl_offs - bl_offs[0]
+
+    def regrouped(col: str) -> pa.Array:
+        offs, data = _binary_parts(batch.column(col))
+        return _binary(offs[bounds], data)
+
+    return [
+        pa.array(np.add.reduceat(batch.column("df").to_numpy(), starts)),
+        pa.array(np.add.reduceat(batch.column("cf").to_numpy(), starts)),
+        pa.array(gmin[starts]),
+        pa.array(glast[bounds[1:] - 1]),
+        _binary(out_offs[bounds], docids),
+        regrouped("tfs"),
+        _binary(bl_offs[bounds], bl),
+        regrouped("block_max_tf"),
+    ]
 
 
 def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None) -> dict:
     """segments/*.parquet → merged/ + stats/ + pid_offsets.json +
     corpus_stats.json.
 
+    The salted segment rows are range-partitioned by (term, shard) into
+    ``spark.sql.shuffle.partitions`` partitions, sorted by (term, shard, run),
+    and concatenated by the Arrow kernel ``_concat_runs`` in one
+    ``mapInArrow`` task per partition, which writes merged/ directly. The
+    range sampling runs over the JVM-only segment plan, so nothing is
+    cached and the Python kernel runs once. The partition count is explicit,
+    so AQE cannot collapse merged/ into one file, and the file count does not
+    grow with the number of pids.
+
     Applies the global docID offsets during the first concatenation level
     (free — only first varints are rewritten). ``fanin`` bounds how many runs
-    any single reduce task concatenates: with more partitions than ``fanin``,
+    any single group concatenates: with more partitions than ``fanin``,
     intermediate hierarchical levels merge ``fanin`` adjacent runs at a time
-    (within their salt shard, so skew bounds still hold) — the tree merge a
-    10^6-partition build needs so no task ever sees a million runs.
+    (within their salt shard, so skew bounds still hold), each after a hash
+    exchange on (term, shard, gk) — the tree merge a 10^6-partition build
+    needs so no group ever holds a million runs.
 
     The forward index is not rewritten: the (pid, offset, n_docs) table
     addresses doc_meta_local by docID (miru's partition + local docID
@@ -191,17 +269,19 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
     pids, n_docs, n_tokens = np.array(
         [(m["pid"], m["n_docs"], m["n_tokens"]) for m in _load_manifests(index_dir)], dtype=np.int64
     ).reshape(-1, 3).T
-    offsets = dict(zip(pids.tolist(), (np.cumsum(n_docs) - n_docs).tolist()))
+    n_pids = int(pids.max()) + 1
+    offsets = np.zeros(n_pids, dtype=np.int64)
+    offsets[pids] = np.cumsum(n_docs) - n_docs
     off_b = spark.sparkContext.broadcast(offsets)
     seg = spark.read.parquet(os.path.join(index_dir, "segments"))
-    n_pids = max(offsets) + 1
 
     # global per-term stats (partial sums per segment row → tiny shuffle)
+    stats_dir = os.path.join(index_dir, "stats")
     stats = seg.groupBy("term").agg(
         F.sum("df").alias("df"), F.sum("cf").alias("cf")
     )
-    stats.write.mode("overwrite").parquet(os.path.join(index_dir, "stats"))
-    stats = spark.read.parquet(os.path.join(index_dir, "stats"))
+    stats.write.mode("overwrite").parquet(stats_dir)
+    stats = spark.read.parquet(stats_dir)
 
     # span per term: contiguous pid ranges per shard, sized to bound skew
     span_col = F.greatest(
@@ -219,38 +299,36 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
     # FIRST concatenation level, keyed by original pid
     level = salted.withColumn("runkey", (F.col("pid") % F.col("span")).cast("long"))
     width = n_pids  # upper bound on runs per (term, shard) group
-    first_level = True
+    runcol = "pid"
 
-    def make_level(apply_offsets: bool, group_runs: int | None):
-        """Build the applyInPandas fn for one merge level. group_runs=None →
-        final level (collapse to one row per (term, shard))."""
-        def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            off = off_b.value if apply_offsets else {}
-            row = _concat_runs(pdf, off, "pid" if apply_offsets else "runkey")
-            out = {"term": key[0], "shard": int(key[1]), **row}
-            if group_runs is not None:
-                out["runkey"] = int(key[2])
-            return pd.DataFrame([out])[
-                [f.name for f in (INTERMEDIATE_SCHEMA if group_runs is not None else MERGED_SCHEMA).fields]
-            ]
+    def concat(keys, runcol: str, schema: T.StructType):
+        """The mapInArrow kernel of one level: one row per ``keys`` group."""
+        def fn(batches):
+            off = off_b.value if runcol == "pid" else None
+            for batch, starts in whole_groups(batches, keys):
+                cols = [batch.column(k).take(starts) for k in keys] + _concat_runs(batch, starts, off, runcol)
+                yield pa.RecordBatch.from_arrays(cols, names=schema.names)
+
         return fn
 
     while fanin and width > fanin:
-        grouped = level.withColumn("gk", (F.col("runkey") / F.lit(fanin)).cast("long"))
-        level = grouped.groupBy("term", "shard", "gk").applyInPandas(
-            make_level(first_level, fanin), schema=INTERMEDIATE_SCHEMA
+        keys = ("term", "shard", "gk")
+        level = (
+            level.withColumn("gk", (F.col("runkey") / F.lit(fanin)).cast("long"))
+            .select(*keys, runcol, *RUN_COLS)
+            .repartition(*keys)
+            .sortWithinPartitions(*keys, runcol)
+            .mapInArrow(concat(keys, runcol, INTERMEDIATE_SCHEMA), INTERMEDIATE_SCHEMA)
         )
-        first_level = False
+        runcol = "runkey"
         width = -(-width // fanin)
 
-    # persist before repartitionByRange: the range partitioner's sampling
-    # pass would otherwise EXECUTE the whole merge twice (measured ~2x)
-    merged = level.groupBy("term", "shard").applyInPandas(
-        make_level(first_level, None), schema=MERGED_SCHEMA
-    ).persist()
+    keys = ("term", "shard")
     (
-        merged.repartitionByRange(max(8, n_pids), "term")
-        .sortWithinPartitions("term", "shard")
+        level.select(*keys, runcol, *RUN_COLS)
+        .repartitionByRange(int(spark.conf.get("spark.sql.shuffle.partitions")), *keys)
+        .sortWithinPartitions(*keys, runcol)
+        .mapInArrow(concat(keys, runcol, MERGED_SCHEMA), MERGED_SCHEMA)
         .write.mode("overwrite")
         # small row groups → parquet min/max term stats prune at ~few-rows
         # granularity; without this, a 3-head-term query decompressed every
@@ -258,15 +336,13 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
         .option("parquet.block.size", ROW_GROUP_BYTES)
         .parquet(os.path.join(index_dir, "merged"))
     )
-    merged.unpersist()
 
-    n_terms = stats.count()
     corpus_stats = {
         "n_docs": int(n_docs.sum()),
         "avgdl": int(n_tokens.sum()) / int(n_docs.sum()),
         "max_doc_id": int(n_docs.sum()) - 1,
-        "n_terms": int(n_terms),
-        "n_pids": int(n_pids),
+        "n_terms": int(pads.dataset(stats_dir).count_rows()),
+        "n_pids": n_pids,
     }
     publish_pid_offsets(index_dir, pids, n_docs)
     # the serving caches' generation stamp: written after every merged
