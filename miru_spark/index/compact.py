@@ -34,14 +34,12 @@ from __future__ import annotations
 import json
 import os
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from miru_spark.index.build import write_forward_index, write_parquet_atomic
-from miru_spark.index.merge import _concat_runs, _group_starts, load_pid_offsets, republish_without
+from miru_spark.index.merge import _concat_runs, load_pid_offsets, republish_without
 from miru_spark.jsonio import save_json_atomic
 
 
@@ -148,20 +146,19 @@ def compact(index_dir: str, target_docs: int = 1_000_000) -> dict:
         if len(group) == 1:
             continue  # nothing to compact
         # local offsets within the group: cumulative docs in pid order
-        off = np.zeros(max(m["pid"] for m in group) + 1, dtype=np.int64)
-        acc = 0
+        off, acc = {}, 0
         for m in group:
             off[m["pid"]] = acc
             acc += m["n_docs"]
         # --- postings: read all group segments, concat runs per term
-        seg = (
-            pa.concat_tables([pq.read_table(m["segment_file"]) for m in group])
-            .sort_by([("term", "ascending"), ("pid", "ascending")])
-            .combine_chunks()
-            .to_batches()[0]
-        )
-        starts = _group_starts(seg, ("term",))
+        frames = [pq.read_table(m["segment_file"]).to_pandas() for m in group]
+        seg = pd.concat(frames, ignore_index=True)
         new_pid = group[0]["pid"]
+        rows = []
+        for term, grp in seg.groupby("term", sort=True):
+            row = _concat_runs(grp.sort_values("pid"), off, "pid")
+            rows.append({"term": term, "pid": new_pid, **row})
+        out = pd.DataFrame(rows)
         new_seg = os.path.join(seg_dir, f"seg_{new_pid}.parquet")
         new_meta = os.path.join(meta_dir, f"meta_{new_pid}.parquet")
         # stage under _-prefixed names: invisible to spark/pyarrow dataset
@@ -170,12 +167,7 @@ def compact(index_dir: str, target_docs: int = 1_000_000) -> dict:
         staged_seg = os.path.join(seg_dir, f"_compact_seg_{new_pid}.parquet")
         staged_meta = os.path.join(meta_dir, f"_compact_meta_{new_pid}.parquet")
         schema = pq.read_schema(group[0]["segment_file"])
-        out = pa.Table.from_arrays(
-            [seg.column("term").take(starts), pa.array(np.full(starts.size, new_pid, dtype=np.int32)),
-             *_concat_runs(seg, starts, off, "pid")],
-            schema=schema,
-        )
-        write_parquet_atomic(out, staged_seg)
+        write_parquet_atomic(pa.Table.from_pandas(out[[f.name for f in schema]], schema=schema), staged_seg)
 
         # --- forward index: concat with rebased local ids
         metas = []
@@ -193,8 +185,8 @@ def compact(index_dir: str, target_docs: int = 1_000_000) -> dict:
             "pid": new_pid,
             "n_docs": int(sum(m["n_docs"] for m in group)),
             "n_tokens": int(sum(m["n_tokens"] for m in group)),
-            "n_postings": int(pc.sum(out.column("df")).as_py()),
-            "n_terms": out.num_rows,
+            "n_postings": int(out["df"].sum()),
+            "n_terms": int(len(out)),
             "doc_id_start": 0,
             "doc_id_end": int(sum(m["n_docs"] for m in group)) - 1,
             "segment_file": new_seg,

@@ -130,54 +130,50 @@ def _group_starts(batch: pa.RecordBatch, keys) -> np.ndarray:
     return np.flatnonzero(new)
 
 
+def _combined(batches: list[pa.RecordBatch]) -> pa.RecordBatch:
+    """The rows of ``batches`` (one schema) as one contiguous batch."""
+    if len(batches) == 1:
+        return batches[0]
+    return pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+
+
 def whole_groups(batches, keys) -> Iterator[tuple[pa.RecordBatch, np.ndarray]]:
     """Regroup Arrow batches sorted by ``keys`` into batches of whole groups:
     each group lands in exactly one yielded batch, wherever the input batch
     boundaries fall. Yields (batch, group start rows). The open group at the
-    end of a batch is carried into the next one, so memory stays bounded by
-    one input batch plus one group — and a kernel sees many groups per call
-    instead of one Python call per group."""
-    carry = None
+    end of a batch is carried, as a list of slices, into the next batch; a
+    batch that only continues it is appended, so a group spanning k batches
+    is copied once, not k times. Memory stays bounded by one input batch
+    plus one group, and a kernel sees many groups per call instead of one
+    Python call per group."""
+    carry: list[pa.RecordBatch] = []  # the open group, all of one key
+    n_carry = 0
     for batch in batches:
         if not batch.num_rows:
             continue
-        if carry is not None:
-            batch = pa.Table.from_batches([carry, batch]).combine_chunks().to_batches()[0]
         starts = _group_starts(batch, keys)
+        if carry:
+            seam = _combined([carry[-1].slice(carry[-1].num_rows - 1), batch.slice(0, 1)])
+            if _group_starts(seam, keys).size == 1:
+                starts = starts[1:]  # row 0 continues the open group
+                if not starts.size:
+                    carry.append(batch)
+                    n_carry += batch.num_rows
+                    continue
         last = int(starts[-1])
-        if last:
-            yield batch.slice(0, last), starts[:-1]
-        carry = batch.slice(last)
-    if carry is not None:
-        yield carry, np.zeros(1, dtype=np.int64)
+        done = np.concatenate([np.zeros(int(bool(carry)), dtype=np.int64), starts[:-1] + n_carry])
+        if done.size:
+            yield _combined(carry + [batch.slice(0, last)]), done
+        carry, n_carry = [batch.slice(last)], batch.num_rows - last
+    if carry:
+        yield _combined(carry), np.zeros(1, dtype=np.int64)
 
 
-def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Concatenated aranges [starts[i], starts[i] + lens[i])."""
-    return np.repeat(starts - (np.cumsum(lens) - lens), lens) + np.arange(int(lens.sum()))
-
-
-def _binary_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(offsets, data) of a binary array: row i is data[offsets[i]:offsets[i+1]]."""
-    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    _, offs, data = arr.buffers()
-    offs = np.frombuffer(offs, dtype=width)[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
-    return offs, np.frombuffer(data, dtype=np.uint8)
-
-
-def _binary(offs: np.ndarray, data: np.ndarray) -> pa.Array:
-    """Binary array whose row i is data[offs[i]:offs[i+1]]."""
-    lo, hi = int(offs[0]), int(offs[-1])
-    buffers = [None, pa.py_buffer((offs - lo).astype(np.int32)), pa.py_buffer(data[lo:hi])]
-    return pa.Array.from_buffers(pa.binary(), len(offs) - 1, buffers)
-
-
-def _concat_runs(
-    batch: pa.RecordBatch, starts: np.ndarray, off: np.ndarray | None, runcol: str
-) -> list[pa.Array]:
-    """Concatenate docID-ordered posting runs WITHOUT decoding, one output
-    row per group of ``batch`` (groups start at ``starts``, runs within a
-    group ordered by ``runcol``). Returns the RUN_COLS arrays.
+def _concat_runs(runs, off: dict, runcol: str) -> dict:
+    """Concatenate one group's docID-ordered posting runs WITHOUT decoding.
+    ``runs`` maps each RUN_COLS column and ``runcol`` to the group's values,
+    in ``runcol`` order (run order == docID order: disjoint ranges); a
+    pandas frame or a dict of lists.
 
     Delta encoding makes a run position-independent except for its first
     gap: rewriting run i's first varint to
@@ -185,58 +181,43 @@ def _concat_runs(
     byte-concatenating the rest globalizes + merges in O(bytes) — the same
     only-touch-the-boundary property miru gets from atomized posting keys
     (LabInvertedIndex.java:87-150). TF payloads are gap-free varints (pure
-    concat); block_last arrays shift by the offset. ``off`` maps runcol →
-    docID offset (None after the first level: ids already global).
+    concat); block_last arrays shift by the offset vectorized. ``off`` maps
+    runcol → docID offset (empty after the first level: ids already global).
     Associative, so hierarchical multi-level merging yields identical bytes.
-    All of it is vectorized over the batch: no Python work per run or group.
     """
-    n = batch.num_rows
-    bounds = np.append(starts, n)
-    o = off[batch.column(runcol).to_numpy()] if off is not None else np.zeros(n, dtype=np.int64)
-    gmin = batch.column("min_doc").to_numpy() + o
-    glast = batch.column("max_doc").to_numpy() + o
-    prev_last = np.concatenate([[0], glast[:-1]])
-    prev_last[starts] = 0
-    gaps = (gmin - prev_last).astype(np.uint64)
-    gap_len = np.ones(n, dtype=np.int64)  # LEB128 bytes of each new first varint
-    for j in range(1, 10):
-        gap_len += (gaps >> np.uint64(7 * j)) > 0
-
-    # docids: drop each run's first varint, splice in its new gap
-    offs, data = _binary_parts(batch.column("docids"))
-    first_len = np.ones(n, dtype=np.int64)  # LEB128 bytes of each run's first varint
-    cont = np.flatnonzero(data[offs[:-1]] & 0x80)
-    while cont.size:
-        first_len[cont] += 1
-        cont = cont[(data[offs[:-1][cont] + first_len[cont] - 1] & 0x80) != 0]
-    keep = np.ones(data.size, dtype=bool)
-    keep[_ranges(offs[:-1], first_len)] = False
-    out_offs = np.concatenate([[0], np.cumsum(gap_len + np.diff(offs) - first_len)])
-    is_gap = np.zeros(int(out_offs[-1]), dtype=bool)
-    is_gap[_ranges(out_offs[:-1], gap_len)] = True
-    docids = np.empty(is_gap.size, dtype=np.uint8)
-    docids[is_gap] = np.frombuffer(encode_varint(gaps), dtype=np.uint8)
-    docids[~is_gap] = data[offs[0] : offs[-1]][keep[offs[0] : offs[-1]]]
-
-    bl_offs, bl = _binary_parts(batch.column("block_last"))
-    if off is not None:
-        bl = bl[bl_offs[0] : bl_offs[-1]].view(np.int64) + np.repeat(o, np.diff(bl_offs) // 8)
-        bl, bl_offs = bl.view(np.uint8), bl_offs - bl_offs[0]
-
-    def regrouped(col: str) -> pa.Array:
-        offs, data = _binary_parts(batch.column(col))
-        return _binary(offs[bounds], data)
-
-    return [
-        pa.array(np.add.reduceat(batch.column("df").to_numpy(), starts)),
-        pa.array(np.add.reduceat(batch.column("cf").to_numpy(), starts)),
-        pa.array(gmin[starts]),
-        pa.array(glast[bounds[1:] - 1]),
-        _binary(out_offs[bounds], docids),
-        regrouped("tfs"),
-        _binary(bl_offs[bounds], bl),
-        regrouped("block_max_tf"),
-    ]
+    d_parts: list[bytes] = []
+    bl_parts: list[bytes] = []
+    prev_last = 0
+    gmin = -1
+    df = 0
+    cf = 0
+    for rk, db, mind, maxd, bl, rdf, rcf in zip(
+        runs[runcol], runs["docids"], runs["min_doc"], runs["max_doc"],
+        runs["block_last"], runs["df"], runs["cf"]
+    ):
+        o = off.get(int(rk), 0)
+        gfirst = int(mind) + o
+        k = 1  # length of the first varint in db
+        while db[k - 1] & 0x80:
+            k += 1
+        d_parts.append(encode_varint(np.array([gfirst - prev_last], dtype=np.uint64)))
+        d_parts.append(db[k:])
+        bl_parts.append((np.frombuffer(bl, dtype=np.int64) + o).tobytes() if o else bytes(bl))
+        prev_last = int(maxd) + o
+        if gmin < 0:
+            gmin = gfirst
+        df += int(rdf)
+        cf += int(rcf)
+    return {
+        "df": df,
+        "cf": cf,
+        "min_doc": gmin,
+        "max_doc": prev_last,
+        "docids": b"".join(d_parts),
+        "tfs": b"".join(runs["tfs"]),
+        "block_last": b"".join(bl_parts),
+        "block_max_tf": b"".join(runs["block_max_tf"]),
+    }
 
 
 def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None) -> dict:
@@ -244,13 +225,13 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
     corpus_stats.json.
 
     The salted segment rows are range-partitioned by (term, shard) into
-    ``spark.sql.shuffle.partitions`` partitions, sorted by (term, shard, run),
-    and concatenated by the Arrow kernel ``_concat_runs`` in one
-    ``mapInArrow`` task per partition, which writes merged/ directly. The
-    range sampling runs over the JVM-only segment plan, so nothing is
-    cached and the Python kernel runs once. The partition count is explicit,
-    so AQE cannot collapse merged/ into one file, and the file count does not
-    grow with the number of pids.
+    ``spark.sql.shuffle.partitions`` partitions and sorted by (term, shard,
+    run); one ``mapInArrow`` task per partition hands each whole group
+    (``whole_groups``) to ``_concat_runs`` and writes merged/ directly.
+    Without ``fanin`` the range sampling runs over the JVM-only segment plan,
+    so nothing is cached and the Python kernel runs once. The partition count
+    is explicit, so AQE cannot collapse merged/ into one file, and the file
+    count does not grow with the number of pids.
 
     Applies the global docID offsets during the first concatenation level
     (free — only first varints are rewritten). ``fanin`` bounds how many runs
@@ -258,7 +239,9 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
     intermediate hierarchical levels merge ``fanin`` adjacent runs at a time
     (within their salt shard, so skew bounds still hold), each after a hash
     exchange on (term, shard, gk) — the tree merge a 10^6-partition build
-    needs so no group ever holds a million runs.
+    needs so no group ever holds a million runs. The range exchange then
+    samples the last intermediate level, so its sampling job runs that
+    level's kernel once more (the hash exchanges' output is reused).
 
     The forward index is not rewritten: the (pid, offset, n_docs) table
     addresses doc_meta_local by docID (miru's partition + local docID
@@ -269,11 +252,10 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
     pids, n_docs, n_tokens = np.array(
         [(m["pid"], m["n_docs"], m["n_tokens"]) for m in _load_manifests(index_dir)], dtype=np.int64
     ).reshape(-1, 3).T
-    n_pids = int(pids.max()) + 1
-    offsets = np.zeros(n_pids, dtype=np.int64)
-    offsets[pids] = np.cumsum(n_docs) - n_docs
+    offsets = dict(zip(pids.tolist(), (np.cumsum(n_docs) - n_docs).tolist()))
     off_b = spark.sparkContext.broadcast(offsets)
     seg = spark.read.parquet(os.path.join(index_dir, "segments"))
+    n_pids = max(offsets) + 1
 
     # global per-term stats (partial sums per segment row → tiny shuffle)
     stats_dir = os.path.join(index_dir, "stats")
@@ -304,10 +286,19 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
     def concat(keys, runcol: str, schema: T.StructType):
         """The mapInArrow kernel of one level: one row per ``keys`` group."""
         def fn(batches):
-            off = off_b.value if runcol == "pid" else None
+            off = off_b.value if runcol == "pid" else {}
             for batch, starts in whole_groups(batches, keys):
-                cols = [batch.column(k).take(starts) for k in keys] + _concat_runs(batch, starts, off, runcol)
-                yield pa.RecordBatch.from_arrays(cols, names=schema.names)
+                cols = {c: batch.column(c).to_pylist() for c in (runcol, *RUN_COLS)}
+                bounds = np.append(starts, batch.num_rows).tolist()
+                rows = [
+                    _concat_runs({c: v[s:e] for c, v in cols.items()}, off, runcol)
+                    for s, e in zip(bounds[:-1], bounds[1:])
+                ]
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(k).take(starts) for k in keys]
+                    + [pa.array([r[c] for r in rows]) for c in RUN_COLS],
+                    names=schema.names,
+                )
 
         return fn
 

@@ -16,8 +16,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from miru_spark import roaring
-from miru_spark.codec import decode_postings, encode_postings, encode_varint
+from miru_spark.codec import decode_postings, encode_postings
 from miru_spark.corpus import generate_corpus
+from miru_spark.index import merge
 from miru_spark.index.build import build_field_filters
 from miru_spark.index.merge import RUN_COLS, _concat_runs, merge_segments, whole_groups
 from miru_spark.streaming.ingest import append_batch, refresh
@@ -62,63 +63,69 @@ def test_whole_groups_yields_each_group_once(batch_rows):
     assert rows == table.column("row").to_pylist()
 
 
-def _concat_reference(runs, off):
-    """One group's runs concatenated by the per-run loop the kernel replaced."""
-    d_parts, bl_parts, prev_last = [], [], 0
-    for r in runs:
-        o = off[r["pid"]]
-        k = 1  # length of the run's first varint
-        while r["docids"][k - 1] & 0x80:
-            k += 1
-        d_parts += [encode_varint(np.array([r["min_doc"] + o - prev_last], dtype=np.uint64)), r["docids"][k:]]
-        bl_parts.append((np.frombuffer(r["block_last"], dtype=np.int64) + o).tobytes())
-        prev_last = r["max_doc"] + o
-    return {
-        "df": sum(r["df"] for r in runs),
-        "cf": sum(r["cf"] for r in runs),
-        "min_doc": runs[0]["min_doc"] + off[runs[0]["pid"]],
-        "max_doc": prev_last,
-        "docids": b"".join(d_parts),
-        "tfs": b"".join(r["tfs"] for r in runs),
-        "block_last": b"".join(bl_parts),
-        "block_max_tf": b"".join(r["block_max_tf"] for r in runs),
-    }
+def test_whole_groups_copies_a_long_group_once(monkeypatch):
+    """One group of thousands of rows at two rows per batch, between two
+    short groups: it arrives whole, and its rows are copied a bounded number
+    of times (a batch that only continues the open group is appended, not
+    re-concatenated with everything carried so far)."""
+    n = 6_000
+    keys = ["a"] * 3 + ["b"] * n + ["c"] * 3
+    table = pa.table({"k": keys, "row": np.arange(len(keys))})
+    copied = []
+    real = merge._combined
+
+    def counting(batches):
+        if len(batches) > 1:
+            copied.append(sum(b.num_rows for b in batches))
+        return real(batches)
+
+    monkeypatch.setattr(merge, "_combined", counting)
+    groups = []
+    for batch, starts in whole_groups(iter(table.to_batches(max_chunksize=2)), ("k",)):
+        bounds = np.append(starts, batch.num_rows)
+        ks, rows = batch.column("k").to_pylist(), batch.column("row").to_pylist()
+        groups += [(ks[s], rows[s:e]) for s, e in zip(bounds[:-1], bounds[1:])]
+    assert [g for g, _ in groups] == ["a", "b", "c"]
+    assert sum((r for _, r in groups), []) == list(range(len(keys)))
+    assert sum(copied) <= 3 * len(keys)
 
 
 @pytest.mark.parametrize("apply_offsets", [True, False])
-def test_concat_kernel_matches_per_run_loop(apply_offsets):
-    """Vectorized _concat_runs == the per-run loop, byte for byte, over runs
-    whose first ids and gaps need 1 to 4 varint bytes, at any batch size;
-    the merged postings decode to the runs' global ids in order."""
+def test_concat_runs_decodes_to_global_ids(apply_offsets):
+    """_concat_runs over a group's runs in pid order, with first ids and
+    gaps that need 1 to 4 varint bytes: the merged postings decode to the
+    runs' global ids in order, block_last shifts by each run's offset, and
+    df/cf/min_doc/max_doc are the group's."""
     rng = np.random.default_rng(7)
     n_pids = 6
     sizes = np.array([40, 3_000, 200_000, 30, 2_500_000, 900])
     base = np.cumsum(sizes) - sizes
     # runs hold local ids plus offsets (first level) or global ids (later levels)
-    off = base if apply_offsets else np.zeros(n_pids, dtype=np.int64)
-    runs = []
-    for term in (f"t{i:02d}" for i in range(40)):
+    off = dict(enumerate(base.tolist())) if apply_offsets else {}
+    for _ in range(40):
+        runs = {c: [] for c in ("pid", *RUN_COLS)}
+        ids, tfs, block_last = [], [], []
         for pid in sorted(rng.choice(n_pids, int(rng.integers(1, n_pids + 1)), replace=False)):
-            d = np.unique(rng.integers(0, sizes[pid], int(rng.integers(1, 300)))) + base[pid] - off[pid]
+            d = np.unique(rng.integers(0, sizes[pid], int(rng.integers(1, 300)))) + base[pid]
             tf = rng.integers(1, 9, d.size)
-            db, tb, bl, bm = encode_postings(d, tf)
-            runs.append({"term": term, "pid": int(pid), "df": d.size, "cf": int(tf.sum()),
-                         "min_doc": int(d[0]), "max_doc": int(d[-1]), "docids": db, "tfs": tb,
-                         "block_last": bl, "block_max_tf": bm, "_ids": d + off[pid]})
-    want = {}
-    for r in runs:
-        want.setdefault(r["term"], []).append(r)
-    table = pa.Table.from_pylist([{k: v for k, v in r.items() if k != "_ids"} for r in runs])
-    for batch_rows in (1, 3, 1000):
-        got = {}
-        for batch, starts in whole_groups(iter(table.to_batches(max_chunksize=batch_rows)), ("term",)):
-            cols = _concat_runs(batch, starts, off if apply_offsets else None, "pid")
-            for i, term in enumerate(batch.column("term").take(starts).to_pylist()):
-                got[term] = {c: a[i].as_py() for c, a in zip(RUN_COLS, cols)}
-        assert got == {t: _concat_reference(rs, off) for t, rs in want.items()}
-    for term, rs in want.items():
-        ids, _ = decode_postings(got[term]["docids"], got[term]["tfs"])
-        assert ids.tolist() == np.concatenate([r["_ids"] for r in rs]).tolist()
+            local = d - off.get(int(pid), 0)
+            db, tb, bl, bm = encode_postings(local, tf)
+            for c, v in zip(("pid", *RUN_COLS), (int(pid), d.size, int(tf.sum()), int(local[0]),
+                                                 int(local[-1]), db, tb, bl, bm)):
+                runs[c].append(v)
+            ids.append(d)
+            tfs.append(tf)
+            block_last.append(np.frombuffer(bl, dtype=np.int64) + off.get(int(pid), 0))
+        got = _concat_runs(runs, off, "pid")
+        ids, tfs = np.concatenate(ids), np.concatenate(tfs)
+        got_ids, got_tfs = decode_postings(got["docids"], got["tfs"])
+        assert got_ids.tolist() == ids.tolist()
+        assert got_tfs.tolist() == tfs.tolist()
+        assert np.frombuffer(got["block_last"], dtype=np.int64).tolist() == np.concatenate(block_last).tolist()
+        assert (got["df"], got["cf"], got["min_doc"], got["max_doc"]) == (
+            ids.size, int(tfs.sum()), int(ids[0]), int(ids[-1])
+        )
+        assert got["block_max_tf"] == b"".join(runs["block_max_tf"])
 
 
 @pytest.fixture
