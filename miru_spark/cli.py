@@ -103,10 +103,11 @@ def cmd_remove(args) -> None:
     fn = removal.repair_docs if args.repair else removal.remove_docs
     if args.doc_ids:
         ids = [int(x) for x in args.doc_ids.split(",")]
-    else:
-        spark = _spark(args)
+    else:  # resolves on the driver: no Spark session
         keys = [tuple(k.split("@", 2)) for k in args.keys.split(",")]
-        ids = removal.resolve_keys(spark, args.index_dir, keys)
+        if any(len(k) != 3 for k in keys):
+            raise SystemExit("--keys takes comma-separated repo@path@commit keys")
+        ids = removal.resolve_keys(None, args.index_dir, keys)
     applied = fn(args.index_dir, ids, version=args.version)
     print(json.dumps({"op": "repair" if args.repair else "remove",
                       "resolved": len(ids), "applied": applied}))

@@ -27,9 +27,11 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from miru_spark.codec import encode_varint
 from miru_spark.jsonio import load_json, save_json_atomic
@@ -50,6 +52,14 @@ MERGED_SCHEMA = T.StructType(
         T.StructField("tfs", T.BinaryType()),
         T.StructField("block_last", T.BinaryType()),
         T.StructField("block_max_tf", T.BinaryType()),
+    ]
+)
+# stats/: the term dictionary with global counts (merge_segments writes it)
+STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType()),
+        T.StructField("df", T.LongType()),
+        T.StructField("cf", T.LongType()),
     ]
 )
 
@@ -91,6 +101,15 @@ def republish_without(index_dir: str, retired) -> None:
     save_json_atomic(stats_path, load_json(stats_path, None))
 
 
+def footer_schema(path: str) -> T.StructType:
+    """The schema Spark infers for the parquet directory ``path``, without
+    the Spark job that inference runs: Spark takes the footer of the first
+    data file in path order (names starting with "_" or "." are not data);
+    it is read here on the driver."""
+    first = min(n for n in os.listdir(path) if not n.startswith(("_", ".")))
+    return from_arrow_schema(pq.read_schema(os.path.join(path, first)))
+
+
 def forward_index(spark: SparkSession, index_dir: str) -> DataFrame:
     """The published forward index: doc_meta_local joined to the broadcast
     (pid, offset, n_docs) table, doc_id = offset + local_doc_id. Rows of
@@ -100,7 +119,8 @@ def forward_index(spark: SparkSession, index_dir: str) -> DataFrame:
         pd.DataFrame({"pid": pid.astype(np.int32), "_off": off, "_n": n}),
         "pid int, _off long, _n long",
     )
-    local = spark.read.parquet(os.path.join(index_dir, "doc_meta_local"))
+    meta_dir = os.path.join(index_dir, "doc_meta_local")
+    local = spark.read.schema(footer_schema(meta_dir)).parquet(meta_dir)
     cols = [c for c in local.columns if c not in ("local_doc_id", "pid")]
     return (
         local.join(F.broadcast(table), "pid")
@@ -246,6 +266,7 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
     The forward index is not rewritten: the (pid, offset, n_docs) table
     addresses doc_meta_local by docID (miru's partition + local docID
     activity index, MiruActivityIndex.java:16-45)."""
+    from miru_spark.index.build import SEGMENT_SCHEMA
     from miru_spark.index.compact import _load_manifests
 
     # pids are key-ordered ranges: local rank + offset = global key rank
@@ -254,7 +275,9 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
     ).reshape(-1, 3).T
     offsets = dict(zip(pids.tolist(), (np.cumsum(n_docs) - n_docs).tolist()))
     off_b = spark.sparkContext.broadcast(offsets)
-    seg = spark.read.parquet(os.path.join(index_dir, "segments"))
+    seg = spark.read.schema(from_arrow_schema(SEGMENT_SCHEMA)).parquet(
+        os.path.join(index_dir, "segments")
+    )
     n_pids = max(offsets) + 1
 
     # global per-term stats (partial sums per segment row → tiny shuffle)
@@ -263,7 +286,7 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
         F.sum("df").alias("df"), F.sum("cf").alias("cf")
     )
     stats.write.mode("overwrite").parquet(stats_dir)
-    stats = spark.read.parquet(stats_dir)
+    stats = spark.read.schema(STATS_SCHEMA).parquet(stats_dir)
 
     # span per term: contiguous pid ranges per shard, sized to bound skew
     span_col = F.greatest(

@@ -40,9 +40,11 @@ import os
 import uuid
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from miru_spark import roaring
-from miru_spark.index.merge import forward_index
+from miru_spark.index.build import KEY_COLS
 
 _LOG = "removal_log.json"
 _BITMAP = "removed.roaring"
@@ -148,31 +150,63 @@ def removed_array(index_dir: str) -> np.ndarray:
 
 
 def resolve_keys(spark, index_dir: str, keys: list[tuple[str, str, str]]) -> list[int]:
-    """(repo, path, commit) → docIDs via the merged forward index. Keys not
-    present resolve to nothing (removing an unknown doc is a no-op, as in
-    miru: the WAL can carry removes for docs a partition never saw)."""
+    """(repo, path, commit) → docIDs via the published forward index. Keys
+    not present resolve to nothing (removing an unknown doc is a no-op, as
+    in miru: the WAL can carry removes for docs a partition never saw).
+    ``spark`` is unused: resolution reads doc_meta_local on the driver."""
     return [d for ids in resolve_keys_map(spark, index_dir, keys).values() for d in ids]
 
 
 def resolve_keys_map(
     spark, index_dir: str, keys: list[tuple[str, str, str]]
 ) -> dict[tuple[str, str, str], list[int]]:
-    """Batch form: key → docIDs, ONE broadcast-join job for any number of
-    keys (a per-key job would make a 10k-op drain run 10k Spark jobs)."""
-    from pyspark.sql import functions as F
+    """Batch form: key → docIDs, on the driver and without a Spark job
+    (``spark`` is unused), as miru applies a REMOVE inside the partition
+    that holds the doc (MiruIndexer.java:138-162). Each published pid's
+    doc_meta_local footer comes from the serving cache; a row group is read
+    only if its repo/path/commit min/max statistics admit some wanted key
+    (files need not be key-sorted: compaction concatenates pids), and then
+    only its key columns, through ``scorer._meta_block``. doc_id = the pid's
+    offset + row (the row is local_doc_id, as the serving path addresses
+    it); unpublished pids and rows past a pid's published count stay
+    invisible. Cost: the published footers plus the admitted groups' key
+    columns."""
+    from miru_spark.query import scorer  # scorer imports this module
 
     if not keys:
         return {}
-    meta = forward_index(spark, index_dir)
-    kdf = spark.createDataFrame(
-        [(r, p, c) for r, p, c in keys], "repo string, path string, commit string"
-    )
-    rows = (
-        meta.join(F.broadcast(kdf), ["repo", "path", "commit"])
-        .select("repo", "path", "commit", "doc_id")
-        .collect()
-    )
+    wanted = set(map(tuple, keys))
+    key_cols = [pa.array(col, pa.string()) for col in zip(*wanted)]
+    gen = scorer._index_generation(index_dir)
     out: dict[tuple[str, str, str], list[int]] = {}
-    for r in rows:
-        out.setdefault((r["repo"], r["path"], r["commit"]), []).append(r["doc_id"])
+    for pid, offset, n in zip(*scorer._pid_offsets(index_dir, gen)):
+        meta_file = scorer._meta_file(index_dir, gen, int(pid))
+        footer, starts = meta_file[2], meta_file[3]
+        idx = [footer.schema.names.index(c) for c in KEY_COLS]
+        for rg in range(int(np.searchsorted(starts, n, side="left"))):
+            if not _admits(footer.row_group(rg), idx, key_cols):
+                continue
+            blk, _ = scorer._meta_block(meta_file, rg, KEY_COLS)
+            hit = np.ones(len(blk[KEY_COLS[0]]), dtype=bool)
+            for c, k in zip(KEY_COLS, key_cols):
+                hit &= pc.is_in(blk[c], value_set=k).to_numpy(zero_copy_only=False)
+            rows = np.flatnonzero(hit)
+            rows = rows[rows + starts[rg] < n]
+            cols = [blk[c].take(rows).to_pylist() for c in KEY_COLS]
+            for row, key in zip((rows + starts[rg] + offset).tolist(), zip(*cols)):
+                if key in wanted:
+                    out.setdefault(key, []).append(row)
     return out
+
+
+def _admits(row_group, idx: list[int], key_cols: list[pa.Array]) -> bool:
+    """Whether some key lies inside the row group's min/max statistics on
+    every key column (a column without statistics admits every key)."""
+    ok = None
+    for i, k in zip(idx, key_cols):
+        st = row_group.column(i).statistics
+        if st is None or not st.has_min_max:
+            continue
+        inside = pc.and_(pc.greater_equal(k, st.min), pc.less_equal(k, st.max))
+        ok = inside if ok is None else pc.and_(ok, inside)
+    return ok is None or pc.any(ok).as_py()

@@ -48,7 +48,7 @@ from pyspark.sql import types as T
 from miru_spark import roaring
 from miru_spark.codec import decode_block_meta, decode_postings
 from miru_spark.index import removal
-from miru_spark.index.merge import forward_index, load_pid_offsets
+from miru_spark.index.merge import MERGED_SCHEMA, STATS_SCHEMA, forward_index, load_pid_offsets
 from miru_spark.query import parser as qp
 
 K1 = 1.2
@@ -1072,13 +1072,13 @@ def _bm25_topk(
             spark, fan, "query_id int, term string, scoring boolean, bitval long"
         )
         hits = (
-            spark.read.parquet(os.path.join(index_dir, "merged"))
+            spark.read.schema(MERGED_SCHEMA).parquet(os.path.join(index_dir, "merged"))
             .select("term", "docids", "tfs")  # column pruning: skip block metadata
             .filter(F.col("term").isin(union_needed))
             .mapInPandas(_decode_posting_rows, schema=_POSTING_ROW_SCHEMA)
         )
         stats = (
-            spark.read.parquet(os.path.join(index_dir, "stats"))
+            spark.read.schema(STATS_SCHEMA).parquet(os.path.join(index_dir, "stats"))
             .filter(F.col("term").isin(union_needed))
             .select("term", "df")
             .withColumn(

@@ -229,10 +229,11 @@ def refresh(spark: SparkSession, index_dir: str) -> dict:
     build_field_filters(spark, index_dir)
     pending = _load_pending(index_dir)
     if pending:
-        # resolve ALL keys in ONE broadcast-join job, then apply grouped by
-        # (kind, version) — the per-doc version guard makes application
-        # order-independent, so grouping loses nothing and a 10k-op drain
-        # costs one Spark job + a handful of log writes instead of 10k each
+        # resolve ALL keys in one driver-side lookup (no Spark job; it reads
+        # only the doc_meta_local row groups whose key statistics admit a
+        # pending key), then apply grouped by (kind, version) — the per-doc
+        # version guard makes application order-independent, so grouping
+        # loses nothing and a 10k-op drain costs a handful of log writes
         keymap = removal.resolve_keys_map(
             spark, index_dir,
             sorted({(o["repo"], o["path"], o["commit"]) for o in pending}),

@@ -64,6 +64,21 @@ def test_cli_remove_and_repair(cli_index, capsys):
     assert victim in [r["doc_id"] for r in restored]
 
 
+def test_cli_remove_by_key(cli_index, capsys, monkeypatch):
+    """--keys resolves repo@path@commit on the driver, with no Spark session."""
+    from miru_spark import cli
+
+    main(["search", "--index-dir", cli_index, "--query", "merge AND sort", "--k", "1"])
+    top = json.loads(capsys.readouterr().out.strip().splitlines()[-1])[0]
+    monkeypatch.setattr(cli, "_spark", lambda args: pytest.fail("remove --keys asked for Spark"))
+    key = f"{top['repo']}@{top['path']}@{top['commit']}"
+    main(["remove", "--index-dir", cli_index, "--keys", key, "--version", "3"])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out == {"op": "remove", "resolved": 1, "applied": 1}
+    main(["remove", "--index-dir", cli_index, "--keys", key, "--version", "4", "--repair"])
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["applied"] == 1
+
+
 def test_cli_sync(cli_index, tmp_path, capsys):
     dst = str(tmp_path / "replica")
     main(["sync", "--src", cli_index, "--dst", dst, "--refresh", "--local-cores", "4"])

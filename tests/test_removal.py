@@ -16,12 +16,16 @@ Semantics under test (miru parity):
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from miru_spark.corpus import generate_corpus
 from miru_spark.index import removal
-from miru_spark.index.build import assign_doc_ids, build_index
+from miru_spark.index.build import KEY_COLS, SEGMENT_SCHEMA, assign_doc_ids, build_index
+from miru_spark.index.merge import MERGED_SCHEMA, STATS_SCHEMA, footer_schema, forward_index
 from miru_spark.query.oracle import oracle_topk
 from miru_spark.query.scorer import search_distributed, search_local
 
@@ -276,3 +280,136 @@ def test_narrow_time_range_disjunction_sound(del_index, spark):
     got = search_local(index_dir, "merge OR sort OR def", k=5, time_range=(0, 1))
     assert list(got["doc_id"]) == exp_ids
     assert [round(float(s), 6) for s in got["score"]] == exp_scores
+
+
+def _rowidx():
+    """The generator's row index, recovered from its path."""
+    return F.regexp_extract("path", r"f(\d+)\.", 1).cast("long")
+
+
+def _join_reference(spark, index_dir, keys) -> dict:
+    """key → sorted docIDs by the Spark join resolution used to run:
+    the published forward index joined to the key table."""
+    kdf = spark.createDataFrame(list(keys), "repo string, path string, commit string")
+    out: dict = {}
+    for r in forward_index(spark, index_dir).join(kdf, KEY_COLS).select(*KEY_COLS, "doc_id").collect():
+        out.setdefault((r["repo"], r["path"], r["commit"]), []).append(r["doc_id"])
+    return {k: sorted(v) for k, v in out.items()}
+
+
+def _resolved(index_dir, keys) -> dict:
+    return {k: sorted(v) for k, v in removal.resolve_keys_map(None, index_dir, keys).items()}
+
+
+_ABSENT = ("org0/none", "src/none.py", "0" * 40)
+
+
+def test_resolve_keys_matches_forward_index_join(spark, tiny_index, tiny_corpus, tmp_path):
+    """The driver-side lookup answers exactly what forward_index ⋈ keys
+    answers: on the tiny index, after refreshes that index one key twice,
+    for a key only an unrefreshed pid holds, for an absent key, and after
+    compaction concatenates pids."""
+    from miru_spark.index.compact import compact
+    from miru_spark.streaming.ingest import append_batch, refresh
+
+    keys = sorted(tuple(r) for r in tiny_corpus.select(*KEY_COLS).collect())[::17] + [_ABSENT]
+    got = _resolved(tiny_index, keys)
+    assert got == _join_reference(spark, tiny_index, keys)
+    assert len(got) == len(keys) - 1
+
+    index_dir = str(tmp_path / "sidx")
+    os.makedirs(index_dir)
+    corpus = generate_corpus(spark, n_rows=150, seed=11, partitions=1)
+    append_batch(corpus.filter(_rowidx() < 60), 0, index_dir, 2)
+    refresh(spark, index_dir)
+    twice = corpus.filter(_rowidx() == 5)  # indexed again: a second docID
+    append_batch(corpus.filter(_rowidx().between(60, 119)).unionByName(twice), 1, index_dir, 2)
+    refresh(spark, index_dir)
+    append_batch(corpus.filter(_rowidx() >= 120), 2, index_dir, 2)  # not refreshed
+    rows = {int(r["i"]): (r["repo"], r["path"], r["commit"])
+            for r in corpus.select(_rowidx().alias("i"), *KEY_COLS).collect()}
+    keys = [rows[i] for i in (5, 17, 59, 60, 88, 119, 120, 149)] + [_ABSENT]
+    got = _resolved(index_dir, keys)
+    assert got == _join_reference(spark, index_dir, keys)
+    assert len(got[rows[5]]) == 2
+    assert rows[120] not in got and rows[149] not in got and _ABSENT not in got
+
+    summary = compact(index_dir, target_docs=10_000)
+    assert summary["after_partitions"] < summary["before_partitions"]
+    assert _resolved(index_dir, keys) == _join_reference(spark, index_dir, keys) == got
+
+
+def test_resolve_keys_reads_only_admitted_row_groups(spark, tmp_path, monkeypatch, serving_cache):
+    """A row group whose repo/path/commit statistics admit no wanted key is
+    never read: resolving 2 keys over 64-row groups reads at least one
+    group and fewer than all of them, and answers as the join does."""
+    from miru_spark.query import scorer
+
+    index_dir = str(tmp_path / "rg")
+    corpus = generate_corpus(spark, n_rows=600, seed=5, partitions=1)
+    build_index(spark, corpus, index_dir, num_partitions=2)
+    meta_dir = os.path.join(index_dir, "doc_meta_local")
+    n_groups = 0
+    for name in os.listdir(meta_dir):
+        path = os.path.join(meta_dir, name)
+        pq.write_table(pq.read_table(path), path, row_group_size=64)
+        n_groups += pq.read_metadata(path).num_row_groups
+    keys = sorted(tuple(r) for r in corpus.select(*KEY_COLS).collect())[100::300]
+    assert len(keys) == 2 and n_groups >= 8
+
+    reads = []
+    read_row_group = scorer._read_row_group
+
+    def counting(path, footer, row_group, columns):
+        reads.append((path, row_group))
+        return read_row_group(path, footer, row_group, columns)
+
+    monkeypatch.setattr(scorer, "_read_row_group", counting)
+    got = _resolved(index_dir, keys)
+    assert 1 <= len(reads) < n_groups
+    assert got == _join_reference(spark, index_dir, keys) and len(got) == 2
+
+
+@pytest.mark.parametrize("which", ["tiny", "ts"])
+def test_index_reads_carry_inferred_schema(spark, tiny_index, del_index, which):
+    """Each index read passes the schema Spark would infer, so reading
+    segments/, merged/, stats/ and the forward index runs no Spark job."""
+    index_dir = tiny_index if which == "tiny" else del_index[0]
+    meta_dir = os.path.join(index_dir, "doc_meta_local")
+    given = {
+        "segments": from_arrow_schema(SEGMENT_SCHEMA),
+        "merged": MERGED_SCHEMA,
+        "stats": STATS_SCHEMA,
+        "doc_meta_local": footer_schema(meta_dir),
+    }
+    assert ("ts" in given["doc_meta_local"].names) == (which == "ts")
+    for part, schema in given.items():
+        assert schema == spark.read.parquet(os.path.join(index_dir, part)).schema, part
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("miru_infer_control", "a read without a schema infers it")
+        spark.read.parquet(meta_dir).schema
+        assert list(tracker.getJobIdsForGroup("miru_infer_control"))
+        sc.setJobGroup("miru_schema_reads", "index reads carry their schema")
+        for part in ("segments", "merged", "stats"):
+            spark.read.schema(given[part]).parquet(os.path.join(index_dir, part)).schema
+        assert forward_index(spark, index_dir).schema["doc_id"]
+        assert list(tracker.getJobIdsForGroup("miru_schema_reads")) == []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+
+
+def test_footer_schema_follows_spark_file_choice(spark, tmp_path):
+    """With files of different columns (an additive append), the inferred
+    schema is the first data file's in path order, as Spark infers it."""
+    d = str(tmp_path / "mixed")
+    os.makedirs(d)
+    for name, cols in (("meta_2.parquet", {"a": [1], "b": ["x"]}),
+                       ("meta_10.parquet", {"a": [1], "c": [2.0]}),
+                       ("_staged.parquet", {"z": [1]}), (".tmp.parquet", {"y": [1]})):
+        pq.write_table(pa.table(cols), os.path.join(d, name))
+    assert footer_schema(d) == spark.read.parquet(d).schema
+    assert footer_schema(d).names == ["a", "c"]
