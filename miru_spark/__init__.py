@@ -22,3 +22,9 @@ Arrow UDFs, not bitmap LSM trees.
 """
 
 __version__ = "0.1.0"
+
+from miru_spark import zipcache as _zipcache
+
+# every Python worker imports miru_spark when it unpickles an engine kernel,
+# so installing here spares each of its later tasks the zip re-reads
+_zipcache.install()

@@ -1071,15 +1071,16 @@ def _bm25_topk(
         qt = _driver_table(
             spark, fan, "query_id int, term string, scoring boolean, bitval long"
         )
+        in_union = F.col("term").isin(union_needed)  # one py4j build serves both reads
         hits = (
             spark.read.schema(MERGED_SCHEMA).parquet(os.path.join(index_dir, "merged"))
             .select("term", "docids", "tfs")  # column pruning: skip block metadata
-            .filter(F.col("term").isin(union_needed))
+            .filter(in_union)
             .mapInPandas(_decode_posting_rows, schema=_POSTING_ROW_SCHEMA)
         )
         stats = (
             spark.read.schema(STATS_SCHEMA).parquet(os.path.join(index_dir, "stats"))
-            .filter(F.col("term").isin(union_needed))
+            .filter(in_union)
             .select("term", "df")
             .withColumn(
                 "idf", F.log((F.lit(h.n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
