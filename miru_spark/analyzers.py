@@ -299,19 +299,17 @@ def load(index_dir: str) -> Analyzer:
     """The index's analyzer, from ``analyzer.json`` (absent = the frozen
     default). Read by build_segments (streaming appends) and both query
     paths, so index- and query-side tokenization can never diverge."""
-    import json
     import os
 
-    p = os.path.join(index_dir, "analyzer.json")
-    if not os.path.exists(p):
-        return DEFAULT
-    with open(p) as f:
-        return from_config(json.load(f))
+    from miru_spark.storage import load_json
+
+    cfg = load_json(os.path.join(index_dir, "analyzer.json"), None)
+    return DEFAULT if cfg is None else from_config(cfg)
 
 
 def save(index_dir: str, analyzer: Analyzer) -> None:
     import os
 
-    from miru_spark.jsonio import save_json_atomic
+    from miru_spark.storage import save_json_atomic
 
     save_json_atomic(os.path.join(index_dir, "analyzer.json"), analyzer.to_config())

@@ -66,12 +66,13 @@ def cmd_build(args) -> None:
 
 
 def cmd_compact(args) -> None:
+    """Compact, then publish the generation as every refresh does: merge,
+    filters, and the journaled REMOVE/REPAIR ops."""
     from miru_spark.index.compact import compact
-    from miru_spark.index.merge import merge_segments
+    from miru_spark.streaming.ingest import refresh
 
     stats = compact(args.index_dir, target_docs=args.target_docs)
-    spark = _spark(args)
-    stats["merge"] = merge_segments(spark, args.index_dir)
+    stats["merge"] = refresh(_spark(args), args.index_dir)
     print(json.dumps(stats))
 
 

@@ -30,9 +30,7 @@ Scale notes (100 TB / 10^12 files):
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 from collections.abc import Iterator
 
 import numpy as np
@@ -48,7 +46,7 @@ from miru_spark import roaring
 from miru_spark.codec import encode_postings
 from miru_spark.corpus import verify_sha256
 from miru_spark.index.merge import ROW_GROUP_BYTES, forward_index, whole_groups
-from miru_spark.jsonio import load_json, save_json_atomic
+from miru_spark.storage import load_json, put_atomic, save_json_atomic
 
 KEY_COLS = ["repo", "path", "commit"]
 
@@ -315,12 +313,8 @@ def _build_segment_rows(
 
 
 def write_parquet_atomic(table: pa.Table, path: str, **options) -> None:
-    """The one parquet write of index files: a hidden tmp file (scans skip
-    names starting with "."), then an atomic rename."""
-    head, name = os.path.split(path)
-    tmp = os.path.join(head, f".{name}.tmp-{uuid.uuid4().hex}")
-    pq.write_table(table, tmp, compression="snappy", **options)
-    os.replace(tmp, path)
+    """The one parquet write of index files, published whole."""
+    put_atomic(path, lambda tmp: pq.write_table(table, tmp, compression="snappy", **options))
 
 
 def write_forward_index(meta: pa.Table, path: str) -> None:
@@ -366,17 +360,16 @@ def build_segments(
         pdf = pd.concat(parts, ignore_index=True)
         pid = int(pdf["_pid"].iloc[0])
         man_path = os.path.join(man_dir, f"partition_{pid}.json")
-        if resume and os.path.exists(man_path):
-            with open(man_path) as f:
-                m = json.load(f)
-            if (
-                m.get("n_docs") == len(pdf)
-                and os.path.exists(m["segment_file"])
-                and os.path.exists(m.get("meta_file", ""))
-            ):
-                m["status"] = "skipped"
-                yield pd.DataFrame([m])[[f.name for f in MANIFEST_ROW_SCHEMA.fields]]
-                return
+        m = load_json(man_path, None) if resume else None
+        if (
+            m is not None
+            and m.get("n_docs") == len(pdf)
+            and os.path.exists(m["segment_file"])
+            and os.path.exists(m.get("meta_file", ""))
+        ):
+            m["status"] = "skipped"
+            yield pd.DataFrame([m])[[f.name for f in MANIFEST_ROW_SCHEMA.fields]]
+            return
         rows, stats, meta = _build_segment_rows(pdf, stopwords, analyzer)
         meta = meta.append_column("pid", pa.array([pid] * len(meta), pa.int32()))
         seg_file = os.path.join(seg_dir, f"seg_{pid}.parquet")

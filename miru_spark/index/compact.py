@@ -9,10 +9,10 @@ micro-batches, thousands of tiny segments slow the merge and the manifest
 scan. ``compact`` rewrites groups of ADJACENT pids (pid order = docID order)
 into single segments:
 
-- posting runs concatenate with the zero-decode first-varint rewrite
-  (miru_spark.index.merge._concat_runs) using LOCAL offsets = cumulative doc
-  counts within the group — docIDs keep their partition-local meaning, so
-  the global merge is untouched semantically;
+- posting runs concatenate with the merge's zero-decode first-varint
+  kernel (miru_spark.index.merge.concat_groups) using LOCAL offsets =
+  cumulative doc counts within the group — docIDs keep their
+  partition-local meaning, so the global merge is untouched semantically;
 - forward-index rows concatenate with the same local-id rebasing;
 - the multi-file group swap is JOURNALED: compacted data is staged under
   ``_``-prefixed names (invisible to Spark/pyarrow dataset scans), a journal
@@ -31,27 +31,23 @@ retired pids, so the published index keeps serving until the next merge.
 
 from __future__ import annotations
 
-import json
 import os
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from miru_spark.index.build import write_forward_index, write_parquet_atomic
-from miru_spark.index.merge import _concat_runs, load_pid_offsets, republish_without
-from miru_spark.jsonio import save_json_atomic
+from miru_spark.index.merge import concat_groups, load_pid_offsets, republish_without, whole_groups
+from miru_spark.storage import read_json_files, save_json_atomic
 
 
 def _load_manifests(index_dir: str) -> list[dict]:
     reconcile(index_dir)
-    man_dir = os.path.join(index_dir, "manifests")
-    out = []
-    for name in os.listdir(man_dir):
-        if name.endswith(".json"):
-            with open(os.path.join(man_dir, name)) as f:
-                out.append(json.load(f))
-    return sorted(out, key=lambda m: m["pid"])
+    manifests = read_json_files(os.path.join(index_dir, "manifests")).values()
+    return sorted(manifests, key=lambda m: m["pid"])
 
 
 def _finish_swap(index_dir: str, journal: dict) -> None:
@@ -84,25 +80,19 @@ def reconcile(index_dir: str) -> int:
     man_dir = os.path.join(index_dir, "manifests")
     if not os.path.isdir(man_dir):
         return 0
-    n = 0
-    for name in os.listdir(man_dir):
-        if name.endswith(".journal"):
-            p = os.path.join(man_dir, name)
-            with open(p) as f:
-                journal = json.load(f)
-            journal["_path"] = p
-            _finish_swap(index_dir, journal)
-            n += 1
+    journals = read_json_files(man_dir, ".journal")
+    for name, journal in journals.items():
+        journal["_path"] = os.path.join(man_dir, name)
+        _finish_swap(index_dir, journal)
     # sweep staged _compact_* files no surviving journal references: they are
     # orphans from a crash BEFORE their journal was written — nothing will
     # ever promote them, so without this they accumulate forever.  Files a
     # journal still lists stay put (rolling forward is that journal's job).
-    referenced: set[str] = set()
-    for name in os.listdir(man_dir):
-        if name.endswith(".journal"):
-            with open(os.path.join(man_dir, name)) as f:
-                for staged, _final in json.load(f)["promote"]:
-                    referenced.add(os.path.abspath(staged))
+    referenced = {
+        os.path.abspath(staged)
+        for journal in read_json_files(man_dir, ".journal").values()
+        for staged, _final in journal["promote"]
+    }
     for sub in ("segments", "doc_meta_local"):
         d = os.path.join(index_dir, sub)
         if not os.path.isdir(d):
@@ -111,7 +101,7 @@ def reconcile(index_dir: str) -> int:
             p = os.path.join(d, f_)
             if f_.startswith("_compact_") and os.path.abspath(p) not in referenced:
                 os.remove(p)
-    return n
+    return len(journals)
 
 
 def compact(index_dir: str, target_docs: int = 1_000_000) -> dict:
@@ -150,15 +140,17 @@ def compact(index_dir: str, target_docs: int = 1_000_000) -> dict:
         for m in group:
             off[m["pid"]] = acc
             acc += m["n_docs"]
-        # --- postings: read all group segments, concat runs per term
-        frames = [pq.read_table(m["segment_file"]).to_pandas() for m in group]
-        seg = pd.concat(frames, ignore_index=True)
+        # --- postings: the merge kernel over the group's runs in (term, pid) order
+        seg = pa.concat_tables([pq.read_table(m["segment_file"]) for m in group])
+        seg = seg.sort_by([("term", "ascending"), ("pid", "ascending")])
         new_pid = group[0]["pid"]
-        rows = []
-        for term, grp in seg.groupby("term", sort=True):
-            row = _concat_runs(grp.sort_values("pid"), off, "pid")
-            rows.append({"term": term, "pid": new_pid, **row})
-        out = pd.DataFrame(rows)
+        out = pa.Table.from_batches(
+            [
+                concat_groups(batch, starts, ("term",), "pid", off)
+                for batch, starts in whole_groups(seg.to_batches(), ("term",))
+            ]
+        )
+        out = out.add_column(1, "pid", pa.array(np.full(out.num_rows, new_pid, np.int32)))
         new_seg = os.path.join(seg_dir, f"seg_{new_pid}.parquet")
         new_meta = os.path.join(meta_dir, f"meta_{new_pid}.parquet")
         # stage under _-prefixed names: invisible to spark/pyarrow dataset
@@ -166,8 +158,7 @@ def compact(index_dir: str, target_docs: int = 1_000_000) -> dict:
         # consistent) bytes until the journaled swap promotes the staged copy
         staged_seg = os.path.join(seg_dir, f"_compact_seg_{new_pid}.parquet")
         staged_meta = os.path.join(meta_dir, f"_compact_meta_{new_pid}.parquet")
-        schema = pq.read_schema(group[0]["segment_file"])
-        write_parquet_atomic(pa.Table.from_pandas(out[[f.name for f in schema]], schema=schema), staged_seg)
+        write_parquet_atomic(out, staged_seg)
 
         # --- forward index: concat with rebased local ids
         metas = []
@@ -185,8 +176,8 @@ def compact(index_dir: str, target_docs: int = 1_000_000) -> dict:
             "pid": new_pid,
             "n_docs": int(sum(m["n_docs"] for m in group)),
             "n_tokens": int(sum(m["n_tokens"] for m in group)),
-            "n_postings": int(out["df"].sum()),
-            "n_terms": int(len(out)),
+            "n_postings": pc.sum(out["df"]).as_py(),
+            "n_terms": out.num_rows,
             "doc_id_start": 0,
             "doc_id_end": int(sum(m["n_docs"] for m in group)) - 1,
             "segment_file": new_seg,

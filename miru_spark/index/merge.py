@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from miru_spark.codec import encode_varint
-from miru_spark.jsonio import load_json, save_json_atomic
+from miru_spark.storage import data_files, load_json, save_json_atomic
 
 TARGET_POSTINGS_PER_SHARD = 250_000
 # row-group bound of merged/ and doc_meta_local: the unit a lookup decodes
@@ -104,9 +104,9 @@ def republish_without(index_dir: str, retired) -> None:
 def footer_schema(path: str) -> T.StructType:
     """The schema Spark infers for the parquet directory ``path``, without
     the Spark job that inference runs: Spark takes the footer of the first
-    data file in path order (names starting with "_" or "." are not data);
-    it is read here on the driver."""
-    first = min(n for n in os.listdir(path) if not n.startswith(("_", ".")))
+    data file in path order (``storage.data_files``); it is read here on the
+    driver."""
+    first = data_files(path)[0]
     return from_arrow_schema(pq.read_schema(os.path.join(path, first)))
 
 
@@ -192,8 +192,8 @@ def whole_groups(batches, keys) -> Iterator[tuple[pa.RecordBatch, np.ndarray]]:
 def _concat_runs(runs, off: dict, runcol: str) -> dict:
     """Concatenate one group's docID-ordered posting runs WITHOUT decoding.
     ``runs`` maps each RUN_COLS column and ``runcol`` to the group's values,
-    in ``runcol`` order (run order == docID order: disjoint ranges); a
-    pandas frame or a dict of lists.
+    as lists in ``runcol`` order (run order == docID order: disjoint
+    ranges).
 
     Delta encoding makes a run position-independent except for its first
     gap: rewriting run i's first varint to
@@ -240,14 +240,30 @@ def _concat_runs(runs, off: dict, runcol: str) -> dict:
     }
 
 
+def concat_groups(batch: pa.RecordBatch, starts, keys, runcol: str, off: dict) -> pa.RecordBatch:
+    """One row per group of ``batch`` (sorted by ``keys`` then ``runcol``;
+    groups start at the rows ``starts``, as ``whole_groups`` yields them):
+    the group's ``keys`` values, then RUN_COLS from ``_concat_runs``."""
+    cols = {c: batch.column(c).to_pylist() for c in (runcol, *RUN_COLS)}
+    bounds = np.append(starts, batch.num_rows).tolist()
+    rows = [
+        _concat_runs({c: v[s:e] for c, v in cols.items()}, off, runcol)
+        for s, e in zip(bounds[:-1], bounds[1:])
+    ]
+    return pa.RecordBatch.from_arrays(
+        [batch.column(k).take(starts) for k in keys] + [pa.array([r[c] for r in rows]) for c in RUN_COLS],
+        names=[*keys, *RUN_COLS],
+    )
+
+
 def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None) -> dict:
     """segments/*.parquet → merged/ + stats/ + pid_offsets.json +
     corpus_stats.json.
 
     The salted segment rows are range-partitioned by (term, shard) into
     ``spark.sql.shuffle.partitions`` partitions and sorted by (term, shard,
-    run); one ``mapInArrow`` task per partition hands each whole group
-    (``whole_groups``) to ``_concat_runs`` and writes merged/ directly.
+    run); one ``mapInArrow`` task per partition hands its whole groups
+    (``whole_groups``) to ``concat_groups`` and writes merged/ directly.
     Without ``fanin`` the range sampling runs over the JVM-only segment plan,
     so nothing is cached and the Python kernel runs once. The partition count
     is explicit, so AQE cannot collapse merged/ into one file, and the file
@@ -311,17 +327,7 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
         def fn(batches):
             off = off_b.value if runcol == "pid" else {}
             for batch, starts in whole_groups(batches, keys):
-                cols = {c: batch.column(c).to_pylist() for c in (runcol, *RUN_COLS)}
-                bounds = np.append(starts, batch.num_rows).tolist()
-                rows = [
-                    _concat_runs({c: v[s:e] for c, v in cols.items()}, off, runcol)
-                    for s, e in zip(bounds[:-1], bounds[1:])
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(k).take(starts) for k in keys]
-                    + [pa.array([r[c] for r in rows]) for c in RUN_COLS],
-                    names=schema.names,
-                )
+                yield concat_groups(batch, starts, keys, runcol, off).rename_columns(schema.names)
 
         return fn
 

@@ -37,13 +37,12 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from miru_spark import roaring
+from miru_spark import roaring, storage
 from miru_spark.index.build import KEY_COLS
 
 _LOG = "removal_log.json"
@@ -57,69 +56,61 @@ def _log_path(index_dir: str) -> str:
     return os.path.join(index_dir, _LOG)
 
 
-def _load_log(index_dir: str) -> dict:
-    p = _log_path(index_dir)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {"versions": {}, "removed": []}
-
-
-def _write_atomic(path: str, data: bytes) -> None:
-    tmp = path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "wb") as f:
-        f.write(data)
-    os.replace(tmp, path)
-
-
 def _save(index_dir: str, log: dict) -> None:
     ids = np.array(sorted(int(d) for d in log["removed"]), dtype=np.int64)
     # bitmap (data) BEFORE log (authority) — crash leaves a replayable gap
-    _write_atomic(os.path.join(index_dir, _BITMAP), roaring.from_array(ids))
-    _write_atomic(_log_path(index_dir), json.dumps(log).encode())
+    storage.put_bytes(os.path.join(index_dir, _BITMAP), roaring.from_array(ids))
+    storage.put_bytes(_log_path(index_dir), json.dumps(log).encode())
+
+
+def _apply(index_dir: str, updates) -> tuple[int, int]:
+    """The version-guarded merge into the removal log: an update
+    (doc_id, version, removed) applies iff ``version`` beats the doc's
+    recorded high-water mark (late/duplicate WAL deliveries are no-ops —
+    MiruIndexer.java:140-147), and then records the version and sets the
+    doc's bit to ``removed``. Saves bitmap before log when any version moved.
+    Returns (bits flipped, versions bumped)."""
+    log = storage.load_json(_log_path(index_dir), {"versions": {}, "removed": []})
+    removed = set(log["removed"])
+    flipped = bumped = 0
+    for d, version, rm in updates:
+        key = str(int(d))
+        if version > log["versions"].get(key, -1):
+            log["versions"][key] = version
+            bumped += 1  # a version bump must persist even without a bit flip
+            if rm != (int(d) in removed):
+                (removed.add if rm else removed.discard)(int(d))
+                flipped += 1
+    if bumped:
+        log["removed"] = sorted(removed)
+        _save(index_dir, log)
+    return flipped, bumped
 
 
 def remove_docs(index_dir: str, doc_ids: list[int], version: int) -> int:
-    """Version-guarded logical delete. A REMOVE applies to a doc iff
-    ``version`` beats that doc's recorded high-water mark (late/duplicate
-    WAL deliveries are no-ops — MiruIndexer.java:140-147). Returns the
-    number of docs newly removed."""
-    log = _load_log(index_dir)
-    removed = set(log["removed"])
-    applied = changed = 0
-    for d in doc_ids:
-        key = str(int(d))
-        if version > log["versions"].get(key, -1):
-            log["versions"][key] = version
-            changed += 1  # version bump must persist even without a bit flip
-            if int(d) not in removed:
-                removed.add(int(d))
-                applied += 1
-    if changed:
-        log["removed"] = sorted(removed)
-        _save(index_dir, log)
-    return applied
+    """Version-guarded logical delete (``_apply``). Returns the number of
+    docs newly removed."""
+    return _apply(index_dir, [(d, version, True) for d in doc_ids])[0]
 
 
 def repair_docs(index_dir: str, doc_ids: list[int], version: int) -> int:
-    """Version-guarded restore: clears the removal bit for each doc whose
-    recorded version is older than ``version`` (miru REPAIR under a newer
-    activity version). Returns the number of docs restored."""
-    log = _load_log(index_dir)
-    removed = set(log["removed"])
-    applied = changed = 0
-    for d in doc_ids:
-        key = str(int(d))
-        if version > log["versions"].get(key, -1):
-            log["versions"][key] = version
-            changed += 1  # version bump must persist even without a bit flip
-            if int(d) in removed:
-                removed.discard(int(d))
-                applied += 1
-    if changed:
-        log["removed"] = sorted(removed)
-        _save(index_dir, log)
-    return applied
+    """Version-guarded restore (``_apply``): clears the removal bit, as miru
+    REPAIRs under a newer activity version. Returns the number of docs
+    restored."""
+    return _apply(index_dir, [(d, version, False) for d in doc_ids])[0]
+
+
+def merge_log(src_dir: str, dst_dir: str) -> int:
+    """Merge ``src_dir``'s removal log into ``dst_dir``'s under the same
+    version guard (higher version wins per doc — MiruIndexer.java:140-147
+    applied across clusters), so a replica never resurrects a doc the
+    source deleted later, whatever the sync order. Returns the number of
+    version bumps."""
+    src = storage.load_json(_log_path(src_dir), None)
+    if src is None:
+        return 0
+    gone = set(src["removed"])
+    return _apply(dst_dir, [(int(k), v, int(k) in gone) for k, v in src["versions"].items()])[1]
 
 
 def removed_array(index_dir: str) -> np.ndarray:
@@ -143,7 +134,7 @@ def removed_array(index_dir: str) -> np.ndarray:
             with open(bp, "rb") as f:
                 arr = roaring.to_array(f.read())
         else:  # bitmap lost — rebuild from the log (the authority)
-            log = _load_log(index_dir)
+            log = storage.load_json(p, {"removed": []})
             arr = np.array(sorted(log["removed"]), dtype=np.int64)
         _REMOVED_CACHE[key] = arr
     return arr
@@ -154,23 +145,22 @@ def resolve_keys(spark, index_dir: str, keys: list[tuple[str, str, str]]) -> lis
     not present resolve to nothing (removing an unknown doc is a no-op, as
     in miru: the WAL can carry removes for docs a partition never saw).
     ``spark`` is unused: resolution reads doc_meta_local on the driver."""
-    return [d for ids in resolve_keys_map(spark, index_dir, keys).values() for d in ids]
+    return [d for ids in resolve_keys_map(index_dir, keys).values() for d in ids]
 
 
 def resolve_keys_map(
-    spark, index_dir: str, keys: list[tuple[str, str, str]]
+    index_dir: str, keys: list[tuple[str, str, str]]
 ) -> dict[tuple[str, str, str], list[int]]:
-    """Batch form: key → docIDs, on the driver and without a Spark job
-    (``spark`` is unused), as miru applies a REMOVE inside the partition
-    that holds the doc (MiruIndexer.java:138-162). Each published pid's
-    doc_meta_local footer comes from the serving cache; a row group is read
-    only if its repo/path/commit min/max statistics admit some wanted key
-    (files need not be key-sorted: compaction concatenates pids), and then
-    only its key columns, through ``scorer._meta_block``. doc_id = the pid's
-    offset + row (the row is local_doc_id, as the serving path addresses
-    it); unpublished pids and rows past a pid's published count stay
-    invisible. Cost: the published footers plus the admitted groups' key
-    columns."""
+    """Batch form: key → docIDs, on the driver and without a Spark job, as
+    miru applies a REMOVE inside the partition that holds the doc
+    (MiruIndexer.java:138-162). Each published pid's doc_meta_local footer
+    comes from the serving cache; a row group is read only if its
+    repo/path/commit min/max statistics admit some wanted key (files need
+    not be key-sorted: compaction concatenates pids), and then only its key
+    columns, through ``scorer._meta_block``. doc_id = the pid's offset + row
+    (the row is local_doc_id, as the serving path addresses it);
+    unpublished pids and rows past a pid's published count stay invisible.
+    Cost: the published footers plus the admitted groups' key columns."""
     from miru_spark.query import scorer  # scorer imports this module
 
     if not keys:

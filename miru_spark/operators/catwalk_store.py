@@ -28,7 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from miru_spark.jsonio import load_json, save_json_atomic
+from miru_spark.storage import load_json, save_json_atomic
 from miru_spark.operators.feature_cache import FeatureCache
 from miru_spark.operators.relational import (
     _CATWALK_N_RANGES,

@@ -36,7 +36,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from miru_spark.jsonio import load_json, save_json_atomic
+from miru_spark.storage import load_json, save_json_atomic
 
 _MANIFEST = "manifest.json"
 _GEN_PREFIX = "counts_gen_"

@@ -44,9 +44,7 @@ already handles).
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 import pandas as pd
 import pyarrow as pa
@@ -56,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from miru_spark.functions.cache import scoped_cache
-from miru_spark.jsonio import load_json, save_json_atomic
+from miru_spark.storage import load_json, put_atomic, read_json_files, save_json_atomic
 from miru_spark.pipeline.text import epoch_stream, pack_offsets
 
 DEFAULT_SEQ_LEN = 2048
@@ -166,21 +164,19 @@ def epoch_write(
         man_path = os.path.join(man_dir, f"{lang}_{shard:06d}.json")
         data_file = os.path.join(shards_dir, f"{lang}_{shard:06d}.parquet")
         chk = _checksum(pdf)
-        if resume and os.path.exists(man_path):
-            with open(man_path) as f:
-                m = json.load(f)
-            if (
-                m.get("n_rows") == len(pdf)
-                and m.get("checksum") == chk
-                and os.path.exists(m["data_file"])
-            ):
-                m["status"] = "skipped"
-                return pd.DataFrame([m])[[n for n, _ in _MANIFEST_FIELDS]]
+        m = load_json(man_path, None) if resume else None
+        if (
+            m is not None
+            and m.get("n_rows") == len(pdf)
+            and m.get("checksum") == chk
+            and os.path.exists(m["data_file"])
+        ):
+            m["status"] = "skipped"
+            return pd.DataFrame([m])[[n for n, _ in _MANIFEST_FIELDS]]
         pdf = pdf.sort_values("stream_id", kind="mergesort").reset_index(drop=True)
         table = pa.Table.from_pandas(pdf[_PLACEMENT_COLS], preserve_index=False)
-        tmp = data_file + f".tmp-{uuid.uuid4().hex}"
-        pq.write_table(table, tmp, compression="snappy")
-        os.replace(tmp, data_file)  # data durable BEFORE manifest
+        # data durable BEFORE manifest
+        put_atomic(data_file, lambda tmp: pq.write_table(table, tmp, compression="snappy"))
         if (lang, shard) in fail:
             raise RuntimeError(f"injected crash after data, before manifest: {key}")
         nonempty = pdf["n_tokens"] > 0
@@ -198,10 +194,7 @@ def epoch_write(
             "status": "built",
             "checksum": chk,
         }
-        mtmp = man_path + f".tmp-{uuid.uuid4().hex}"
-        with open(mtmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(mtmp, man_path)
+        save_json_atomic(man_path, manifest)
         return pd.DataFrame([manifest])[[n for n, _ in _MANIFEST_FIELDS]]
 
     placement = epoch_placement(spark, sf_dir, seq_len, seqs_per_shard)
@@ -246,17 +239,12 @@ def epoch_write(
                 "carry_in_tokens": int(carry),
                 "data_file": "", "status": "built", "checksum": 0,
             }
-            if resume and os.path.exists(man_path):
-                with open(man_path) as f:
-                    old = json.load(f)
-                if old.get("n_rows") == 0 and old.get("checksum") == 0:
-                    old["status"] = "skipped"
-                    manifests.append(old)
-                    continue
-            mtmp = man_path + f".tmp-{uuid.uuid4().hex}"
-            with open(mtmp, "w") as f:
-                json.dump(m, f)
-            os.replace(mtmp, man_path)
+            old = load_json(man_path, None) if resume else None
+            if old is not None and old.get("n_rows") == 0 and old.get("checksum") == 0:
+                old["status"] = "skipped"
+                manifests.append(old)
+                continue
+            save_json_atomic(man_path, m)
             manifests.append(m)
 
     summary = {
@@ -281,14 +269,9 @@ def epoch_audit(spark: SparkSession, out_dir: str, seq_len: int) -> DataFrame:
     says. n_seqs/pad derive from totals the same way pack_stats derives
     them; max_end must agree (consistency asserted in tests)."""
     man_dir = os.path.join(out_dir, "manifests")
-    files = [os.path.join(man_dir, f) for f in sorted(os.listdir(man_dir))
-             if f.endswith(".json")]
-    if not files:
+    rows = list(read_json_files(man_dir).values())
+    if not rows:
         raise FileNotFoundError(f"no shard manifests under {man_dir}")
-    rows = []
-    for p in files:
-        with open(p) as f:
-            rows.append(json.load(f))
     mf = spark.createDataFrame(
         pd.DataFrame(rows)[[n for n, _ in _MANIFEST_FIELDS[:9]]]
     )

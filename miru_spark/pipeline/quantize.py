@@ -78,6 +78,7 @@ from pyspark.sql import functions as F
 
 from miru_spark.functions.cache import release_scope, scoped_cache
 from miru_spark.functions.topk import ranked_topk
+from miru_spark.storage import data_files
 
 
 def _sqdist_lit(sub_col: Column, cent: list[float]) -> Column:
@@ -1128,11 +1129,8 @@ def _local_path(path: str) -> str:
 
 def _has_table(path: str) -> bool:
     """Whether ``path`` holds a parquet table: a directory with at least
-    one entry Hadoop input listing does not hide (``_``/``.`` prefixes)."""
-    local = _local_path(path)
-    return os.path.isdir(local) and any(
-        not name.startswith(("_", ".")) for name in os.listdir(local)
-    )
+    one entry Hadoop input listing does not hide (``storage.data_files``)."""
+    return bool(data_files(_local_path(path)))
 
 
 def _read_tombstones(spark: SparkSession, codes_path: str):

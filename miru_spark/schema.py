@@ -17,10 +17,10 @@ is tokenized, ``time``/``meta`` ride the forward index.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 from dataclasses import asdict, dataclass, field
+
+from miru_spark import storage
 
 SCHEMA_FILE = "schema.json"
 
@@ -47,16 +47,6 @@ class IndexSchema:
     name: str
     version: int
     fields: list = field(default_factory=list)  # list[FieldDef]
-
-    def to_json(self) -> str:
-        return json.dumps(
-            {"name": self.name, "version": self.version, "fields": [asdict(f) for f in self.fields]}
-        )
-
-    @classmethod
-    def from_json(cls, s: str) -> "IndexSchema":
-        d = json.loads(s)
-        return cls(d["name"], d["version"], [FieldDef(**f) for f in d["fields"]])
 
     @classmethod
     def from_dataframe(cls, df, name: str = "corpus", version: int = 1) -> "IndexSchema":
@@ -91,20 +81,13 @@ def check_additive(old: IndexSchema, new: IndexSchema) -> None:
 
 
 def load_schema(index_dir: str) -> IndexSchema | None:
-    p = os.path.join(index_dir, SCHEMA_FILE)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return IndexSchema.from_json(f.read())
+    d = storage.load_json(os.path.join(index_dir, SCHEMA_FILE), None)
+    return None if d is None else IndexSchema(d["name"], d["version"], [FieldDef(**f) for f in d["fields"]])
 
 
 def save_schema(index_dir: str, schema: IndexSchema) -> None:
     os.makedirs(index_dir, exist_ok=True)
-    p = os.path.join(index_dir, SCHEMA_FILE)
-    tmp = p + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        f.write(schema.to_json())
-    os.replace(tmp, p)
+    storage.save_json_atomic(os.path.join(index_dir, SCHEMA_FILE), asdict(schema))
 
 
 def register_or_check(index_dir: str, df, name: str = "corpus") -> IndexSchema:

@@ -13,6 +13,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """48g, or half the machine's memory where that is less: a local driver
+    heap allowed to grow past the RAM of a box without swap gets its JVM
+    killed by the kernel instead of failing with an OutOfMemoryError."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "48g"
+    return f"{min(48 * 1024, kb // 2048)}m"
+
+
 def get_spark(
     app_name: str = "miru_spark",
     cores: int | None = None,
@@ -37,7 +49,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("MIRU_SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("MIRU_SPARK_DRIVER_MEM", _default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
         .config("spark.driver.bindAddress", "127.0.0.1")

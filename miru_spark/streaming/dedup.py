@@ -39,7 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from miru_spark.jsonio import load_json, save_json_atomic
+from miru_spark.storage import load_json, save_json_atomic
 from miru_spark.pipeline.dedup import chunked, simhash_of
 
 _JOURNAL = "dedup_batches.json"

@@ -41,7 +41,6 @@ after the merge, mirroring miru's index-then-mask ordering
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,7 +49,7 @@ from pyspark.sql import functions as F
 from miru_spark.corpus import CORPUS_SCHEMA
 from miru_spark.index import removal
 from miru_spark.index.build import build_field_filters, build_segments, key_partition
-from miru_spark.jsonio import load_json, save_json_atomic
+from miru_spark.storage import load_json, read_json_files, save_json_atomic
 
 _BATCHES = "stream_batches.json"
 _PENDING = "pending_ops.json"
@@ -73,11 +72,7 @@ def _bases(index_dir: str, batches: dict | None = None) -> int:
     man_dir = os.path.join(index_dir, "manifests")
     pid_base = 0
     if os.path.isdir(man_dir):
-        for name in os.listdir(man_dir):
-            if not name.endswith(".json"):
-                continue
-            with open(os.path.join(man_dir, name)) as f:
-                m = json.load(f)
+        for m in read_json_files(man_dir).values():
             pid_base = max(pid_base, m["pid"] + 1)
     if batches is None:
         batches = _load_batches(index_dir)
@@ -235,7 +230,7 @@ def refresh(spark: SparkSession, index_dir: str) -> dict:
         # version guard makes application order-independent, so grouping
         # loses nothing and a 10k-op drain costs a handful of log writes
         keymap = removal.resolve_keys_map(
-            spark, index_dir,
+            index_dir,
             sorted({(o["repo"], o["path"], o["commit"]) for o in pending}),
         )
         applied = 0

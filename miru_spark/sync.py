@@ -32,13 +32,11 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import uuid
 
+from miru_spark.index import removal
 from miru_spark.index.merge import republish_without
-from miru_spark.jsonio import load_json as _load_json
-from miru_spark.jsonio import save_json_atomic as _write_atomic_json
 from miru_spark.schema import check_additive, load_schema, save_schema
+from miru_spark.storage import copy_atomic, load_json, read_json_files, save_json_atomic
 
 _PROGRESS = "sync_progress.json"
 
@@ -48,51 +46,6 @@ def _manifest_fingerprint(m: dict) -> str:
         {k: m[k] for k in ("pid", "n_docs", "n_tokens", "n_postings", "n_terms")},
         sort_keys=True,
     )
-
-
-def _copy_atomic(src: str, dst: str) -> None:
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    tmp = dst + f".tmp-{uuid.uuid4().hex}"
-    shutil.copyfile(src, tmp)
-    os.replace(tmp, dst)
-
-
-def _sync_removal_log(src_dir: str, dst_dir: str) -> int:
-    """Version-guarded merge of the removal log (higher version wins per
-    doc — MiruIndexer.java:140-147 applied across clusters)."""
-    from miru_spark import roaring
-    import numpy as np
-
-    src_log = _load_json(os.path.join(src_dir, "removal_log.json"), None)
-    if src_log is None:
-        return 0
-    dst_path = os.path.join(dst_dir, "removal_log.json")
-    dst_log = _load_json(dst_path, {"versions": {}, "removed": []})
-    removed = set(dst_log["removed"])
-    src_removed_set = set(src_log["removed"])  # hoisted: O(1) per key below
-    changed = 0
-    for key, ver in src_log["versions"].items():
-        if ver > dst_log["versions"].get(key, -1):
-            dst_log["versions"][key] = ver
-            src_removed = int(key) in src_removed_set
-            if src_removed and int(key) not in removed:
-                removed.add(int(key))
-                changed += 1
-            elif not src_removed and int(key) in removed:
-                removed.discard(int(key))
-                changed += 1
-            else:
-                changed += 1  # version bump alone must persist too
-    if changed:
-        dst_log["removed"] = sorted(removed)
-        ids = np.array(dst_log["removed"], dtype=np.int64)
-        # bitmap (data) before log (authority) — same order as removal.py
-        with open(os.path.join(dst_dir, "removed.roaring") + ".tmp", "wb") as f:
-            f.write(roaring.from_array(ids))
-        os.replace(os.path.join(dst_dir, "removed.roaring") + ".tmp",
-                   os.path.join(dst_dir, "removed.roaring"))
-        _write_atomic_json(dst_path, dst_log)
-    return changed
 
 
 def sync_index(src_dir: str, dst_dir: str) -> dict:
@@ -121,13 +74,10 @@ def sync_index(src_dir: str, dst_dir: str) -> dict:
 
     man_dir = os.path.join(src_dir, "manifests")
     progress_path = os.path.join(dst_dir, _PROGRESS)
-    progress: dict = _load_json(progress_path, {})
+    progress: dict = load_json(progress_path, {})
     shipped, skipped = [], []
     src_pids: set[int] = set()
-    names = sorted(n for n in os.listdir(man_dir) if n.endswith(".json"))
-    for name in names:
-        with open(os.path.join(man_dir, name)) as f:
-            m = json.load(f)
+    for name, m in read_json_files(man_dir).items():
         pid = m["pid"]
         src_pids.add(pid)
         fp = _manifest_fingerprint(m)
@@ -138,13 +88,13 @@ def sync_index(src_dir: str, dst_dir: str) -> dict:
         # ship data files (atomic copies) BEFORE the manifest
         dst_seg = os.path.join(dst_dir, "segments", os.path.basename(m["segment_file"]))
         dst_meta = os.path.join(dst_dir, "doc_meta_local", os.path.basename(m["meta_file"]))
-        _copy_atomic(m["segment_file"], dst_seg)
-        _copy_atomic(m["meta_file"], dst_meta)
+        copy_atomic(m["segment_file"], dst_seg)
+        copy_atomic(m["meta_file"], dst_meta)
         dst_m = dict(m, segment_file=dst_seg, meta_file=dst_meta, status="synced")
         os.makedirs(os.path.dirname(dst_man), exist_ok=True)
-        _write_atomic_json(dst_man, dst_m)
+        save_json_atomic(dst_man, dst_m)
         progress[str(pid)] = fp
-        _write_atomic_json(progress_path, progress)  # cursor AFTER durable ship
+        save_json_atomic(progress_path, progress)  # cursor AFTER durable ship
         shipped.append(pid)
 
     # retire replica partitions the source no longer has (compaction folded
@@ -154,13 +104,7 @@ def sync_index(src_dir: str, dst_dir: str) -> dict:
     retired = []
     dst_man_dir = os.path.join(dst_dir, "manifests")
     if os.path.isdir(dst_man_dir):
-        for n in sorted(os.listdir(dst_man_dir)):
-            if not n.endswith(".json"):
-                continue
-            with open(os.path.join(dst_man_dir, n)) as f:
-                dm = json.load(f)
-            if dm["pid"] not in src_pids:
-                retired.append((n, dm))
+        retired = [(n, dm) for n, dm in read_json_files(dst_man_dir).items() if dm["pid"] not in src_pids]
     republish_without(dst_dir, [dm["pid"] for _, dm in retired])
     for n, dm in retired:
         for f_ in (dm["segment_file"], dm["meta_file"]):
@@ -168,9 +112,9 @@ def sync_index(src_dir: str, dst_dir: str) -> dict:
                 os.remove(f_)
         os.remove(os.path.join(dst_man_dir, n))
         progress.pop(str(dm["pid"]), None)
-        _write_atomic_json(progress_path, progress)
+        save_json_atomic(progress_path, progress)
 
-    removal_ops = _sync_removal_log(src_dir, dst_dir)
+    removal_ops = removal.merge_log(src_dir, dst_dir)
     return {
         "shipped_pids": shipped,
         "skipped_pids": skipped,

@@ -16,7 +16,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from miru_spark.jsonio import load_json
+from miru_spark.storage import load_json
 from miru_spark.operators import relational as rel
 from miru_spark.operators.catwalk_store import CatwalkModelStore
 

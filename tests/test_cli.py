@@ -45,6 +45,39 @@ def test_cli_compact(cli_index, capsys):
     assert len(res) == 5
 
 
+def test_cli_compact_publishes_appended_docs_and_ops(spark, tmp_path, capsys):
+    """compact publishes a whole generation: a doc appended since the last
+    refresh is found under a --lang filter, and a REMOVE journaled by the
+    same micro-batch is applied."""
+    from pyspark.sql import functions as F
+
+    from miru_spark.streaming.ingest import append_batch
+
+    idx = str(tmp_path / "idx")
+    main(["build", "--synthetic-rows", "120", "--index-dir", idx, "--partitions", "2",
+          "--no-resume"])
+    capsys.readouterr()
+    main(["search", "--index-dir", idx, "--query", "merge OR sort", "--k", "1"])
+    victim = json.loads(capsys.readouterr().out.strip().splitlines()[-1])[0]
+    victim_key = (victim["repo"], victim["path"], victim["commit"])
+    batch = spark.createDataFrame(
+        [("add", "org9/new", "src/new.py", "f" * 40, victim["lang"], "zqxj appended merge"),
+         ("remove", *victim_key, victim["lang"], "")],
+        "op string, repo string, path string, commit string, lang string, content string",
+    ).withColumn("sha256", F.sha2("content", 256))
+    append_batch(batch, 0, idx, 2)
+
+    main(["compact", "--index-dir", idx, "--target-docs", "1000"])
+    capsys.readouterr()
+    main(["search", "--index-dir", idx, "--query", "zqxj", "--lang", victim["lang"], "--k", "5"])
+    found = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert [r["path"] for r in found] == ["src/new.py"]
+    main(["search", "--index-dir", idx, "--query", "merge OR sort", "--k", "200"])
+    served = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert "src/new.py" in [r["path"] for r in served]
+    assert victim_key not in [(r["repo"], r["path"], r["commit"]) for r in served]
+
+
 def test_cli_remove_and_repair(cli_index, capsys):
     main(["search", "--index-dir", cli_index, "--query", "merge AND sort", "--k", "3"])
     before = json.loads(capsys.readouterr().out.strip().splitlines()[-1])

@@ -49,6 +49,50 @@ def test_compaction_preserves_queries_and_docids(spark, streamed_index):
         assert a["path"].tolist() == b["path"].tolist(), q
 
 
+def test_compacted_segment_concatenates_shifted_runs(streamed_index):
+    """Per term, the compacted segment's postings decode to the original
+    segments' runs in pid order, each shifted by its pid's local offset (the
+    cumulative doc count before it in the group); df/cf are the sums and
+    block_last shifts with the ids."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from miru_spark.codec import decode_postings
+    from miru_spark.index.build import SEGMENT_SCHEMA
+    from miru_spark.index.compact import _load_manifests
+
+    idx = streamed_index
+    group = _load_manifests(idx)
+    expect: dict = {}
+    off = 0
+    for m in group:
+        for r in pq.read_table(m["segment_file"]).to_pylist():
+            ids, tfs = decode_postings(r["docids"], r["tfs"])
+            e = expect.setdefault(r["term"], {"ids": [], "tfs": [], "block_last": [], "df": 0, "cf": 0})
+            e["ids"].append(ids + off)
+            e["tfs"].append(tfs)
+            e["block_last"].append(np.frombuffer(r["block_last"], dtype=np.int64) + off)
+            e["df"] += r["df"]
+            e["cf"] += r["cf"]
+        off += m["n_docs"]
+
+    stats = compact(idx, target_docs=10_000)
+    assert stats["after_partitions"] == 1 < len(group)
+    seg = pq.read_table(_load_manifests(idx)[0]["segment_file"])
+    assert seg.schema.remove_metadata() == SEGMENT_SCHEMA
+    rows = seg.to_pylist()
+    assert [r["term"] for r in rows] == sorted(expect)
+    for r in rows:
+        e = expect[r["term"]]
+        ids, tfs = decode_postings(r["docids"], r["tfs"])
+        assert ids.tolist() == np.concatenate(e["ids"]).tolist(), r["term"]
+        assert tfs.tolist() == np.concatenate(e["tfs"]).tolist(), r["term"]
+        assert np.frombuffer(r["block_last"], dtype=np.int64).tolist() == np.concatenate(e["block_last"]).tolist()
+        assert (r["pid"], r["df"], r["cf"], r["min_doc"], r["max_doc"]) == (
+            group[0]["pid"], e["df"], e["cf"], ids[0], ids[-1]
+        )
+
+
 def test_compaction_respects_target(spark, streamed_index):
     idx = streamed_index
     stats = compact(idx, target_docs=85)  # ~one wave per group

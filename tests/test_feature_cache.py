@@ -13,7 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from miru_spark.jsonio import load_json, save_json_atomic
+from miru_spark.storage import load_json, save_json_atomic
 from miru_spark.operators.feature_cache import FeatureCache, _events_features
 
 SF_DIR = os.path.join(

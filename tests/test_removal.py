@@ -298,7 +298,7 @@ def _join_reference(spark, index_dir, keys) -> dict:
 
 
 def _resolved(index_dir, keys) -> dict:
-    return {k: sorted(v) for k, v in removal.resolve_keys_map(None, index_dir, keys).items()}
+    return {k: sorted(v) for k, v in removal.resolve_keys_map(index_dir, keys).items()}
 
 
 _ABSENT = ("org0/none", "src/none.py", "0" * 40)
