@@ -147,10 +147,9 @@ def _ast_terms(node, positives_only: bool) -> set:
 
 def _ast_bool_sql(node) -> str:
     """The RAW boolean AST as a SQL expression over per-doc m_<term> flags
-    — evaluated by DuckDB directly, with no CNF conversion anywhere in the
-    oracle path (the engine's masks mode converts via parser.cnf_clauses;
-    a conversion bug therefore flips this gate instead of hiding in both
-    engines)."""
+    — evaluated by DuckDB directly, sharing no evaluator with the engine
+    (whose per-pid kernel runs scorer._eval_ast), so an evaluation bug
+    flips this gate instead of hiding in both engines)."""
     from miru_spark.query import parser as qp
 
     if isinstance(node, qp.Term):
@@ -197,12 +196,11 @@ def _ast_eval_empty(node) -> bool:
 
 def _bm25_cnf_sql(query: str, k: int = 10) -> str:
     """BM25 oracle for ONE boolean term query, independent of the engine's
-    CNF machinery: DuckDB tokenizes, builds per-doc matched flags (bool_or
-    per needed term), applies the RAW AST as SQL booleans (_ast_bool_sql —
-    no cnf_clauses anywhere), scores only positive-term contributions, and
-    — when the AST holds at the empty matched set (_ast_eval_empty) —
-    unions every doc with NO needed-term hit at score 0.0 (the engine's
-    doc_meta termless branch)."""
+    evaluator: DuckDB tokenizes, builds per-doc matched flags (bool_or per
+    needed term), applies the RAW AST as SQL booleans (_ast_bool_sql),
+    scores only positive-term contributions, and — when the AST holds at
+    the empty matched set (_ast_eval_empty) — unions every doc with NO
+    needed-term hit at score 0.0 (the engine's termless matches)."""
     from miru_spark.query import parser as qp
 
     ast = qp.parse_query(query)
@@ -255,8 +253,8 @@ FROM unioned QUALIFY rank <= {k} ORDER BY rank
 
 
 def _bm25_batch_cnf_sql() -> str:
-    """ft_bm25_batch_cnf oracle: UNION ALL of per-query CNF-generated SQL
-    over ft.BATCH_CNF_QUERIES (the masks-mode shapes)."""
+    """ft_bm25_batch_cnf oracle: UNION ALL of per-query boolean SQL over
+    ft.BATCH_CNF_QUERIES (NOT, De Morgan, OR-distribution, pure-NOT shapes)."""
     return "\nUNION ALL\n".join(
         f"SELECT {qid} AS query_id, doc_id, score, rank FROM ({_bm25_cnf_sql(q)})"
         for qid, q in enumerate(ft.BATCH_CNF_QUERIES)
@@ -267,7 +265,7 @@ def _or_timerange_sql() -> str:
     """ft_bm25_or_timerange oracle: `dup OR ts:[0 TO 9]` over the engine
     corpus (ts = doc_id % 100). Docs containing 'dup' carry their BM25
     score; in-range docs WITHOUT a term hit enter at 0.0 (the engine's
-    doc_meta termless branch); rank = (rounded score desc, doc_id desc)."""
+    termless matches); rank = (rounded score desc, doc_id desc)."""
     lo, hi = ft.OR_RANGE_TS
     return f"""
 WITH {_TOK_CTE},
@@ -1276,11 +1274,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ft_highlights": ft.ft_highlights,  # Q3 best-4-fragment highlighter
         "ft_serve_bm25": ft.ft_serve_bm25,  # serving path: WAND + roaring filters
         "ft_bm25_batch": ft.ft_bm25_batch,  # N queries, ONE posting scan (search_batch)
-        "ft_bm25_batch_cnf": ft.ft_bm25_batch_cnf,  # masks mode: CNF shapes, O(1) plan in N
+        "ft_bm25_batch_cnf": ft.ft_bm25_batch_cnf,  # boolean shapes in one batch
         "ft_bm25_after_delete": ft.ft_bm25_after_delete,  # F5 removal mask
         "ft_bm25_time_range": ft.ft_bm25_time_range,  # S4 doc-time mask
-        # OR-reachable Range clause → doc_meta candidate branch unioned into
-        # the distributed path (MiruAggregateUtil.java:1098-1241 uniformity)
+        # OR-reachable Range clause → termless matches at score 0.0 on the
+        # distributed path (MiruAggregateUtil.java:1098-1241 uniformity)
         "ft_bm25_or_timerange": ft.ft_bm25_or_timerange,
         # mustNots-only query → pButNotQ(all, q) inclusiveFilter=true
         # (LuceneBackedQueryParser.java:139-141), served via search_local

@@ -109,7 +109,7 @@ def main() -> None:
         "ft_bm25_batch",
         # deterministic split + within-doc repetition quality signal
         "stratified_split", "ngram_repetition",
-        # round-4 operators: OR-reachable Range (doc_meta branch), pure-
+        # round-4 operators: OR-reachable Range (termless matches), pure-
         # negative serving, German stop set e2e, cross-partition Catwalk
         # merge, bucket-partitioned unbounded-N ANN
         "ft_bm25_or_timerange", "ft_not_only", "ft_bm25_stopworded_de",

@@ -267,9 +267,10 @@ def _index_complete(idx: str) -> bool:
 def _finish_engine_topk(spark: SparkSession, res: DataFrame) -> DataFrame:
     """Execute the engine's top-k plan and rank the ≤k survivors driver-side.
 
-    ``search_distributed`` already cuts to k rows inside its plan (a
-    WindowGroupLimit Partial/Final pair around the exchange — PLANS.md).
-    The doc_id decode / rounding / rank happen HERE, on the ≤k rows it
+    ``search_distributed`` already cuts to k rows inside its plan (each
+    scoring task emits at most k rows, and a rank window cuts the merged
+    rows to k — PLANS.md). The doc_id decode / rounding / rank happen
+    HERE, on the ≤k rows it
     delivers to the driver, rather than as more plan stacked on its
     result."""
     pdf = res.toPandas()
@@ -666,9 +667,9 @@ def ft_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting scan (`search_batch` — the lsh_ann_batch treatment applied to
     BM25; miru analog: many MiruRequests solved against one shared index
     context rather than re-opening per question). Queries 0/2/3 share the
-    {merge, sort} postings — the batch decodes them once and fans the rows
-    out per query via a broadcast (query_id, term) table. Oracle: UNION ALL
-    of the per-query BM25 SQL."""
+    {merge, sort} postings — the batch decodes them once, and every query
+    reads them in the per-pid solve. Oracle: UNION ALL of the per-query
+    BM25 SQL."""
     from miru_spark.query.scorer import search_batch
 
     idx = build_documents_index(spark, sf_dir)
@@ -691,15 +692,13 @@ BATCH_CNF_QUERIES = [
 
 
 def ft_bm25_batch_cnf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched serving in MASKS mode, the O(1)-plan-size query-log form
-    that search_batch takes because every query here is CNF-able
-    (tests/test_batch_search.py pins that): every query's boolean converts
-    to CNF clause bitmasks evaluated as broadcast DATA (parser.cnf_clauses),
-    covering the shapes the flat 4-query gate does not — negated literals,
-    De Morgan'd groups, OR-distribution, and a pure-negative query whose
-    matches enter through the doc_meta branch at score 0.0. Oracle:
-    per-query SQL generated from the SAME CNF (independent DuckDB
-    tokenization + boolean evaluation over per-term matched flags)."""
+    """Batched serving over boolean shapes the flat 4-query gate does not
+    cover — negated literals, De Morgan'd groups, OR-distribution, and a
+    pure-negative query whose termless matches enter at score 0.0 — all in
+    one ``search_batch``, whose per-pid kernel evaluates each query's AST
+    with the same numpy evaluator as ``search_local``. Oracle: per-query
+    SQL that DuckDB tokenizes and evaluates from the RAW boolean AST over
+    per-term matched flags, independently of the engine."""
     from miru_spark.query.scorer import search_batch
 
     idx = build_documents_index(spark, sf_dir)

@@ -127,7 +127,7 @@ def oracle_topk(
     out = out.filter(_ast_condition(ast, F.col("mts"), expansions))
     if termless:
         # forward-table candidate branch (same semantics as the engine's
-        # doc_meta branch): docs matching the AST with zero term hits, at
+        # termless matches): docs matching the AST with zero term hits, at
         # score 0.0; docs with any hit were decided above with their true mts
         extra = (
             corpus_with_ids.select(*meta_cols)

@@ -378,10 +378,9 @@ def ranges(node: Node) -> set[Range]:
 
 def filter_fields(node: Node) -> set[str]:
     """Field names referenced by non-scored Field/Range clauses anywhere in
-    the tree — the ONLY doc_meta columns the distributed/batch scorers must
-    carry through the scoring aggregation. Display fields (repo/path/commit/
-    lang when not filtered on) gather post-top-k from k rows instead of
-    riding the widest exchange in the plan."""
+    the tree — with doc_len, the only doc_meta columns the distributed
+    kernel reads per pid before its top-k cut. Display fields (repo/path/
+    commit/lang when not filtered on) gather for the k rows it emits."""
     if isinstance(node, (Field, Range)):
         return {node.field}
     if isinstance(node, (And, Or, Xor)):
@@ -397,11 +396,10 @@ def filter_fields(node: Node) -> set[str]:
 def can_match_termless(node: Node) -> bool:
     """True if a doc with ZERO term/prefix hits could still match — i.e. the
     AST evaluated with every Term/Prefix leaf forced False is satisfiable
-    structurally. Such queries need a forward-index (doc_meta) candidate
-    branch in addition to posting hits: the distributed/batch scorers union
-    a meta scan filtered by the same AST condition (the reference evaluates
-    field filters and subfilters uniformly against full index masks,
-    MiruAggregateUtil.java:1098-1241, so it has no such asymmetry).
+    structurally. Such a query stays live with no term in the dictionary,
+    and its matches can come from every pid, not only the pids its postings
+    touch (the reference evaluates field filters and subfilters uniformly
+    against full index masks, MiruAggregateUtil.java:1098-1241).
 
     Term/Prefix can't match termlessly; Field/Range/All can; And needs every
     child to; Or/Xor need one; Not needs its positive side to (the negative
@@ -444,81 +442,3 @@ def required_terms(node: Node) -> set[str]:
     if isinstance(node, Not):
         return required_terms(node.positive)
     raise TypeError(type(node))
-
-
-def cnf_clauses(
-    node: Node, expansions: dict, negate: bool = False, limit: int = 64
-) -> list[tuple[frozenset, frozenset]] | None:
-    """AST → CNF over TERM literals: a list of clauses, each
-    ``(pos_terms, neg_terms)`` — the clause is satisfied by a doc's matched-
-    term set M iff ``M ∩ pos_terms ≠ ∅`` or ``neg_terms ⊄ M``. The whole
-    query matches iff every clause is satisfied.
-
-    This is the form that lets a BATCH of queries evaluate as DATA (a
-    broadcast clause table + one ``forall`` over bitmasks) instead of a
-    per-query CASE expression whose plan size grows linearly with the batch
-    — the O(1)-plan-size requirement for query-log replay (scorer.
-    search_batch masks mode).
-
-    Returns None when the query is not CNF-representable over term literals:
-    Field/Range leaves (they test doc_meta columns, not term membership),
-    Xor (exponential CNF), or when OR-distribution would exceed ``limit``
-    clauses. Prefixes expand through ``expansions`` (an empty expansion is
-    an unsatisfiable leaf). All is the empty conjunction. Tautological
-    clauses (a term on both sides) are dropped."""
-    if isinstance(node, Term):
-        return [(frozenset(), frozenset([node.term]))] if negate else [
-            (frozenset([node.term]), frozenset())
-        ]
-    if isinstance(node, Prefix):
-        terms = expansions.get(node.prefix, [])
-        if negate:  # ¬(a ∨ b) = ¬a ∧ ¬b
-            return [(frozenset(), frozenset([t])) for t in terms]
-        if not terms:
-            return [(frozenset(), frozenset())]  # empty clause: False
-        return [(frozenset(terms), frozenset())]
-    if isinstance(node, All):
-        # tautology: no clauses; negated: unsatisfiable
-        return [(frozenset(), frozenset())] if negate else []
-    if isinstance(node, (Field, Range, Xor)):
-        return None
-    if isinstance(node, Not):  # pButNotQ: positive ∧ ¬negative
-        node = And(children=(node.positive, _Negated(node.negative)))
-    if isinstance(node, _Negated):
-        return cnf_clauses(node.inner, expansions, not negate, limit)
-    if isinstance(node, (And, Or)):
-        conj = isinstance(node, And) != negate  # De Morgan under negation
-        parts = []
-        for c in node.children:
-            p = cnf_clauses(c, expansions, negate, limit)
-            if p is None:
-                return None
-            parts.append(p)
-        if conj:
-            out = [cl for p in parts for cl in p]
-            return out if len(out) <= limit else None
-        # disjunction of CNFs: distribute (cross-product of clause unions)
-        out = [(frozenset(), frozenset())]
-        for p in parts:
-            if not p:  # tautological disjunct → whole OR is a tautology
-                return []
-            nxt = []
-            for a_pos, a_neg in out:
-                for b_pos, b_neg in p:
-                    pos, neg = a_pos | b_pos, a_neg | b_neg
-                    if pos & neg:
-                        continue  # t ∨ ¬t — tautological clause, drop
-                    nxt.append((pos, neg))
-            if len(nxt) > limit:
-                return None
-            out = nxt
-        return out
-    raise TypeError(type(node))
-
-
-@dataclass(frozen=True)
-class _Negated:
-    """Internal CNF marker: logical negation of an arbitrary subtree (the
-    public Not node is pButNotQ, not plain negation)."""
-
-    inner: object

@@ -13,13 +13,15 @@ Two execution paths, rank-identical by test:
   DataFrame program (``_bm25_topk``) over a batch of queries —
   ``search_distributed`` is a batch of one. Postings for ONLY the query
   terms are read (parquet predicate pushdown on the term-range-partitioned
-  merged index), decoded by a vectorized mapInPandas, fanned out per query,
-  joined to the masked doc_meta relation, aggregated per (query, doc),
-  boolean-filtered by each query's AST, and cut to the per-query top-k by a
-  ``row_number() <= k`` window that Spark plans as a WindowGroupLimit
-  Partial/Final pair around the exchange. Scales to any corpus: no driver
-  materialization, Catalyst/AQE handle the joins; skew on head terms is
-  bounded because merged rows are pre-sharded (merge.py salting).
+  merged index), decoded once per posting row and cut at the published pid
+  offsets by one ``mapInArrow`` kernel, exchanged on pid, and solved per
+  pid by a second: every live query goes through the same numpy evaluator
+  and BM25 code as ``search_local`` (pid-local leaves, global df), with a
+  running per-query top-k, as miru solves each partition with its own
+  index and a bounded heap (FullText.java:129-132). A ``row_number() <= k``
+  window makes the final cross-pid merge (FullTextAnswerMerger.java:31-68).
+  Scales to any corpus: no driver materialization, no dense whole-index
+  array on a worker, and nothing per query in the plan.
 
 - ``search_local``: the serving-latency path. pyarrow reads only the posting
   rows of the query terms; numpy set algebra evaluates the filter AST
@@ -34,21 +36,22 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from miru_spark import roaring
 from miru_spark.codec import decode_block_meta, decode_postings
 from miru_spark.index import removal
-from miru_spark.index.merge import MERGED_SCHEMA, STATS_SCHEMA, forward_index, load_pid_offsets
+from miru_spark.index.merge import MERGED_SCHEMA, load_pid_offsets, whole_groups
 from miru_spark.query import parser as qp
 
 K1 = 1.2
@@ -107,7 +110,7 @@ def expand_prefixes(index_dir: str, prefix_set: set[str]) -> dict[str, list[str]
 # re-publishes the offset table; the first call that sees a new generation of
 # an index sweeps that index's older ones out, so a long-lived server strands
 # nothing across refreshes. The cache lives in every process that serves,
-# including each executor Python worker running _gather_display_fields: 32
+# including each executor Python worker running _score_pids: 32
 # workers × this bound (1 GiB) must stay far below one dense doc_meta table
 # at 100M docs (~10 GB), which CLAUDE.md bans from workers.
 _CACHE_MAX_BYTES = 32 << 20
@@ -426,39 +429,10 @@ def _docmeta_for(index_dir: str, ids: np.ndarray, diag: dict | None = None) -> d
     """Display fields {repo, path, commit, lang} for a KNOWN id set, row i ↔
     ids[i], through the serving cache — NEVER a dense materialization (at
     100M docs that is a multi-GB table; this runs inside executor Python
-    workers via _gather_display_fields, where a dense fallback would pin
+    workers via _score_pids, where a dense fallback would pin
     that table once per worker)."""
     cols = _meta_lookup(index_dir, ids, _DISPLAY_COLS, diag)
     return {c: np.asarray(cols[c]) for c in _DISPLAY_COLS}
-
-
-def _gather_display_fields(top: DataFrame, index_dir: str) -> DataFrame:
-    """Attach stored display fields (repo/path/commit/lang) to a top-k
-    result AFTER the limit (miru's lazy Promise gather, FullText.java:
-    204-218, applied to the distributed paths).
-
-    Before round 4 the distributed scorers joined the full doc_meta into
-    the posting-hits relation, so four string columns crossed the scoring
-    join and the per-doc aggregation's exchange — at 100M docs, the widest
-    shuffle in the plan — to survive in only k rows. Here the scoring plan
-    carries nothing but doc_id/score (plus AST-referenced filter fields)
-    and the k surviving rows gather their fields through the same serving
-    cache as search_local (`_docmeta_for`): executor-side
-    mapInPandas, no exchange, touches only the row groups covering the k
-    ids (0.3 s for 512 of 1.04M rows at 100M docs with the earlier
-    isin-filtered read, BENCH_100M_Q2)."""
-    names = [f.name for f in top.schema.fields] + _DISPLAY_COLS
-    out_schema = T.StructType(
-        list(top.schema.fields) + [T.StructField(c, T.StringType()) for c in _DISPLAY_COLS]
-    )
-
-    def gather(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pdf.assign(**_docmeta_for(index_dir, pdf["doc_id"].to_numpy()))[names]
-
-    return top.mapInPandas(gather, schema=out_schema)
 
 
 def load_postings(
@@ -572,21 +546,35 @@ def _setdiff_sorted(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return a[~((pos < b.size) & (b[pos_c] == a))]
 
 
-def _eval_ast(node, postings, expansions, index_dir=None) -> np.ndarray:
-    if isinstance(node, qp.Term):
-        return postings.get(node.term, (np.empty(0, dtype=np.int64),))[0]
-    if isinstance(node, qp.All):
-        # full index mask (buildIndexMask, MiruBitmapsRoaring.java:457-505);
-        # removal/time masks compose on top in search_local as usual
-        return _all_doc_ids(index_dir)
-    if isinstance(node, qp.Field):
-        # field filter clause → its roaring bitmap, decoded as a doc set
-        return load_filter_set(index_dir, node.field, [node.value])
-    if isinstance(node, qp.Range):
+def _index_leaf(index_dir: str):
+    """The index-wide leaf provider of ``_eval_ast`` (search_local): All →
+    every doc_id, Field → its filter bitmap, Range → the dense doc-time mask."""
+
+    def leaf(node) -> np.ndarray:
+        if isinstance(node, qp.All):
+            # full index mask (buildIndexMask, MiruBitmapsRoaring.java:457-505);
+            # removal/time masks compose on top in search_local as usual
+            return _all_doc_ids(index_dir)
+        if isinstance(node, qp.Field):
+            # field filter clause → its roaring bitmap, decoded as a doc set
+            return load_filter_set(index_dir, node.field, [node.value])
         # ts:[lo TO hi] → doc-time mask as a doc set (buildTimeRangeMask,
         # MiruBitmapsRoaring.java:506-521); composes under AND/OR/NOT/XOR
         ts = _docts(index_dir)
         return np.nonzero((ts >= node.lo) & (ts <= node.hi))[0].astype(np.int64)
+
+    return leaf
+
+
+def _eval_ast(node, postings, expansions, leaf) -> np.ndarray:
+    """The filter AST as a sorted doc set. Term and Prefix leaves read
+    ``postings``; All, Field and Range leaves come from ``leaf(node)``:
+    index-wide in search_local (``_index_leaf``), one pid's doc range in the
+    distributed kernel (``_PidView.leaf``)."""
+    if isinstance(node, qp.Term):
+        return postings.get(node.term, (np.empty(0, dtype=np.int64),))[0]
+    if isinstance(node, (qp.All, qp.Field, qp.Range)):
+        return leaf(node)
     if isinstance(node, qp.Prefix):
         sets = [postings[t][0] for t in expansions.get(node.prefix, []) if t in postings]
         if not sets:
@@ -596,7 +584,7 @@ def _eval_ast(node, postings, expansions, index_dir=None) -> np.ndarray:
             out = np.union1d(out, s)
         return out
     if isinstance(node, qp.And):
-        sets = sorted((_eval_ast(c, postings, expansions, index_dir) for c in node.children), key=len)
+        sets = sorted((_eval_ast(c, postings, expansions, leaf) for c in node.children), key=len)
         out = sets[0]
         for s in sets[1:]:
             if out.size == 0:
@@ -606,16 +594,16 @@ def _eval_ast(node, postings, expansions, index_dir=None) -> np.ndarray:
     if isinstance(node, qp.Or):
         out = np.empty(0, dtype=np.int64)
         for c in node.children:
-            out = np.union1d(out, _eval_ast(c, postings, expansions, index_dir))
+            out = np.union1d(out, _eval_ast(c, postings, expansions, leaf))
         return out
     if isinstance(node, qp.Not):
-        pos = _eval_ast(node.positive, postings, expansions, index_dir)
-        neg = _eval_ast(node.negative, postings, expansions, index_dir)
+        pos = _eval_ast(node.positive, postings, expansions, leaf)
+        neg = _eval_ast(node.negative, postings, expansions, leaf)
         return _setdiff_sorted(pos, neg)
     if isinstance(node, qp.Xor):
         # n-ary xor = docs in an ODD number of children (2-ary: setxor1d);
         # miru MiruFilterOperation.java:16
-        sets = [_eval_ast(c, postings, expansions, index_dir) for c in node.children]
+        sets = [_eval_ast(c, postings, expansions, leaf) for c in node.children]
         if len(sets) == 2:
             return np.setxor1d(sets[0], sets[1], assume_unique=True)
         allv = np.concatenate(sets) if sets else np.empty(0, dtype=np.int64)
@@ -624,10 +612,12 @@ def _eval_ast(node, postings, expansions, index_dir=None) -> np.ndarray:
     raise TypeError(type(node))
 
 
-def _score_candidates(cand, scoring_terms, postings, doclens, n_docs, avgdl):
+def _score_candidates(cand, scoring_terms, postings, doclens, n_docs, avgdl, df):
     """Exact BM25 over the candidate vector; ``doclens`` maps each scoring
     term to its posting-aligned doc lengths (``_doclens_for``), read at the
-    same positions as its tfs. Per-term contribution vectors are computed
+    same positions as its tfs, and ``df`` to its document frequency (the
+    posting count in search_local, the global stats in the distributed
+    kernel, which sees one pid's slice). Per-term contribution vectors are computed
     concurrently (numpy releases the GIL), then ACCUMULATED in sorted term
     order — float sums stay bit-reproducible and rank-identical to the
     sequential oracle."""
@@ -642,7 +632,7 @@ def _score_candidates(cand, scoring_terms, postings, doclens, n_docs, avgdl):
         if not mask.any():
             return None
         at = pos_c[mask]
-        idf = bm25_idf(float(d.size), n_docs)
+        idf = bm25_idf(float(df[term]), n_docs)
         return mask, idf * bm25_tf_norm(
             tf[at].astype(np.float64), doclens[term][at].astype(np.float64), avgdl
         )
@@ -806,7 +796,7 @@ def search_local(
             removed=removed,
         )
     else:
-        cand = _eval_ast(ast, postings, expansions, index_dir)
+        cand = _eval_ast(ast, postings, expansions, _index_leaf(index_dir))
     if diag is not None:
         diag["scored"] = int(cand.size)
     if removed.size:
@@ -821,7 +811,8 @@ def search_local(
     if cand.size == 0:
         return pd.DataFrame(columns=["doc_id", "score", "repo", "path", "commit", "lang"])
 
-    scores = _score_candidates(cand, scoring_terms, postings, doclens, h.n_docs, h.avgdl)
+    df = {t: postings[t][0].size for t in scoring_terms if t in postings}
+    scores = _score_candidates(cand, scoring_terms, postings, doclens, h.n_docs, h.avgdl, df)
     kk = min(k, cand.size)
     order = np.lexsort((cand, scores))[::-1][:kk]  # (score desc, docID desc)
     top = {"doc_id": cand[order], "score": scores[order]}
@@ -831,103 +822,269 @@ def search_local(
 
 
 # --------------------------------------------------------------- distributed
-_POSTING_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("tf", T.IntegerType()),
-    ]
-)
-
-
-def _ast_to_condition(node, expansions, term_bits=None) -> F.Column:
-    """AST → boolean Column over the per-doc matched-terms aggregate.
-
-    Two physical encodings of "which of the query's terms this doc matched":
-
-    - ``term_bits=None``: a string-set column `mts` (collect_set agg state) —
-      the general form, used when a query set needs more than 63 distinct
-      terms.
-    - ``term_bits={term: bit_index}``: ONE long column `mbits` (bit_or agg
-      state). Term membership is a bitwise AND against a literal mask. This
-      is the common serving case (≤63 distinct terms across the query/batch)
-      and shrinks the per-group aggregation state crossing the plan's widest
-      exchange from an array of strings to 8 bytes.
-
-    Evaluating the SAME condition over a row whose `mts` is the empty array
-    (or `mbits` = 0) yields the query's termless-match predicate — the
-    doc_meta candidate branch reuses this directly (see _bm25_topk)."""
-    if isinstance(node, qp.Term):
-        if term_bits is not None:
-            return F.col("mbits").bitwiseAND(F.lit(1 << term_bits[node.term])) != 0
-        return F.array_contains("mts", node.term)
-    if isinstance(node, qp.All):
-        return F.lit(True)
-    if isinstance(node, qp.Field):
-        return F.col(node.field) == node.value  # doc_meta column carried through the agg
-    if isinstance(node, qp.Range):
-        return F.col(node.field).between(node.lo, node.hi)  # ts carried when present
-    if isinstance(node, qp.Prefix):
-        terms = expansions.get(node.prefix, [])
-        if not terms:
-            return F.lit(False)
-        if term_bits is not None:
-            mask = 0
-            for t in terms:
-                mask |= 1 << term_bits[t]
-            return F.col("mbits").bitwiseAND(F.lit(mask)) != 0
-        return F.arrays_overlap("mts", F.array(*[F.lit(t) for t in terms]))
-    if isinstance(node, qp.And):
-        out = F.lit(True)
-        for c in node.children:
-            out = out & _ast_to_condition(c, expansions, term_bits)
-        return out
-    if isinstance(node, qp.Or):
-        out = F.lit(False)
-        for c in node.children:
-            out = out | _ast_to_condition(c, expansions, term_bits)
-        return out
-    if isinstance(node, qp.Not):
-        return _ast_to_condition(node.positive, expansions, term_bits) & ~_ast_to_condition(
-            node.negative, expansions, term_bits
-        )
-    if isinstance(node, qp.Xor):
-        # odd-membership count — xor as modular arithmetic over child matches
-        total = sum(
-            F.when(_ast_to_condition(c, expansions, term_bits), 1).otherwise(0)
-            for c in node.children
-        )
-        return total % 2 == 1
-    raise TypeError(type(node))
-
-
-_BITMASK_MAX_TERMS = 63  # bits 0..62 of a signed long; beyond → collect_set
-# driver tables above this many rows join normally (AQE picks the strategy)
-# instead of being broadcast
-_BROADCAST_MAX_ROWS = 2_000_000
 _TOPK_SCHEMA = (
     "query_id int, doc_id long, score double, rank int, "
     "repo string, path string, commit string, lang string"
 )
+# the cut kernel's rows: one pid's slice of one merged posting row
+_SLICE_SCHEMA = "pid int, term string, doc_ids array<long>, tfs array<int>"
+# the score kernel's rows: a task's per-query top-k with display fields
+_HIT_SCHEMA = (
+    "query_id int, doc_id long, score double, repo string, path string, commit string, lang string"
+)
 
 
-def _driver_table(spark: SparkSession, columns: dict, schema: str) -> DataFrame:
-    """A driver-built table (removed ids, query fan-out, CNF clauses) as a
-    DataFrame, broadcast while it is driver-sized. Built from pandas so
-    Arrow plans it as a LocalRelation (an RDD only past
-    spark.sql.execution.arrow.localRelationThreshold, 48 MiB); a
-    list-built table is a LogicalRDD, which costs a Spark job per
-    broadcast."""
-    pdf = pd.DataFrame(columns)
-    df = spark.createDataFrame(pdf, schema)
-    return F.broadcast(df) if len(pdf) <= _BROADCAST_MAX_ROWS else df
+# postings per output batch of the cut kernel: bounds its memory and keeps
+# the int32 list offsets of a batch far from overflow
+_SLICE_BATCH_POSTINGS = 1 << 22
 
 
-def _decode_posting_rows(batches):
-    for pdf in batches:
-        for term, db, tb in zip(pdf["term"], pdf["docids"], pdf["tfs"]):
+def _cut_at_pids(batches, table: np.ndarray) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel over merged/ (term, docids, tfs): decode each
+    posting row once and cut it at the published pid offsets (``table`` is
+    the (pid, offset, n_docs) table) with one searchsorted, one output row
+    per pid the row touches."""
+    pids, offsets = table[0], table[1]
+    for batch in batches:
+        cut, n = [], 0  # per posting row: (its pids, row, slice starts, doc_ids, tfs)
+        blobs = zip(batch.column("docids").to_pylist(), batch.column("tfs").to_pylist())
+        for i, (db, tb) in enumerate(blobs):
             d, tf = decode_postings(db, tb)
-            yield pd.DataFrame({"term": term, "doc_id": d, "tf": tf.astype(np.int32)})
+            if not d.size:
+                continue
+            lo, hi = np.searchsorted(offsets, d[[0, -1]], side="right") - 1
+            bounds = np.concatenate([[0], np.searchsorted(d, offsets[lo + 1 : hi + 1]), [d.size]])
+            keep = np.flatnonzero(np.diff(bounds))  # the pids of the range it has docs in
+            cut.append((pids[lo + keep], i, bounds[keep], d, tf))
+            n += d.size
+            if n >= _SLICE_BATCH_POSTINGS:
+                yield _slice_batch(batch.column("term"), cut)
+                cut, n = [], 0
+        if cut:
+            yield _slice_batch(batch.column("term"), cut)
+
+
+def _slice_batch(terms: pa.Array, cut: list) -> pa.RecordBatch:
+    """The cut kernel's (pid, term, doc_ids, tfs) rows for ``cut``, whose
+    slices tile each posting row's doc_ids in order."""
+    sizes = [c[3].size for c in cut]
+    base = np.cumsum([0] + sizes[:-1])
+    starts = pa.array(np.append(np.concatenate([b + c[2] for b, c in zip(base, cut)]), sum(sizes)).astype(np.int32))
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(np.concatenate([c[0] for c in cut]).astype(np.int32)),
+            terms.take(pa.array(np.concatenate([np.full(c[0].size, c[1]) for c in cut]))),
+            pa.ListArray.from_arrays(starts, pa.array(np.concatenate([c[3] for c in cut]))),
+            pa.ListArray.from_arrays(starts, pa.array(np.concatenate([c[4] for c in cut]).astype(np.int32))),
+        ],
+        names=["pid", "term", "doc_ids", "tfs"],
+    )
+
+
+def _holds(mask) -> np.ndarray:
+    """An Arrow boolean array as numpy, null read as False."""
+    return pc.fill_null(mask, False).to_numpy(zero_copy_only=False)
+
+
+class _PidView:
+    """One pid's doc range [off, off + n) and the doc_meta_local columns a
+    batch needs, read through the serving cache on first use and cut to the
+    published count: the distributed kernel's pid-local leaves and masks. A
+    worker never builds a whole-index array: every Python worker would pin
+    its own copy."""
+
+    def __init__(self, index_dir: str, gen: float, pid: int, off: int, n: int, columns):
+        self.index_dir, self.gen, self.pid, self.off, self.n = index_dir, gen, pid, off, n
+        self.columns = columns
+        self.cols: dict | None = None
+
+    def col(self, name: str):
+        if self.cols is None:
+            meta_file = _meta_file(self.index_dir, self.gen, self.pid)
+            blocks = [_meta_block(meta_file, rg, self.columns)[0] for rg in range(meta_file[3].size - 1)]
+            self.cols = {c: pa.concat_arrays([b[c] for b in blocks]).slice(0, self.n) for c in self.columns}
+        return self.cols[name]
+
+    def where(self, mask) -> np.ndarray:
+        """doc_ids of the pid's rows where the Arrow boolean ``mask`` holds."""
+        return self.off + np.flatnonzero(_holds(mask))
+
+    def leaf(self, node) -> np.ndarray:
+        if isinstance(node, qp.All):
+            return np.arange(self.off, self.off + self.n, dtype=np.int64)
+        if isinstance(node, qp.Field):
+            return self.where(pc.equal(self.col(node.field), node.value))
+        ts = self.col(node.field)
+        return self.where(pc.and_(pc.greater_equal(ts, node.lo), pc.less_equal(ts, node.hi)))
+
+    def masked(self, cand: np.ndarray, plan: dict) -> np.ndarray:
+        """``cand`` under the lang/repo/time masks of the batch."""
+        for field, keep in (("lang", plan["lang_filter"]), ("repo", plan["repo_filter"])):
+            if keep and cand.size:
+                at = pa.array(cand - self.off)
+                cand = cand[_holds(pc.is_in(self.col(field).take(at), value_set=pa.array(keep)))]
+        if plan["time_range"] is not None and cand.size:
+            ts = np.asarray(self.col("ts"))[cand - self.off]
+            cand = cand[(ts >= plan["time_range"][0]) & (ts <= plan["time_range"][1])]
+        return cand
+
+
+def _topk_cut(ids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """The k best of (ids, scores) on (round(score, 6) desc, doc_id desc)."""
+    order = np.lexsort((ids, np.round(scores, 6)))[::-1][:k]
+    return ids[order], scores[order]
+
+
+def _solve_pid(plan: dict, view: _PidView, postings: dict, top: dict) -> None:
+    """Every live query of the batch over one pid, folded into ``top``
+    (query_id → its running (doc_ids, scores) top-k): ``_eval_ast`` with
+    the pid's leaves, minus the removed ids in the pid's range, under the
+    masks, then scored by ``_score_candidates`` with the global df."""
+    removed = plan["removed"]
+    gone = removed[slice(*np.searchsorted(removed, [view.off, view.off + view.n]))]
+    doclens: dict = {}
+    for qid, ast, expansions, scoring in plan["queries"]:
+        cand = _eval_ast(ast, postings, expansions, view.leaf)
+        cand = view.masked(_setdiff_sorted(cand, gone), plan)
+        if not cand.size:
+            continue
+        for t in scoring:
+            if t in postings and t not in doclens:
+                doclens[t] = np.asarray(view.col("doc_len"))[postings[t][0] - view.off]
+        scores = _score_candidates(
+            cand, scoring, postings, doclens, plan["n_docs"], plan["avgdl"], plan["df"]
+        )
+        if qid in top:
+            cand, scores = np.concatenate([top[qid][0], cand]), np.concatenate([top[qid][1], scores])
+        top[qid] = _topk_cut(cand, scores, plan["k"])
+
+
+def _score_pids(batches, plan: dict) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel over the pid slices sorted by pid: per whole pid
+    group (``merge.whole_groups``) its {term: (doc_ids, tfs)} postings and
+    ``_solve_pid``; when the task ends, each query's top-k (at most k rows
+    per query per task cross the final exchange) with its display fields
+    (``_docmeta_for``)."""
+    index_dir = plan["index_dir"]
+    gen = _index_generation(index_dir)
+    ranges = {int(p): (int(o), int(n)) for p, o, n in plan["pids"].T}
+    top: dict = {}
+    for batch, starts in whole_groups(batches, ("pid",)):
+        pid_col = batch.column("pid").to_numpy()
+        terms = batch.column("term").to_pylist()
+        lists = [batch.column(c) for c in ("doc_ids", "tfs")]
+        d_off, tf_off = (np.asarray(x.offsets) for x in lists)
+        d_all, tf_all = (np.asarray(x.values) for x in lists)
+        bounds = np.append(starts, batch.num_rows).tolist()
+        for s, e in zip(bounds[:-1], bounds[1:]):
+            slices: dict = {}
+            for r in range(s, e):
+                if terms[r] is not None:  # the pid's marker row carries no term
+                    slices.setdefault(terms[r], []).append(
+                        (d_all[d_off[r] : d_off[r + 1]], tf_all[tf_off[r] : tf_off[r + 1]])
+                    )
+            postings = {}
+            for t, parts in slices.items():  # a term's slices are disjoint doc ranges
+                parts.sort(key=lambda p: p[0][0])
+                postings[t] = tuple(np.concatenate(x) for x in zip(*parts))
+            pid = int(pid_col[s])
+            view = _PidView(index_dir, gen, pid, *ranges[pid], plan["columns"])
+            _solve_pid(plan, view, postings, top)
+    if not top:
+        return
+    qids = np.concatenate([np.full(v[0].size, q, dtype=np.int32) for q, v in top.items()])
+    ids = np.concatenate([v[0] for v in top.values()])
+    shown = _docmeta_for(index_dir, ids)
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(qids), pa.array(ids), pa.array(np.concatenate([v[1] for v in top.values()]))]
+        + [pa.array(shown[c], pa.string()) for c in _DISPLAY_COLS],
+        names=["query_id", "doc_id", "score", *_DISPLAY_COLS],
+    )
+
+
+def _batch_plan(
+    index_dir: str,
+    queries: list[str],
+    k: int,
+    lang_filter: list[str] | None = None,
+    repo_filter: list[str] | None = None,
+    time_range: tuple[int, int] | None = None,
+) -> dict | None:
+    """The driver half of ``_bm25_topk``: parse each query, probe every
+    required term against the dictionary in one read (a query with an absent
+    required conjunct is provably empty and never reaches the cluster),
+    expand prefixes, and read the global df of the live queries' terms.
+    Returns what the kernels need, or None when no query is live."""
+    h = IndexHandle.open(index_dir)
+    from miru_spark import analyzers as anz
+
+    analyzer = anz.load(index_dir)
+    gen = _index_generation(index_dir)
+    table = _pid_offsets(index_dir, gen)
+    has_ts = bool(table.shape[1]) and "ts" in _meta_columns(index_dir, gen)
+    if time_range is not None and not has_ts:
+        raise ValueError("index has no doc-time column (built without ts)")
+
+    parsed = []
+    all_required: set[str] = set()
+    for qid, q in enumerate(queries):
+        ast = qp.parse_query(q, analyzer=analyzer)
+        if qp.ranges(ast) and not has_ts:
+            raise ValueError(f"query {qid!r}: index has no doc-time column (built without ts)")
+        parsed.append((qid, ast))
+        all_required |= qp.required_terms(ast)
+
+    stats = _dataset(index_dir, "stats")
+    present: set[str] = set()
+    if all_required:
+        present = set(
+            stats.to_table(columns=["term"], filter=pads.field("term").isin(sorted(all_required)))
+            .column("term").to_pylist()
+        )
+    live = []  # (qid, ast, expansions, sorted scoring terms)
+    union: set[str] = set()
+    for qid, ast in parsed:
+        if qp.required_terms(ast) - present:
+            continue  # a required conjunct is absent → provably empty
+        expansions = expand_prefixes(index_dir, qp.prefixes(ast))
+        needed = qp.all_terms(ast) | {t for ts in expansions.values() for t in ts}
+        if needed or qp.can_match_termless(ast):
+            scoring = qp.positive_terms(ast) | {
+                t for p in qp.positive_prefixes(ast) for t in expansions.get(p, [])
+            }
+            live.append((qid, ast, expansions, sorted(scoring)))
+            union |= needed
+    if not live or not table.shape[1]:
+        return None
+    terms = sorted(union)
+    df = {}
+    if terms:
+        t = stats.to_table(columns=["term", "df"], filter=pads.field("term").isin(terms))
+        df = dict(zip(t.column("term").to_pylist(), t.column("df").to_pylist()))
+    fields = set().union(*(qp.filter_fields(x[1]) for x in live))
+    fields |= {f for f, m in (("lang", lang_filter), ("repo", repo_filter), ("ts", time_range)) if m}
+    return {
+        "index_dir": index_dir,
+        "k": k,
+        "n_docs": h.n_docs,
+        "avgdl": h.avgdl,
+        "pids": table,
+        "terms": terms,
+        "df": df,
+        "queries": live,
+        "removed": removal.removed_array(index_dir),
+        "columns": ["doc_len", *sorted(fields)],
+        "lang_filter": lang_filter,
+        "repo_filter": repo_filter,
+        "time_range": time_range,
+    }
+
+
+def _term_in(terms: list[str]):
+    """``term IN (terms)`` parsed from one SQL string: ``Column.isin``
+    costs py4j round trips per literal (52 ms of planning for 64 terms)."""
+    quoted = ("'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'" for t in terms)
+    return F.expr(f"term IN ({', '.join(quoted)})")
 
 
 def _bm25_topk(
@@ -940,239 +1097,60 @@ def _bm25_topk(
     time_range: tuple[int, int] | None = None,
 ) -> DataFrame:
     """The distributed BM25 plan: per-query top-k of N queries in ONE job
-    over ONE posting scan. Returns ``_TOPK_SCHEMA`` rows.
+    over ONE posting scan, solved per pid (miru solves each partition with
+    its own index and a bounded heap, then merges, FullText.java:129-132).
+    Returns ``_TOPK_SCHEMA`` rows.
 
-    - driver: parse each query, expand prefixes, probe required terms
-      against the dictionary (the AND short-circuit — provably-empty
-      queries never reach the cluster);
-    - ``meta``: the one forward-index relation (``merge.forward_index``:
-      doc_meta_local joined to the broadcast pid offsets), with every
-      candidate mask applied to it as a filter — lang/repo/time push into the parquet
-      scan, removed ids leave through one broadcast anti-join. Statistics
-      (df, avgdl, N) stay corpus-global (miru's buildIndexMask /
-      buildTimeRangeMask composition, MiruBitmapsRoaring.java:457-521);
-    - cluster: one term-pushdown scan covering the UNION of all live
-      queries' terms, one vectorized posting decode, then a broadcast
-      (query_id, term, scoring, bitval) fan-out so each decoded posting row
-      feeds every query that wants its term; joined to idf and to ``meta``
-      (doc_len + AST-referenced filter fields only), one (query_id, doc_id)
-      aggregation of BM25 contributions and matched-term bits;
-    - per-query AST filter, in one of two forms chosen from the input:
-      *masks* when every query is a boolean over term literals with ≤63
-      terms (parser.cnf_clauses: per-query CNF clause masks as broadcast
-      DATA, one ``forall`` filter — plan size O(1) in N, the query-log
-      form), else *CASE* (Field/Range/Xor or wider queries: one flat CASE
-      over query_id, each AST condition once — plan size linear in N, see
-      CLAUDE.md on when-chain blowup);
-    - queries that can match with ZERO term hits (a Field/Range/All clause
-      OR/XOR-reachable, or wholly termless) get candidate rows from ONE
-      extra ``meta`` scan at score 0.0, anti-joined against the docs
-      already decided by the aggregation (the reference evaluates field
-      filters against full index masks, MiruAggregateUtil.java:1098-1241);
-    - per-query top-k: row_number over (round(score, 6) desc, doc_id desc)
-      — the oracle's tie rule — filtered to rank ≤ k, which Spark plans as
-      a WindowGroupLimit Partial/Final pair around the exchange (per-
-      partition top-k before anything is shuffled); the raw float64 score
-      is returned. Display fields gather after the cut
-      (``_gather_display_fields``).
-    """
-    h = IndexHandle.open(index_dir)
-    from miru_spark import analyzers as anz
-
-    analyzer = anz.load(index_dir)
-    meta = forward_index(spark, index_dir)
-    has_ts = "ts" in meta.columns
-    if time_range is not None and not has_ts:
-        raise ValueError("index has no doc-time column (built without ts)")
-
-    parsed = []
-    all_required: set[str] = set()
-    for qid, q in enumerate(queries):
-        ast = qp.parse_query(q, analyzer=analyzer)
-        if qp.ranges(ast) and not has_ts:
-            # loud here — otherwise the missing ts column fails late with an
-            # opaque AnalysisException
-            raise ValueError(f"query {qid!r}: index has no doc-time column (built without ts)")
-        parsed.append((qid, ast))
-        all_required |= qp.required_terms(ast)
-
-    # one dictionary probe for every required term of every query
-    present: set[str] = set()
-    if all_required:
-        present = set(
-            _dataset(index_dir, "stats").to_table(
-                columns=["term"], filter=pads.field("term").isin(sorted(all_required))
-            ).column("term").to_pylist()
-        )
-    live = []  # (qid, ast, expansions, needed terms)
-    for qid, ast in parsed:
-        if qp.required_terms(ast) - present:
-            continue  # a required conjunct is absent → provably empty
-        expansions = expand_prefixes(index_dir, qp.prefixes(ast))
-        needed = qp.all_terms(ast) | {t for ts in expansions.values() for t in ts}
-        if needed or qp.can_match_termless(ast):
-            live.append((qid, ast, expansions, needed))
-    if not live:
+    - driver (``_batch_plan``): parse, probe, expand, read df, n_docs,
+      avgdl and the pid table; the live queries, removed ids and masks go
+      to the kernels in one broadcast, so the plan size is O(1) in N;
+    - scan merged/ with the ``term IN (union)`` pushdown; ``_cut_at_pids``
+      decodes each posting row once and cuts it at the pid offsets;
+    - union one row per published pid, so a termless-capable query (All,
+      Field, Range, pure NOT) sees every pid; exchange on pid and sort;
+    - ``_score_pids``: per pid, every live query through ``search_local``'s
+      evaluator and BM25 code, a running per-query top-k, display fields
+      for the at most k rows per query per task it emits;
+    - final cut: row_number over (round(score, 6) desc, doc_id desc) — the
+      oracle's tie rule — filtered to rank ≤ k; the raw float64 score is
+      returned."""
+    plan = _batch_plan(index_dir, queries, k, lang_filter, repo_filter, time_range)
+    if plan is None:
         return spark.createDataFrame([], _TOPK_SCHEMA)
-    union_needed = sorted(set().union(*(x[3] for x in live)))
+    plan_b = spark.sparkContext.broadcast(plan)
 
-    # masks form: each query's CNF over its OWN bit assignment; None → CASE
-    masks: dict | None = {}
-    for qid, ast, expansions, needed in live:
-        clauses = qp.cnf_clauses(ast, expansions)
-        if clauses is None or len(needed) > _BITMASK_MAX_TERMS:
-            masks = None
-            break
-        bits = {t: i for i, t in enumerate(sorted(needed))}
-        masks[qid] = (bits, [
-            (sum(1 << bits[t] for t in pos), sum(1 << bits[t] for t in neg))
-            for pos, neg in clauses
-        ])
-    # CASE form: one bit assignment over the UNION of the queries' terms
-    # (collect_set of the terms past 63), so every condition tests its own
-    # terms' bits
-    union_bits = (
-        {t: i for i, t in enumerate(union_needed)}
-        if len(union_needed) <= _BITMASK_MAX_TERMS
-        else None
+    def cut(batches):
+        return _cut_at_pids(batches, plan_b.value["pids"])
+
+    def score(batches):
+        return _score_pids(batches, plan_b.value)
+
+    pids = plan["pids"][0][plan["pids"][2] > 0]  # a pid with no docs has nothing to solve
+    rows = spark.createDataFrame(pd.DataFrame({"pid": pids.astype(np.int32)}), "pid int").select(
+        "pid",
+        F.lit(None).cast("string").alias("term"),
+        F.lit(None).cast("array<long>").alias("doc_ids"),
+        F.lit(None).cast("array<int>").alias("tfs"),
     )
-    bitmask = masks is not None or union_bits is not None
-
-    if lang_filter:
-        meta = meta.filter(F.col("lang").isin(lang_filter))
-    if repo_filter:
-        meta = meta.filter(F.col("repo").isin(repo_filter))
-    if time_range is not None:
-        meta = meta.filter(F.col("ts").between(time_range[0], time_range[1]))
-    removed = removal.removed_array(index_dir)
-    if removed.size:
-        rdf = _driver_table(spark, {"doc_id": removed.astype(np.int64)}, "doc_id long")
-        meta = meta.join(rdf, "doc_id", "left_anti")
-    # the scoring plan carries ONLY doc_len + the AST-referenced filter
-    # fields; display fields gather post-top-k
-    cond_fields = sorted(
-        set().union(*(qp.filter_fields(x[1]) for x in live)) - {"doc_id", "doc_len"}
-    )
-    meta = meta.select("doc_id", "doc_len", *cond_fields)
-
-    agg = out = None
-    if union_needed:
-        fan = {"query_id": [], "term": [], "scoring": [], "bitval": []}
-        for qid, ast, expansions, needed in live:
-            scoring = qp.positive_terms(ast) | {
-                t for p in qp.positive_prefixes(ast) for t in expansions.get(p, [])
-            }
-            bits = masks[qid][0] if masks is not None else union_bits
-            for t in sorted(needed):
-                fan["query_id"].append(qid)
-                fan["term"].append(t)
-                fan["scoring"].append(t in scoring)
-                fan["bitval"].append(0 if bits is None else 1 << bits[t])
-        qt = _driver_table(
-            spark, fan, "query_id int, term string, scoring boolean, bitval long"
-        )
-        in_union = F.col("term").isin(union_needed)  # one py4j build serves both reads
+    if plan["terms"]:
         hits = (
             spark.read.schema(MERGED_SCHEMA).parquet(os.path.join(index_dir, "merged"))
             .select("term", "docids", "tfs")  # column pruning: skip block metadata
-            .filter(in_union)
-            .mapInPandas(_decode_posting_rows, schema=_POSTING_ROW_SCHEMA)
+            .filter(_term_in(plan["terms"]))
+            .mapInArrow(cut, _SLICE_SCHEMA)
         )
-        stats = (
-            spark.read.schema(STATS_SCHEMA).parquet(os.path.join(index_dir, "stats"))
-            .filter(in_union)
-            .select("term", "df")
-            .withColumn(
-                "idf", F.log((F.lit(h.n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-            )
-        )
-        scored = (
-            hits.join(qt, "term")  # fan out each posting row per interested query
-            .join(F.broadcast(stats), "term")
-            .join(meta, "doc_id")
-            .withColumn(
-                "contrib",
-                F.when(
-                    F.col("scoring"),
-                    F.col("idf")
-                    * (F.col("tf") * (K1 + 1.0))
-                    / (F.col("tf") + K1 * (1.0 - B + B * F.col("doc_len") / h.avgdl)),
-                ).otherwise(F.lit(0.0)),
-            )
-        )
-        matched = (
-            F.bit_or("bitval").alias("mbits") if bitmask else F.collect_set("term").alias("mts")
-        )
-        agg = scored.groupBy("query_id", "doc_id").agg(
-            matched,
-            F.sum("contrib").alias("score"),
-            *[F.first(c).alias(c) for c in cond_fields],
-        )
-        if masks is not None:
-            qc = _driver_table(
-                spark,
-                {"query_id": [x[0] for x in live], "clauses": [masks[x[0]][1] for x in live]},
-                "query_id int, clauses array<struct<pos: long, neg: long>>",
-            )
-            out = agg.join(qc, "query_id").filter(
-                F.forall(
-                    "clauses",
-                    lambda c: (F.col("mbits").bitwiseAND(c["pos"]) != 0)
-                    | (F.col("mbits").bitwiseAND(c["neg"]) != c["neg"]),
-                )
-            )
-        else:
-            cond = F.lit(False)
-            for qid, ast, expansions, _ in live:
-                cond = F.when(
-                    F.col("query_id") == qid, _ast_to_condition(ast, expansions, union_bits)
-                ).otherwise(cond)
-            out = agg.filter(cond)
-        out = out.select("query_id", "doc_id", "score")
-
-    # termless-match predicates: the query's condition over an EMPTY
-    # matched-terms set — a driver constant in masks form (the CNF at M=∅:
-    # every clause needs a non-empty neg mask), an expression otherwise
-    if masks is not None:
-        termless = [
-            (qid, F.lit(True)) for qid, (_, cl) in masks.items() if all(neg for _, neg in cl)
-        ]
-    else:
-        termless = [
-            (qid, _ast_to_condition(ast, expansions, union_bits))
-            for qid, ast, expansions, _ in live
-            if qp.can_match_termless(ast)
-        ]
-    if termless:
-        # ONE meta scan for every termless-capable query: per-query
-        # predicates as an array of (qid, matched) structs, exploded to
-        # (query_id, doc_id) candidate rows at score 0.0
-        empty = F.lit(0).cast("long") if bitmask else F.array().cast("array<string>")
-        matches = F.filter(
-            F.array(*[F.struct(F.lit(qid).alias("qid"), c.alias("m")) for qid, c in termless]),
-            lambda s: s["m"],
-        )
-        extra = (
-            meta.withColumn("mbits" if bitmask else "mts", empty)
-            .select(F.explode(matches).alias("q"), "doc_id")
-            .select(F.col("q.qid").alias("query_id"), "doc_id", F.lit(0.0).alias("score"))
-        )
-        if agg is not None:
-            # docs with any posting hit were decided by the aggregation
-            extra = extra.join(
-                agg.select("query_id", "doc_id"), ["query_id", "doc_id"], "left_anti"
-            )
-            out = out.unionByName(extra)
-        else:
-            out = extra
-
+        rows = hits.unionByName(rows)
+    top = (
+        rows.repartition("pid")
+        .sortWithinPartitions("pid")
+        .mapInArrow(score, _HIT_SCHEMA)
+    )
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("score", 6).desc(), F.col("doc_id").desc()
+    w = Window.partitionBy("query_id").orderBy(F.round("score", 6).desc(), F.col("doc_id").desc())
+    return top.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k).select(
+        "query_id", "doc_id", "score", "rank", *_DISPLAY_COLS
     )
-    top = out.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    return _gather_display_fields(top, index_dir)
 
 
 def search_distributed(
@@ -1205,8 +1183,8 @@ def search_batch(
 
     Answering a query LOG one ``search_distributed`` call at a time pays a
     full Spark job — scan + decode + shuffle + driver round-trip — per
-    query; here the index is read once regardless of N, and a query whose
-    terms overlap another's costs only its broadcast fan-out rows (the
+    query; here the index is read once regardless of N, and each posting
+    row is decoded once however many queries want its term (the
     ``lsh_ann_batch`` treatment applied to BM25; reference analog: miru
     answers many MiruRequests against ONE shared request context rather
     than re-opening the index per question, MiruService solve loop).

@@ -1,13 +1,25 @@
-"""search_batch: N queries in ONE job must be rank-identical to the serving
-path run per query, the one distributed plan must keep its shape (no
-RDD-backed driver tables, a per-partition top-k below the exchange), and
-the pointer-doubling label propagation must converge on high-diameter
-graphs that defeat plain neighbor-min."""
+"""search_batch and search_distributed: N queries in ONE job must equal the
+serving path run per query — same doc_ids, scores equal by ``==`` — on
+every AST shape, under every mask, on awkward pid layouts and above Spark's
+window group-limit threshold; the plan must not grow with N, and the
+per-pid kernel must emit at most k rows per query per task. Also: the
+pointer-doubling label propagation must converge on high-diameter graphs
+that defeat plain neighbor-min."""
 
+import json
+import os
+import shutil
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
-from miru_spark.corpus import reference_query_set
-from miru_spark.query import parser as qp
+from miru_spark.corpus import generate_corpus, reference_query_set
+from miru_spark.query import scorer as sc
 from miru_spark.query.scorer import search_batch, search_distributed, search_local
 
 
@@ -47,9 +59,8 @@ def test_batch_skips_provably_empty_and_unknown_queries(tiny_index, spark):
 
 def test_batch_termless_shapes_match_local(tiny_index, spark):
     """Queries where a Field clause is OR-reachable, a pure-negative query,
-    and a wholly termless query all flow through the batch path's shared
-    doc_meta candidate branch — each must be rank-identical to its own
-    search_local run (one mixed batch, one meta scan)."""
+    and a wholly termless query all match docs with no term hit in one
+    mixed batch — each must be rank-identical to its own search_local run."""
     queries = [
         "rareterm0 OR lang:python",  # scored ∪ termless union (df(rareterm0)=1)
         "NOT merge",  # mustNots-only → Not(All, merge)
@@ -106,203 +117,252 @@ def test_label_propagation_two_components(spark):
     assert got == {0: 0, 1: 0, 2: 0, 10: 10, 11: 10, 12: 10, 13: 10}
 
 
-def test_bitmask_and_collect_set_encodings_agree(tiny_index, spark, monkeypatch):
-    """The matched-terms aggregate has two physical encodings: a bit_or long
-    (≤63 distinct terms — the serving norm) and collect_set(string) (the
-    fallback). Same queries, both encodings, identical answers — and a
-    genuinely >63-term OR exercises the fallback without the monkeypatch."""
-    import miru_spark.query.scorer as sc
+def _local_ranked(index_dir, query, k, **masks):
+    """search_local's answer in the distributed paths' rank order, raw
+    scores kept: they cut on the 6-dp-rounded score, so fetch k + slack
+    rows and re-rank before taking k (a rounding tie straddling the k
+    boundary must not fail correct code)."""
+    exp = search_local(index_dir, query, k=k + 10, **masks)
+    exp = exp.assign(r=exp["score"].astype(float).round(6)).sort_values(
+        ["r", "doc_id"], ascending=False, kind="mergesort"
+    ).head(k)
+    return [int(x) for x in exp["doc_id"]], [float(x) for x in exp["score"]]
 
+
+def _assert_batch_equals_local(index_dir, spark, queries, k, **masks):
+    """search_batch (no masks) or search_distributed (one query per call,
+    with masks) gives search_local's doc_ids and bit-identical scores."""
+    if masks:
+        got = {i: search_distributed(spark, index_dir, q, k=k, **masks).toPandas()
+               for i, q in enumerate(queries)}
+    else:
+        batch = search_batch(spark, index_dir, queries, k=k).toPandas()
+        got = {i: batch[batch["query_id"] == i].sort_values("rank") for i in range(len(queries))}
+        for i, g in got.items():
+            assert g["rank"].tolist() == list(range(1, len(g) + 1)), queries[i]
+    for i, q in enumerate(queries):
+        ids, scores = _local_ranked(index_dir, q, k, **masks)
+        assert got[i]["doc_id"].tolist() == ids, (q, masks)
+        assert got[i]["score"].tolist() == scores, (q, masks)
+        want = search_local(index_dir, q, k=k + 10, **masks).set_index("doc_id")
+        assert got[i]["path"].tolist() == want.loc[ids, "path"].tolist(), (q, masks)
+
+
+def _dictionary(index_dir):
+    return sorted(pq.read_table(os.path.join(index_dir, "stats"), columns=["term"])
+                  .column("term").to_pylist())
+
+
+@pytest.fixture(scope="module")
+def removed_index(spark, tiny_corpus, tmp_path_factory):
+    """The tiny corpus with ts = row index % 37, every 5th document removed."""
+    from miru_spark.index import removal
+    from miru_spark.index.build import build_index
+
+    idx = str(tmp_path_factory.mktemp("removed") / "idx")
+    rowidx = F.regexp_extract("path", r"f(\d+)\.", 1).cast("long")
+    build_index(spark, tiny_corpus.withColumn("ts", F.pmod(rowidx, F.lit(37))), idx, num_partitions=4)
+    removal.remove_docs(idx, list(range(0, sc.IndexHandle.open(idx).n_docs, 5)), version=1)
+    yield idx
+    shutil.rmtree(idx, ignore_errors=True)
+
+
+def test_batch_equals_local_on_every_ast_shape(removed_index, spark):
+    terms = _dictionary(removed_index)
+    # the dictionary plus absent terms: more than 63 distinct terms
+    wide = " OR ".join(terms + [f"absentterm{i}" for i in range(64 - len(terms) + 1)])
     queries = [
-        "merge AND sort",
-        "merge OR lang:go",
-        "(merge OR sort) XOR tree",
-        "NOT merge",
+        "merge AND sort",  # CNF-able
+        "(merge OR sort) AND (hash OR join)",  # CNF-able, OR inside AND
+        "merge AND NOT (sort OR hash)",  # nested NOT
+        "merge AND NOT (sort AND NOT hash)",  # NOT under NOT
+        "NOT merge",  # pure NOT
+        "(merge OR sort) XOR hash",  # Xor
+        "merge XOR sort XOR hash",  # n-ary Xor
+        "rareterm0 OR lang:python",  # OR-reachable Field
+        "lang:go AND NOT sort",  # termless Field with a negative term
+        "merge AND ts:[3 TO 20]",  # Range under AND
+        "rareterm0 OR ts:[0 TO 4]",  # OR-reachable Range
+        "me* AND sort",  # prefix
+        "NOT so*",  # negative prefix
+        wide,  # wide OR
     ]
-    bitmask = search_batch(spark, tiny_index, queries, k=10).toPandas()
-    dflt = sc._BITMASK_MAX_TERMS
-    monkeypatch.setattr(sc, "_BITMASK_MAX_TERMS", 0)  # force collect_set form
-    fallback = search_batch(spark, tiny_index, queries, k=10).toPandas()
-    for df in (bitmask, fallback):
-        df.sort_values(["query_id", "rank"], inplace=True, ignore_index=True)
-    assert bitmask["doc_id"].tolist() == fallback["doc_id"].tolist()
-    assert bitmask["score"].tolist() == fallback["score"].tolist()
-    monkeypatch.setattr(sc, "_BITMASK_MAX_TERMS", dflt)
-
-    # a wide disjunction over the whole dictionary, answered by BOTH
-    # encodings on search_distributed (threshold forced below the term
-    # count for the fallback leg) — identical top-k either way
-    import os
-
-    import pyarrow.parquet as pq
-
-    terms = sorted(
-        pq.read_table(
-            os.path.join(tiny_index, "stats"), columns=["term"]
-        ).column("term").to_pylist()
-    )
-    assert len(terms) > 16
-    wide = " OR ".join(terms)
-    wide_bits = search_distributed(spark, tiny_index, wide, k=10).toPandas()
-    monkeypatch.setattr(sc, "_BITMASK_MAX_TERMS", 16)
-    wide_set = search_distributed(spark, tiny_index, wide, k=10).toPandas()
-    assert len(wide_bits) == 10
-    assert wide_bits["doc_id"].tolist() == wide_set["doc_id"].tolist()
-    # bit_or plans as HashAggregate, collect_set as ObjectHashAggregate —
-    # different partial-merge orders move float sums at the ~1e-15 level
-    assert wide_bits["score"].tolist() == pytest.approx(
-        wide_set["score"].tolist(), abs=1e-9
-    )
+    assert all(len(search_local(removed_index, q, k=1)) for q in queries)
+    _assert_batch_equals_local(removed_index, spark, queries, k=10)
+    # alone, the first query's term is in one pid and the second has none:
+    # the other pids reach the kernel only through their marker rows
+    for q in ("rareterm0 OR lang:python", "lang:go"):
+        _assert_batch_equals_local(removed_index, spark, [q], k=10)
 
 
-def _force_case_form(monkeypatch):
-    """No query is CNF-able → search_batch takes the CASE form."""
-    monkeypatch.setattr(qp, "cnf_clauses", lambda *a: None)
+def test_distributed_masks_equal_local(removed_index, spark):
+    masks = [
+        {"lang_filter": ["python"]},
+        {"repo_filter": ["org1/repo1", "org3/repo3"]},
+        {"time_range": (5, 20)},
+        {"lang_filter": ["go", "python"], "repo_filter": ["org2/repo2"], "time_range": (0, 30)},
+    ]
+    for m in masks:
+        _assert_batch_equals_local(
+            removed_index, spark, ["merge OR sort", "def AND NOT license", "NOT merge"], k=8, **m
+        )
 
 
 def _optimized_plan(df):
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_masks_mode_matches_case_mode_and_local(tiny_index, spark, monkeypatch):
-    """Masks mode (per-query CNF clause masks as broadcast DATA) must be
-    rank- and score-identical to the CASE plan and to the serving path on
-    every CNF-able shape, including pure-negative and nested-NOT."""
-    queries = [
-        "merge AND sort",
-        "merge OR sort OR tree",
-        "merge AND NOT sort",
-        "NOT merge",
-        "merge AND NOT (sort OR tree)",
-        "(merge OR sort) AND (tree OR heap)",
-    ]
-    masks = search_batch(spark, tiny_index, queries, k=8).toPandas()
-    _force_case_form(monkeypatch)
-    case = search_batch(spark, tiny_index, queries, k=8).toPandas()
-    for df in (masks, case):
-        df.sort_values(["query_id", "rank"], inplace=True, ignore_index=True)
-    assert masks["doc_id"].tolist() == case["doc_id"].tolist()
-    assert masks["score"].tolist() == pytest.approx(case["score"].tolist(), abs=1e-9)
+def test_plan_size_flat_in_batch_size(tiny_index, spark):
+    """Queries reach the kernels as broadcast data, so the optimized plan
+    does not grow with the batch: 8 and 256 queries over the same terms,
+    with Field and Xor shapes among them, plan alike."""
+    terms = _dictionary(tiny_index)[:16]
+    shapes = ["{a} AND {b}", "{a} OR lang:go", "{a} XOR {b}", "{a} AND NOT {b}"]
+
+    def gen(n):  # the first 8 queries already use all 16 terms
+        return [shapes[i % 4].format(a=terms[2 * i % 16], b=terms[(2 * i + 1 + 2 * (i // 8)) % 16])
+                for i in range(n)]
+
+    small, big = (len(_optimized_plan(search_batch(spark, tiny_index, gen(n), k=5))) for n in (8, 256))
+    assert big <= small * 1.02, (small, big)
+
+
+def _kernel_answer(index_dir, queries, k):
+    """The score kernel run in-process as ONE task over every pid: the
+    rows it emits, as {query_id: [(doc_id, score)]}, plus the number of
+    pids whose solve found candidates per query."""
+    plan = sc._batch_plan(index_dir, queries, k)
+    merged = pads.dataset(os.path.join(index_dir, "merged")).to_table(
+        columns=["term", "docids", "tfs"], filter=pads.field("term").isin(plan["terms"])
+    )
+    cut = pa.Table.from_batches(list(sc._cut_at_pids(merged.to_batches(), plan["pids"])))
+    rows = pa.Table.from_batches(list(sc._score_pids(cut.sort_by("pid").to_batches(), plan)))
+    out = {}
+    for q, d, s in zip(*(rows.column(c).to_pylist() for c in ("query_id", "doc_id", "score"))):
+        out.setdefault(q, []).append((d, s))
+    return plan, cut, out
+
+
+def test_score_kernel_emits_at_most_k_rows_per_query_per_task(removed_index):
+    queries = ["merge OR sort", "def", "NOT merge", "lang:go"]
+    k = 3
+    plan, cut, out = _kernel_answer(removed_index, queries, k)
+    assert plan["pids"].shape[1] == 4
+    # every query has matches in more than one pid, so a per-pid top-k
+    # alone would emit more than k rows
+    for q in ("merge", "sort", "def"):
+        hit = cut.filter(pc.equal(cut.column("term"), q))
+        assert len(set(hit.column("pid").to_pylist())) > 1, q
     for qid, q in enumerate(queries):
-        loc = search_local(tiny_index, q, k=8)
-        got = masks[masks["query_id"] == qid]
-        assert got["doc_id"].tolist() == [int(x) for x in loc["doc_id"]], q
+        ids, scores = _local_ranked(removed_index, q, k)
+        assert [d for d, _ in out[qid]] == ids, q
+        assert [s for _, s in out[qid]] == scores, q
 
 
-def test_masks_mode_guards_and_auto_fallback(tiny_index, spark, monkeypatch):
-    """The form is chosen from the input: a CNF-able batch plans the clause
-    table, one Field query sends the whole batch to the CASE form, and the
-    CNF-able query's answer is the same in both."""
-    alone = search_batch(spark, tiny_index, ["merge AND sort"], k=5)
-    mixed = search_batch(spark, tiny_index, ["merge AND sort", "merge OR lang:go"], k=5)
-    assert "clauses" in _optimized_plan(alone)
-    assert "clauses" not in _optimized_plan(mixed)
-    got = mixed.toPandas()
-    got = got[got["query_id"] == 0].sort_values("rank")
-    want = alone.toPandas().sort_values("rank")
-    assert got["doc_id"].tolist() == want["doc_id"].tolist()
-    _force_case_form(monkeypatch)
-    forced = search_batch(spark, tiny_index, ["merge AND sort"], k=5)
-    assert "clauses" not in _optimized_plan(forced)
-    assert forced.toPandas().sort_values("rank")["doc_id"].tolist() == want["doc_id"].tolist()
+@pytest.fixture(scope="module")
+def layered_index(spark, tmp_path_factory):
+    """1,600 docs bulk-built in 6 pids, then a 300-doc append + refresh in 2
+    pids, so pid sizes differ; merged with at most 500 postings per shard,
+    so each head term is cut into shards that hold two pids each."""
+    from miru_spark.index import merge
+    from miru_spark.index.build import build_index
+    from miru_spark.streaming.ingest import append_batch, refresh
+
+    idx = str(tmp_path_factory.mktemp("layered") / "idx")
+    full = generate_corpus(spark, n_rows=1900, seed=11, partitions=2).persist()
+    rowidx = F.regexp_extract("path", r"f(\d+)\.", 1).cast("long")
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(merge, "TARGET_POSTINGS_PER_SHARD", 500)
+        build_index(spark, full.filter(rowidx < 1600), idx, num_partitions=6)
+        append_batch(full.filter(rowidx >= 1600), 0, idx, partitions_per_batch=2)
+        refresh(spark, idx)
+    full.unpersist()
+    yield idx
+    shutil.rmtree(idx, ignore_errors=True)
 
 
-def test_masks_mode_plan_size_constant_in_batch_size(tiny_index, spark, monkeypatch):
-    """The reason masks mode exists: the optimized plan must NOT grow with
-    the number of queries (the CASE form grows linearly — fine at N=4,
-    fatal for a 100k-query log replay)."""
-    import os
+def _copy_index(src, dst):
+    """A copy of ``src`` whose manifests name the copy's own files:
+    compaction reads and retires the files its manifests name."""
+    shutil.copytree(src, dst)
+    man_dir = os.path.join(dst, "manifests")
+    for name in os.listdir(man_dir):
+        with open(os.path.join(man_dir, name)) as f:
+            m = json.load(f)
+        for key, sub in (("segment_file", "segments"), ("meta_file", "doc_meta_local")):
+            m[key] = os.path.join(dst, sub, os.path.basename(m[key]))
+        with open(os.path.join(man_dir, name), "w") as f:
+            json.dump(m, f)
+    return dst
 
-    import pyarrow.parquet as pq
 
-    terms = sorted(
-        pq.read_table(
-            os.path.join(tiny_index, "stats"), columns=["term"]
-        ).column("term").to_pylist()
+LAYERED_QUERIES = [
+    "def",  # head term: several shards, each spanning a pid boundary
+    "def AND return",
+    "merge OR sort OR hash",
+    "def AND NOT (license OR lang:go)",
+    "NOT def",
+    "me* OR rareterm97",
+]
+
+
+def test_pid_cut_on_unequal_pids_and_shards_spanning_them(layered_index, spark, tmp_path):
+    from miru_spark.index.compact import compact
+    from miru_spark.index.merge import load_pid_offsets
+
+    pids, offsets, n = load_pid_offsets(layered_index)
+    assert pids.size > 6 and len(set(n.tolist())) > 1, n
+    rows = pq.read_table(os.path.join(layered_index, "merged"), columns=["term", "min_doc", "max_doc"],
+                         filters=[("term", "=", "def")]).to_pandas()
+    assert len(rows) >= 2
+    spans = [np.searchsorted(offsets, r, side="right") - 1 for r in (rows["min_doc"], rows["max_doc"])]
+    assert (spans[1] > spans[0]).all(), rows  # every shard crosses a pid boundary
+
+    queries = LAYERED_QUERIES + [" OR ".join(_dictionary(layered_index))]
+    assert len(_dictionary(layered_index)) > 63
+    _assert_batch_equals_local(layered_index, spark, queries, k=20)
+    _assert_batch_equals_local(layered_index, spark, LAYERED_QUERIES[:3], k=20,
+                               lang_filter=["python", "go"])
+
+    # compaction folds the bulk pids 3 by 3 (about 267 docs each), so one
+    # published pid now holds the slices of two shards of a head term
+    idx = _copy_index(layered_index, str(tmp_path / "compacted"))
+    compact(idx, target_docs=850)
+    assert load_pid_offsets(idx)[0].size < pids.size
+    _assert_batch_equals_local(idx, spark, queries, k=20)
+    _assert_batch_equals_local(idx, spark, LAYERED_QUERIES[:3], k=20, repo_filter=["org1/repo1"])
+
+
+def test_cut_kernel_splits_rows_at_pid_offsets(layered_index, monkeypatch):
+    from miru_spark.index.merge import load_pid_offsets
+
+    table = load_pid_offsets(layered_index)
+    merged = pads.dataset(os.path.join(layered_index, "merged")).to_table(
+        columns=["term", "df", "docids", "tfs"], filter=pads.field("term").isin(["def", "merge"])
     )
-
-    def gen(n):
-        out = []
-        for i in range(n):
-            a, b = terms[i % len(terms)], terms[(i * 7 + 3) % len(terms)]
-            out.append(f"{a} AND {b}" if a != b else a)
-        return out
-
-    def plan_len(queries):
-        return len(_optimized_plan(search_batch(spark, tiny_index, queries, k=5)))
-
-    m_small, m_big = plan_len(gen(8)), plan_len(gen(256))
-    _force_case_form(monkeypatch)
-    c_small, c_big = plan_len(gen(8)), plan_len(gen(256))
-    # CASE plan grows ~32x in conditions; masks plan stays flat
-    assert m_big < 2 * m_small, (m_small, m_big)
-    assert c_big > 5 * c_small, (c_small, c_big)
-
-
-def test_batch_cnf_gate_queries_take_masks_form():
-    """The ft_bm25_batch_cnf gate exists to cover the masks form: every one
-    of its queries must convert to CNF term masks within the bit budget."""
-    from miru_spark.operators.fulltext import BATCH_CNF_QUERIES
-    from miru_spark.query.scorer import _BITMASK_MAX_TERMS
-
-    for q in BATCH_CNF_QUERIES:
-        ast = qp.parse_query(q)
-        assert not qp.prefixes(ast), q
-        assert qp.cnf_clauses(ast, {}) is not None, q
-        assert len(qp.all_terms(ast)) <= _BITMASK_MAX_TERMS, q
+    whole = pa.Table.from_batches(list(sc._cut_at_pids(merged.to_batches(), table)))
+    # every slice lies in its pid's doc range, and the slices of a term
+    # hold all of its postings
+    where = {p: (o, o + n) for p, o, n in table.T.tolist()}
+    for pid, ids in zip(whole.column("pid").to_pylist(), whole.column("doc_ids").to_pylist()):
+        assert where[pid][0] <= min(ids) and max(ids) < where[pid][1], pid
+    for t in ("def", "merge"):
+        rows = whole.filter(pc.equal(whole.column("term"), t))
+        df = pc.sum(merged.filter(pc.equal(merged.column("term"), t)).column("df")).as_py()
+        assert sum(map(len, rows.column("doc_ids").to_pylist())) == df, t
+    assert whole.num_rows > merged.num_rows
+    # output batches bounded by postings: one per posting row at a bound of 1
+    monkeypatch.setattr(sc, "_SLICE_BATCH_POSTINGS", 1)
+    pieces = list(sc._cut_at_pids(merged.to_batches(), table))
+    assert len(pieces) == merged.num_rows
+    assert pa.Table.from_batches(pieces).equals(whole)
 
 
-@pytest.fixture
-def removed_index(tiny_index, tmp_path):
-    """A copy of the tiny index with every 5th document removed."""
-    import shutil
-
-    from miru_spark.index import removal
-    from miru_spark.query.scorer import IndexHandle
-
-    idx = str(tmp_path / "removed")
-    shutil.copytree(tiny_index, idx)
-    removal.remove_docs(idx, list(range(0, IndexHandle.open(idx).n_docs, 5)), version=1)
-    return idx
-
-
-def test_driver_tables_plan_as_local_relations(removed_index, spark, monkeypatch):
-    """The removed ids, the query fan-out and the clause table are built
-    from pandas, so Arrow plans them as LocalRelations. A LogicalRDD in the
-    plan means a silent fallback to an RDD-backed table (a Spark job per
-    broadcast)."""
-    cnf = ["merge AND sort", "NOT merge", "merge OR sort"]
-    plans = {
-        "masks": _optimized_plan(search_batch(spark, removed_index, cnf, k=5)),
-        "distributed": _optimized_plan(
-            search_distributed(spark, removed_index, "merge AND NOT sort", k=5)
-        ),
-    }
-    assert "clauses" in plans["masks"]
-    _force_case_form(monkeypatch)
-    plans["case"] = _optimized_plan(
-        search_batch(spark, removed_index, cnf + ["merge OR lang:go"], k=5)
-    )
-    for form, plan in plans.items():
-        assert "LocalRelation" in plan and "LogicalRDD" not in plan, (form, plan)
-
-
-def test_distributed_top_k_is_cut_before_the_exchange(removed_index, spark):
-    """search_distributed is a batch of one: its rank ≤ k filter plans as a
-    WindowGroupLimit whose Partial half runs on every partition BELOW the
-    exchange that gathers the query's rows, so at most k rows per partition
-    are shuffled (the per-partition heaps TakeOrderedAndProject had)."""
-    df = search_distributed(spark, removed_index, "merge OR sort", k=5)
-    got = df.toPandas()
-    assert len(got) == 5
-    want = search_local(removed_index, "merge OR sort", k=5)
-    assert got["doc_id"].tolist() == [int(x) for x in want["doc_id"]]
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    lines = plan.splitlines()
-    partial = [i for i, x in enumerate(lines) if "WindowGroupLimit" in x and "Partial" in x]
-    final = [i for i, x in enumerate(lines) if "WindowGroupLimit" in x and "Final" in x]
-    assert partial and final, plan
-    # tree strings print parents first: an exchange on query_id sits between
-    # the Final and the Partial limit
-    between = lines[final[0]:partial[0]]
-    assert any("Exchange hashpartitioning(query_id" in x for x in between), plan
+def test_top_k_above_the_window_group_limit_threshold(layered_index, spark):
+    """k = 1200 is above spark.sql.optimizer.windowGroupLimitThreshold, so
+    Spark plans no WindowGroupLimit; the per-task top-k still bounds what
+    crosses the final exchange, and the answer equals search_local's."""
+    k = 1200
+    assert k > int(spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold"))
+    assert len(search_local(layered_index, "def OR merge", k=k + 1)) > k
+    _assert_batch_equals_local(layered_index, spark, ["def OR merge", "NOT def"], k=k)

@@ -93,54 +93,3 @@ def test_ts_range_clause():
         parse_query("merge size:[1 TO 2]")
     with pytest.raises(ValueError, match="malformed range"):
         parse_query("merge ts:[1 2]")
-
-
-def test_cnf_clauses_shapes():
-    """CNF conversion: clause = (pos, neg), satisfied by matched-set M iff
-    M∩pos≠∅ or neg⊄M; None for Field/Range/Xor and oversize distributions."""
-    import miru_spark.query.parser as qp
-
-    ex = {"sor": ["sort", "sorted"], "zz": []}
-
-    def cnf(q):
-        c = qp.cnf_clauses(qp.parse_query(q), ex)
-        return None if c is None else sorted(
-            (tuple(sorted(p)), tuple(sorted(n))) for p, n in c
-        )
-
-    assert cnf("a AND b") == [(("a",), ()), (("b",), ())]
-    assert cnf("a OR b") == [(("a", "b"), ())]
-    assert cnf("a AND NOT b") == [((), ("b",)), (("a",), ())]
-    assert cnf("NOT a") == [((), ("a",))]  # mustNots-only: All AND NOT a
-    assert cnf("a AND NOT (b OR c)") == [((), ("b",)), ((), ("c",)), (("a",), ())]
-    assert cnf("a AND NOT (b AND c)") == [((), ("b", "c")), (("a",), ())]
-    assert cnf("(a AND b) OR c") == [(("a", "c"), ()), (("b", "c"), ())]
-    assert cnf("sor* AND a") == [(("a",), ()), (("sort", "sorted"), ())]
-    assert cnf("zz* AND a") == [((), ()), (("a",), ())]  # empty prefix: False clause
-    assert cnf("a OR lang:go") is None
-    assert cnf("a XOR b") is None
-    assert cnf("a AND ts:[1 TO 5]") is None
-
-    # semantic spot-check against direct evaluation on every subset
-    def sat(clauses, M):
-        return all((M & set(p)) or not (set(n) <= M) for p, n in clauses)
-
-    for q, ref in [
-        ("a AND NOT (b AND c)", lambda M: "a" in M and not ("b" in M and "c" in M)),
-        ("(a AND b) OR c", lambda M: ("a" in M and "b" in M) or "c" in M),
-        ("a OR NOT b", lambda M: "a" in M or "b" not in M),
-    ]:
-        clauses = qp.cnf_clauses(qp.parse_query(q), {})
-        for bits in range(8):
-            M = {t for i, t in enumerate("abc") if bits >> i & 1}
-            assert sat(clauses, M) == ref(M), (q, M)
-
-
-def test_cnf_distribution_limit():
-    import miru_spark.query.parser as qp
-
-    # (a1 AND a2 .. AND a9) OR (b1 .. b9) OR ... distributes multiplicatively;
-    # the limit guard returns None instead of an exponential clause list
-    groups = ["(" + " AND ".join(f"t{g}x{i}" for i in range(9)) + ")" for g in range(4)]
-    q = " OR ".join(groups)  # 9^4 = 6561 clauses > 64
-    assert qp.cnf_clauses(qp.parse_query(q), {}) is None

@@ -215,7 +215,7 @@ def _dense_reference(index_dir, query, monkeypatch, diag, **masks):
     def doclens_for(index_dir, postings, terms, diag=None):
         return {t: dense[postings[t][0]] for t in terms if t in postings}
 
-    def score(cand, scoring_terms, postings, doclens, n_docs, avgdl):
+    def score(cand, scoring_terms, postings, doclens, n_docs, avgdl, df):
         scores = np.zeros(cand.size, dtype=np.float64)
         dl = dense[cand].astype(np.float64)
         for t in sorted(scoring_terms):

@@ -71,7 +71,8 @@ def test_blockmax_prunes_blocks_and_keeps_topk():
 
     # soundness: exact top-k from the pruned set == exact top-k from everything
     exp_docs, exp_scores = _bruteforce_topk(postings, doclens, 10)
-    got_scores = _score_candidates(cand, {"a", "b"}, postings, lens, N_DOCS, AVGDL)
+    df = {t: postings[t][0].size for t in postings}
+    got_scores = _score_candidates(cand, {"a", "b"}, postings, lens, N_DOCS, AVGDL, df)
     order = np.lexsort((cand, got_scores))[::-1][:10]
     np.testing.assert_array_equal(cand[order], exp_docs)
     np.testing.assert_allclose(got_scores[order], exp_scores, rtol=1e-12)
@@ -158,7 +159,8 @@ def test_wand_topk_property(data):
     exp_docs, exp_scores = _bruteforce_topk(postings, doclens, k)
     kk = min(k, exp_docs.size)
     assert np.isin(exp_docs[:kk], cand).all()
-    scores = _score_candidates(cand, set(postings), postings, lens, N_DOCS, AVGDL)
+    df = {t: postings[t][0].size for t in postings}
+    scores = _score_candidates(cand, set(postings), postings, lens, N_DOCS, AVGDL, df)
     order = np.lexsort((cand, scores))[::-1][:kk]
     np.testing.assert_array_equal(cand[order], exp_docs[:kk])
     np.testing.assert_allclose(scores[order], exp_scores[:kk], rtol=1e-12)

@@ -1,19 +1,15 @@
-"""Query-log replay evidence for search_batch masks mode (round 4).
+"""Query-log replay evidence for search_batch.
 
-Two claims, two measurements:
+Two measurements:
 
-1. PLANNING cost is O(1) in N for masks mode and super-linear for the CASE
-   form. Planning is optimizer CPU on the driver — NOT memory-bandwidth
+1. PLANNING cost and optimized-plan length per batch size N. The queries
+   reach the scoring kernel as broadcast data, so the plan length must not
+   grow with N. Planning is optimizer CPU on the driver — NOT memory-bandwidth
    bound — so this comparison is valid even on a degraded-probe day (the
    walls protocol in CLAUDE.md is about shuffle/scan-heavy executor work).
-   Measured as time to produce the OPTIMIZED plan for the same generated
-   query log at several N, both modes.
 
-2. A 512-query log replays as ONE job in masks mode. Execution wall is
-   recorded for completeness (advisory under a degraded probe like every
-   other wall) but the structural facts — one posting scan, one bit_or
-   aggregate, one forall filter, per-query top-k — come from the plan, not
-   the clock.
+2. A 512-query log replays as ONE job. Execution wall is recorded for
+   completeness (advisory under a degraded probe like every other wall).
 
     python tools/batch_log_bench.py [--sf /root/testdata/sf0.1]
         [--ns 16,64,256] [--exec-n 512] [--out BENCH_BATCH_LOG.json]
@@ -65,7 +61,6 @@ def main() -> None:
     import pyarrow.parquet as pq
 
     from miru_spark.operators.fulltext import build_documents_index
-    from miru_spark.query import parser as qp
     from miru_spark.query.scorer import search_batch
     from miru_spark.session import get_spark
 
@@ -80,35 +75,23 @@ def main() -> None:
     )
     out["vocab"] = len(terms)
 
-    # --- 1. planning cost vs N, both modes --------------------------------
+    # --- 1. planning cost and plan length vs N -----------------------------
     plans = {}
     for n in [int(x) for x in args.ns.split(",")]:
         queries = gen_queries(terms, n)
-        for mode in ("masks", "case"):
-            # every generated query is CNF-able, so search_batch takes the
-            # masks form; hiding the CNF conversion forces the CASE form
-            cnf_clauses = qp.cnf_clauses
-            if mode == "case":
-                qp.cnf_clauses = lambda *a: None
-            try:
-                t0 = time.perf_counter()
-                df = search_batch(spark, idx, queries, k=10)
-                plan = df._jdf.queryExecution().optimizedPlan()
-                dt = time.perf_counter() - t0
-            finally:
-                qp.cnf_clauses = cnf_clauses
-            plans[f"{mode}_n{n}"] = {
-                "plan_sec": round(dt, 2),
-                "plan_chars": plan.toString().__len__(),
-            }
-            print(f"plan {mode} N={n}: {dt:.2f}s, {plans[f'{mode}_n{n}']['plan_chars']} chars", flush=True)
+        t0 = time.perf_counter()
+        df = search_batch(spark, idx, queries, k=10)
+        plan = df._jdf.queryExecution().optimizedPlan()
+        dt = time.perf_counter() - t0
+        plans[f"n{n}"] = {"plan_sec": round(dt, 2), "plan_chars": len(plan.toString())}
+        print(f"plan N={n}: {dt:.2f}s, {plans[f'n{n}']['plan_chars']} chars", flush=True)
     out["planning"] = plans
 
-    # --- 2. one-job execution of the full log in masks mode ---------------
+    # --- 2. one-job execution of the full log ------------------------------
     queries = gen_queries(terms, args.exec_n)
     t0 = time.perf_counter()
     rows = search_batch(spark, idx, queries, k=10).collect()
-    out["exec_masks_sec"] = round(time.perf_counter() - t0, 2)
+    out["exec_sec"] = round(time.perf_counter() - t0, 2)
     out["exec_n_queries"] = args.exec_n
     out["exec_rows"] = len(rows)
     qids = {r["query_id"] for r in rows}
