@@ -168,9 +168,6 @@ def removed_index(spark, tiny_corpus, tmp_path_factory):
 
 
 def test_batch_equals_local_on_every_ast_shape(removed_index, spark):
-    terms = _dictionary(removed_index)
-    # the dictionary plus absent terms: more than 63 distinct terms
-    wide = " OR ".join(terms + [f"absentterm{i}" for i in range(64 - len(terms) + 1)])
     queries = [
         "merge AND sort",  # CNF-able
         "(merge OR sort) AND (hash OR join)",  # CNF-able, OR inside AND
@@ -185,7 +182,6 @@ def test_batch_equals_local_on_every_ast_shape(removed_index, spark):
         "rareterm0 OR ts:[0 TO 4]",  # OR-reachable Range
         "me* AND sort",  # prefix
         "NOT so*",  # negative prefix
-        wide,  # wide OR
     ]
     assert all(len(search_local(removed_index, q, k=1)) for q in queries)
     _assert_batch_equals_local(removed_index, spark, queries, k=10)
@@ -193,6 +189,18 @@ def test_batch_equals_local_on_every_ast_shape(removed_index, spark):
     # the other pids reach the kernel only through their marker rows
     for q in ("rareterm0 OR lang:python", "lang:go"):
         _assert_batch_equals_local(removed_index, spark, [q], k=10)
+
+
+def test_batch_wide_or_over_63_terms_equals_local(removed_index, spark):
+    """An OR over more distinct terms than a 64-bit word holds, batched
+    beside a narrow query, answers as search_local does."""
+    terms = _dictionary(removed_index)
+    # the dictionary plus absent terms: more than 63 distinct terms
+    wide = " OR ".join(terms + [f"absentterm{i}" for i in range(64 - len(terms) + 1)])
+    assert len(set(wide.split(" OR "))) > 63
+    queries = [wide, "merge AND sort"]
+    assert all(len(search_local(removed_index, q, k=1)) for q in queries)
+    _assert_batch_equals_local(removed_index, spark, queries, k=10)
 
 
 def test_distributed_masks_equal_local(removed_index, spark):
