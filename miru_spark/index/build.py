@@ -74,8 +74,6 @@ MANIFEST_ROW_SCHEMA = T.StructType(
         T.StructField("n_terms", T.LongType()),
         T.StructField("doc_id_start", T.LongType()),
         T.StructField("doc_id_end", T.LongType()),
-        T.StructField("segment_file", T.StringType()),
-        T.StructField("meta_file", T.StringType()),
         T.StructField("status", T.StringType()),
     ]
 )
@@ -317,6 +315,22 @@ def write_parquet_atomic(table: pa.Table, path: str, **options) -> None:
     put_atomic(path, lambda tmp: pq.write_table(table, tmp, compression="snappy", **options))
 
 
+def segment_path(index_dir: str, pid: int) -> str:
+    """A pid's posting segment. With ``meta_path`` and ``manifest_path``, the
+    one naming of a partition's files: manifests and journals hold no paths."""
+    return os.path.join(index_dir, "segments", f"seg_{pid}.parquet")
+
+
+def meta_path(index_dir: str, pid: int) -> str:
+    """A pid's forward-index (doc_meta_local) file."""
+    return os.path.join(index_dir, "doc_meta_local", f"meta_{pid}.parquet")
+
+
+def manifest_path(index_dir: str, pid: int) -> str:
+    """A pid's manifest: its counts, published after its data files."""
+    return os.path.join(index_dir, "manifests", f"partition_{pid}.json")
+
+
 def write_forward_index(meta: pa.Table, path: str) -> None:
     """One pid's doc_meta_local file, read by position: row groups decode to
     at most ROW_GROUP_BYTES; dictionaries only on low-cardinality columns."""
@@ -346,12 +360,8 @@ def build_segments(
 
     analyzer = anz.load(index_dir)
     stopwords = analyzer.stopwords
-    seg_dir = os.path.join(index_dir, "segments")
-    meta_dir = os.path.join(index_dir, "doc_meta_local")
-    man_dir = os.path.join(index_dir, "manifests")
-    os.makedirs(seg_dir, exist_ok=True)
-    os.makedirs(meta_dir, exist_ok=True)
-    os.makedirs(man_dir, exist_ok=True)
+    for sub in ("segments", "doc_meta_local", "manifests"):
+        os.makedirs(os.path.join(index_dir, sub), exist_ok=True)
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = [p for p in batches if len(p)]
@@ -359,21 +369,15 @@ def build_segments(
             return
         pdf = pd.concat(parts, ignore_index=True)
         pid = int(pdf["_pid"].iloc[0])
-        man_path = os.path.join(man_dir, f"partition_{pid}.json")
+        seg_out, meta_out = segment_path(index_dir, pid), meta_path(index_dir, pid)
+        man_path = manifest_path(index_dir, pid)
         m = load_json(man_path, None) if resume else None
-        if (
-            m is not None
-            and m.get("n_docs") == len(pdf)
-            and os.path.exists(m["segment_file"])
-            and os.path.exists(m.get("meta_file", ""))
-        ):
+        if m is not None and m.get("n_docs") == len(pdf) and os.path.exists(seg_out) and os.path.exists(meta_out):
             m["status"] = "skipped"
             yield pd.DataFrame([m])[[f.name for f in MANIFEST_ROW_SCHEMA.fields]]
             return
         rows, stats, meta = _build_segment_rows(pdf, stopwords, analyzer)
         meta = meta.append_column("pid", pa.array([pid] * len(meta), pa.int32()))
-        seg_file = os.path.join(seg_dir, f"seg_{pid}.parquet")
-        meta_file = os.path.join(meta_dir, f"meta_{pid}.parquet")
         table = pa.table(
             {
                 "term": rows["term"],
@@ -383,9 +387,9 @@ def build_segments(
             },
             schema=SEGMENT_SCHEMA,
         )
-        write_parquet_atomic(table, seg_file)  # data durable BEFORE manifest
-        write_forward_index(meta, meta_file)
-        manifest = dict(pid=pid, **stats, segment_file=seg_file, meta_file=meta_file, status="built")
+        write_parquet_atomic(table, seg_out)  # data durable BEFORE manifest
+        write_forward_index(meta, meta_out)
+        manifest = dict(pid=pid, **stats, status="built")
         save_json_atomic(man_path, manifest)
         yield pd.DataFrame([manifest])[[f.name for f in MANIFEST_ROW_SCHEMA.fields]]
 

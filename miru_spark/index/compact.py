@@ -15,13 +15,15 @@ into single segments:
   partition-local meaning, so the global merge is untouched semantically;
 - forward-index rows concatenate with the same local-id rebasing;
 - the multi-file group swap is JOURNALED: compacted data is staged under
-  ``_``-prefixed names (invisible to Spark/pyarrow dataset scans), a journal
-  records the intended swap, and only then are retired manifests/files
-  removed and the compacted manifest published. A crash at ANY point leaves
-  either the original state (no journal yet) or a journal whose staged
-  files are complete — ``reconcile`` rolls the swap FORWARD idempotently, so
-  doc counts are never double-counted and later partitions' global docIDs
-  never shift. ``merge_segments`` reconciles before reading manifests.
+  ``_compact_``-prefixed final names (invisible to Spark/pyarrow dataset
+  scans), a journal {manifest, retired_pids} records the intended swap (the
+  files it touches are named from those pids), and only then are retired
+  manifests/files removed and the compacted manifest published. A crash at
+  ANY point leaves either the original state (no journal yet) or a journal
+  whose staged files are complete — ``reconcile`` rolls the swap FORWARD
+  idempotently, so doc counts are never double-counted and later partitions'
+  global docIDs never shift. ``merge_segments`` reconciles before reading
+  manifests.
 
 Global docIDs are unchanged: offsets derive from manifest counts in pid
 order, and compaction preserves both pid order and per-group totals. Each
@@ -34,20 +36,33 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-from miru_spark.index.build import write_forward_index, write_parquet_atomic
+from miru_spark.index.build import manifest_path, meta_path, segment_path, write_forward_index, write_parquet_atomic
 from miru_spark.index.merge import concat_groups, load_pid_offsets, republish_without, whole_groups
 from miru_spark.storage import read_json_files, save_json_atomic
 
 
-def _load_manifests(index_dir: str) -> list[dict]:
+def load_manifests(index_dir: str) -> list[dict]:
+    """Every partition's manifest in pid order, after completing any
+    interrupted compaction swap."""
     reconcile(index_dir)
     manifests = read_json_files(os.path.join(index_dir, "manifests")).values()
     return sorted(manifests, key=lambda m: m["pid"])
+
+
+def _journal_path(index_dir: str, pid: int) -> str:
+    return os.path.join(index_dir, "manifests", f"compact_{pid}.journal")
+
+
+def _staged_files(index_dir: str, pid: int) -> list[tuple[str, str]]:
+    """(staged, final) data files of compacted ``pid``."""
+    return [
+        (os.path.join(os.path.dirname(final), "_compact_" + os.path.basename(final)), final)
+        for final in (segment_path(index_dir, pid), meta_path(index_dir, pid))
+    ]
 
 
 def _finish_swap(index_dir: str, journal: dict) -> None:
@@ -55,21 +70,19 @@ def _finish_swap(index_dir: str, journal: dict) -> None:
     having already happened). Order: retire old manifests, promote staged
     data, publish compacted manifest, re-publish the offset table, retire
     old data (after no table names it), drop journal."""
-    man_dir = os.path.join(index_dir, "manifests")
-    for pid in journal["retired_pids"]:
-        p = os.path.join(man_dir, f"partition_{pid}.json")
+    pid, retired = journal["manifest"]["pid"], journal["retired_pids"]
+    for p in [manifest_path(index_dir, r) for r in retired]:
         if os.path.exists(p):
             os.remove(p)
-    for staged, final in journal["promote"]:
+    for staged, final in _staged_files(index_dir, pid):
         if os.path.exists(staged):
             os.replace(staged, final)
-    mpath = os.path.join(man_dir, f"partition_{journal['manifest']['pid']}.json")
-    save_json_atomic(mpath, journal["manifest"])
-    republish_without(index_dir, journal["retired_pids"])
-    for f_ in journal["retired_files"]:
-        if os.path.exists(f_):
-            os.remove(f_)
-    os.remove(journal["_path"])
+    save_json_atomic(manifest_path(index_dir, pid), journal["manifest"])
+    republish_without(index_dir, retired)
+    for p in [f(index_dir, r) for r in retired for f in (segment_path, meta_path)]:
+        if os.path.exists(p):
+            os.remove(p)
+    os.remove(_journal_path(index_dir, pid))
 
 
 def reconcile(index_dir: str) -> int:
@@ -80,18 +93,17 @@ def reconcile(index_dir: str) -> int:
     man_dir = os.path.join(index_dir, "manifests")
     if not os.path.isdir(man_dir):
         return 0
-    journals = read_json_files(man_dir, ".journal")
-    for name, journal in journals.items():
-        journal["_path"] = os.path.join(man_dir, name)
+    journals = read_json_files(man_dir, ".journal").values()
+    for journal in journals:
         _finish_swap(index_dir, journal)
-    # sweep staged _compact_* files no surviving journal references: they are
+    # sweep staged _compact_* files no surviving journal names: they are
     # orphans from a crash BEFORE their journal was written — nothing will
     # ever promote them, so without this they accumulate forever.  Files a
-    # journal still lists stay put (rolling forward is that journal's job).
+    # journal still names stay put (rolling forward is that journal's job).
     referenced = {
-        os.path.abspath(staged)
+        staged
         for journal in read_json_files(man_dir, ".journal").values()
-        for staged, _final in journal["promote"]
+        for staged, _final in _staged_files(index_dir, journal["manifest"]["pid"])
     }
     for sub in ("segments", "doc_meta_local"):
         d = os.path.join(index_dir, sub)
@@ -99,7 +111,7 @@ def reconcile(index_dir: str) -> int:
             continue
         for f_ in os.listdir(d):
             p = os.path.join(d, f_)
-            if f_.startswith("_compact_") and os.path.abspath(p) not in referenced:
+            if f_.startswith("_compact_") and p not in referenced:
                 os.remove(p)
     return len(journals)
 
@@ -109,7 +121,7 @@ def compact(index_dir: str, target_docs: int = 1_000_000) -> dict:
     as one segment. Driver-side file rewrite (segments are small relative to
     the corpus; a Spark job version would map over groups identically).
     Returns {groups, before_partitions, after_partitions}."""
-    manifests = _load_manifests(index_dir)
+    manifests = load_manifests(index_dir)
     published = set(load_pid_offsets(index_dir)[0].tolist())
     groups: list[list[dict]] = []
     cur: list[dict] = []
@@ -127,12 +139,7 @@ def compact(index_dir: str, target_docs: int = 1_000_000) -> dict:
     if cur:
         groups.append(cur)
 
-    seg_dir = os.path.join(index_dir, "segments")
-    meta_dir = os.path.join(index_dir, "doc_meta_local")
-    man_dir = os.path.join(index_dir, "manifests")
-    n_before = len(manifests)
-
-    for gi, group in enumerate(groups):
+    for group in groups:
         if len(group) == 1:
             continue  # nothing to compact
         # local offsets within the group: cumulative docs in pid order
@@ -140,10 +147,15 @@ def compact(index_dir: str, target_docs: int = 1_000_000) -> dict:
         for m in group:
             off[m["pid"]] = acc
             acc += m["n_docs"]
-        # --- postings: the merge kernel over the group's runs in (term, pid) order
-        seg = pa.concat_tables([pq.read_table(m["segment_file"]) for m in group])
-        seg = seg.sort_by([("term", "ascending"), ("pid", "ascending")])
         new_pid = group[0]["pid"]
+        # stage under _-prefixed names: invisible to spark/pyarrow dataset
+        # scans, and the live files of new_pid stay the ORIGINAL (manifest-
+        # consistent) bytes until the journaled swap promotes the staged copy
+        (staged_seg, _), (staged_meta, _) = _staged_files(index_dir, new_pid)
+
+        # --- postings: the merge kernel over the group's runs in (term, pid) order
+        seg = pa.concat_tables([pq.read_table(segment_path(index_dir, m["pid"])) for m in group])
+        seg = seg.sort_by([("term", "ascending"), ("pid", "ascending")])
         out = pa.Table.from_batches(
             [
                 concat_groups(batch, starts, ("term",), "pid", off)
@@ -151,57 +163,36 @@ def compact(index_dir: str, target_docs: int = 1_000_000) -> dict:
             ]
         )
         out = out.add_column(1, "pid", pa.array(np.full(out.num_rows, new_pid, np.int32)))
-        new_seg = os.path.join(seg_dir, f"seg_{new_pid}.parquet")
-        new_meta = os.path.join(meta_dir, f"meta_{new_pid}.parquet")
-        # stage under _-prefixed names: invisible to spark/pyarrow dataset
-        # scans, and the live seg_{new_pid} stays the ORIGINAL (manifest-
-        # consistent) bytes until the journaled swap promotes the staged copy
-        staged_seg = os.path.join(seg_dir, f"_compact_seg_{new_pid}.parquet")
-        staged_meta = os.path.join(meta_dir, f"_compact_meta_{new_pid}.parquet")
         write_parquet_atomic(out, staged_seg)
 
         # --- forward index: concat with rebased local ids
         metas = []
         for m in group:
-            t = pq.read_table(m["meta_file"]).to_pandas()
-            t["local_doc_id"] = t["local_doc_id"] + off[m["pid"]]
-            t["pid"] = new_pid
-            metas.append(t)
-        meta_out = pd.concat(metas, ignore_index=True)
-        mschema = pq.read_schema(group[0]["meta_file"])
-        write_forward_index(pa.Table.from_pandas(meta_out[[f.name for f in mschema]], schema=mschema), staged_meta)
+            t = pq.read_table(meta_path(index_dir, m["pid"]))
+            local = pc.add(t["local_doc_id"], off[m["pid"]])
+            t = t.set_column(t.schema.get_field_index("local_doc_id"), "local_doc_id", local)
+            pids = pa.array(np.full(t.num_rows, new_pid, np.int32))
+            metas.append(t.set_column(t.schema.get_field_index("pid"), "pid", pids))
+        write_forward_index(pa.concat_tables(metas), staged_meta)
 
         # --- journal the swap (staged data durable first), then roll forward
+        n_docs = int(sum(m["n_docs"] for m in group))
         manifest = {
             "pid": new_pid,
-            "n_docs": int(sum(m["n_docs"] for m in group)),
+            "n_docs": n_docs,
             "n_tokens": int(sum(m["n_tokens"] for m in group)),
             "n_postings": pc.sum(out["df"]).as_py(),
             "n_terms": out.num_rows,
             "doc_id_start": 0,
-            "doc_id_end": int(sum(m["n_docs"] for m in group)) - 1,
-            "segment_file": new_seg,
-            "meta_file": new_meta,
+            "doc_id_end": n_docs - 1,
             "status": "compacted",
         }
-        journal = {
-            "manifest": manifest,
-            "retired_pids": [m["pid"] for m in group[1:]],
-            "retired_files": [
-                f_
-                for m in group[1:]
-                for f_ in (m["segment_file"], m["meta_file"])
-                if f_ not in (new_seg, new_meta)
-            ],
-            "promote": [[staged_seg, new_seg], [staged_meta, new_meta]],
-        }
-        jpath = os.path.join(man_dir, f"compact_{new_pid}.journal")
-        save_json_atomic(jpath, journal)
-        journal["_path"] = jpath
+        journal = {"manifest": manifest, "retired_pids": [m["pid"] for m in group[1:]]}
+        save_json_atomic(_journal_path(index_dir, new_pid), journal)
         _finish_swap(index_dir, journal)
 
     return {
         "groups": len(groups),
-        "before_partitions": n_before,
-        "after_partitions": len(_load_manifests(index_dir)),
+        "before_partitions": len(manifests),
+        "after_partitions": len(load_manifests(index_dir)),
     }

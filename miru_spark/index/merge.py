@@ -283,11 +283,11 @@ def merge_segments(spark: SparkSession, index_dir: str, fanin: int | None = None
     addresses doc_meta_local by docID (miru's partition + local docID
     activity index, MiruActivityIndex.java:16-45)."""
     from miru_spark.index.build import SEGMENT_SCHEMA
-    from miru_spark.index.compact import _load_manifests
+    from miru_spark.index.compact import load_manifests
 
     # pids are key-ordered ranges: local rank + offset = global key rank
     pids, n_docs, n_tokens = np.array(
-        [(m["pid"], m["n_docs"], m["n_tokens"]) for m in _load_manifests(index_dir)], dtype=np.int64
+        [(m["pid"], m["n_docs"], m["n_tokens"]) for m in load_manifests(index_dir)], dtype=np.int64
     ).reshape(-1, 3).T
     offsets = dict(zip(pids.tolist(), (np.cumsum(n_docs) - n_docs).tolist()))
     off_b = spark.sparkContext.broadcast(offsets)

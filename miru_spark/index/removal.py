@@ -170,13 +170,13 @@ def resolve_keys_map(
     gen = scorer._index_generation(index_dir)
     out: dict[tuple[str, str, str], list[int]] = {}
     for pid, offset, n in zip(*scorer._pid_offsets(index_dir, gen)):
-        meta_file = scorer._meta_file(index_dir, gen, int(pid))
-        footer, starts = meta_file[2], meta_file[3]
+        meta_footer = scorer._meta_footer(index_dir, gen, int(pid))
+        footer, starts = meta_footer[2], meta_footer[3]
         idx = [footer.schema.names.index(c) for c in KEY_COLS]
         for rg in range(int(np.searchsorted(starts, n, side="left"))):
             if not _admits(footer.row_group(rg), idx, key_cols):
                 continue
-            blk, _ = scorer._meta_block(meta_file, rg, KEY_COLS)
+            blk, _ = scorer._meta_block(meta_footer, rg, KEY_COLS)
             hit = np.ones(len(blk[KEY_COLS[0]]), dtype=bool)
             for c, k in zip(KEY_COLS, key_cols):
                 hit &= pc.is_in(blk[c], value_set=k).to_numpy(zero_copy_only=False)

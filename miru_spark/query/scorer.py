@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from miru_spark import roaring
 from miru_spark.codec import decode_block_meta, decode_postings
 from miru_spark.index import removal
+from miru_spark.index.build import meta_path
 from miru_spark.index.merge import MERGED_SCHEMA, load_pid_offsets, whole_groups
 from miru_spark.query import parser as qp
 
@@ -197,10 +198,10 @@ def _pid_offsets(index_dir: str, gen: float) -> np.ndarray:
     return _cached((index_dir, gen, "file", "pid_offsets.json"), lambda: load_pid_offsets(index_dir))
 
 
-def _meta_file(index_dir: str, gen: float, pid: int) -> tuple:
+def _meta_footer(index_dir: str, gen: float, pid: int) -> tuple:
     """(cache key, path, footer, row groups' first rows + row count) of a pid's
     file, keyed also by mtime and size: compaction and sync replace it in place."""
-    path = os.path.join(index_dir, "doc_meta_local", f"meta_{pid}.parquet")
+    path = meta_path(index_dir, pid)
     st = os.stat(path)
     key = (index_dir, gen, "doc_meta_local", pid, st.st_mtime_ns, st.st_size)
 
@@ -213,7 +214,7 @@ def _meta_file(index_dir: str, gen: float, pid: int) -> tuple:
 
 
 def _meta_columns(index_dir: str, gen: float) -> list[str]:
-    return _meta_file(index_dir, gen, int(_pid_offsets(index_dir, gen)[0, 0]))[2].schema.names
+    return _meta_footer(index_dir, gen, int(_pid_offsets(index_dir, gen)[0, 0]))[2].schema.names
 
 
 def _read_row_group(path: str, footer, row_group: int, columns: list[str]):
@@ -222,10 +223,10 @@ def _read_row_group(path: str, footer, row_group: int, columns: list[str]):
         return pf.read_row_group(row_group, columns=columns)
 
 
-def _meta_block(meta_file: tuple, rg: int, columns) -> tuple[dict, int]:
-    """Row group ``rg`` of a ``_meta_file``: its ``columns`` (Arrow arrays) and
+def _meta_block(meta_footer: tuple, rg: int, columns) -> tuple[dict, int]:
+    """Row group ``rg`` of a ``_meta_footer``: its ``columns`` (Arrow arrays) and
     bytes, via the serving cache; a doc_len fetch never decodes display strings."""
-    key, path, footer, _ = meta_file
+    key, path, footer, _ = meta_footer
     key = (*key, rg)
     blk, nbytes = _CACHE.get(key) or ({}, 0)
     need = [c for c in columns if c not in blk]
@@ -258,9 +259,9 @@ def _meta_lookup(index_dir: str, ids, columns: list[str], diag: dict | None = No
     entry = np.searchsorted(offsets, want, side="right") - 1
     starts, groups = [], []  # the touched pids' row groups: first doc_id, (file, group)
     for e in np.unique(entry):
-        meta_file = _meta_file(index_dir, gen, int(pids[e]))
-        starts.append(offsets[e] + meta_file[3][:-1])
-        groups += [(meta_file, r) for r in range(meta_file[3].size - 1)]
+        meta_footer = _meta_footer(index_dir, gen, int(pids[e]))
+        starts.append(offsets[e] + meta_footer[3][:-1])
+        groups += [(meta_footer, r) for r in range(meta_footer[3].size - 1)]
     starts = np.concatenate(starts)
     g = np.searchsorted(starts, want, side="right") - 1
     local = want - starts[g]  # row within its group
@@ -398,9 +399,8 @@ def _dense_column(index_dir: str, column: str) -> np.ndarray:
     concatenated in pid order, each cut to its published count (driver-side;
     the distributed path joins instead)."""
     gen = _index_generation(index_dir)
-    path = os.path.join(index_dir, "doc_meta_local", "meta_{}.parquet")
     return _cached((index_dir, gen, "dense", column), lambda: np.concatenate([
-        np.asarray(pq.read_table(path.format(pid), columns=[column]).column(0), dtype=np.int64)[:n]
+        np.asarray(pq.read_table(meta_path(index_dir, pid), columns=[column]).column(0), dtype=np.int64)[:n]
         for pid, n in zip(*_pid_offsets(index_dir, gen)[[0, 2]])
     ]))
 
@@ -900,8 +900,8 @@ class _PidView:
 
     def col(self, name: str):
         if self.cols is None:
-            meta_file = _meta_file(self.index_dir, self.gen, self.pid)
-            blocks = [_meta_block(meta_file, rg, self.columns)[0] for rg in range(meta_file[3].size - 1)]
+            meta_footer = _meta_footer(self.index_dir, self.gen, self.pid)
+            blocks = [_meta_block(meta_footer, rg, self.columns)[0] for rg in range(meta_footer[3].size - 1)]
             self.cols = {c: pa.concat_arrays([b[c] for b in blocks]).slice(0, self.n) for c in self.columns}
         return self.cols[name]
 

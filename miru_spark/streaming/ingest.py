@@ -48,7 +48,9 @@ from pyspark.sql import functions as F
 
 from miru_spark.corpus import CORPUS_SCHEMA
 from miru_spark.index import removal
-from miru_spark.index.build import build_field_filters, build_segments, key_partition
+from miru_spark.index.build import (
+    build_field_filters, build_segments, key_partition, manifest_path, meta_path, segment_path,
+)
 from miru_spark.storage import load_json, read_json_files, save_json_atomic
 
 _BATCHES = "stream_batches.json"
@@ -166,13 +168,8 @@ def append_batch(
     # could mix old and new boundaries. Instead: scrub anything a crashed
     # attempt left in this batch's RESERVED pid range and rebuild it whole —
     # idempotence comes from the reservation, not partitioner determinism.
-    man_dir = os.path.join(index_dir, "manifests")
     for pid in range(pid_base, pid_base + rec["n_partitions"]):
-        for p in (
-            os.path.join(man_dir, f"partition_{pid}.json"),
-            os.path.join(index_dir, "segments", f"seg_{pid}.parquet"),
-            os.path.join(index_dir, "doc_meta_local", f"meta_{pid}.parquet"),
-        ):
+        for p in (manifest_path(index_dir, pid), segment_path(index_dir, pid), meta_path(index_dir, pid)):
             if os.path.exists(p):
                 os.remove(p)
     keyed = key_partition(batch_df, partitions_per_batch)

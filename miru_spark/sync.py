@@ -10,10 +10,11 @@ segments ARE the WAL here (build checkpoints, SURVEY.md S2):
 
 - ``sync_index(src, dst)`` diffs manifests: a pid is shipped iff the
   destination has no manifest for it or the manifest changed (compaction
-  rewrites). Data files copy BEFORE the manifest (the same
+  rewrites). Manifests and compaction journals hold pids and counts, no
+  paths: a pid's files copy to the same ``build.segment_path``/``meta_path``
+  names under the destination BEFORE the manifest (the same
   durability order as the build), so an interrupted sync leaves either a
-  complete partition or a resumable gap — never a manifest pointing at
-  missing bytes.
+  complete partition or a resumable gap — never a manifest without its bytes.
 - progress lives in ``dst/sync_progress.json`` (atomic write-then-rename):
   pid → source manifest fingerprint. Re-running sync is a no-op for
   already-shipped unchanged pids — the sip-cursor contract.
@@ -34,6 +35,7 @@ import json
 import os
 
 from miru_spark.index import removal
+from miru_spark.index.build import manifest_path, meta_path, segment_path
 from miru_spark.index.merge import republish_without
 from miru_spark.schema import check_additive, load_schema, save_schema
 from miru_spark.storage import copy_atomic, load_json, read_json_files, save_json_atomic
@@ -55,9 +57,9 @@ def sync_index(src_dir: str, dst_dir: str) -> dict:
 
     # complete any interrupted compaction swap on the SOURCE before reading
     # its manifests — a torn manifest set would ship (and retire) wrongly
-    from miru_spark.index.compact import reconcile
+    from miru_spark.index.compact import load_manifests
 
-    reconcile(src_dir)
+    src_manifests = load_manifests(src_dir)
 
     # schema first (additive guard): refuse divergent replicas loudly
     schema_synced = False
@@ -72,27 +74,22 @@ def sync_index(src_dir: str, dst_dir: str) -> dict:
             save_schema(dst_dir, src_schema)
             schema_synced = True
 
-    man_dir = os.path.join(src_dir, "manifests")
     progress_path = os.path.join(dst_dir, _PROGRESS)
     progress: dict = load_json(progress_path, {})
     shipped, skipped = [], []
-    src_pids: set[int] = set()
-    for name, m in read_json_files(man_dir).items():
+    src_pids = {m["pid"] for m in src_manifests}
+    for m in src_manifests:
         pid = m["pid"]
-        src_pids.add(pid)
         fp = _manifest_fingerprint(m)
-        dst_man = os.path.join(dst_dir, "manifests", name)
+        dst_man = manifest_path(dst_dir, pid)
         if progress.get(str(pid)) == fp and os.path.exists(dst_man):
             skipped.append(pid)
             continue
         # ship data files (atomic copies) BEFORE the manifest
-        dst_seg = os.path.join(dst_dir, "segments", os.path.basename(m["segment_file"]))
-        dst_meta = os.path.join(dst_dir, "doc_meta_local", os.path.basename(m["meta_file"]))
-        copy_atomic(m["segment_file"], dst_seg)
-        copy_atomic(m["meta_file"], dst_meta)
-        dst_m = dict(m, segment_file=dst_seg, meta_file=dst_meta, status="synced")
+        for path in (segment_path, meta_path):
+            copy_atomic(path(src_dir, pid), path(dst_dir, pid))
         os.makedirs(os.path.dirname(dst_man), exist_ok=True)
-        save_json_atomic(dst_man, dst_m)
+        save_json_atomic(dst_man, dict(m, status="synced"))
         progress[str(pid)] = fp
         save_json_atomic(progress_path, progress)  # cursor AFTER durable ship
         shipped.append(pid)
@@ -104,21 +101,21 @@ def sync_index(src_dir: str, dst_dir: str) -> dict:
     retired = []
     dst_man_dir = os.path.join(dst_dir, "manifests")
     if os.path.isdir(dst_man_dir):
-        retired = [(n, dm) for n, dm in read_json_files(dst_man_dir).items() if dm["pid"] not in src_pids]
-    republish_without(dst_dir, [dm["pid"] for _, dm in retired])
-    for n, dm in retired:
-        for f_ in (dm["segment_file"], dm["meta_file"]):
-            if os.path.exists(f_):
-                os.remove(f_)
-        os.remove(os.path.join(dst_man_dir, n))
-        progress.pop(str(dm["pid"]), None)
+        retired = [dm["pid"] for dm in read_json_files(dst_man_dir).values() if dm["pid"] not in src_pids]
+    republish_without(dst_dir, retired)
+    for pid in retired:
+        for p in (segment_path(dst_dir, pid), meta_path(dst_dir, pid)):
+            if os.path.exists(p):
+                os.remove(p)
+        os.remove(manifest_path(dst_dir, pid))
+        progress.pop(str(pid), None)
         save_json_atomic(progress_path, progress)
 
     removal_ops = removal.merge_log(src_dir, dst_dir)
     return {
         "shipped_pids": shipped,
         "skipped_pids": skipped,
-        "retired_pids": [dm["pid"] for _, dm in retired],
+        "retired_pids": retired,
         "removal_ops": removal_ops,
         "schema_synced": schema_synced,
     }

@@ -6,7 +6,6 @@ per-pid kernel must emit at most k rows per query per task. Also: the
 pointer-doubling label propagation must converge on high-diameter graphs
 that defeat plain neighbor-min."""
 
-import json
 import os
 import shutil
 
@@ -289,21 +288,6 @@ def layered_index(spark, tmp_path_factory):
     shutil.rmtree(idx, ignore_errors=True)
 
 
-def _copy_index(src, dst):
-    """A copy of ``src`` whose manifests name the copy's own files:
-    compaction reads and retires the files its manifests name."""
-    shutil.copytree(src, dst)
-    man_dir = os.path.join(dst, "manifests")
-    for name in os.listdir(man_dir):
-        with open(os.path.join(man_dir, name)) as f:
-            m = json.load(f)
-        for key, sub in (("segment_file", "segments"), ("meta_file", "doc_meta_local")):
-            m[key] = os.path.join(dst, sub, os.path.basename(m[key]))
-        with open(os.path.join(man_dir, name), "w") as f:
-            json.dump(m, f)
-    return dst
-
-
 LAYERED_QUERIES = [
     "def",  # head term: several shards, each spanning a pid boundary
     "def AND return",
@@ -334,7 +318,7 @@ def test_pid_cut_on_unequal_pids_and_shards_spanning_them(layered_index, spark, 
 
     # compaction folds the bulk pids 3 by 3 (about 267 docs each), so one
     # published pid now holds the slices of two shards of a head term
-    idx = _copy_index(layered_index, str(tmp_path / "compacted"))
+    idx = shutil.copytree(layered_index, str(tmp_path / "compacted"))
     compact(idx, target_docs=850)
     assert load_pid_offsets(idx)[0].size < pids.size
     _assert_batch_equals_local(idx, spark, queries, k=20)

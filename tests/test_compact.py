@@ -58,15 +58,15 @@ def test_compacted_segment_concatenates_shifted_runs(streamed_index):
     import pyarrow.parquet as pq
 
     from miru_spark.codec import decode_postings
-    from miru_spark.index.build import SEGMENT_SCHEMA
-    from miru_spark.index.compact import _load_manifests
+    from miru_spark.index.build import SEGMENT_SCHEMA, segment_path
+    from miru_spark.index.compact import load_manifests
 
     idx = streamed_index
-    group = _load_manifests(idx)
+    group = load_manifests(idx)
     expect: dict = {}
     off = 0
     for m in group:
-        for r in pq.read_table(m["segment_file"]).to_pylist():
+        for r in pq.read_table(segment_path(idx, m["pid"])).to_pylist():
             ids, tfs = decode_postings(r["docids"], r["tfs"])
             e = expect.setdefault(r["term"], {"ids": [], "tfs": [], "block_last": [], "df": 0, "cf": 0})
             e["ids"].append(ids + off)
@@ -78,7 +78,7 @@ def test_compacted_segment_concatenates_shifted_runs(streamed_index):
 
     stats = compact(idx, target_docs=10_000)
     assert stats["after_partitions"] == 1 < len(group)
-    seg = pq.read_table(_load_manifests(idx)[0]["segment_file"])
+    seg = pq.read_table(segment_path(idx, group[0]["pid"]))
     assert seg.schema.remove_metadata() == SEGMENT_SCHEMA
     rows = seg.to_pylist()
     assert [r["term"] for r in rows] == sorted(expect)
@@ -91,6 +91,82 @@ def test_compacted_segment_concatenates_shifted_runs(streamed_index):
         assert (r["pid"], r["df"], r["cf"], r["min_doc"], r["max_doc"]) == (
             group[0]["pid"], e["df"], e["cf"], ids[0], ids[-1]
         )
+
+
+def test_compacted_forward_index_rebases_local_ids(streamed_index):
+    """The compacted doc_meta_local file holds the group's rows in pid order,
+    each pid's local ids shifted by its local offset, all under the new pid."""
+    import pyarrow.parquet as pq
+
+    from miru_spark.index.build import meta_path
+    from miru_spark.index.compact import load_manifests
+
+    idx = streamed_index
+    group = load_manifests(idx)
+    expect, off = [], 0
+    for m in group:
+        rows = pq.read_table(meta_path(idx, m["pid"])).to_pylist()
+        expect += [dict(r, local_doc_id=r["local_doc_id"] + off, pid=group[0]["pid"]) for r in rows]
+        off += m["n_docs"]
+
+    schema = pq.read_schema(meta_path(idx, group[0]["pid"])).remove_metadata()
+
+    compact(idx, target_docs=10_000)
+    got = pq.read_table(meta_path(idx, group[0]["pid"]))
+    assert got.schema.remove_metadata() == schema
+    assert got.to_pylist() == expect
+
+
+def test_compacting_a_copy_leaves_the_source_whole(streamed_index, tmp_path, monkeypatch):
+    """Manifests and compaction journals name no path, so compacting a
+    ``shutil.copytree`` copy rewrites and retires the copy's own files: the
+    source keeps every data file and answers as before."""
+    import shutil
+
+    from miru_spark.query import scorer
+
+    src = streamed_index
+    queries = ["merge AND sort", "def", "merge OR sort"]
+    before = {q: search_local(src, q, k=50) for q in queries}
+    data_dirs = ("segments", "doc_meta_local")
+    files = {sub: sorted(os.listdir(os.path.join(src, sub))) for sub in data_dirs}
+
+    copy = shutil.copytree(src, str(tmp_path / "copy"))
+    stats = compact(copy, target_docs=10_000)
+    assert stats["after_partitions"] < stats["before_partitions"]
+
+    assert {sub: sorted(os.listdir(os.path.join(src, sub))) for sub in data_dirs} == files
+    monkeypatch.setattr(scorer, "_CACHE", scorer._ByteLRU())  # answer from the files, not the cache
+    for q in queries:
+        for idx in (src, copy):
+            got = search_local(idx, q, k=50)
+            assert before[q]["doc_id"].tolist() == got["doc_id"].tolist(), (idx, q)
+            assert before[q]["score"].tolist() == got["score"].tolist(), (idx, q)
+
+
+def test_moved_index_syncs_resumes_and_compacts(spark, tmp_path):
+    """An ``os.rename``d index names its files under its new directory: sync
+    ships from it, a resumed build skips every partition, compaction folds
+    it, and the moved index and its replica answer as before the move."""
+    from miru_spark.index.build import build_index
+    from miru_spark.sync import sync_index
+
+    corpus = generate_corpus(spark, n_rows=200, seed=7, partitions=2).persist()
+    old, idx, replica = (str(tmp_path / n) for n in ("old", "moved", "replica"))
+    build_index(spark, corpus, old, num_partitions=4)
+    before = search_local(old, "merge OR sort", k=50)
+    os.rename(old, idx)
+
+    assert len(sync_index(idx, replica)["shipped_pids"]) == 4
+    assert build_index(spark, corpus, idx, num_partitions=4, resume=True)["skipped_partitions"] == 4
+    stats = compact(idx, target_docs=10_000)
+    assert stats["after_partitions"] == 1 < stats["before_partitions"]
+    refresh(spark, replica)
+    corpus.unpersist()
+    for d in (idx, replica):
+        after = search_local(d, "merge OR sort", k=50)
+        assert before["doc_id"].tolist() == after["doc_id"].tolist(), d
+        assert before["score"].tolist() == after["score"].tolist(), d
 
 
 def test_compaction_respects_target(spark, streamed_index):

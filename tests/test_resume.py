@@ -10,7 +10,9 @@ import pandas as pd
 import pytest
 
 from miru_spark.corpus import generate_corpus
-from miru_spark.index.build import assign_doc_ids, build_index, build_segments
+from miru_spark.index.build import (
+    assign_doc_ids, build_index, build_segments, manifest_path, meta_path, segment_path,
+)
 from miru_spark.query.scorer import search_local
 
 
@@ -71,7 +73,10 @@ def test_manifest_contents(spark, corpus, tmp_path):
     build_index(spark, corpus, idx, num_partitions=4)
     for f in glob.glob(os.path.join(idx, "manifests", "*.json")):
         m = json.load(open(f))
-        for key in ("pid", "n_docs", "n_tokens", "n_postings", "n_terms", "doc_id_start", "doc_id_end", "segment_file"):
+        for key in ("pid", "n_docs", "n_tokens", "n_postings", "n_terms", "doc_id_start", "doc_id_end"):
             assert key in m, key
         assert m["n_docs"] > 0 and m["n_tokens"] > 0
-        assert os.path.exists(m["segment_file"])
+        # a manifest holds counts, no path: the pid alone names its files
+        assert not [v for v in m.values() if isinstance(v, str) and os.sep in v], m
+        assert f == manifest_path(idx, m["pid"])
+        assert os.path.exists(segment_path(idx, m["pid"])) and os.path.exists(meta_path(idx, m["pid"]))

@@ -14,6 +14,10 @@ import sys
 import numpy as np
 import pyarrow.dataset as pads
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from miru_spark.storage import read_json_files  # noqa: E402
+
 
 def inspect(index_dir: str) -> dict:
     with open(os.path.join(index_dir, "corpus_stats.json")) as f:
@@ -36,12 +40,7 @@ def inspect(index_dir: str) -> dict:
     terms = merged.column("term").to_pylist()
     head = [{"term": terms[int(i)], "df": int(df[i])} for i in order]
 
-    manifests = []
-    man_dir = os.path.join(index_dir, "manifests")
-    for name in sorted(os.listdir(man_dir)):
-        if name.endswith(".json"):
-            with open(os.path.join(man_dir, name)) as f:
-                manifests.append(json.load(f))
+    manifests = list(read_json_files(os.path.join(index_dir, "manifests")).values())
 
     return {
         "corpus": cs,
